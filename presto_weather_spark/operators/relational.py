@@ -27,7 +27,7 @@ from presto_weather_spark.operators._util import (
     sql_dsum,
 )
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import conf_scope, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -1739,18 +1739,9 @@ GROUP BY o_orderpriority
     "actually in the optimized plan.",
 )
 def s23_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, BLOOM_CONFS):
         # eager: the bloom-filter injection must happen while the confs hold
         return _bloom_join_frame(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _skew_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1818,17 +1809,8 @@ FROM fact f JOIN dim d USING (cohort)
     "tests/test_plans.py asserts skew=true in the final adaptive plan.",
 )
 def s25_skew_join_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    saved = {k: spark.conf.get(k, None) for k in SKEW_CONFS}
-    for k, v in SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, SKEW_CONFS):
         return _skew_join_frame(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(
@@ -2875,12 +2857,9 @@ def s42_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     restated = e.filter(F.col("day") == last_day).withColumn(
         "value", F.round(F.col("value") * 2, 6)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        restated.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    restated.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("day").parquet(out)
     back = spark.read.parquet(out)
     return back.select("day", "event_id", "user_id", "value")
 
@@ -5362,9 +5341,7 @@ def s77_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_weather_spark.session import register_views
 
     register_views(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -5386,5 +5363,3 @@ def s77_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)

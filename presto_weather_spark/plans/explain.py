@@ -9,6 +9,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from presto_weather_spark.session import conf_scope
+
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -38,17 +40,13 @@ def count_codegen_stages(spark, build) -> int:
     with AQE off purely for inspection — the stages AQE materializes at run
     time go through the exact same CollapseCodegenStages rule.
     """
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
         df = build()
         cg = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "codegen"
         )
-        m = re.match(r"Found (\d+) WholeStageCodegen", cg)
-        return int(m.group(1)) if m else 0
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    m = re.match(r"Found (\d+) WholeStageCodegen", cg)
+    return int(m.group(1)) if m else 0
 
 
 def has_wholestage_codegen(df: DataFrame) -> bool:

@@ -8,11 +8,20 @@ Scale notes (100 TB design intent, tested on local[32]):
   sizing, so the static number only sets the pre-AQE upper bound.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive-UTC timestamps).
+
+Conf policy: this is the only package module that writes session conf.
+``build_session`` sets the defaults once; any per-call change goes through
+``conf_scope``, which leaves the session as it found it. The one exception
+is the ``nanosAsLong`` flip in ``_prepare_parquet_read``: it is never
+restored, because the driver harness hands over a vanilla session and Spark
+re-reads the conf when it plans every action on the returned frame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -102,6 +111,24 @@ def build_session(app_name: str = "presto_weather_spark", cpus: int | None = Non
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of a ``with`` block. On exit, even by an
+    exception, each key gets back its earlier value, or is unset if it was
+    not set before."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

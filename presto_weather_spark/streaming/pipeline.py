@@ -28,10 +28,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from presto_weather_spark.registry import register
 from presto_weather_spark.operators._util import scratch_root
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import conf_scope, load_table
 
 WINDOW_SECONDS = 6 * 3600  # 6-hour tumbling windows over the events fixture
 
@@ -85,33 +86,44 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_PARTITIONS = "4"  # state stores per stateful operator in tests
 
 
-def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Drive a streaming frame to completion (availableNow) into a memory
-    sink; return the sink contents as a batch DataFrame.
+def _run_stream(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint: str | None = None
+) -> StreamingQuery:
+    """Run ``writer`` to completion (availableNow) and return the finished
+    query; its ``recentProgress`` holds the per-batch metrics. Every stream
+    in the package starts here.
 
     Stateful operators allocate one state store per shuffle partition, each
     with per-batch checkpoint commit IO — at test scale that fixed cost
     dominates (a stream-stream join carries two stateful operators: 32
     partitions cost ~8 s, 4 cost ~2 s). The partition count is pinned low
-    for the harness and restored after start; a production deployment sizes
-    it to state volume / executor count instead (it is baked into the
-    checkpoint at first start, exactly like this)."""
+    for the harness while the query runs (micro-batches plan async, so the
+    scope ends only after termination); a production deployment sizes it to
+    state volume / executor count instead (it is baked into the checkpoint
+    at first start, exactly like this)."""
+    writer = writer.trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}):
+        q = writer.start()
+        q.awaitTermination()
+    return q
+
+
+def _run_to_memory(
+    stream_df: DataFrame, mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Drive a streaming frame to completion into a memory sink; return the
+    sink contents as a batch DataFrame. The sink's temp view is dropped once
+    the frame is resolved (the frame keeps the sink's rows), so repeated
+    calls leave nothing in the catalog."""
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
-    try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()  # micro-batches plan async — restore only after
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    writer = stream_df.writeStream.outputMode(mode).format("memory").queryName(name)
+    _run_stream(spark, writer, checkpoint)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 @register(
@@ -241,16 +253,11 @@ def run_display_pipeline(
                 {"epoch": epoch_id, "ok": False, "lines": [{"error": f"Error: {e}"}]}
             )
 
-    q = (
-        board.writeStream.foreachBatch(draw)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(scratch_root(), f"pws_ckpt_{uuid.uuid4().hex[:8]}"),
-        )
-        .start()
+    _run_stream(
+        spark,
+        board.writeStream.foreachBatch(draw),
+        os.path.join(scratch_root(), f"pws_ckpt_{uuid.uuid4().hex[:8]}"),
     )
-    q.awaitTermination()
     return screen
 
 
@@ -616,14 +623,9 @@ def s24_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_dir, ckpt = f"{base}/data", f"{base}/ckpt"
     try:
         for _ in range(2):  # second start = restart/replay; must add nothing
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", sink_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            _run_stream(
+                spark, out.writeStream.format("parquet").option("path", sink_dir), ckpt
             )
-            q.awaitTermination()
         # localCheckpoint so the returned frame outlives the tmp cleanup;
         # explicit schema: an empty stream commits no part files and
         # inference would fail (the s02b read-back convention)
@@ -729,16 +731,11 @@ def s14l_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("value") > 100, 1).otherwise(0)).alias("n_high"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
     )
-    q = (
-        observed.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(scratch_root(), f"pws_obs_{uuid.uuid4().hex[:8]}"),
-        )
-        .start()
+    q = _run_stream(
+        spark,
+        observed.writeStream.format("noop"),
+        os.path.join(scratch_root(), f"pws_obs_{uuid.uuid4().hex[:8]}"),
     )
-    q.awaitTermination()
     n_rows, n_high, total = 0, 0, Decimal(0)
     for progress in q.recentProgress:
         om = progress.observedMetrics.get("tick_metrics")
@@ -852,13 +849,8 @@ def s14n_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(mv_path)
         _os.replace(tmp, mv_path)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_into_mv)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _os.path.join(base, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = _os.path.join(base, "ckpt")
+    _run_stream(spark, stream.writeStream.foreachBatch(merge_into_mv), ckpt)
     if not _os.path.isdir(mv_path):
         # an EMPTY stream triggers no batch, so the MV was never created:
         # the view over nothing is the empty view, typed
@@ -1316,16 +1308,12 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             fh.write(_json.dumps({"epoch": int(epoch_id), "rows": batch_df.count()}) + "\n")
 
     def run_once() -> None:
-        q = (
+        stream = (
             spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true")
             .parquet(stream_dir)
-            .writeStream.foreachBatch(merge_into_mv)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.awaitTermination()
+        _run_stream(spark, stream.writeStream.foreachBatch(merge_into_mv), ckpt)
 
     run_once()  # processes wave A only
     e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
@@ -1418,13 +1406,11 @@ def exactly_once_sink_run(
             f.flush()
             os.fsync(f.fileno())
 
-    q = (
-        out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _run_stream(
+        out.sparkSession,
+        out.writeStream.foreachBatch(write_batch),
+        os.path.join(base, "ckpt"),
     )
-    q.awaitTermination()
 
 
 def exactly_once_sink_read(spark: SparkSession, base: str) -> DataFrame:
@@ -1572,21 +1558,7 @@ def s14t_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pws_s14t_ckpt",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    name = f"s14t_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_memory(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.date_format(F.col("key.window.start"), "yyyy-MM-dd HH:mm:ss").alias(

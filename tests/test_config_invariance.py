@@ -25,6 +25,7 @@ from __future__ import annotations
 import pytest
 
 from presto_weather_spark.registry import all_queries
+from presto_weather_spark.session import conf_scope
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -76,13 +77,7 @@ def _rows(spark, key):
 @pytest.mark.parametrize("key", KEYS)
 def test_rows_identical_across_exec_configs(spark, key, alt):
     baseline = _rows(spark, key)
-    saved = {k: spark.conf.get(k) for k in ALTS[alt]}
-    try:
-        for k, v in ALTS[alt].items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, ALTS[alt]):
         changed = _rows(spark, key)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     assert changed == baseline
     assert len(baseline) > 0

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from presto_weather_spark.registry import all_queries
+from presto_weather_spark.session import conf_scope
 from tests.test_oracle import normalize
 
 QS = all_queries()
@@ -54,15 +55,12 @@ INVARIANT_QUERIES = [
 def test_result_invariant_to_shuffle_parallelism(spark, sf_dir, name):
     q = QS[name]
     base = normalize(q.fn(spark, sf_dir).toPandas())
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "5")
-        # shrink Arrow batches so mapInPandas operators also prove
-        # batch-boundary invariance, not just shuffle invariance
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
+    # shrink Arrow batches so mapInPandas operators also prove
+    # batch-boundary invariance, not just shuffle invariance
+    low_confs = {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "37",
+    }
+    with conf_scope(spark, low_confs):
         low = normalize(q.fn(spark, sf_dir).toPandas())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_batch)
     assert base == low, f"{name}: result depends on shuffle parallelism"

@@ -16,6 +16,7 @@ from presto_weather_spark.plans.explain import (
     simple_plan,
 )
 from presto_weather_spark.registry import all_queries
+from presto_weather_spark.session import conf_scope
 
 QS = all_queries()
 
@@ -168,19 +169,13 @@ def test_bloom_filter_reaches_fact_scan(spark, sf_dir):
         _bloom_join_frame,
     )
 
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, BLOOM_CONFS):
         plan = (
             _bloom_join_frame(spark, sf_dir)
             ._jdf.queryExecution()
             .optimizedPlan()
             .toString()
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "might_contain" in plan, plan[:800]
 
 
@@ -193,16 +188,10 @@ def test_skew_join_splits_hot_partition(spark, sf_dir):
         _skew_join_frame,
     )
 
-    saved = {k: spark.conf.get(k, None) for k in SKEW_CONFS}
-    for k, v in SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, SKEW_CONFS):
         df = _skew_join_frame(spark, sf_dir)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, plan[:600]
 
@@ -835,18 +824,12 @@ def test_minhash_band_join_splits_hot_band(spark, tmp_path):
 
     confs = dict(SKEW_CONFS)
     confs["spark.sql.adaptive.forceOptimizeSkewedJoin"] = "true"
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         df = minhash_near_dup_pairs(d)
         # collect() (not count()) so the frame's OWN QueryExecution runs —
         # the adaptive final plan lives there, a count plans separately
         n_pairs = len(df.collect())
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     # the planted cluster must be found (100 identical docs -> 4950 pairs)
     assert n_pairs >= 4950
     assert "isFinalPlan=true" in plan

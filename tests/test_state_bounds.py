@@ -23,6 +23,8 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from presto_weather_spark.streaming.pipeline import _run_stream
+
 N_TYPES = 5
 T0_US = 1_700_000_000 * 1_000_000
 
@@ -63,26 +65,17 @@ def _write_events(base: str, n_rows: int, n_files: int) -> str:
 
 def _max_state_rows(spark, stream_df, mode: str) -> int:
     name = f"sb_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            op["numRowsTotal"]
-            for p in q.recentProgress
-            for op in p["stateOperators"]
-        ]
-        assert rows, "no stateOperators in progress — not a stateful query?"
-        return max(rows)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = _run_stream(
+        spark,
+        stream_df.writeStream.outputMode(mode).format("memory").queryName(name),
+    )
+    rows = [
+        op["numRowsTotal"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    ]
+    assert rows, "no stateOperators in progress — not a stateful query?"
+    return max(rows)
 
 
 def _events_source(spark, src: str, n_rows: int, n_files: int):
@@ -203,24 +196,15 @@ def test_sample_quantiles_state_bounded_and_batching_invariant(spark, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         name = f"sq_{_uuid.uuid4().hex[:10]}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            state_rows = max(
-                op["numRowsTotal"]
-                for p in q.recentProgress
-                for op in p["stateOperators"]
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q = _run_stream(
+            spark,
+            out.writeStream.outputMode("update").format("memory").queryName(name),
+        )
+        state_rows = max(
+            op["numRowsTotal"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        )
         emitted = spark.table(name).collect()
         latest_seen = {}
         for r in emitted:

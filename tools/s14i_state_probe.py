@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from presto_weather_spark.session import build_session  # noqa: E402
 from presto_weather_spark.streaming.pipeline import (  # noqa: E402
-    STREAM_STATE_PARTITIONS,
+    _run_stream,
     s14i_joined_stream,
 )
 
@@ -49,20 +49,10 @@ SF_DIRS = {
 def _drive(spark, joined, mode: str = "append"):
     """Start the stream, return (max numRowsTotal, wall seconds)."""
     name = f"probe_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
     t0 = time.monotonic()
-    try:
-        q = (
-            joined.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = _run_stream(
+        spark, joined.writeStream.outputMode(mode).format("memory").queryName(name)
+    )
     dt = time.monotonic() - t0
     rows = [
         op["numRowsTotal"]

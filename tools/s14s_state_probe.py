@@ -30,8 +30,8 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from presto_weather_spark.session import build_session  # noqa: E402
 from presto_weather_spark.streaming.pipeline import (  # noqa: E402
-    STREAM_STATE_PARTITIONS,
     WINDOW_SECONDS,
+    _run_stream,
     events_stream,
 )
 
@@ -45,20 +45,10 @@ SF_DIRS = {
 def _drive(spark, agg):
     """Run the complete-mode MV to a memory sink; return state stats."""
     name = f"probe_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
     t0 = time.monotonic()
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = _run_stream(
+        spark, agg.writeStream.outputMode("complete").format("memory").queryName(name)
+    )
     dt = time.monotonic() - t0
     rows = [
         op["numRowsTotal"]
