@@ -8,12 +8,17 @@ formatting) — re-expressed over the driver's ``events`` table:
   events (ts, user_id as station, value as temperature, props JSON)
     -> latest reading per station     (window row_number, latest-value R14)
     -> derived WMO code               (deterministic fixture mapping)
-    -> broadcast dim join             (R7) + banded CASE icon (R8)
+    -> map-literal text lookup        (R7 expression form) + banded CASE icon (R8)
     -> display strings                (R9-R12)
 
-Scale: the window partitions by station id — at 100 TB this is a single
-shuffle on a high-cardinality key (no skew: one partition per station);
-the 19-row dimension is broadcast, so classification adds no shuffle.
+The code-to-text lookup is a map literal (``text_map_expr``, the form r07b
+proves equivalent), not a join against the broadcast 19-row dimension: the
+board then runs no job to build or broadcast the dimension. The R7 join
+itself stays in r07.
+
+Scale: the latest-reading aggregate groups by station id — at 100 TB this
+is a single shuffle on a high-cardinality key (no skew: one partition per
+station); classification is a per-row expression and adds no shuffle.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from presto_weather_spark.functions.weather import (
     icon_case_expr,
     icon_case_sql,
     text_case_sql,
-    weather_codes_dim,
+    text_map_expr,
 )
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table
@@ -36,7 +41,6 @@ from presto_weather_spark.session import load_table
 
 def conditions_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    dim = weather_codes_dim(spark)
 
     # Round-10 optimization: the latest-reading pick ran as a row_number
     # window (exchange + per-station sort of every event) with the
@@ -72,22 +76,14 @@ def conditions_board(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("code", code_expr(F.col("event_id")))
     )
 
-    board = (
-        readings.join(F.broadcast(dim.select("code", "description")), "code", "left")
-        .select(
-            F.col("user_id").alias("station_id"),
-            F.coalesce(
-                F.col("description"), F.format_string("Code %d", F.col("code"))
-            ).alias("conditions"),
-            icon_case_expr(F.col("code")).alias("icon"),
-            fmt.fmt_temperature(F.col("value")).alias("temp_display"),
-            fmt.fmt_rain_line(F.col("rain_prob")).alias("rain_line"),
-            fmt.fmt_updated_hhmm(fmt.iso_minute("ts", sep=" ")).alias(
-                "updated_hhmm"
-            ),
-        )
+    return readings.select(
+        F.col("user_id").alias("station_id"),
+        text_map_expr(F.col("code")).alias("conditions"),
+        icon_case_expr(F.col("code")).alias("icon"),
+        fmt.fmt_temperature(F.col("value")).alias("temp_display"),
+        fmt.fmt_rain_line(F.col("rain_prob")).alias("rain_line"),
+        fmt.fmt_updated_hhmm(fmt.iso_minute("ts", sep=" ")).alias("updated_hhmm"),
     )
-    return board
 
 
 _ORACLE = f"""

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
+from presto_weather_spark.session import local_rows
 
 # (code, description) — /root/reference/weather.py:93-113
 WEATHER_CODE_TEXT: list[tuple[int, str]] = [
@@ -76,9 +77,12 @@ def weather_code_to_icon_py(code: int | None) -> str:
 
 
 def weather_codes_dim(spark: SparkSession) -> DataFrame:
-    """The 19-row static dimension (broadcast-join side of R7)."""
+    """The 19-row static dimension: the broadcast-join side of R7 (r07).
+    Built with ``local_rows``, so it is a ``LocalTableScan``: collecting or
+    broadcasting it runs no Python worker. The flagship does not use it; it
+    looks codes up with the ``text_map_expr`` map literal instead."""
     rows = [(c, t, weather_code_to_icon_py(c)) for c, t in WEATHER_CODE_TEXT]
-    return spark.createDataFrame(rows, "code int, description string, icon string")
+    return local_rows(spark, rows, "code int, description string, icon string")
 
 
 def code_expr(event_id: Column) -> Column:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from presto_weather_spark.session import local_rows
+
 DEC = "decimal(18,2)"
 
 
@@ -107,7 +109,7 @@ def grand_total_if_empty(inp, out, row: tuple):
     if inp.limit(1).count() > 0:
         return out
     rows = row if isinstance(row, list) else [row]
-    return out.unionByName(out.sparkSession.createDataFrame(rows, out.schema))
+    return out.unionByName(local_rows(out.sparkSession, rows, out.schema))
 
 
 def distributed_global_rank(df, order_exprs, out_col: str = "global_rn"):

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, local_rows
 
 N_HASHES = 16  # MinHash signature length
 N_BANDS = 4  # LSH bands (4 rows per band)
@@ -961,7 +961,8 @@ def x61_lsh_banding_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hits = cand.join(exact, ["doc_a", "doc_b"]).count()
     precision = round(n_hits / n_cand, 6) if n_cand else 1.0
     recall = round(n_hits / n_exact, 6) if n_exact else 1.0
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_cand, n_exact, n_hits, precision, recall)],
         "n_candidates bigint, n_exact bigint, n_hits bigint, "
         "precision double, recall double",
@@ -2014,7 +2015,8 @@ FROM scored
     "convention) so both engines integrate bit-identically.",
 )
 def x103_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    plans = spark.createDataFrame(
+    plans = local_rows(
+        spark,
         [(b, N_HASHES // b) for b in (1, 2, 4, 8, N_HASHES)], "b int, r int"
     )
     grid = spark.range(1, X103_STEPS + 1).select(
@@ -2504,9 +2506,7 @@ def x115_dedup_threshold_sensitivity(
         .select("doc_a", "doc_b", F.round(j, 6).alias("j"))
         .localCheckpoint(eager=False)  # 4-way threshold fan-out reads it
     )
-    th = spark.createDataFrame(
-        [(t,) for t in X115_THRESHOLDS], "threshold double"
-    )
+    th = local_rows(spark, [(t,) for t in X115_THRESHOLDS], "threshold double")
     hits = jacc.crossJoin(F.broadcast(th)).filter(
         F.col("j") >= F.col("threshold")
     )

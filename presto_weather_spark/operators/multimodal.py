@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, local_rows
 
 
 @register(
@@ -1114,9 +1114,7 @@ def x156_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(bytes(r["payload"]))
     if not rows:
         # nothing staged: binaryFile needs >= 1 object; typed empty frame
-        return spark.createDataFrame(
-            [], "doc_id bigint, n_bytes int, content_md5 string"
-        )
+        return local_rows(spark, [], "doc_id bigint, n_bytes int, content_md5 string")
     ingested = spark.read.format("binaryFile").load(stage)
     return ingested.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)

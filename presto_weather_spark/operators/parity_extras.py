@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from presto_weather_spark.functions.formatting import iso_minute
 from presto_weather_spark.operators._util import scratch_root, sql_dsum
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, local_rows
 
 
 @register(
@@ -421,7 +421,7 @@ def r13_error_absorbing_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         (4, ""),
         (5, '{"current": {"weather_code": 95}}'),
     ]
-    df = spark.createDataFrame(rows, "station_id int, body string")
+    df = local_rows(spark, rows, "station_id int, body string")
     parsed = F.from_json(  # PERMISSIVE (default): corrupt input -> NULL struct
         F.col("body"),
         "struct<current: struct<temperature_2m: double, weather_code: double>>",
@@ -656,7 +656,8 @@ def s44_csv_malformed_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()["s"]
     )
     permissive.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_good, n_corrupt, good_amount)],
         "n_good bigint, n_corrupt bigint, good_amount decimal(18,2)",
     )
@@ -742,7 +743,8 @@ def s75_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     # explicit read-back schema (the s02b convention): an empty source
     # writes no part files and inference would fail
     fact = spark.read.schema(e.schema).parquet(out)
-    stages = spark.createDataFrame(
+    stages = local_rows(
+        spark,
         [
             ("view", "awareness"),
             ("click", "conversion"),
@@ -751,7 +753,10 @@ def s75_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
             ("logout", "retention"),
         ],
         "event_type string, funnel_stage string",
-    )
+    ).localCheckpoint(eager=False)
+    # The checkpoint keeps the dim a scan under its filter: over the bare
+    # LocalTableScan the optimizer folds the filter into the rows, which
+    # leaves no dimension predicate for DPP to prune on.
     dim = stages.filter(F.col("funnel_stage") == "conversion")
     return (
         fact.join(F.broadcast(dim), "event_type")

@@ -27,7 +27,7 @@ from presto_weather_spark.operators._util import (
     sql_dsum,
 )
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import conf_scope, load_table
+from presto_weather_spark.session import conf_scope, load_table, local_rows
 
 
 # ---------------------------------------------------------------------------
@@ -2224,7 +2224,8 @@ def s32_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         # SUM observations are NULL on an empty pipeline — report them as
         # the zero counters a monitoring surface expects, not a crash
         [
@@ -2726,7 +2727,8 @@ def s40_data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     null_ship = li.filter(F.col("l_shipdate").isNull()).count()
     neg_vals = e.filter(F.col("value").isNull() | (F.col("value") < 0)).count()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (1, "orders.o_custkey references customer", orphans),
             (2, "lineitem.l_quantity in [1, 50]", qty_bad),
@@ -2999,7 +3001,8 @@ def x62_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     union_est = int(union_row["u"]) if union_row["u"] is not None else 0
     inter_est = est["click"] + est["purchase"] - union_est
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             ("click", est["click"]),
             ("purchase", est["purchase"]),
@@ -3334,7 +3337,8 @@ def s52_column_profile(
 
         with ThreadPoolExecutor(max_workers=len(PROFILE_COLUMNS)) as pool:
             rows = list(pool.map(profile_one, PROFILE_COLUMNS))
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             rows,
             "column_name string, n_nulls bigint, n_distinct bigint, "
             "min_value string, max_value string",
@@ -3743,7 +3747,8 @@ def s59_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = e.select(
         "event_id", F.nullif(F.col("event_type"), F.lit("view")).alias("k")
     )
-    dim = spark.createDataFrame(
+    dim = local_rows(
+        spark,
         [
             ("click", "Engaged"),
             ("purchase", "Converted"),
@@ -3801,7 +3806,8 @@ GROUP BY tier_name
 )
 def s60_theta_join_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    tiers = spark.createDataFrame(
+    tiers = local_rows(
+        spark,
         [
             ("bronze", 0.0),
             ("silver", 150000.0),
@@ -4844,7 +4850,7 @@ def x127_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p0")
         )
     )
-    grid = spark.createDataFrame([(m,) for m in POWER_MDES], "mde double")
+    grid = local_rows(spark, [(m,) for m in POWER_MDES], "mde double")
     p0, mde = F.col("p0"), F.col("mde")
     # a saturated baseline (p0 + mde > 1, e.g. every fixture user converts)
     # flips the test direction: detect the DOWNWARD effect of the same size
@@ -5232,7 +5238,8 @@ def x137_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n")
     )
     tot = obs.agg(F.sum("n").cast("bigint").alias("total"))
-    benford = spark.createDataFrame(
+    benford = local_rows(
+        spark,
         [
             (1, 0.301030), (2, 0.176091), (3, 0.124939), (4, 0.096910),
             (5, 0.079181), (6, 0.066947), (7, 0.057992), (8, 0.051153),

@@ -927,11 +927,11 @@ FROM (
     "sphere).",
 )
 def x139_haversine_nearest_station(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Pure-JVM literal relation (LocalTableScan, one partition). NOT
-    # createDataFrame(...).coalesce(1): python-list conversion plans
-    # defaultParallelism pickled partitions and the coalesce makes ONE
-    # task drain all of them through the Python worker serially —
-    # measured ~4.5 s of fixed overhead PER ACTION for 8 rows.
+    # Pure-JVM literal relation (LocalTableScan, one partition), like
+    # session.local_rows. Never a Python-list DataFrame: that plans
+    # defaultParallelism pickled partitions a Python worker maps on every
+    # action — measured ~4.5 s of fixed overhead PER ACTION for 8 rows
+    # (behind a coalesce(1)).
     st = spark.sql(
         f"SELECT * FROM VALUES {_STATION_VALUES} AS t(name, lat, lon)"
     )
@@ -1041,9 +1041,9 @@ def x139b_cell_bucketed_station_assign(
         for dy in (-1, 0, 1)
         for dx in (-1, 0, 1)
     )
-    # Pure-JVM literal relation — see x139's note: a python-list
-    # createDataFrame + coalesce(1) costs ~4.5 s of Python-worker
-    # round-trips per action; VALUES is a LocalTableScan.
+    # Pure-JVM literal relation — see x139's note: a Python-list
+    # DataFrame costs Python-worker round-trips on every action; VALUES,
+    # like session.local_rows, is a LocalTableScan.
     cells = spark.sql(
         f"SELECT * FROM VALUES {cell_values} AS t(name, lat, lon, clat, clon)"
     )

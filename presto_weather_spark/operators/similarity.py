@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, local_rows
 
 TOP_K = 5
 N_QUERIES = 8  # vec_id < 8 are the query vectors in the judged queries
@@ -90,7 +90,8 @@ def x03_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # query set is small by definition; rides the closure
     )
     if not qrows:  # empty corpus/slice: no queries -> empty result, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "query_id bigint, neighbor_id bigint, neighbor_label int, "
             "cosine_sim double, nn_rank int",
@@ -423,9 +424,7 @@ def x02d_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     probe = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
     if not probe:  # empty corpus/slice: no probe set -> empty pairs, typed
-        return spark.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cosine_sim double"
-        )
+        return local_rows(spark, [], "vec_a bigint, vec_b bigint, cosine_sim double")
     pids = np.asarray([r["vec_id"] for r in probe], dtype=np.int64)
     pmat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in probe])
     punit = pmat / np.linalg.norm(pmat, axis=1, keepdims=True)
@@ -605,9 +604,7 @@ def x15_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not init:  # empty corpus: no seed centroids -> empty result, typed
-        return spark.createDataFrame(
-            [], "cluster int, n_members bigint, avg_dist double"
-        )
+        return local_rows(spark, [], "cluster int, n_members bigint, avg_dist double")
     cent = np.asarray(
         [list(r["v"]) for r in sorted(init, key=lambda r: r["vec_id"])],
         dtype=np.float64,
@@ -885,7 +882,8 @@ def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not train:  # empty corpus: no codebook training set -> empty, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "query_id bigint, neighbor_id bigint, neighbor_label int, "
             "cosine_sim double, nn_rank int",
@@ -901,7 +899,8 @@ def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not qrows:  # non-empty corpus can still carry no low-id queries
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "query_id bigint, neighbor_id bigint, neighbor_label int, "
             "cosine_sim double, nn_rank int",
@@ -1045,7 +1044,8 @@ def x31_hard_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not qrows:  # empty corpus/slice: no queries -> empty result, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "query_id bigint, kind string, neighbor_id bigint, "
             "neighbor_label int, cosine_sim double",
@@ -1346,7 +1346,8 @@ def _kcenter_greedy_local(emb: DataFrame) -> DataFrame:
 
     rows_in = emb.orderBy("vec_id").collect()
     if not rows_in:  # empty corpus: no seed point -> empty coreset, typed
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [], "selection_rank int, vec_id bigint, radius_at_selection double"
         )
     ids = np.asarray([r["vec_id"] for r in rows_in], dtype=np.int64)
@@ -1361,7 +1362,8 @@ def _kcenter_greedy_local(emb: DataFrame) -> DataFrame:
         rows.append((rank, int(ids[best]), round(float(min_dist[best]), 6)))
         d_new = np.sqrt(((mat - mat[best][None, :]) ** 2).sum(axis=1))
         min_dist = np.minimum(min_dist, d_new)
-    return emb.sparkSession.createDataFrame(
+    return local_rows(
+        emb.sparkSession,
         rows, "selection_rank int, vec_id bigint, radius_at_selection double"
     )
 
@@ -1373,7 +1375,8 @@ def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
 
     first = emb.orderBy("vec_id").first()
     if first is None:  # forced-distributed on an empty frame
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [], "selection_rank int, vec_id bigint, radius_at_selection double"
         )
     centers = [(int(first["vec_id"]), [float(x) for x in first["embedding"]])]
@@ -1399,7 +1402,8 @@ def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
         )
         centers.append((int(far["vec_id"]), [float(x) for x in far["embedding"]]))
         rows.append((rank, int(far["vec_id"]), round(float(far["min_dist"]), 6)))
-    return emb.sparkSession.createDataFrame(
+    return local_rows(
+        emb.sparkSession,
         rows, "selection_rank int, vec_id bigint, radius_at_selection double"
     )
 
@@ -1468,7 +1472,8 @@ def x90_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # 8 x 64 doubles — rides the closure
     )
     if not prows:  # empty corpus: no prototypes -> empty result, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "vec_id bigint, cluster_id bigint, l2_dist double, "
             "proto_rank int, cluster_size bigint, keep int",
@@ -1633,7 +1638,8 @@ def x94_twonn_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = _twonn_sample(emb, TWONN_SAMPLE_LIMIT)
     rows = emb.collect()  # bounded by construction (gate above)
     if not rows:  # empty corpus: no neighbors, no estimator -> empty, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "vec_id bigint, nn1_id bigint, nn2_id bigint, d1 double, "
             "d2 double, mu double, d_hat double",
@@ -1809,7 +1815,8 @@ def _mmr_local(emb: DataFrame) -> DataFrame:
 
     rows_in = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
     if not rows_in:  # empty corpus: nothing to select -> empty, typed
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [],
             "rank int, vec_id bigint, relevance double, redundancy double, "
             "mmr_score double",
@@ -1844,7 +1851,8 @@ def _mmr_local(emb: DataFrame) -> DataFrame:
                 float(mmr[i]),
             )
         )
-    return emb.sparkSession.createDataFrame(
+    return local_rows(
+        emb.sparkSession,
         out_rows, "rank int, vec_id bigint, relevance double,"
         " redundancy double, mmr_score double"
     )
@@ -1868,7 +1876,8 @@ def _mmr_distributed(emb: DataFrame) -> DataFrame:
     ).localCheckpoint()  # consumed K+1 times across the greedy rounds
     first_unit = unit.select("unit").first()
     if first_unit is None:  # forced-distributed on an empty frame
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [],
             "rank int, vec_id bigint, relevance double, redundancy double, "
             "mmr_score double",
@@ -1956,7 +1965,8 @@ def _mmr_distributed(emb: DataFrame) -> DataFrame:
                 float(win["mmr_score"]),
             )
         )
-    return emb.sparkSession.createDataFrame(
+    return local_rows(
+        emb.sparkSession,
         out_rows, "rank int, vec_id bigint, relevance double,"
         " redundancy double, mmr_score double"
     )
@@ -2027,7 +2037,8 @@ def x99_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # bounded query set rides the closure (x03 convention)
     )
     if not qrows:  # empty corpus/slice: no queries -> empty eval, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "query_id bigint, trunc_dim int, overlap_at_k bigint, "
             "recall_at_k double",
@@ -2347,7 +2358,8 @@ def x144_margin_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tgt:
         # empty target-language slice is valid input (the oracle's CROSS
         # JOIN just yields zero pairs); np.stack on [] would raise instead
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "src_id bigint, tgt_id bigint, cosine_sim double, margin double",
         )
@@ -2524,7 +2536,7 @@ def _probe_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_label int, sim_e6 bigint"
     )
     if not prows:
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     qids = np.asarray([r["vec_id"] for r in prows], dtype=np.int64)
     qlabels = np.asarray([r["label"] for r in prows], dtype=np.int32)
     qmat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in prows])

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import defer_install, register
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, local_rows
 
 # A tiny fixed English stopword list shared by Spark and oracle SQL.
 STOPWORDS: tuple[str, ...] = (
@@ -1739,7 +1739,8 @@ def _bpe_merges_local(words) -> "DataFrame":
         )
         rows.append((rank, left, right, pc))
         vocab = [(_bpe_apply(syms, [(left, right)]), wc) for syms, wc in vocab]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows, "merge_rank int, left string, right string, pair_count bigint"
     )
 
@@ -1834,7 +1835,8 @@ def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = top[0]
         merges.append((t["left"], t["right"]))
         rows.append((rank, t["left"], t["right"], int(t["pair_count"])))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows, "merge_rank int, left string, right string, pair_count bigint"
     )
 
@@ -3280,9 +3282,7 @@ def x67_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum_tf"),
     )
     total = freq.agg(F.sum("tf").cast("double").alias("n"))
-    points = t.sparkSession.createDataFrame(
-        [(k,) for k in VOCAB_CURVE_POINTS], "k int"
-    )
+    points = local_rows(t.sparkSession, [(k,) for k in VOCAB_CURVE_POINTS], "k int")
     return (
         F.broadcast(points)
         .join(ranked, ranked.rk <= points.k)
@@ -3795,12 +3795,13 @@ def x89_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     n_docs = int(stats["n"])
     if n_docs == 0:  # empty corpus: no postings -> empty ranking, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], "query_id int, doc_id bigint, bm25 double, doc_rank int"
         )
     avgdl = float(stats["s"]) / n_docs
 
-    qt = spark.createDataFrame(list(BM25_QUERIES), "query_id int, term string")
+    qt = local_rows(spark, list(BM25_QUERIES), "query_id int, term string")
     tfq = tf_all.join(F.broadcast(qt.select("term").distinct()), "term")
     dft = tfq.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
 
@@ -4160,7 +4161,8 @@ def x92_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b, vs in contrib.items()
             }
         ordered = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [(t, r, i + 1) for i, (t, r) in enumerate(ordered)],
             "term string, rank double, kw_rank int",
         )
@@ -4340,7 +4342,8 @@ def x93_doremi_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
     losses = [r[3] for r in rows]
     k = len(rows)
     if k == 0:  # empty corpus: no domains to reweight -> empty, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "lang string, source string, n_docs bigint, loss double, "
             "weight double",
@@ -4367,7 +4370,8 @@ def x93_doremi_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
         w_vec = [
             (2 * we * 10**12 + z) // (2 * z) / 1e12 for we in wr_e15
         ]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (lang, source, n_docs, loss, w)
             for (lang, source, n_docs, loss), w in zip(rows, w_vec)
@@ -5568,7 +5572,8 @@ def x147_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ct"), F.sum("cr"), F.count(F.lit(1))
     ).first()
     if nt is None:  # empty corpus: no vocabulary, no LM -> empty, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], "doc_id bigint, n_tokens bigint, log_weight double, "
             "dsir_gate string"
         )
@@ -5713,7 +5718,8 @@ def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nt, nr = feat.agg(F.sum("ct"), F.sum("cr")).first()
     if nt is None:  # empty corpus -> empty hashed-feature scoring, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], "doc_id bigint, n_features bigint, log_weight double, "
             "dsir_gate string"
         )

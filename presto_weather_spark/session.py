@@ -12,18 +12,38 @@ Scale notes (100 TB design intent, tested on local[32]):
 Conf policy: this is the only package module that writes session conf.
 ``build_session`` sets the defaults once; any per-call change goes through
 ``conf_scope``, which leaves the session as it found it. The one exception
-is the ``nanosAsLong`` flip in ``_prepare_parquet_read``: it is never
+is the ``nanosAsLong`` flip in ``_parquet_schema``: it is never
 restored, because the driver harness hands over a vanilla session and Spark
 re-reads the conf when it plans every action on the returned frame.
+
+Data enters the engine two ways: parquet through ``load_table`` and
+driver-side Python rows through ``local_rows``.
+
+- ``local_rows`` hands Spark an Arrow table, which plans as a
+  ``LocalTableScan``: no Spark job and no Python worker. The list form
+  ``createDataFrame(<list>, schema)`` pickles the rows into
+  ``defaultParallelism`` partitions that a Python worker maps on every
+  action, so the package never uses it.
+- Parquet schemas come from a cache keyed by the file's footer, so a read
+  plans without a schema-inference job. The key is the footer's schema
+  text (without its first line, which holds the object's address), the
+  footer's key-value metadata, and the confs that change how Spark converts
+  a parquet schema (``_SCHEMA_CONFS``, read after the ``nanosAsLong``
+  flip). An identical copy under a new path hits; a rewritten file gets a
+  new key. A path that is not a single readable file is inferred each time.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping
+from collections.abc import Iterable, Iterator, Mapping, Sequence
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -39,6 +59,21 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+# The directory that holds the package, for Spark's Python workers.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Confs that change the Spark schema a parquet footer converts to.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# Footer-keyed schema cache (see the module docstring): one entry per
+# distinct on-disk schema and conf setting, not per path.
+_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def scratch_base() -> str:
@@ -102,6 +137,9 @@ def build_session(app_name: str = "presto_weather_spark", cpus: int | None = Non
             f"-Djava.io.tmpdir={local_dir}",
         )
         .config("spark.ui.enabled", "false")
+        # Python workers (UDFs, the DataSource) import the package whatever
+        # the working directory; Spark merges this with their PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
         # reader rejects; read as long and convert in load_table (exact
@@ -131,8 +169,29 @@ def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
                 spark.conf.set(k, v)
 
 
+def local_rows(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s field order) as a
+    DataFrame; ``schema`` is a DDL string or a ``StructType``. The one way
+    Python values enter the engine: the rows go through an Arrow table,
+    which Spark plans as a ``LocalTableScan`` (no job, no Python worker)."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    if any(len(r) != len(arrow) for r in rows):
+        raise ValueError(f"rows must have {len(arrow)} fields")
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst pushes filters/pruning into it.
+    The schema comes from the footer-keyed cache (``_parquet_schema``), so
+    only the first read of a given footer runs an inference job.
 
     Robust to both timestamp encodings the driver has shipped:
 
@@ -151,17 +210,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     happens at read time, not only in build_session.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos_cols = _prepare_parquet_read(spark, path)
-    df = spark.read.parquet(path)
-    return _normalize_nanos(df, nanos_cols)
+    schema, nanos_cols = _parquet_schema(spark, path)
+    return _normalize_nanos(spark.read.schema(schema).parquet(path), nanos_cols)
 
 
-def _prepare_parquet_read(spark: SparkSession, path: str) -> set[str] | None:
-    """Footer-sniff ``path`` for TIMESTAMP(NANOS) columns and flip the
-    nanosAsLong conf when (and only when) needed; returns the sniffed set
-    (None = footer unreadable, caller falls back to the `ts`-name
-    heuristic).  Shared by the batch and streaming read paths."""
-    nanos_cols = _nanos_columns(path)
+def _parquet_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, set[str] | None]:
+    """The raw Spark schema of the parquet at ``path`` (long for nanos
+    columns, NTZ for naive micros) and its TIMESTAMP(NANOS) columns (None =
+    footer unreadable, ``_normalize_nanos`` falls back to the `ts`-name
+    heuristic). Flips nanosAsLong when (and only when) needed. Shared by
+    the batch and streaming read paths."""
+    try:
+        footer = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):  # a directory, remote or unreadable
+        footer = None
+    nanos_cols = _nanos_columns(path, footer)
     if nanos_cols is None:
         # Footer sniff works on local paths only (pyarrow, no Hadoop FS) —
         # on remote storage fall back to the conservative path: set the
@@ -171,35 +236,41 @@ def _prepare_parquet_read(spark: SparkSession, path: str) -> set[str] | None:
         warnings.warn(
             f"could not sniff parquet footer of {path}; "
             "falling back to name-based nanos heuristic",
-            stacklevel=2,
+            stacklevel=3,
         )
     if nanos_cols is None or nanos_cols:
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # static/removed conf — read fails loudly if truly needed
-    return nanos_cols
+    if footer is None:
+        return spark.read.parquet(path).schema, nanos_cols
+    key = (
+        str(footer.schema).split("\n", 1)[1],
+        tuple(sorted((footer.metadata or {}).items())),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema, nanos_cols
 
 
-def _nanos_columns(path: str) -> set[str] | None:
-    """Column names stored as TIMESTAMP(NANOS) — from the footer only.
-    Returns None when the footer could not be inspected (caller falls back
-    to a name-based heuristic)."""
+def _nanos_columns(path: str, footer: pq.FileMetaData | None) -> set[str] | None:
+    """Column names stored as TIMESTAMP(NANOS) — from the footer only (a
+    directory's from its dataset schema). Returns None when the footer could
+    not be inspected (caller falls back to a name-based heuristic)."""
     try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        try:
-            schema = pq.read_schema(path)
-        except Exception:
-            schema = pq.ParquetDataset(path).schema
-        return {
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        }
-    except Exception:
+        schema = (
+            footer.schema.to_arrow_schema()
+            if footer is not None
+            else pq.ParquetDataset(path).schema
+        )
+    except (OSError, pa.ArrowException):
         return None
+    return {
+        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    }
 
 
 def _normalize_nanos(df: DataFrame, nanos_cols: set[str] | None) -> DataFrame:

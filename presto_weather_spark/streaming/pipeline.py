@@ -32,7 +32,13 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from presto_weather_spark.registry import register
 from presto_weather_spark.operators._util import scratch_root
-from presto_weather_spark.session import conf_scope, load_table
+from presto_weather_spark.session import (
+    _normalize_nanos,
+    _parquet_schema,
+    conf_scope,
+    load_table,
+    local_rows,
+)
 
 WINDOW_SECONDS = 6 * 3600  # 6-hour tumbling windows over the events fixture
 
@@ -73,13 +79,11 @@ def _stage_stream_dir(path: str) -> str:
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema from batch read)."""
+    """File-source stream over the events parquet (schema from the
+    footer-keyed cache)."""
     path = os.path.join(sf_dir, "events.parquet")
-    from presto_weather_spark.session import _normalize_nanos, _prepare_parquet_read
-
     stage = _stage_stream_dir(path)
-    nanos_cols = _prepare_parquet_read(spark, path)
-    schema = spark.read.parquet(path).schema  # raw on-disk schema (long/NTZ)
+    schema, nanos_cols = _parquet_schema(spark, path)  # raw on-disk (long/NTZ)
     return _normalize_nanos(spark.readStream.schema(schema).parquet(stage), nanos_cols)
 
 
@@ -744,7 +748,8 @@ def s14l_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_rows += int(om["n_rows"])
         n_high += int(om["n_high"])
         total += Decimal(str(om["total_value"]))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_rows, n_high, float(total))],
         "n_rows bigint, n_high bigint, total_value double",
     )
@@ -854,7 +859,8 @@ def s14n_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _os.path.isdir(mv_path):
         # an EMPTY stream triggers no batch, so the MV was never created:
         # the view over nothing is the empty view, typed
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], "day string, event_type string, n_events bigint, sum_value double"
         )
     return (
@@ -958,10 +964,11 @@ def s14o_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (schema from batch)."""
+    """File-source stream over the documents parquet (schema from the
+    footer-keyed cache)."""
     path = os.path.join(sf_dir, "documents.parquet")
     stage = _stage_stream_dir(path)
-    schema = spark.read.parquet(path).schema
+    schema, _ = _parquet_schema(spark, path)
     return spark.readStream.schema(schema).parquet(stage)
 
 
@@ -1439,10 +1446,8 @@ def exactly_once_sink_read(spark: SparkSession, base: str) -> DataFrame:
             from pyspark.sql.types import StructType
 
             with open(schema_path) as f:
-                return spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(f.read()))
-                )
-        return spark.createDataFrame([], "event_id bigint")
+                return local_rows(spark, [], StructType.fromJson(_json.loads(f.read())))
+        return local_rows(spark, [], "event_id bigint")
     return spark.read.parquet(*paths)
 
 

@@ -6,29 +6,7 @@ nanosAsLong escape hatch has to be applied at read time."""
 
 import datetime
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
-
 from presto_weather_spark.session import load_table
-
-
-@pytest.fixture(scope="module")
-def nanos_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("nanos_sf")
-    ts = pa.array(
-        [1704067200_000000000 + i * 3600_000000000 for i in range(10)],
-        pa.timestamp("ns"),
-    )
-    t = pa.table(
-        {
-            "event_id": pa.array(range(10), pa.int64()),
-            "ts": ts,
-            "value": pa.array([float(i) for i in range(10)]),
-        }
-    )
-    pq.write_table(t, str(d / "events.parquet"))
-    return str(d)
 
 
 def test_load_table_reads_nanos_timestamps(spark, nanos_dir):

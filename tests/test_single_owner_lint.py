@@ -5,9 +5,12 @@
   the defaults and ``conf_scope`` owns every per-call change.
 - A stream is started only in ``streaming/pipeline.py::_run_stream``, which
   owns the availableNow trigger, the checkpoint and the state-partition pin.
+- Driver-side rows become a DataFrame only in ``session.py::local_rows``,
+  which goes through Arrow (a ``LocalTableScan``, no Python worker).
 
-A new ``.conf.set``/``.conf.unset`` or ``.start()``/``.awaitTermination()``
-site elsewhere fails here; route it through the owner instead.
+A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()`` or
+``.createDataFrame`` site elsewhere fails here; route it through the owner
+instead.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ PKG = os.path.join(
 
 CONF_OWNER = "session.py"
 STREAM_OWNER = ("streaming/pipeline.py", "_run_stream")
+ROWS_OWNER = ("session.py", "local_rows")
 
 
 @functools.cache
@@ -79,3 +83,14 @@ def test_streams_start_only_in_the_stream_helper():
     assert STREAM_OWNER in sites, "lint matched nothing"
     stray = sorted(sites - {STREAM_OWNER})
     assert not stray, f"stream started outside {STREAM_OWNER}; use it: {stray}"
+
+
+def test_rows_enter_the_engine_only_through_local_rows():
+    sites = {
+        (rel, fn)
+        for rel, fn, call in _calls()
+        if isinstance(call.func, ast.Attribute) and call.func.attr == "createDataFrame"
+    }
+    assert ROWS_OWNER in sites, "lint matched nothing"
+    stray = sorted(sites - {ROWS_OWNER})
+    assert not stray, f"createDataFrame outside {ROWS_OWNER}; use it: {stray}"
