@@ -1,4 +1,4 @@
-"""Shared determinism helpers for oracle-comparable queries.
+"""Shared helpers for oracle-comparable queries.
 
 Floating-point sums are order-dependent; Spark's partial aggregation order
 varies run to run, while the DuckDB oracle sums sequentially.  Any double
@@ -6,6 +6,12 @@ SUM whose value lands near a rounding boundary can therefore hash-mismatch.
 Fix: do the arithmetic in DECIMAL (exact, associative) and cast the final
 result back to double.  Base money columns in the test data carry 2-decimal
 values, so DECIMAL(18,2) casts are value-preserving.
+
+The module also holds query shapes several layers share: standard-SQL
+empty-input rows (``grand_total_if_empty``) and global ranks and tiles
+without a single-reducer window (``global_rank``, ``exact_ntile``).
+Scratch paths are not built here: ``session.stage_dir`` and
+``session.temp_dir`` own them.
 """
 
 from __future__ import annotations
@@ -28,63 +34,8 @@ def dsum(col: Column) -> Column:
     return F.sum(col.cast(DEC)).cast("double")
 
 
-def sql_dec(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(18,2))"
-
-
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
-
-
-def sql_bigint_sum(expr: str) -> str:
-    """DuckDB widens integer SUM to HUGEINT; Spark keeps BIGINT."""
-    return f"CAST(SUM({expr}) AS BIGINT)"
-
-
-# ---------------------------------------------------------------------------
-# Session-unique scratch root for write-then-read-back queries.
-#
-# Queries like s02 (sink roundtrip), s33 (Z-order), s41/s42 (WAP / dynamic
-# overwrite), s53 (nested pruning), and the streaming MV all stage data
-# under the OS temp dir keyed only by sf-dir basename — two concurrent
-# bench/pytest runs on one host would race on overwrite-vs-read.  A
-# per-process token isolates each session while keeping paths stable
-# WITHIN the process (so a query re-run in the same bench session reuses
-# its staged data, e.g. the bucketed-join warehouse).
-# ---------------------------------------------------------------------------
-
-
-def scratch_root() -> str:
-    """Per-process unique temp root (replaces bare tempfile.gettempdir()).
-
-    Rooted at session.scratch_base() since round 11 — tmpfs when available,
-    ``SPARK_GRAFT_SCRATCH_DIR`` on a real cluster — so staged parquet /
-    warehouse data for the write-then-read-back keys stops paying disk
-    writeback (guide §6)."""
-    import os
-    import uuid
-
-    from presto_weather_spark.session import scratch_base
-
-    global _SCRATCH_ROOT
-    try:
-        return _SCRATCH_ROOT
-    except NameError:
-        pass
-    _SCRATCH_ROOT = os.path.join(
-        scratch_base(), f"pws-session-{uuid.uuid4().hex[:12]}"
-    )
-    os.makedirs(_SCRATCH_ROOT, exist_ok=True)
-
-    # Best-effort cleanup at interpreter exit so repeated bench/pytest
-    # sessions don't accumulate staged parquet/warehouse data unboundedly
-    # in the OS temp dir. ignore_errors: a half-removed scratch dir is
-    # fine, failing the interpreter shutdown is not.
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return _SCRATCH_ROOT
 
 
 def grand_total_if_empty(inp, out, row: tuple):

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table, local_rows
+from presto_weather_spark.session import load_table, local_rows, stage_dir
 
 
 @register(
@@ -1090,10 +1090,7 @@ FROM staged
     "(partition-local projection).",
 )
 def x156_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-
-    from presto_weather_spark.operators._util import scratch_root
 
     d = load_table(spark, sf_dir, "documents")
     docs = (
@@ -1101,11 +1098,7 @@ def x156_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(BINFILE_DOC_CAP)
         .select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     )
-    # stage dir keyed by the FULL source path (not basename): two corpora
-    # sharing a basename in one process must not cross-read staged objects
-    token = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    stage = os.path.join(scratch_root(), "pws_binfiles", token)
-    os.makedirs(stage, exist_ok=True)
+    stage = stage_dir("binfiles", os.path.abspath(sf_dir))
     # bounded driver materialization: <= BINFILE_DOC_CAP rows by
     # construction (fixture staging, the streaming symlink-dir precedent)
     rows = docs.collect()

@@ -16,15 +16,14 @@ pipeline, as individually judged queries:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.functions.formatting import iso_minute
-from presto_weather_spark.operators._util import scratch_root, sql_dsum
+from presto_weather_spark.operators._util import sql_dsum
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import load_table, local_rows
+from presto_weather_spark.session import load_table, local_rows, stage_dir
 
 
 @register(
@@ -147,11 +146,7 @@ def s02_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         dsum(F.col("o_totalprice")).alias("total_price"),
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_sink_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("sink_roundtrip", sf_dir)
     agg.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -301,11 +296,7 @@ def s01b_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") < 5000)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_csv_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("csv_roundtrip", sf_dir)
     o.write.mode("overwrite").option("header", True).csv(out)
     return spark.read.schema(
         "o_orderkey bigint, o_orderpriority string, o_totalprice double"
@@ -335,11 +326,7 @@ def s01e_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") < 500)
         .select("c_custkey", "c_mktsegment", "c_acctbal")
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_xml_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("xml_roundtrip", sf_dir)
     c.write.mode("overwrite").format("xml").option("rootTag", "customers").option(
         "rowTag", "customer"
     ).save(out)
@@ -368,11 +355,7 @@ def s02b_partitioned_write_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.round("value", 6).alias("value"), "event_type"
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_part_write",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("part_write", sf_dir)
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
     # explicit schema on read-back: an EMPTY source writes no part files
     # and schema inference would fail — the writer's schema IS the
@@ -461,11 +444,7 @@ def s01c_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 0)
         .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_orc_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("orc_roundtrip", sf_dir)
     c.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -492,18 +471,13 @@ WHERE event_type IN ('click', 'purchase')
 )
 def s36_custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
     from presto_weather_spark.sources.board_sink import register_board_sink
 
     register_board_sink(spark)
-    out = os.path.join(
-        scratch_root(),
-        "pws_board_sink",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("board_sink", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     frames = (
         load_table(spark, sf_dir, "events")
@@ -553,11 +527,7 @@ FROM orders WHERE o_orderkey % 3 = 2
     "three-way split from the source table.",
 )
 def s43_format_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = os.path.join(
-        scratch_root(),
-        "pws_federated",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = stage_dir("federated", sf_dir)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("record_key"),
         F.round("o_totalprice", 2).alias("amount"),
@@ -610,12 +580,7 @@ FROM rows
     "batch twin).",
 )
 def s44_csv_malformed_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw_dir = os.path.join(
-        scratch_root(),
-        "pws_malformed",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    os.makedirs(raw_dir, exist_ok=True)
+    raw_dir = stage_dir("malformed", sf_dir)
     with open(os.path.join(raw_dir, "feed.csv"), "w") as f:
         f.write(
             "record_key,amount\n"
@@ -691,11 +656,7 @@ def s01d_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("c_acctbal", 2).alias("acctbal"),
         )
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_jsonl_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("jsonl_roundtrip", sf_dir)
     c.write.mode("overwrite").json(out)
     return spark.read.schema(
         "c_custkey bigint, c_name string, c_mktsegment string, acctbal double"
@@ -734,11 +695,7 @@ def s75_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "value", "event_type"
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_dpp_fact",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("dpp_fact", sf_dir)
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
     # explicit read-back schema (the s02b convention): an empty source
     # writes no part files and inference would fail

@@ -23,11 +23,10 @@ from presto_weather_spark.operators._util import (
     dec,
     dsum,
     grand_total_if_empty,
-    scratch_root,
     sql_dsum,
 )
 from presto_weather_spark.registry import register
-from presto_weather_spark.session import conf_scope, load_table, local_rows
+from presto_weather_spark.session import conf_scope, load_table, local_rows, stage_dir
 
 
 # ---------------------------------------------------------------------------
@@ -870,13 +869,10 @@ GROUP BY l.l_orderkey
 )
 def s04g_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile as _tf
 
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 3000)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
-    warehouse = _os.path.join(
-        scratch_root(), "pws_bucketed", _os.path.basename(_os.path.normpath(sf_dir))
-    )
+    warehouse = stage_dir("bucketed", sf_dir)
     for name, df, key in (("li_b", li, "l_orderkey"), ("o_b", o, "o_orderkey")):
         table = f"pws_{name}"
         path = _os.path.join(warehouse, name)
@@ -2084,9 +2080,6 @@ WHERE user_id BETWEEN 2 AND 9 AND value BETWEEN 40.0 AND 160.0
     "contract (layout must never change query answers).",
 )
 def s30_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     e = load_table(spark, sf_dir, "events")
     # Normalize both dimensions to Z_BITS-wide buckets first (affine
     # min/max scaling; one scalar-aggregate pass, the cheap part of any
@@ -2109,11 +2102,7 @@ def s30_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     zkeyed = e.withColumn(
         "zkey", _morton_key(F.least(xb, F.lit(top)), F.least(yb, F.lit(top)))
     )
-    out = os.path.join(
-        scratch_root(),
-        "pws_zorder",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("zorder", sf_dir)
     (
         zkeyed.repartitionByRange(8, "zkey")
         .sortWithinPartitions("zkey")
@@ -2265,15 +2254,8 @@ FROM orders
     "re-deriving it per query; the read semantics are identical.",
 )
 def s33_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        scratch_root(),
-        "pws_schema_evo",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("schema_evo", sf_dir)
     batch1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", F.round("o_totalprice", 2).alias("price")
     )
@@ -2319,7 +2301,6 @@ def s34_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import math
     import os
-    import tempfile
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -2327,11 +2308,7 @@ def s34_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_quantity",
         F.round("l_extendedprice", 2).alias("l_extendedprice"),
     )
-    base = os.path.join(
-        scratch_root(),
-        "pws_compact",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = stage_dir("compact", sf_dir)
     frag, compact = f"{base}/frag", f"{base}/compact"
     # Simulate a fragmented ingest history: 64 shards of one table.
     li.repartition(64).write.mode("overwrite").parquet(frag)
@@ -2454,9 +2431,6 @@ GROUP BY 1, 2
     "median) need the s05e/x14 sketch route instead.",
 )
 def s37_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     e = load_table(spark, sf_dir, "events")
     cutoff = e.agg(
         (F.date_trunc("day", F.max("ts")) - F.expr(f"INTERVAL {MV_DELTA_DAYS} DAY"))
@@ -2472,9 +2446,7 @@ def s37_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value_dec"),
         )
 
-    mv_path = os.path.join(
-        scratch_root(), "pws_mv", os.path.basename(os.path.normpath(sf_dir))
-    )
+    mv_path = stage_dir("mv", sf_dir)
     # Initial materialization: history only (everything before the cutoff).
     day_agg(e.filter(F.col("ts") < cutoff)).write.mode("overwrite").parquet(mv_path)
     # Incremental refresh: aggregate the delta ONLY, merge with stored MV.
@@ -2767,15 +2739,9 @@ WHERE value IS NOT NULL AND value >= 0
     "the lossless-publication proof.",
 )
 def s41_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
-    base = os.path.join(
-        scratch_root(),
-        "pws_wap",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = stage_dir("wap", sf_dir)
     staging, published = f"{base}/staging", f"{base}/published"
     shutil.rmtree(base, ignore_errors=True)
 
@@ -2838,14 +2804,7 @@ FROM events
     "bytes, not the table's.",
 )
 def s42_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    out = os.path.join(
-        scratch_root(),
-        "pws_dyn_overwrite",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("dyn_overwrite", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
         "event_id",
@@ -3429,15 +3388,8 @@ WHERE o_orderstatus = 'O'
     "proving predicates reach through the struct too.",
 )
 def s53_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        scratch_root(),
-        "pws_nested",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = stage_dir("nested", sf_dir)
     nested = o.select(
         "o_orderkey",
         F.struct(

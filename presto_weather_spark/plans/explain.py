@@ -26,12 +26,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
 
 
-def pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters section of the scan node (parquet sources)."""
-    plan = formatted_plan(df)
-    return "\n".join(line for line in plan.splitlines() if "PushedFilters" in line)
-
-
 def count_codegen_stages(spark, build) -> int:
     """Number of WholeStageCodegen subtrees in the plan `build()` produces.
 
@@ -47,7 +41,3 @@ def count_codegen_stages(spark, build) -> int:
         )
     m = re.match(r"Found (\d+) WholeStageCodegen", cg)
     return int(m.group(1)) if m else 0
-
-
-def has_wholestage_codegen(df: DataFrame) -> bool:
-    return "WholeStageCodegen" in formatted_plan(df)

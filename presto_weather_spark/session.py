@@ -31,11 +31,29 @@ driver-side Python rows through ``local_rows``.
   a parquet schema (``_SCHEMA_CONFS``, read after the ``nanosAsLong``
   flip). An identical copy under a new path hits; a rewritten file gets a
   new key. A path that is not a single readable file is inferred each time.
+
+Scratch policy: this is the only package module that decides where scratch
+lives. ``scratch_base()`` holds Spark's own local dir (shuffle files and
+the JVM temp dir). Every path a query stages or checkpoints itself is built
+under ``scratch_root()``, this process's directory below it, which is
+removed at interpreter exit.
+
+- ``stage_dir(kind, key)`` is for data a key stages and may reuse within
+  the process. Its name is an md5 of the full key (the source path, never
+  its basename), so two sources that share a basename never share a stage.
+- ``temp_dir(kind)`` is for data one call owns, such as a throwaway stream
+  checkpoint. It is fresh per call and removed on exit, on error too.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Iterable, Iterator, Mapping, Sequence
 from contextlib import contextmanager
 
@@ -78,8 +96,8 @@ _SCHEMAS: dict[tuple, StructType] = {}
 
 def scratch_base() -> str:
     """Root for ALL engine scratch: shuffle/blockmgr files (spark.local.dir),
-    temporary streaming checkpoints (java.io.tmpdir), and the staged
-    write-then-read-back query outputs (operators._util.scratch_root).
+    temporary streaming checkpoints (java.io.tmpdir), and ``scratch_root()``,
+    which holds the staged write-then-read-back outputs.
 
     Round-11 optimization (guide §6): scratch is pure intra-job state —
     shuffle files live for one stage, stream checkpoints for one query,
@@ -92,8 +110,10 @@ def scratch_base() -> str:
       this at the fast local-disk mount (NVMe scratch), exactly like
       ``spark.local.dir`` is provisioned on real deployments;
     - ``/dev/shm`` when it exists and is writable (Linux tmpfs — RAM-backed,
-      no writeback; the 128 GiB harness sandbox runs sf0.1 scratch in the
-      tens of MB, so capacity is a non-issue there);
+      no writeback). Its capacity is not checked: tmpfs pages are RAM, and
+      on a 4-vCPU host with 15 GB of RAM ``/dev/shm`` is a 16 GB tmpfs, so
+      scratch competes with the driver heap and a full tmpfs fails the
+      write. sf0.1 scratch is tens of MB;
     - the OS temp dir otherwise (the pre-round-11 behavior).
     """
     env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
@@ -103,9 +123,47 @@ def scratch_base() -> str:
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         return shm
-    import tempfile
-
     return tempfile.gettempdir()
+
+
+@functools.cache
+def scratch_root() -> str:
+    """This process's scratch directory under ``scratch_base()``.
+
+    The per-process token keeps two runs on one host from racing on the
+    same staged paths, while paths stay stable within the process. The
+    directory is removed at interpreter exit; ignore_errors because a
+    half-removed scratch dir is fine and a failed shutdown is not."""
+    root = os.path.join(scratch_base(), f"pws-session-{uuid.uuid4().hex[:12]}")
+    os.makedirs(root, exist_ok=True)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def stage_dir(kind: str, key: str) -> str:
+    """The directory ``<scratch_root>/pws_<kind>/<md5(key)[:16]>``, created
+    if missing; existing content is kept.
+
+    ``key`` names what the staged data derives from in full (the source
+    path as given, never its basename): the same key maps to the same
+    directory for the life of the process, and different keys never
+    share one."""
+    digest = hashlib.md5(key.encode()).hexdigest()[:16]
+    path = os.path.join(scratch_root(), f"pws_{kind}", digest)
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+@contextmanager
+def temp_dir(kind: str) -> Iterator[str]:
+    """A fresh ``<scratch_root>/pws_<kind>_<uuid>`` directory, removed when
+    the block exits, also when it raises."""
+    path = os.path.join(scratch_root(), f"pws_{kind}_{uuid.uuid4().hex[:12]}")
+    os.makedirs(path)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def build_session(app_name: str = "presto_weather_spark", cpus: int | None = None) -> SparkSession:
@@ -297,10 +355,6 @@ def _normalize_nanos(df: DataFrame, nanos_cols: set[str] | None) -> DataFrame:
                 F.timestamp_micros(F.expr(f"`{field.name}` DIV 1000")),
             )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

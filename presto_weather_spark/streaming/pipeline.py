@@ -31,13 +31,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from presto_weather_spark.registry import register
-from presto_weather_spark.operators._util import scratch_root
 from presto_weather_spark.session import (
     _normalize_nanos,
     _parquet_schema,
     conf_scope,
     load_table,
     local_rows,
+    stage_dir,
+    temp_dir,
 )
 
 WINDOW_SECONDS = 6 * 3600  # 6-hour tumbling windows over the events fixture
@@ -55,17 +56,13 @@ def _stage_stream_dir(path: str) -> str:
     symlinks each of its part files. The stage name folds in the part-file
     listing, so a rewritten table (new part names) gets a fresh stage
     instead of dangling stale links."""
-    import hashlib
-
     if os.path.isdir(path):
         parts = sorted(
             f for f in os.listdir(path) if f.endswith(".parquet")
         )
     else:
         parts = None
-    token = hashlib.md5(repr((path, parts)).encode()).hexdigest()[:16]
-    stage = os.path.join(scratch_root(), f"pws_stream_{token}")
-    os.makedirs(stage, exist_ok=True)
+    stage = stage_dir("stream", repr((path, parts)))
     if parts is None:
         link = os.path.join(stage, os.path.basename(path))
         if not os.path.exists(link):
@@ -257,11 +254,8 @@ def run_display_pipeline(
                 {"epoch": epoch_id, "ok": False, "lines": [{"error": f"Error: {e}"}]}
             )
 
-    _run_stream(
-        spark,
-        board.writeStream.foreachBatch(draw),
-        os.path.join(scratch_root(), f"pws_ckpt_{uuid.uuid4().hex[:8]}"),
-    )
+    with temp_dir("ckpt") as ckpt:
+        _run_stream(spark, board.writeStream.foreachBatch(draw), ckpt)
     return screen
 
 
@@ -613,8 +607,6 @@ FROM events
     "compaction intervals bound its growth.",
 )
 def s24_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     stream = events_stream(spark, sf_dir)
     out = stream.select(
         "event_id",
@@ -623,9 +615,8 @@ def s24_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
         F.round("value", 6).alias("value"),
     )
-    base = os.path.join(scratch_root(), f"pws_eo_{uuid.uuid4().hex[:12]}")
-    sink_dir, ckpt = f"{base}/data", f"{base}/ckpt"
-    try:
+    with temp_dir("eo") as base:
+        sink_dir, ckpt = f"{base}/data", f"{base}/ckpt"
         for _ in range(2):  # second start = restart/replay; must add nothing
             _run_stream(
                 spark, out.writeStream.format("parquet").option("path", sink_dir), ckpt
@@ -634,8 +625,6 @@ def s24_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explicit schema: an empty stream commits no part files and
         # inference would fail (the s02b read-back convention)
         return spark.read.schema(out.schema).parquet(sink_dir).localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 HOUR_SECONDS = 3600
@@ -735,11 +724,8 @@ def s14l_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("value") > 100, 1).otherwise(0)).alias("n_high"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
     )
-    q = _run_stream(
-        spark,
-        observed.writeStream.format("noop"),
-        os.path.join(scratch_root(), f"pws_obs_{uuid.uuid4().hex[:8]}"),
-    )
+    with temp_dir("obs") as ckpt:
+        q = _run_stream(spark, observed.writeStream.format("noop"), ckpt)
     n_rows, n_high, total = 0, 0, Decimal(0)
     for progress in q.recentProgress:
         om = progress.observedMetrics.get("tick_metrics")
@@ -813,14 +799,9 @@ GROUP BY 1, 2
 def s14n_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
-    import tempfile
 
     stream = events_stream(spark, sf_dir)
-    base = _os.path.join(
-        scratch_root(),
-        "pws_stream_mv",
-        _os.path.basename(_os.path.normpath(sf_dir)),
-    )
+    base = stage_dir("stream_mv", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     mv_path = _os.path.join(base, "mv")
 
@@ -1269,16 +1250,12 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
 
     from presto_weather_spark.session import load_table as _load
 
-    base = _os.path.join(
-        scratch_root(),
-        "pws_stream_recovery",
-        _os.path.basename(_os.path.normpath(sf_dir)),
-    )
+    base = stage_dir("stream_recovery", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     stream_dir = _os.path.join(base, "in")
     mv_path = _os.path.join(base, "mv")
     ckpt = _os.path.join(base, "ckpt")
-    journal = _os.path.join(base, "journal.jsonl")
+    journal = recovery_journal_path(sf_dir)
     _os.makedirs(stream_dir, exist_ok=True)
 
     e = _load(spark, sf_dir, "events").select("event_id", "event_type", "value")
@@ -1342,14 +1319,7 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
 def recovery_journal_path(sf_dir: str) -> str:
     """Where s14q journals per-epoch processed row counts (for the
     no-reprocessing pin in tests/test_stream_recovery.py)."""
-    import os as _os
-
-    return _os.path.join(
-        scratch_root(),
-        "pws_stream_recovery",
-        _os.path.basename(_os.path.normpath(sf_dir)),
-        "journal.jsonl",
-    )
+    return os.path.join(stage_dir("stream_recovery", sf_dir), "journal.jsonl")
 
 
 # ---------------------------------------------------------------------------
@@ -1558,11 +1528,7 @@ def s14t_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    ckpt = os.path.join(
-        scratch_root(),
-        "pws_s14t_ckpt",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    ckpt = stage_dir("s14t_ckpt", sf_dir)
     _run_to_memory(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(

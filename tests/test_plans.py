@@ -255,7 +255,7 @@ def test_zorder_layout_tightens_both_dims(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from presto_weather_spark.operators._util import scratch_root
+    from presto_weather_spark.session import stage_dir
 
     df = _df("s30_zorder_clustering", spark, sf_dir)
     plan = formatted_plan(df)
@@ -263,11 +263,8 @@ def test_zorder_layout_tightens_both_dims(spark, sf_dir):
     assert pushed and any("user_id" in l and "value" in l for l in pushed), pushed
 
     # s30 stages under the per-process scratch root (same process here, so
-    # the path matches); the old fixed tempdir path only passed while a
-    # stale pre-migration directory lingered on the host
-    out = os.path.join(
-        scratch_root(), "pws_zorder", os.path.basename(os.path.normpath(sf_dir))
-    )
+    # the path matches)
+    out = stage_dir("zorder", sf_dir)
     files = glob.glob(os.path.join(out, "*.parquet"))
     assert len(files) > 1
     spans = []
@@ -294,14 +291,12 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     import glob
     import os
 
-    from presto_weather_spark.operators._util import scratch_root
+    from presto_weather_spark.session import stage_dir
 
     df = _df("s34_small_file_compaction", spark, sf_dir)
     n_rows = df.count()
     # same-process scratch root (see the z-order test note above)
-    base = os.path.join(
-        scratch_root(), "pws_compact", os.path.basename(os.path.normpath(sf_dir))
-    )
+    base = stage_dir("compact", sf_dir)
     frag = glob.glob(os.path.join(base, "frag", "*.parquet"))
     compact = glob.glob(os.path.join(base, "compact", "*.parquet"))
     assert len(frag) == 64

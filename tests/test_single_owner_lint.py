@@ -7,9 +7,12 @@
   owns the availableNow trigger, the checkpoint and the state-partition pin.
 - Driver-side rows become a DataFrame only in ``session.py::local_rows``,
   which goes through Arrow (a ``LocalTableScan``, no Python worker).
+- Scratch paths are built only in ``session.py``: ``stage_dir`` and
+  ``temp_dir`` name, create and remove them.
 
-A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()`` or
-``.createDataFrame`` site elsewhere fails here; route it through the owner
+A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
+``.createDataFrame``, ``scratch_root()``/``scratch_base()`` or
+``import tempfile`` site elsewhere fails here; route it through the owner
 instead.
 """
 
@@ -26,11 +29,13 @@ PKG = os.path.join(
 CONF_OWNER = "session.py"
 STREAM_OWNER = ("streaming/pipeline.py", "_run_stream")
 ROWS_OWNER = ("session.py", "local_rows")
+SCRATCH_OWNER = "session.py"
 
 
 @functools.cache
-def _calls() -> list[tuple[str, str, ast.Call]]:
-    """(relpath, enclosing function, call) for every call in the package."""
+def _nodes() -> list[tuple[str, str, ast.AST]]:
+    """(relpath, enclosing function, node) for every call and import in the
+    package."""
     found = []
     for root, _, files in os.walk(PKG):
         for f in sorted(files):
@@ -52,8 +57,14 @@ def _calls() -> list[tuple[str, str, ast.Call]]:
                     found.append((rel, stack[-1] if stack else "<module>", node))
                     self.generic_visit(node)
 
+                visit_Import = visit_ImportFrom = visit_Call
+
             V().visit(ast.parse(open(path).read()))
     return found
+
+
+def _calls() -> list[tuple[str, str, ast.Call]]:
+    return [t for t in _nodes() if isinstance(t[2], ast.Call)]
 
 
 def _is_conf_write(call: ast.Call) -> bool:
@@ -94,3 +105,22 @@ def test_rows_enter_the_engine_only_through_local_rows():
     assert ROWS_OWNER in sites, "lint matched nothing"
     stray = sorted(sites - {ROWS_OWNER})
     assert not stray, f"createDataFrame outside {ROWS_OWNER}; use it: {stray}"
+
+
+def _is_scratch_site(node: ast.AST) -> bool:
+    if isinstance(node, ast.Call):
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        return name in ("scratch_root", "scratch_base")
+    if isinstance(node, ast.Import):
+        return any(a.name == "tempfile" for a in node.names)
+    return isinstance(node, ast.ImportFrom) and node.module == "tempfile"
+
+
+def test_scratch_paths_are_built_only_in_session_module():
+    sites = [(rel, fn) for rel, fn, node in _nodes() if _is_scratch_site(node)]
+    assert any(rel == SCRATCH_OWNER for rel, _ in sites), "lint matched nothing"
+    stray = sorted({s for s in sites if s[0] != SCRATCH_OWNER})
+    assert not stray, (
+        f"scratch path built outside {SCRATCH_OWNER}; use stage_dir/temp_dir: {stray}"
+    )
