@@ -8,15 +8,17 @@ result back to double.  Base money columns in the test data carry 2-decimal
 values, so DECIMAL(18,2) casts are value-preserving.
 
 The module also holds query shapes several layers share: standard-SQL
-empty-input rows (``grand_total_if_empty``) and global ranks and tiles
-without a single-reducer window (``global_rank``, ``exact_ntile``).
-Scratch paths are not built here: ``session.stage_dir`` and
+empty-input rows (``grand_total_if_empty``), global ranks and tiles
+without a single-reducer window (``global_rank``, ``exact_ntile``), the
+corpus tokenizer with its DuckDB twin (``raw_tokens``/``SQL_RAW_TOKENS``,
+``tokens``/``SQL_TOKENS``, ``STOPWORDS``) and the scan fan-out
+(``spread``). Scratch paths are not built here: ``session.stage_dir`` and
 ``session.temp_dir`` own them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from presto_weather_spark.session import local_rows
@@ -36,6 +38,40 @@ def dsum(col: Column) -> Column:
 
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
+
+
+# A tiny fixed English stopword list shared by Spark and oracle SQL.
+STOPWORDS: tuple[str, ...] = (
+    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
+    "for", "on", "with", "as", "at", "by", "be", "this", "that", "are",
+)
+
+
+def raw_tokens() -> Column:
+    """The corpus tokenizer: ``text`` lowercased and split on whitespace
+    runs. Empty tokens are kept (a leading space yields one), so array
+    positions match DuckDB's ``string_split_regex`` (``SQL_RAW_TOKENS``)."""
+    return F.split(F.lower(F.col("text")), r"\s+")
+
+
+def tokens() -> Column:
+    """``raw_tokens()`` with the empty tokens dropped (``SQL_TOKENS``)."""
+    return F.filter(raw_tokens(), lambda t: t != "")
+
+
+SQL_RAW_TOKENS = "string_split_regex(lower(text), '\\s+')"
+SQL_TOKENS = f"list_filter({SQL_RAW_TOKENS}, t -> t <> '')"
+
+
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """Fan a scan out across every core before per-row CPU work.
+
+    The fixture parquet files are one row group, so their scan is one task
+    and per-row work (regex, hashing, tokenize+explode, Python UDFs) would
+    run serially. The explicit partition count matters: AQE would coalesce
+    a column-only repartition of this byte-small input back to one
+    partition. ``cols`` are the hash keys (none: round-robin)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
 
 
 def grand_total_if_empty(inp, out, row: tuple):

@@ -19,6 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import (
+    GLOBAL_RANK_LOCAL_LIMIT,
+    SQL_RAW_TOKENS,
+    distributed_global_rank,
+    exact_ntile,
+    spread,
+    tokens,
+)
 from presto_weather_spark.operators.dedup import CHUNK_LEN
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table
@@ -78,8 +86,7 @@ GROUP BY d.lang
     "into one Catalyst plan.",
 )
 def x21_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
 
     quality = d.filter(F.col("n_chars") >= MIN_CHARS).select("doc_id", "lang", "text")
 
@@ -155,7 +162,7 @@ V2_TOKEN_BUDGET = 600
     oracle=f"""
 WITH base AS (
   SELECT doc_id, source, lang, n_chars, text,
-         CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
+         CAST(len(list_filter({SQL_RAW_TOKENS},
                               t -> t <> '')) AS BIGINT) AS n_tok
   FROM documents
 ),
@@ -229,9 +236,7 @@ def x60_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_chars",
         "text",
-        F.size(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != ""))
-        .cast("bigint")
-        .alias("n_tok"),
+        F.size(tokens()).cast("bigint").alias("n_tok"),
     )
     q = (F.col("n_chars") >= V2_MIN_CHARS).cast("int")
     # Survivor rank among quality rows only = cumulative sum of the q flag
@@ -349,7 +354,7 @@ CURRICULUM_PHASES = 4
 WITH scored AS (
   SELECT doc_id, source,
          round(CAST(n_chars AS DOUBLE) /
-               greatest(len(list_filter(string_split_regex(lower(text), '\\s+'),
+               greatest(len(list_filter({SQL_RAW_TOKENS},
                                         t -> t <> '')), 1), 4) AS difficulty
   FROM documents
 )
@@ -377,10 +382,7 @@ FROM scored
 )
 def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.greatest(
-        F.size(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")),
-        F.lit(1),
-    )
+    n_tok = F.greatest(F.size(tokens()), F.lit(1))
     scored = d.select(
         "doc_id",
         "source",
@@ -392,12 +394,6 @@ def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputed exactly from (rank, count) so the phase cut is
     # path-independent. Identical output either way; equivalence pinned in
     # tests/test_properties.py.
-    from presto_weather_spark.operators._util import (
-        GLOBAL_RANK_LOCAL_LIMIT,
-        distributed_global_rank,
-        exact_ntile,
-    )
-
     # ONE count drives both the path gate and the exact-ntile denominator
     scored = scored.localCheckpoint(eager=False)  # count + rank both read it
     n_rows = scored.count()
@@ -426,13 +422,13 @@ def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x77_preference_pairs",
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id, source, lang,
          round(CAST(len(list_distinct(list_filter(
-                 string_split_regex(lower(text), '\\s+'), t -> t <> '')))
+                 {SQL_RAW_TOKENS}, t -> t <> '')))
                AS DOUBLE) /
-               greatest(len(list_filter(string_split_regex(lower(text), '\\s+'),
+               greatest(len(list_filter({SQL_RAW_TOKENS},
                                         t -> t <> '')), 1), 6) AS score
   FROM documents
 ),
@@ -467,7 +463,7 @@ WHERE b.rk_best = 1 AND w.rk_worst = 1 AND b.doc_id <> w.doc_id
 )
 def x77_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens()
     score = F.round(
         F.size(F.array_distinct(toks)).cast("double")
         / F.greatest(F.size(toks), F.lit(1)),

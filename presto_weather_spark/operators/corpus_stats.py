@@ -18,6 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import (
+    SQL_RAW_TOKENS,
+    SQL_TOKENS,
+    STOPWORDS,
+    spread,
+    tokens,
+)
 from presto_weather_spark.registry import defer_install, register
 from presto_weather_spark.session import load_table
 
@@ -279,7 +286,7 @@ def x85_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", _words().alias("w"))
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
     tagged = d.select(
         "doc_id",
@@ -327,7 +334,7 @@ def x85_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X86 — composite quality-rule gate (Gopher rules, integer-exact thresholds)
 # ---------------------------------------------------------------------------
 
-STOPWORDS = ("the", "a", "of", "to", "and", "in")
+GOPHER_STOPWORDS = ("the", "a", "of", "to", "and", "in")
 
 
 @register(
@@ -340,7 +347,7 @@ WITH base AS (
          CAST(length(text) - len(string_split(text, ' ')) + 1 AS BIGINT)
              AS sum_word_len,
          CAST(len(list_filter(string_split(text, ' '),
-                  w -> list_contains({list(STOPWORDS)!r}, w))) AS BIGINT)
+                  w -> list_contains({list(GOPHER_STOPWORDS)!r}, w))) AS BIGINT)
              AS stop_count,
          CAST(length(text)
               - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))
@@ -381,7 +388,7 @@ def x86_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(ws).cast("bigint")
     n_chars_m = F.length("text").cast("bigint")
     sum_word_len = (F.length("text") - F.size(ws) + 1).cast("bigint")
-    stop_lit = F.array(*[F.lit(s) for s in STOPWORDS])
+    stop_lit = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
     stop_count = F.size(
         F.filter(ws, lambda w: F.array_contains(stop_lit, w))
     ).cast("bigint")
@@ -646,16 +653,12 @@ def x88_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 X97_BUCKET = 64  # doc_ids per prefix-sum bucket (the distribution knob)
 
-_X97_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
-
-
 def _x97_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed prefix-sum stage of x97, pre-checkpoint — exposed so
     tests/test_plans.py can assert the bucketed-window shape (the query's
     own plan is truncated at the localCheckpoint below)."""
-    d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    toks = tokens()
     tok = d.select("doc_id", F.explode(toks).alias("term"))
     # Round-10 optimization (guide §2.3, aggregate before you shuffle): the
     # old shape computed first_doc with min(doc_id) OVER (PARTITION BY term)
@@ -719,7 +722,7 @@ def _x97_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x97_heaps_law_fit",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_X97_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS term FROM documents
 ),
 attributed AS (
   SELECT doc_id, term,
@@ -816,14 +819,11 @@ def x97_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 X105_P = 5  # prefix width in tokens
 
-_X105_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
-
-
 @register(
     "x105_boilerplate_prefixes",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, source, {_X105_TOKS} AS ts FROM documents
+  SELECT doc_id, source, {SQL_TOKENS} AS ts FROM documents
 ),
 pref AS (
   SELECT doc_id, source,
@@ -857,7 +857,7 @@ HAVING COUNT(*) >= 2
 )
 def x105_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    toks = tokens()
     pref = (
         d.select("doc_id", "source", toks.alias("ts"))
         .filter(F.size("ts") >= X105_P)
@@ -966,7 +966,7 @@ def _x86_keep_sql() -> str:
         "AND length(text) - len(string_split(text, ' ')) + 1 "
         "    <= 10 * len(string_split(text, ' ')) "
         f"AND len(list_filter(string_split(text, ' '), "
-        f"        w -> list_contains({list(STOPWORDS)!r}, w))) * 50 "
+        f"        w -> list_contains({list(GOPHER_STOPWORDS)!r}, w))) * 50 "
         "    >= len(string_split(text, ' ')) "
         "AND (length(text) "
         "     - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))) * 10 "
@@ -1031,13 +1031,11 @@ GROUP BY hv.field, gate.h_gate
     "languages + sources, vocab-sized however big the corpus.",
 )
 def x114_metadata_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import STOPWORDS as _SW
-
     d = load_table(spark, sf_dir, "documents")
     ws = _words()
     n_words = F.size(ws).cast("bigint")
     sum_word_len = (F.length("text") - F.size(ws) + 1).cast("bigint")
-    stop_lit = F.array(*[F.lit(s) for s in _SW])
+    stop_lit = F.array(*[F.lit(s) for s in STOPWORDS])
     stop_count = F.size(
         F.filter(ws, lambda w: F.array_contains(stop_lit, w))
     ).cast("bigint")
@@ -1185,7 +1183,7 @@ LANG_EPOCH_CAP = 4.0  # upsampling beyond this repeats data too hard
     oracle=f"""
 WITH mass AS (
   SELECT lang,
-         CAST(SUM(len(list_filter(string_split_regex(lower(text), '\\s+'),
+         CAST(SUM(len(list_filter({SQL_RAW_TOKENS},
                                   t -> t <> ''))) AS BIGINT) AS lang_tokens
   FROM documents GROUP BY lang
 ),
@@ -1228,13 +1226,9 @@ FROM p CROSS JOIN z
     "aggregate — the planner operates on a languages-sized table.",
 )
 def x134_language_budget_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import _spread, _tokens
-
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     mass = d.groupBy("lang").agg(
-        F.sum(F.size(F.filter(_tokens(), lambda t: t != "")))
-        .cast("bigint")
-        .alias("lang_tokens")
+        F.sum(F.size(tokens())).cast("bigint").alias("lang_tokens")
     )
     tot = mass.agg(F.sum("lang_tokens").cast("bigint").alias("total"))
     p = mass.crossJoin(F.broadcast(tot)).withColumn(
@@ -1352,7 +1346,7 @@ BLOCKLIST_GATE = 50  # flag when flagged tokens exceed 1/GATE of the doc
     oracle=f"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'),
+         list_filter({SQL_RAW_TOKENS},
                      w -> w <> '') AS ws
   FROM documents
 ),
@@ -1385,9 +1379,7 @@ FROM c
 )
 def x140_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != F.lit("")
-    )
+    ws = tokens()
     flagged = F.filter(
         ws, lambda w: w.isin(*BLOCKLIST)
     )
@@ -1583,9 +1575,7 @@ def x142_split_ngram_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         split.alias("split"),
         F.split(F.col("text"), " ").alias("ws"),
     ).filter(F.col("split") != "valid")
-    words = words.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    words = spread(words, "doc_id")
     th = words.select(
         "doc_id", "lang", "split", F.posexplode("ws").alias("pos", "tok")
     ).select("doc_id", "lang", "split", "pos", F.xxhash64("tok").alias("h"))
@@ -1739,7 +1729,7 @@ def x143_gopher_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.split("text", " ").alias("w"),
         F.size(F.split("text", " ")).cast("bigint").alias("nt"),
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    ).transform(spread, "doc_id")
     gram_arrays = [
         F.expr(
             f"CASE WHEN size(w) >= {n} THEN "

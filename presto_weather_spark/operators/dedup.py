@@ -17,6 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import (
+    SQL_RAW_TOKENS,
+    SQL_TOKENS,
+    raw_tokens,
+    spread,
+    tokens,
+)
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows
 
@@ -24,10 +31,6 @@ N_HASHES = 16  # MinHash signature length
 N_BANDS = 4  # LSH bands (4 rows per band)
 ROWS_PER_BAND = N_HASHES // N_BANDS
 SHINGLE_K = 3  # tokens per shingle
-
-
-def _tokens() -> F.Column:
-    return F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
 
 
 def _hashed_gram_stream(
@@ -156,13 +159,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     subtree into every salt branch.)  The only shuffle is the partial->final
     aggregate exchange on doc_id, which LSH banding needs anyway.
     """
-    # The corpus may arrive as a handful of large parquet row groups (one,
-    # at test scale) — repartition so the CPU-bound shingle+hash work uses
-    # every core. The explicit partition count matters: a column-only
-    # repartition is a coalescible shuffle, and AQE would fold this tiny
-    # (by bytes) but compute-heavy input back into one partition.
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    docs = docs.repartition(n_parts, "doc_id")
+    docs = spread(docs, "doc_id")
     # Shingle hashes WITHOUT building shingle strings: hash each token once,
     # then combine SHINGLE_K consecutive token hashes via lead() over
     # (doc_id, pos) — multi-arg xxhash64 is the combiner. Everything stays
@@ -176,7 +173,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     # array_to_string over an empty slice is NULL and list_distinct drops
     # it), so un-signed empty docs can never cost gate recall; parity is
     # pinned in tests/test_degenerate_text.py.
-    th = docs.select("doc_id", F.posexplode(_tokens()).alias("pos", "tok")).select(
+    th = docs.select("doc_id", F.posexplode(tokens()).alias("pos", "tok")).select(
         "doc_id", "pos", F.xxhash64("tok").alias("h")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -278,10 +275,10 @@ def minhash_near_dup_pairs(d: DataFrame) -> DataFrame:
 
 
 # x02b's pair CTEs, shared with x02f's recursive-closure oracle.
-_X02B_PAIRS_SQL = """grams AS (
+_X02B_PAIRS_SQL = f"""grams AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS INT) - 2, 1) + 1),
-           i -> array_to_string(list_slice(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''), i, i + 2), ' ')))) AS gram
+           range(1, greatest(CAST(len({SQL_TOKENS}) AS INT) - 2, 1) + 1),
+           i -> array_to_string(list_slice({SQL_TOKENS}, i, i + 2), ' ')))) AS gram
   FROM documents
   WHERE doc_id < 60
 ),
@@ -315,7 +312,7 @@ jacc AS (
 )
 def x02b_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    toks = _tokens()
+    toks = tokens()
     n = F.size(toks)
     grams_arr = F.array_distinct(
         F.transform(
@@ -368,11 +365,9 @@ def x02c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial sums (an ``F.aggregate`` fold per bit would be interpreted
     # and re-traverse the token array 32 times).  Empty docs keep a row via
     # the single-empty-token guard, so output row count == input row count.
-    toks = _tokens()
+    toks = tokens()
     guarded = F.when(F.size(toks) == 0, F.array(F.lit(""))).otherwise(toks)
-    # Explicit count: AQE would coalesce a column-only repartition of
-    # this byte-small, compute-heavy input back to one partition.
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     hashed = d.select("doc_id", F.explode(guarded).alias("tok")).select(
         "doc_id", F.xxhash64("tok").alias("h")
     )
@@ -536,9 +531,7 @@ GROUP BY ch.doc_id
     "ratio exceeds a threshold (same two-shuffle profile).",
 )
 def x19_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # single-row-group fixture scan -> fan the chunking out across cores
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     starts = F.sequence(F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(CHUNK_LEN))
     ch = d.select("doc_id", "text", F.explode(starts).alias("s")).select(
         "doc_id",
@@ -654,9 +647,10 @@ def x34_quality_aware_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SEMDEDUP_TAU_E6 = 300000  # micro-unit integer threshold (no float literal)
-SEMDEDUP_TAU = 0.30  # within-orthant cosine threshold (driver embeddings
-# carry no true dups; 0.30 sits in the upper tail so ~100 pairs fire)
+# Within-orthant cosine threshold 0.30 in micro-units (integer compare, no
+# float literal): driver embeddings carry no true dups, and 0.30 sits in
+# the upper tail so ~100 pairs fire.
+SEMDEDUP_TAU_E6 = 300000
 SEMDEDUP_BITS = 4  # sign bits -> 2^4 coarse cells
 
 
@@ -744,7 +738,7 @@ CONTAIN_DF_CAP = 16  # drop boilerplate grams (df > cap) from the sets
     "x40_ngram_containment",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS t
+  SELECT doc_id, {SQL_TOKENS} AS t
   FROM documents
 ),
 grams AS (
@@ -795,16 +789,14 @@ FROM (
     "64-bit collision.",
 )
 def x40_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import _spread
-
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # Round-10: hash each token ONCE and combine k hashes with multi-arg
     # xxhash64 — the old concat_ws(tok, lead...) allocated a k-token gram
     # string per position AND shipped token strings through the window
     # sort; now only 8-byte longs ride the sort and no string is built.
     # Same key class (injective short of a 64-bit collision).
     th = d.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens()).alias("pos", "tok")
     ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("h", i).over(w) for i in range(1, CONTAIN_NGRAM)]
@@ -983,8 +975,8 @@ X02G_RECALL_NUM, X02G_RECALL_DEN = 9, 10  # banding must catch >= 90%
     oracle=f"""
 WITH grams AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS INT) - 2, 1) + 1),
-           i -> array_to_string(list_slice(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''), i, i + 2), ' ')))) AS gram
+           range(1, greatest(CAST(len({SQL_TOKENS}) AS INT) - 2, 1) + 1),
+           i -> array_to_string(list_slice({SQL_TOKENS}, i, i + 2), ' ')))) AS gram
   FROM documents
   WHERE doc_id < {X02G_SUBSET}
 ),
@@ -1028,7 +1020,6 @@ def x02g_banding_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < X02G_SUBSET
     )
-    dp = d.sparkSession.sparkContext.defaultParallelism
     # Round-10 optimization: 3-gram HASHES via the lead-window token-hash
     # idiom (_hashed_gram_stream) instead of interpreted transform() gram
     # strings; the in-doc dedup the old array_distinct did happens in a
@@ -1043,14 +1034,12 @@ def x02g_banding_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the gram table is small in bytes but quadratic in join output.
     # Measured 3.5 s -> 2.1 s on the exact join at sf0.1 (strings, r9);
     # the 8-byte keys shrink the same exchange/join a further step.
-    tokened = d.repartition(dp, "doc_id").select(
-        "doc_id", _tokens().alias("ts")
-    )
+    tokened = spread(d, "doc_id").select("doc_id", tokens().alias("ts"))
     grams = (
         _hashed_gram_stream(tokened, 3, keep_short_head=True)
         .select("doc_id", "gh")
         .distinct()
-        .repartition(dp, "gh")
+        .transform(spread, "gh")
         .localCheckpoint(eager=False)
     )
     sizes = grams.groupBy("doc_id").agg(
@@ -1239,7 +1228,7 @@ def x73_content_defined_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def cdc_chunks(batches):
@@ -1421,7 +1410,7 @@ def x73b_gear_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def gear_chunks(batches):
@@ -1450,10 +1439,10 @@ def x73b_gear_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x74_dedup_savings",
-    oracle="""
+    oracle=f"""
 WITH sized AS (
   SELECT doc_id, source, md5(text) AS h,
-         CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
+         CAST(len(list_filter({SQL_RAW_TOKENS},
                               t -> t <> '')) AS BIGINT) AS n_tok
   FROM documents
 ),
@@ -1482,17 +1471,12 @@ FROM ranked GROUP BY source
     "over content digests + one source aggregate.",
 )
 def x74_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import _tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )  # fixture is one row group; spread the tokenize+hash CPU
+    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     sized = docs.select(
         "doc_id",
         "source",
         F.md5("text").alias("h"),
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint").alias("n_tok"),
+        F.size(tokens()).cast("bigint").alias("n_tok"),
     )
     w = Window.partitionBy("h").orderBy("doc_id")
     ranked = sized.withColumn("rn", F.row_number().over(w))
@@ -1725,8 +1709,8 @@ X96_DUP_SIM = 0.8  # normalized-similarity threshold for the dup verdict
     oracle=f"""
 WITH grams AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS INT) - {X96_GRAM_K - 1}, 1) + 1),
-           i -> array_to_string(list_slice(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''), i, i + {X96_GRAM_K - 1}), ' ')))) AS gram
+           range(1, greatest(CAST(len({SQL_TOKENS}) AS INT) - {X96_GRAM_K - 1}, 1) + 1),
+           i -> array_to_string(list_slice({SQL_TOKENS}, i, i + {X96_GRAM_K - 1}), ' ')))) AS gram
   FROM documents
 ),
 df AS (
@@ -1775,8 +1759,7 @@ JOIN documents tb ON tb.doc_id = c.doc_b
     "per surviving pair.",
 )
 def x96_editdist_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # Round-10 optimization: k-gram HASHES via the lead-window token-hash
     # idiom (_hashed_gram_stream) — no interpreted transform() string
     # builder, 8-byte keys through the df count, the broadcast and the
@@ -1785,7 +1768,7 @@ def x96_editdist_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already satisfies (no extra exchange). Identical candidate set
     # short of a 64-bit collision (the x18/x40 convention).
     grams = _hashed_gram_stream(
-        d.select("doc_id", _tokens().alias("ts")),
+        d.select("doc_id", tokens().alias("ts")),
         X96_GRAM_K,
         keep_short_head=True,
     ).select("doc_id", "gh").distinct()
@@ -1843,7 +1826,7 @@ X102_W = 8  # tokens per window (the exact-substring granularity)
     "x102_dup_span_extraction",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
+  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
                              t -> t <> '') AS ts
   FROM documents
 ),
@@ -1899,9 +1882,8 @@ GROUP BY doc_id, island_id
     "but slower in the full-bench pairing — see OPTIMIZATION_r10.md).",
 )
 def x102_dup_span_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    toks = _tokens()
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    toks = tokens()
     n = F.size(toks)
     # Round-10 note: a lead-window token-hash rewrite of this gram build
     # (the batch-2 _hashed_gram_stream shape) was tried, proved
@@ -1959,8 +1941,9 @@ def x102_dup_span_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X103: LSH banding parameter planner — the (bands, rows) S-curve optimizer
 # ---------------------------------------------------------------------------
 
-X103_THRESHOLD = 0.5  # target Jaccard threshold the x02 pipeline dedups at
-X103_STEPS = 200  # fixed midpoint-rule grid (deterministic in both engines)
+# Fixed midpoint-rule grid (deterministic in both engines); its halfway
+# point is the 0.5 Jaccard threshold the x02 pipeline dedups at.
+X103_STEPS = 200
 
 
 @register(
@@ -2078,7 +2061,7 @@ def x103_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, ts FROM (
-    SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
+    SELECT doc_id, list_filter({SQL_RAW_TOKENS},
                                t -> t <> '') AS ts
     FROM documents
   ) WHERE len(ts) > 0
@@ -2148,9 +2131,8 @@ LEFT JOIN (
     "100 TB. Integer/string-exact end to end.",
 )
 def x104_dup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    toks = _tokens()
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("ts")).filter(F.size("ts") > 0)
     base = base.localCheckpoint(eager=False)  # windows, positions, final join
     # Round-10 note: the lead-window token-hash rewrite was tried here and
@@ -2241,7 +2223,7 @@ def x104_dup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x110_dup_graph_triangles",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS t
+  SELECT doc_id, {SQL_TOKENS} AS t
   FROM documents
 ),
 grams AS (
@@ -2299,14 +2281,12 @@ FROM tri
     "lever when hub nodes appear.".format(CONTAIN_DF_MIN, CONTAIN_DF_CAP),
 )
 def x110_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import _spread, _tokens
-
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # Round-10: per-token hash + multi-arg xxhash64 combine (see x40) —
     # no gram-string allocation, longs instead of strings through the
     # window sort; same key class short of a 64-bit collision.
     th = d.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos", "tok")
+        "doc_id", F.posexplode(raw_tokens()).alias("pos", "tok")
     ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("h", i).over(w) for i in range(1, CONTAIN_NGRAM)]
@@ -2389,7 +2369,7 @@ X115_THRESHOLDS = (0.3, 0.5, 0.7, 0.9)
     "x115_dedup_threshold_sensitivity",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS t
+  SELECT doc_id, {SQL_TOKENS} AS t
   FROM documents
 ),
 grams AS (
@@ -2456,14 +2436,12 @@ LEFT JOIN doc_counts USING (threshold)
 def x115_dedup_threshold_sensitivity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from presto_weather_spark.operators.text_analysis import _spread, _tokens
-
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # Round-10 note: the per-token-hash lead combine (the x40 shape) was
     # tried here too, proved oracle-identical — and regressed in the
     # full-bench pairing (1.73 s -> 2.85 s) while isolated A/Bs were
     # noise-split; reverted per keep-only-wins (see OPTIMIZATION_r10.md).
-    th_doc = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
+    th_doc = d.select("doc_id", F.posexplode(raw_tokens()).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("tok")] + [
         F.lead("tok", i).over(w) for i in range(1, CONTAIN_NGRAM)

@@ -18,6 +18,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import (
+    SQL_RAW_TOKENS,
+    grand_total_if_empty,
+    raw_tokens,
+    spread,
+)
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows, stage_dir
 
@@ -70,8 +76,6 @@ GROUP BY CUBE (lang, source)
     "the dataset-card summary query.",
 )
 def x06_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.operators._util import grand_total_if_empty
-
     d = load_table(spark, sf_dir, "documents")
     out = d.cube("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -88,10 +92,6 @@ def x06_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Binary-column plumbing (decode stubbed — codecs not in this container)
 # ---------------------------------------------------------------------------
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary, "
-    "n_bytes int, payload_hash bigint"
-)
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes int, "
     "feat_mean double, feat_dim int, decoder string"
@@ -450,7 +450,7 @@ def x05d_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)  # the image/png class (x05b rule)
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -482,7 +482,7 @@ ALIGN_THRESHOLD = 0  # keep pairs with non-negative alignment (sign test)
     "x58_pair_alignment_gate",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS term
+  SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term
   FROM documents WHERE doc_id < 200
 ),
 tb AS (
@@ -538,7 +538,7 @@ def x58_pair_alignment_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(8, "doc_id")
     )
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term")
+        "doc_id", F.explode(raw_tokens()).alias("term")
     ).filter(F.col("term") != "")
     tb = tok.groupBy(
         "doc_id",
@@ -667,7 +667,7 @@ def x05e_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -782,7 +782,7 @@ def x05f_audio_loudness_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -882,7 +882,7 @@ def x05g_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1003,7 +1003,7 @@ def x146_audio_voiced_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
     )
 
     def spans(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

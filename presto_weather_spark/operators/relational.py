@@ -20,9 +20,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
+    GLOBAL_RANK_LOCAL_LIMIT,
     dec,
+    distributed_global_rank,
     dsum,
+    exact_ntile,
     grand_total_if_empty,
+    spread,
     sql_dsum,
 )
 from presto_weather_spark.registry import register
@@ -694,12 +698,9 @@ GROUP BY l_returnflag
 )
 def s05f_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    # Single-row-group fixture -> single-task scan; exact percentile's
-    # partial phase buffers every value, so spread the buffering across
-    # cores first (sub-key keeps groups intact while fanning out rows).
-    li = li.repartition(
-        spark.sparkContext.defaultParallelism, "l_returnflag", "l_linenumber"
-    )
+    # Exact percentile's partial phase buffers every value, so spread the
+    # buffering (the sub-key keeps groups intact while fanning out rows).
+    li = spread(li, "l_returnflag", "l_linenumber")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.25)), 4).alias("p25"),
         F.round(F.percentile("l_quantity", F.lit(0.50)), 4).alias("p50"),
@@ -1336,10 +1337,8 @@ GROUP BY l_returnflag
 def s05l_stat_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # exact median buffers group values in the partial phase; spread the
-    # single-row-group scan so the buffering parallelizes (cf. s05f)
-    li = li.repartition(
-        spark.sparkContext.defaultParallelism, "l_returnflag", "l_linenumber"
-    )
+    # buffering (cf. s05f)
+    li = spread(li, "l_returnflag", "l_linenumber")
     qty = F.col("l_quantity").cast("double")
     price = F.col("l_extendedprice")
     return li.groupBy("l_returnflag").agg(
@@ -1743,12 +1742,10 @@ def s23_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _skew_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The s25 join: a synthetic hot cohort (two-thirds of events collapse
     onto cohort 0) joined to a one-row-per-cohort dimension. The fact side
-    is fanned out to 32 map tasks first — AQE's skew split reassembles a
+    is fanned out across every core first — AQE's skew split reassembles a
     hot REDUCER partition from per-MAPPER output chunks, so a one-mapper
     shuffle (the single-row-group fixture scan) can never be split."""
-    e = load_table(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread(load_table(spark, sf_dir, "events"))
     c = load_table(spark, sf_dir, "customer")
     fact = e.select(
         F.when(F.col("user_id") < 100, 0).otherwise(F.col("user_id")).alias("cohort"),
@@ -3898,10 +3895,8 @@ def x100_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = load_table(spark, sf_dir, "events")
-    e = e.repartition(
-        e.sparkSession.sparkContext.defaultParallelism, "event_id"
-    ).select("event_type", "value")
+    e = spread(load_table(spark, sf_dir, "events"), "event_id")
+    e = e.select("event_type", "value")
 
     m = QSKETCH_M
     _compact = qsketch_compact
@@ -3997,49 +3992,16 @@ FROM orders
     "with no single-task stage: range-repartition + sort-within-"
     "partitions (s26's distributed total order), a partition-LOCAL "
     "Arrow pass assigns (pid, local_rn) with a running counter — order-"
-    "preserving, stateless beyond one int — then per-pid counts (32 "
-    "rows) turn into prefix offsets on the driver side of a broadcast "
+    "preserving, stateless beyond one int — then per-pid counts (one "
+    "row per partition) turn into prefix offsets on the driver side of a broadcast "
     "join. Exactly Spark's own RDD.zipWithIndex two-pass design, "
     "expressed over DataFrames. Unique keys make the numbering "
     "boundary-placement-independent, so RangePartitioner sampling "
     "cannot affect the result.",
 )
 def s74_global_row_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd  # noqa: PLC0415
-
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    n_parts = spark.sparkContext.defaultParallelism
-    ranged = o.repartitionByRange(n_parts, "o_orderkey").sortWithinPartitions(
-        "o_orderkey"
-    )
-
-    def number_partition(batches):
-        from pyspark import TaskContext  # noqa: PLC0415
-
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in batches:
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "pid": pid,
-                    "o_orderkey": pdf["o_orderkey"],
-                    "local_rn": range(seen + 1, seen + n + 1),
-                }
-            )
-            seen += n
-
-    local = ranged.mapInPandas(
-        number_partition, "pid int, o_orderkey long, local_rn long"
-    ).localCheckpoint(eager=False)  # counts AND the final join read it
-    counts = local.groupBy("pid").agg(F.max("local_rn").alias("cnt"))
-    w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("offset")
-    )  # n_parts rows: the single-partition window is partition-count-sized
-    return local.join(F.broadcast(offsets), "pid").select(
-        "o_orderkey", (F.col("local_rn") + F.col("offset")).alias("global_seq")
-    )
+    return distributed_global_rank(o, [F.col("o_orderkey")], "global_seq")
 
 
 # ---------------------------------------------------------------------------
@@ -4344,12 +4306,6 @@ def x121_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the gate and the ntile denominator (exact_ntile needs n anyway,
     # so the gate costs zero extra jobs; the checkpoint makes the three
     # rank passes read the aggregate once).
-    from presto_weather_spark.operators._util import (
-        GLOBAL_RANK_LOCAL_LIMIT,
-        distributed_global_rank,
-        exact_ntile,
-    )
-
     per_cust = per_cust.localCheckpoint(eager=False)  # 3 rank passes read it
     n_rows = per_cust.count()
     orders_specs = [

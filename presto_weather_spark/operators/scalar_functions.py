@@ -23,7 +23,7 @@ from presto_weather_spark.functions.weather import (
     weather_code_to_text_py,
 )
 from presto_weather_spark.functions.formatting import iso_minute
-from presto_weather_spark.operators._util import dec
+from presto_weather_spark.operators._util import spread
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table
 
@@ -334,12 +334,8 @@ FROM payload
 )
 def r05_forecast_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    # The fixture parquet is one row group, so the scan is one task; the
-    # JSON build+parse is CPU-bound per row, so spread it across cores
-    # first (explicit count — AQE would coalesce a column-only repartition
-    # of this byte-small input back to one partition). At deployment scale
-    # the scan itself is parallel and this repartition is dropped.
-    e = e.repartition(spark.sparkContext.defaultParallelism, "event_id")
+    # The JSON build+parse is CPU-bound per row.
+    e = spread(e, "event_id")
     body = F.format_string(
         '{"current": {"temperature_2m": %.1f, "weather_code": %d, "time": "%s"}, '
         '"daily": {"precipitation_probability_max": [%d]}}',

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import spread
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows
 
@@ -386,10 +387,11 @@ def x03c_pairwise_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-NEARDUP_TAU_E6 = 380000  # micro-unit threshold: integer compare, no float literal
-NEARDUP_TAU = 0.38  # driver embeddings have no true dups (max pair cosine
-# ~0.456 at sf0.01), so the threshold sits in the upper tail to exercise
-# the operator with a small non-empty result.
+# Cosine threshold 0.38 in micro-units (integer compare, no float literal):
+# driver embeddings have no true dups (max pair cosine ~0.456 at sf0.01),
+# so the threshold sits in the upper tail to exercise the operator with a
+# small non-empty result.
+NEARDUP_TAU_E6 = 380000
 NEARDUP_SUBSET = 300  # bounded probe set keeps the all-pairs oracle cheap
 
 
@@ -594,7 +596,7 @@ def x15_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = (
         emb.select("vec_id", _dbl("embedding").alias("v"))
-        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(spread)
         .localCheckpoint()
     )
 
@@ -717,8 +719,7 @@ GROUP BY vec_id, amax
     "deployment the quantized vectors write back as array<tinyint>.",
 )
 def x03e_scalar_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    e = e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
     x = e.select("vec_id", F.explode("embedding").alias("vf")).select(
         "vec_id", F.col("vf").cast("double").alias("v")
     )
@@ -781,7 +782,7 @@ GROUP BY a.i, b.i
 )
 def x22_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("embedding")
-    e = e.repartition(spark.sparkContext.defaultParallelism)
+    e = spread(e)
 
     def gram_partials(batches):
         iu = np.triu_indices(64)
@@ -986,7 +987,7 @@ def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("neighbor_label"),
             F.col("embedding").alias("cv"),
         )
-        .repartition(emb.sparkSession.sparkContext.defaultParallelism, "neighbor_id")
+        .transform(spread, "neighbor_id")
         .mapInPandas(
             score,
             "query_id bigint, neighbor_id bigint, neighbor_label int, cosine_sim double",
@@ -1134,8 +1135,7 @@ WHITEN_EPS = 1e-9  # eigenvalue floor for the inverse square root
     "zero shuffles of vector data.",
 )
 def x37_pca_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    e = e.repartition(spark.sparkContext.defaultParallelism)
+    e = spread(load_table(spark, sf_dir, "embeddings"))
     iu = np.triu_indices(64)
 
     def moment_partials(batches):
@@ -1334,11 +1334,7 @@ def x65_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hybrid contract: tiny-data iterations skip per-round job
         # latency; path equivalence pinned in tests/test_properties.py).
         return _kcenter_greedy_local(emb)
-    return _kcenter_greedy_distributed(
-        emb.repartition(
-            emb.sparkSession.sparkContext.defaultParallelism, "vec_id"
-        )
-    )
+    return _kcenter_greedy_distributed(spread(emb, "vec_id"))
 
 
 def _kcenter_greedy_local(emb: DataFrame) -> DataFrame:
@@ -1781,11 +1777,7 @@ def x98_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel needs the vec_id spread.
     if emb.limit(MMR_LOCAL_LIMIT + 1).count() <= MMR_LOCAL_LIMIT:
         return _mmr_local(emb)
-    return _mmr_distributed(
-        emb.repartition(
-            emb.sparkSession.sparkContext.defaultParallelism, "vec_id"
-        )
-    )
+    return _mmr_distributed(spread(emb, "vec_id"))
 
 
 MMR_LOCAL_LIMIT = 100_000  # collect-and-solve below this corpus size

@@ -14,42 +14,24 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_weather_spark.operators._util import (
+    SQL_RAW_TOKENS,
+    SQL_TOKENS,
+    STOPWORDS,
+    global_rank,
+    raw_tokens,
+    spread,
+    tokens,
+)
 from presto_weather_spark.registry import defer_install, register
 from presto_weather_spark.session import load_table, local_rows
-
-# A tiny fixed English stopword list shared by Spark and oracle SQL.
-STOPWORDS: tuple[str, ...] = (
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "for", "on", "with", "as", "at", "by", "be", "this", "that", "are",
-)
-
-
-def _tokens(text_col: str = "text") -> F.Column:
-    """Lowercased whitespace tokens (the shared tokenizer)."""
-    return F.split(F.lower(F.col(text_col)), r"\s+")
-
-
-_SQL_TOKENS = "string_split_regex(lower(text), '\\s+')"
-
-
-def _spread(d: DataFrame) -> DataFrame:
-    """Fan a single-row-group fixture scan out across every core.
-
-    The test parquet files are one row group, so the scan is one task and
-    per-document CPU work (regex, hashing, tokenize+explode) runs serially.
-    The explicit partition count matters: a column-only repartition of this
-    byte-small but compute-heavy input would be coalesced back to one
-    partition by AQE. At deployment scale scans are parallel and this
-    repartition is dropped.
-    """
-    return d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
 
 
 @register(
     "x04_term_frequencies",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 )
 SELECT term, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
 FROM toks WHERE term <> ''
@@ -60,8 +42,10 @@ GROUP BY term
 )
 def x04_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = _spread(d).select("doc_id", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     return toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("tf"),
@@ -73,7 +57,7 @@ def x04_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x04b_tfidf_top_terms",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
@@ -104,8 +88,10 @@ SELECT doc_id, term, tfidf, rn AS term_rank FROM ranked WHERE rn <= 3
 def x04b_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     n_docs = d.count()  # scalar; at scale use a broadcast single-row agg
-    toks = _spread(d).select("doc_id", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     # tf feeds both the df aggregate and the scoring join; the two branches
     # share an identical shuffle, so Spark plans a ReusedExchange and the
@@ -131,7 +117,7 @@ def x04b_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x08_language_id_heuristic",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 stats AS (
   SELECT doc_id, any_value(lang) AS lang,
@@ -149,7 +135,7 @@ FROM stats
 )
 def x08_language_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "lang", F.explode(_tokens()).alias("term")).filter(
+    toks = d.select("doc_id", "lang", F.explode(raw_tokens()).alias("term")).filter(
         F.col("term") != ""
     )
     stats = toks.groupBy("doc_id").agg(
@@ -187,7 +173,7 @@ FROM documents
     "embarrassingly parallel.",
 )
 def x09_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     text_len = F.length("text")
     punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
     alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
@@ -195,7 +181,7 @@ def x09_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         text_len.alias("n_chars_actual"),
-        F.size(F.filter(_tokens(), lambda t: t != "")).alias("n_tokens"),
+        F.size(tokens()).alias("n_tokens"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(alpha.cast("double") / text_len, 6).alias("alpha_ratio"),
         F.when(
@@ -221,10 +207,10 @@ FROM documents
     "estimate used for LLM budget planning.",
 )
 def x10_token_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id",
-        F.size(F.filter(_tokens(), lambda t: t != "")).alias("ws_tokens"),
+        F.size(tokens()).alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(
                 F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), F.lit(0)
@@ -248,12 +234,10 @@ def x11_document_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the token array in its own projection: it is referenced
     # from inside the shingle lambda, and projection collapse would
     # otherwise re-run split+filter for every window position.
-    tokenized = d.repartition(
-        d.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    ).select(
+    tokenized = spread(d, "doc_id").select(
         "doc_id",
         "text",
-        F.filter(_tokens(), lambda t: t != "").alias("toks"),
+        tokens().alias("toks"),
     )
     n = F.size(F.col("toks"))
     # 8-token shingles via transform over a 1..n-7 index sequence.
@@ -334,7 +318,7 @@ WHERE bucket < (CASE lang WHEN 'en' THEN 20 WHEN 'de' THEN 50 ELSE 90 END)
     "x07, oracle-proved bit-identical in both engines.",
 )
 def x12_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     bucket = (
         F.conv(
             F.substring(
@@ -443,7 +427,7 @@ FROM seeded
     "engines' regex dialects agree on these patterns.",
 )
 def x16_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     seeded = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -465,7 +449,7 @@ def x16_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter({_SQL_TOKENS}, t -> t <> '') AS t
+         {SQL_TOKENS} AS t
   FROM documents
 ),
 bi AS (
@@ -491,10 +475,10 @@ FROM agg
     "aggregates, one shuffle on doc_id that the window already needs.",
 )
 def x17_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     th = d.select(
         "doc_id",
-        F.posexplode(F.filter(_tokens(), lambda t: t != "")).alias("pos", "tok"),
+        F.posexplode(tokens()).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     nxt = F.lead("tok").over(w)
@@ -526,7 +510,7 @@ DECON_EVAL_MOD = 97  # doc_id % 97 == 0 designates the synthetic eval set
     "x18_decontamination",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS t
+  SELECT doc_id, {SQL_TOKENS} AS t
   FROM documents
 ),
 grams AS (
@@ -557,10 +541,10 @@ GROUP BY train.doc_id
     "with identical plan shape.",
 )
 def x18_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     th = d.select(
         "doc_id",
-        F.posexplode(F.filter(_tokens(), lambda t: t != "")).alias("pos", "tok"),
+        F.posexplode(tokens()).alias("pos", "tok"),
     ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("h", i).over(w) for i in range(1, DECON_NGRAM)]
@@ -601,7 +585,7 @@ def x18_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH tok AS (
   SELECT doc_id, t.term
   FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
+    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents
   ) AS t
   WHERE t.term <> ''
 ),
@@ -627,8 +611,8 @@ GROUP BY tok.doc_id
 def x20_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
@@ -652,7 +636,7 @@ def x20_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH dt AS (
   SELECT DISTINCT doc_id, t.term
-  FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents) t
+  FROM (SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents) t
   WHERE t.term <> ''
 ),
 d AS (SELECT count(DISTINCT doc_id) AS n_docs FROM dt),
@@ -686,8 +670,8 @@ WHERE p.n_ab * 4 >= d.n_docs
 def x23_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     dt = (
-        _spread(d)
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
         .distinct()
         .localCheckpoint()  # feeds df counts, the self-join, and the scalar D
@@ -733,7 +717,7 @@ def x23_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x24_zipf_slope",
     oracle=f"""
 WITH toks AS (
-  SELECT unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 freq AS (
   SELECT term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY term
@@ -760,8 +744,8 @@ FROM ranked
 def x24_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     freq = (
-        _spread(d)
-        .select(F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select(F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -781,7 +765,7 @@ def x24_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x25_langid_confusion",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 pred AS (
   SELECT doc_id, any_value(lang) AS lang,
@@ -807,8 +791,8 @@ GROUP BY lang, lang_guess
 def x25_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select("doc_id", "lang", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     is_stop = F.col("term").isin(*STOPWORDS).cast("int")
@@ -844,7 +828,7 @@ X26_TRACK = 10000
     "x26_heavy_hitters_sketch",
     oracle=f"""
 WITH toks AS (
-  SELECT unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 freq AS (
   SELECT term, count(*) AS est_count FROM toks WHERE term <> '' GROUP BY term
@@ -864,8 +848,8 @@ FROM freq ORDER BY est_count DESC, term LIMIT {TOP_K_TERMS}
 def x26_heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select(F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select(F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     # Ask the sketch for its full tracked map (one bounded array in a 1-row
@@ -907,7 +891,7 @@ PACK_BUCKET = 1024  # docs per cumsum bucket in the hierarchical prefix sum
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, count(*) AS n_tokens
-  FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents) t
+  FROM (SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents) t
   WHERE term <> ''
   GROUP BY doc_id
 ),
@@ -940,8 +924,8 @@ FROM cum
 def x27_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_tokens"))
@@ -1182,7 +1166,7 @@ def x32_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     r = ratio(F.col("text"))
     return d.select(
         "doc_id",
@@ -1217,7 +1201,7 @@ FROM documents,
     "embedding association).",
 )
 def x33_rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     starts = F.sequence(
         F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(RAG_STRIDE)
     )
@@ -1304,7 +1288,7 @@ VOCAB_K = 200  # induced-vocabulary size for the OOV-rate monitor
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, t.term
-  FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents) AS t
+  FROM (SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents) AS t
   WHERE t.term <> ''
 ),
 tf AS (SELECT term, COUNT(*) AS tf FROM tok GROUP BY term),
@@ -1341,8 +1325,10 @@ GROUP BY d.lang, d.source
 )
 def x38_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = _spread(d).select("doc_id", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     tf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     vocab = (
@@ -1390,8 +1376,8 @@ BIGRAM_ALPHA = 0.5  # add-alpha smoothing for unseen-context robustness
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, term, pos FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS term,
-           generate_subscripts({_SQL_TOKENS}, 1) AS pos
+    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
+           generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
     FROM documents
   ) WHERE term <> ''
 ),
@@ -1428,8 +1414,8 @@ GROUP BY big.doc_id
 def x39_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select("doc_id", F.posexplode(_tokens()).alias("pos", "term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.posexplode(raw_tokens()).alias("pos", "term"))
         .filter(F.col("term") != "")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -1473,8 +1459,8 @@ MASK_PCT = 15  # percent of spans masked
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, pos, (pos - 1) // {MASK_SPAN} AS span_id FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS term,
-           generate_subscripts({_SQL_TOKENS}, 1) AS pos
+    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
+           generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
     FROM documents
   ) WHERE term <> ''
 ),
@@ -1507,8 +1493,8 @@ GROUP BY doc_id
 def x41_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select("doc_id", F.posexplode(_tokens()).alias("pos0", "term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.posexplode(raw_tokens()).alias("pos0", "term"))
         .filter(F.col("term") != "")
         .select("doc_id", (F.col("pos0") + 1).alias("pos"))
         .withColumn("span_id", ((F.col("pos") - 1) / MASK_SPAN).cast("bigint"))
@@ -1619,7 +1605,7 @@ def x42_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH tok AS (
   SELECT lang, t.term
-  FROM (SELECT lang, unnest({_SQL_TOKENS}) AS term FROM documents) AS t
+  FROM (SELECT lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents) AS t
   WHERE t.term <> ''
 ),
 tc AS (SELECT lang, term, COUNT(*) AS c FROM tok GROUP BY 1, 2),
@@ -1656,8 +1642,10 @@ FROM pairs
 )
 def x44_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = _spread(d).select("lang", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("lang", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     # Materialize the vocab-sized (lang, term, c) aggregate ONCE: without
     # this, the a/b self-join below re-derives tc AND tot per side — four
@@ -1787,8 +1775,8 @@ def _bpe_apply(syms: list[str], merges: list[tuple[str, str]]) -> list[str]:
 def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     words = (
-        _spread(d)
-        .select(F.explode(_tokens()).alias("word"))
+        spread(d, "doc_id")
+        .select(F.explode(raw_tokens()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wc"))
@@ -1852,7 +1840,7 @@ NB_ALPHA = 0.5  # add-alpha smoothing for unseen (term, class) pairs
     "x45_naive_bayes_lang",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 t AS (SELECT * FROM tok WHERE term <> ''),
 classes AS (
@@ -1934,8 +1922,8 @@ def _nb_doc_features(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFram
     vocabulary grows.
     """
     base = (
-        _spread(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "lang", F.explode(_tokens()).alias("term"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     if hashed:
@@ -2052,7 +2040,7 @@ def _nb_predictions(
     "x45b_naive_bayes_hashed",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS raw FROM documents
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS raw FROM documents
 ),
 t AS (
   SELECT doc_id, lang,
@@ -2137,10 +2125,10 @@ def _x46_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     expensive part of the scan. The materialization is 4 narrow columns
     (~tens of bytes/doc), the standard one-tokenize trade (round-9 x46
     constant shave, was 2 corpus passes)."""
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "source",
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint").alias("n_tok"),
+        F.size(tokens()).cast("bigint").alias("n_tok"),
         F.md5(F.concat_ws(":", F.lit("budget"), F.col("doc_id"))).alias("pri"),
     ).localCheckpoint(eager=False)
     order_w = Window.partitionBy("source").orderBy("pri", "doc_id")
@@ -2166,7 +2154,7 @@ def _x46_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     oracle=f"""
 WITH d AS (
   SELECT doc_id, source,
-         CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS BIGINT) AS n_tok,
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok,
          md5('budget:' || CAST(doc_id AS VARCHAR)) AS pri
   FROM documents
 ),
@@ -2283,7 +2271,7 @@ SPAN_TOKENS = 8  # tokens per dedup span (C4 uses three-sentence spans)
     "x47_span_scrub",
     oracle=f"""
 WITH tk AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS toks FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
 ),
 tok AS (
   SELECT doc_id, unnest(toks) AS term, generate_subscripts(toks, 1) AS pos FROM tk
@@ -2323,10 +2311,10 @@ FROM k GROUP BY doc_id
 )
 def x47_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _spread(load_table(spark, sf_dir, "documents"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.posexplode(F.filter(_tokens(), lambda t: t != "")).alias("pos0", "term"),
+            F.posexplode(tokens()).alias("pos0", "term"),
         )
         .select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
     )
@@ -2406,7 +2394,7 @@ WHERE c.h IS NULL AND b.rn = 1
     "needs.",
 )
 def x48_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(load_table(spark, sf_dir, "documents")).withColumn(
+    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id").withColumn(
         "h", F.md5(F.col("text"))
     )
     corpus_digests = (
@@ -2432,7 +2420,7 @@ def x48_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH d AS (
   SELECT doc_id, source, lang,
-         CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS BIGINT) AS n_tok,
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok,
          n_chars
   FROM documents
 ),
@@ -2464,11 +2452,11 @@ GROUP BY d.source
     "This is the first artifact a data-governance review asks for.",
 )
 def x49_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "source",
         "lang",
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint").alias("n_tok"),
+        F.size(tokens()).cast("bigint").alias("n_tok"),
         "n_chars",
     )
     per_lang = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
@@ -2502,7 +2490,7 @@ LEN_BUCKET = 16  # pad-to-multiple bucket width (tokens)
     "x50_length_bucket_packing",
     oracle=f"""
 WITH d AS (
-  SELECT CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS BIGINT) AS n_tok
+  SELECT CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 b AS (
@@ -2529,8 +2517,8 @@ FROM b GROUP BY bucket
     "(concat-and-chunk packing), the zero-padding alternative.",
 )
 def x50_length_bucket_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint").alias("n_tok")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
+        F.size(tokens()).cast("bigint").alias("n_tok")
     )
     b = d.filter(F.col("n_tok") > 0).withColumn(
         "bucket",
@@ -2600,7 +2588,8 @@ def x51_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield out
 
-    d = _spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = d.select("doc_id", "text")
     toks = d.mapInPandas(
         tokenize, "doc_id bigint, n_words bigint, n_bpe_tokens bigint"
     )
@@ -2629,7 +2618,7 @@ DSIR_TARGET_SOURCE = "src0"  # the 'high-quality target domain' stand-in
     "x52_dsir_importance",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, source, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, source, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 t AS (SELECT * FROM tok WHERE term <> ''),
 corpus AS (SELECT term, COUNT(*) AS cq FROM t GROUP BY term),
@@ -2673,8 +2662,8 @@ GROUP BY t.doc_id
 )
 def x52_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
-        _spread(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "source", F.explode(_tokens()).alias("term"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", "source", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     corpus = t.groupBy("term").agg(F.count(F.lit(1)).alias("cq"))
@@ -2730,7 +2719,7 @@ SKIPGRAM_MIN_COUNT = 2  # emit pairs seen at least twice corpus-wide
     "x54_skipgram_pairs",
     oracle=f"""
 WITH tk AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS toks FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
 ),
 tok AS (
   SELECT doc_id, unnest(toks) AS term, generate_subscripts(toks, 1) AS pos FROM tk
@@ -2770,10 +2759,10 @@ HAVING COUNT(*) >= {SKIPGRAM_MIN_COUNT}
 )
 def x54_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _spread(load_table(spark, sf_dir, "documents"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.posexplode(F.filter(_tokens(), lambda t: t != "")).alias("pos", "term"),
+            F.posexplode(tokens()).alias("pos", "term"),
         )
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -2904,7 +2893,7 @@ FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
     "revising every 10th doc.",
 )
 def x56_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     v1 = docs.filter(F.col("doc_id") < 450).select(
         F.col("doc_id").alias("id1"), F.md5("text").alias("h1")
     )
@@ -2959,7 +2948,7 @@ FROM ranked WHERE rk <= {CELL_DOC_CAP}
     "s31 LATERAL decorrelation produces).",
 )
 def x57_per_cell_doc_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "lang",
         "source",
@@ -2985,7 +2974,7 @@ X63_CHUNK = 16  # same aligned-chunk scheme as x19
     oracle=f"""
 WITH q AS (
   SELECT doc_id,
-         CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS DOUBLE) AS n_tok,
+         CAST(len({SQL_TOKENS}) AS DOUBLE) AS n_tok,
          CAST(len(replace(text, ' ', '')) AS DOUBLE) AS n_letters
   FROM documents
 ),
@@ -3027,13 +3016,13 @@ FROM deciled GROUP BY decile
     "boundaries from approx_percentile (same report, no global sort).",
 )
 def x63_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     qual = d.select(
         "doc_id",
         (
             F.length(F.regexp_replace("text", " ", "")).cast("double")
             / F.greatest(
-                F.size(F.filter(_tokens(), lambda t: t != "")).cast("double"),
+                F.size(tokens()).cast("double"),
                 F.lit(1.0),
             )
         ).alias("mean_tok_len"),
@@ -3081,7 +3070,7 @@ N_EPOCHS = 2
     oracle=f"""
 WITH d AS (
   SELECT doc_id,
-         CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS BIGINT) AS n_tok
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 epochs AS (SELECT unnest(range(0, {N_EPOCHS})) AS epoch),
@@ -3111,9 +3100,9 @@ FROM assigned GROUP BY epoch, shard
     "on (epoch, shard).",
 )
 def x64_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint").alias("n_tok"),
+        F.size(tokens()).cast("bigint").alias("n_tok"),
     )
     epochs = d.sparkSession.range(N_EPOCHS).select(
         F.col("id").cast("int").alias("epoch")
@@ -3150,7 +3139,7 @@ DROPOUT_RATE_PCT = 10  # drop ~10% of tokens, chosen by hash
     "x66_token_dropout_augment",
     oracle=f"""
 WITH tk AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS toks FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
 ),
 tok AS (
   SELECT doc_id, unnest(toks) AS term, generate_subscripts(toks, 1) AS pos FROM tk
@@ -3183,10 +3172,10 @@ FROM flagged GROUP BY doc_id
 )
 def x66_token_dropout_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _spread(load_table(spark, sf_dir, "documents"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.posexplode(F.filter(_tokens(), lambda t: t != "")).alias("pos0", "term"),
+            F.posexplode(tokens()).alias("pos0", "term"),
         )
         .select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
     )
@@ -3235,7 +3224,7 @@ VOCAB_CURVE_POINTS = (5, 10, 15, 20, 25, 30)
     "x67_vocab_coverage_curve",
     oracle=f"""
 WITH tok AS (
-  SELECT unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 t AS (SELECT term FROM tok WHERE term <> ''),
 freq AS (SELECT term, COUNT(*) AS tf FROM t GROUP BY term),
@@ -3268,8 +3257,8 @@ GROUP BY p.k, t.n
 )
 def x67_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
-        _spread(load_table(spark, sf_dir, "documents"))
-        .select(F.explode(_tokens()).alias("term"))
+        spread(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select(F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     freq = t.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
@@ -3307,7 +3296,7 @@ CTX_FRACTION_PCT = 75  # leading share of tokens used as context
     "x68_context_continuation_pairs",
     oracle=f"""
 WITH tk AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS toks FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
 ),
 sized AS (
   SELECT doc_id, toks, len(toks) AS n_tok,
@@ -3332,8 +3321,8 @@ FROM sized
     "docs under 4 tokens are dropped (no meaningful continuation).",
 )
 def x68_context_continuation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", F.filter(_tokens(), lambda t: t != "").alias("toks")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id", tokens().alias("toks")
     )
     sized = d.withColumn("n_tok", F.size("toks").cast("bigint")).filter(
         F.col("n_tok") >= 4
@@ -3369,7 +3358,7 @@ TAIL_WINDOW = 8  # compare the final 8 tokens against the preceding 8
     "x69_tail_loop_filter",
     oracle=f"""
 WITH tk AS (
-  SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS toks FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
 ),
 sized AS (SELECT doc_id, toks, len(toks) AS n FROM tk WHERE len(toks) >= {2 * TAIL_WINDOW}),
 tails AS (
@@ -3397,8 +3386,8 @@ FROM tails
     "pipeline, run before any hashing pass.",
 )
 def x69_tail_loop_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", F.filter(_tokens(), lambda t: t != "").alias("toks")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id", tokens().alias("toks")
     )
     sized = d.withColumn("n", F.size("toks")).filter(F.col("n") >= 2 * TAIL_WINDOW)
     tails = sized.select(
@@ -3433,7 +3422,7 @@ def x69_tail_loop_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH assigned AS (
   SELECT doc_id, lang,
-         CAST(len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS DOUBLE) AS n_tok,
+         CAST(len({SQL_TOKENS}) AS DOUBLE) AS n_tok,
          CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 4))
                    AS INT) % 10 < 8
               THEN 'train' ELSE 'test' END AS split
@@ -3461,7 +3450,7 @@ FROM assigned GROUP BY split
     "scale (s05f contract).",
 )
 def x71_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     bucket = (
         F.conv(
             F.substring(F.md5(F.concat_ws(":", F.col("doc_id"), F.col("text"))), 1, 4),
@@ -3472,7 +3461,7 @@ def x71_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = d.select(
         "lang",
-        F.size(F.filter(_tokens(), lambda t: t != "")).cast("double").alias("n_tok"),
+        F.size(tokens()).cast("double").alias("n_tok"),
         F.when(bucket < 8, "train").otherwise("test").alias("split"),
     )
     return assigned.groupBy("split").agg(
@@ -3716,7 +3705,7 @@ _BM25_QUERY_VALUES = ", ".join(f"({q}, '{t}')" for q, t in BM25_QUERIES)
     oracle=f"""
 WITH qt(query_id, term) AS (VALUES {_BM25_QUERY_VALUES}),
 toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 tf_all AS (
   SELECT doc_id, term, COUNT(*) AS tf
@@ -3777,8 +3766,10 @@ FROM ranked WHERE rn <= {BM25_TOP_K}
 )
 def x89_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = _spread(d).select("doc_id", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     # Tokenize ONCE: tf_all has four consumers (dl, corpus scalars, df,
     # postings join) — materialize it so the explode scan runs once.
@@ -3862,8 +3853,10 @@ def _weak_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
-    toks = _spread(d).select("doc_id", F.explode(_tokens()).alias("term")).filter(
-        F.col("term") != ""
+    toks = (
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .filter(F.col("term") != "")
     )
     stop = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -4037,8 +4030,8 @@ def _textrank_oracle() -> str:
     head = f"""
 WITH toks AS (
   SELECT doc_id, pos, term FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS term,
-           generate_subscripts({_SQL_TOKENS}, 1) AS pos
+    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
+           generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
     FROM documents
   ) WHERE term <> '' AND term NOT IN ({_TR_STOPLIST})
 ),
@@ -4106,8 +4099,8 @@ FROM r{TEXTRANK_ITERS}
 def x92_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
-        _spread(d)
-        .select("doc_id", F.posexplode(_tokens()).alias("pos", "term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.posexplode(raw_tokens()).alias("pos", "term"))
         .filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -4207,7 +4200,7 @@ def _doremi_oracle() -> str:
     K-row aggregation is order-exact and rounds reproduce bit-for-bit."""
     head = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
+  SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents
 ),
 tok AS (SELECT doc_id, term FROM toks WHERE term <> ''),
 lm AS (SELECT term, COUNT(*) AS tf FROM tok GROUP BY term),
@@ -4289,8 +4282,8 @@ FROM w{DOREMI_ROUNDS}
 def x93_doremi_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
         .localCheckpoint(eager=False)  # lm AND the scoring join consume it
     )
@@ -4458,8 +4451,8 @@ KN_DISCOUNT = 0.75  # the standard fixed absolute discount
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, term, pos FROM (
-    SELECT doc_id, unnest({_SQL_TOKENS}) AS term,
-           generate_subscripts({_SQL_TOKENS}, 1) AS pos
+    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
+           generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
     FROM documents
   ) WHERE term <> ''
 ),
@@ -4507,10 +4500,10 @@ GROUP BY big.doc_id
 def x101_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
+        spread(d, "doc_id")
         .select(
             "doc_id",
-            F.posexplode(_tokens()).alias("pos", "term"),
+            F.posexplode(raw_tokens()).alias("pos", "term"),
         )
         .filter(F.col("term") != "")
     )
@@ -4567,7 +4560,7 @@ def x101_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH tok AS (
   SELECT doc_id, lang, t.term
   FROM (
-    SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS term FROM documents
+    SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
   ) AS t
   WHERE t.term <> ''
 ),
@@ -4618,8 +4611,8 @@ GROUP BY lang, ppl_bucket
 def x106_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", "lang", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
@@ -4671,9 +4664,9 @@ def x106_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=f"""
 WITH lab AS (
   SELECT doc_id,
-         CASE WHEN 10 * len(list_filter(string_split_regex(lower(text), '\\s+'),
+         CASE WHEN 10 * len(list_filter({SQL_RAW_TOKENS},
                        t -> t IN ({', '.join(repr(s) for s in STOPWORDS)})))
-                   >= len(list_filter(string_split_regex(lower(text), '\\s+'),
+                   >= len(list_filter({SQL_RAW_TOKENS},
                                 t -> t <> ''))
               THEN 'en' ELSE 'other' END AS label_a,
          CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS label_b
@@ -4722,10 +4715,10 @@ FROM c
     "are the cheapest corpus-wide audit shape.",
 )
 def x107_annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     stop_lit = F.array(*[F.lit(s) for s in STOPWORDS])
-    toks = F.filter(_tokens(), lambda t: t != "")
-    n_stop = F.size(F.filter(_tokens(), lambda t: F.array_contains(stop_lit, t)))
+    toks = tokens()
+    n_stop = F.size(F.filter(raw_tokens(), lambda t: F.array_contains(stop_lit, t)))
     label_a = F.when(
         # integer gate: stop share >= 0.1 <=> 10*n_stop >= n_tokens
         n_stop * 10 >= F.size(toks), "en"
@@ -4769,7 +4762,7 @@ def x107_annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, t.term
-  FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents) AS t
+  FROM (SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term FROM documents) AS t
   WHERE t.term <> ''
 ),
 cnt AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS c
@@ -4806,8 +4799,8 @@ GROUP BY cnt.doc_id, tot.n
 def x108_token_entropy_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     cnt = tok.groupBy("doc_id", "term").agg(
@@ -4843,7 +4836,7 @@ X111_WIN = 16  # non-overlapping window width, tokens
     "x111_low_quality_span_localization",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
+  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
                              t -> t <> '') AS ts
   FROM documents
 ),
@@ -4892,8 +4885,8 @@ def x111_low_quality_span_localization(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(_tokens(), lambda t: t != "")
-    pos = _spread(d).select(
+    toks = tokens()
+    pos = spread(d, "doc_id").select(
         "doc_id", F.posexplode(toks).alias("pos0", "term")
     )
     lm = pos.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
@@ -4978,7 +4971,7 @@ def x112_text_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: unicodedata.normalize("NFC", x) if x is not None else None
         )
 
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     clean = F.trim(
         F.regexp_replace(
             F.regexp_replace(nfc(F.col("text")), r"[\x00-\x1f\x7f]", " "),
@@ -5028,8 +5021,8 @@ def x112_text_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x106b_ccnet_buckets_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", "lang", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
@@ -5105,8 +5098,8 @@ def x113_rouge_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(_tokens(), lambda t: t != "")
-    base = _spread(d).select("doc_id", toks.alias("ts"))
+    toks = tokens()
+    base = spread(d, "doc_id").select("doc_id", toks.alias("ts"))
     # Round-10: per-token hash + multi-arg xxhash64 combine (see x18) —
     # no gram-string allocation, longs through the window sort.
     th = base.select("doc_id", F.posexplode("ts").alias("pos", "tok")).select(
@@ -5238,8 +5231,6 @@ def x128_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global_rank — the x106b-style banding the docstring used to promise
     # is superseded by an EXACT distributed numbering (s74 two-pass) once
     # the corpus passes 1M docs; below the gate the plain window wins.
-    from presto_weather_spark.operators._util import global_rank
-
     quality = global_rank(
         d.select("doc_id", alpha.alias("_alpha")),
         [F.col("_alpha").desc(), F.col("doc_id")],
@@ -5323,7 +5314,7 @@ _install_x128_oracle()
     oracle=f"""
 WITH counts AS (
   SELECT doc_id,
-         CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
+         CAST(len(list_filter({SQL_RAW_TOKENS},
                               t -> t <> '')) AS BIGINT) AS n_words,
          CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
              AS n_sentences,
@@ -5356,8 +5347,8 @@ FROM counts WHERE n_words > 0
     "feature shape.",
 )
 def x131_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    n_words = F.size(F.filter(_tokens(), lambda t: t != "")).cast("bigint")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    n_words = F.size(tokens()).cast("bigint")
     n_sentences = F.greatest(
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[.!?]+"), F.lit(0))),
         F.lit(1),
@@ -5410,7 +5401,7 @@ MATTR_WIN = 25  # moving-window width in tokens
     "x135_mattr_lexical_diversity",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
+  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
                              t -> t <> '') AS ts
   FROM documents
 ),
@@ -5452,8 +5443,8 @@ GROUP BY doc_id
 )
 def x135_mattr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(_tokens(), lambda t: t != "")
-    pos = _spread(d).select(
+    toks = tokens()
+    pos = spread(d, "doc_id").select(
         "doc_id", F.posexplode(toks).alias("pos0", "term")
     ).withColumn("win_id", F.floor(F.col("pos0") / MATTR_WIN).cast("bigint"))
     win = pos.groupBy("doc_id", "win_id").agg(
@@ -5487,7 +5478,7 @@ DSIR_TARGET_LANG = "en"  # the in-domain slice the weights steer toward
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, lang, t.term
-  FROM (SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS term FROM documents) t
+  FROM (SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents) t
   WHERE t.term <> ''
 ),
 tc AS (SELECT doc_id, term, COUNT(*) AS c FROM tok GROUP BY doc_id, term),
@@ -5542,8 +5533,8 @@ GROUP BY tc.doc_id
 def x147_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = (
-        _spread(d)
-        .select("doc_id", "lang", F.explode(_tokens()).alias("term"))
+        spread(d, "doc_id")
+        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
     # Round-10 optimization: tokenize ONCE. tc and vocab both consumed the
@@ -5608,7 +5599,7 @@ DSIR_BUCKETS = 8192  # hashed-feature space (the paper's 10k, power-of-2)
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')
+         {SQL_TOKENS}
            AS t
   FROM documents
 ),
@@ -5666,10 +5657,10 @@ GROUP BY bc.doc_id
 )
 def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = _spread(d).select(
+    toks = spread(d, "doc_id").select(
         "doc_id",
         "lang",
-        F.filter(_tokens(), lambda t: t != F.lit("")).alias("t"),
+        tokens().alias("t"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     flat = toks.filter(F.size("t") >= 2).select(
@@ -6074,7 +6065,7 @@ defer_install(_install_x151_oracle)
     "x152_nb_hash_fidelity",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKENS}) AS raw FROM documents
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS raw FROM documents
 ),
 te AS (SELECT doc_id, lang, raw AS term FROM tok WHERE raw <> ''),
 th AS (

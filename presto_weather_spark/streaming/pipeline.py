@@ -92,7 +92,9 @@ def _run_stream(
 ) -> StreamingQuery:
     """Run ``writer`` to completion (availableNow) and return the finished
     query; its ``recentProgress`` holds the per-batch metrics. Every stream
-    in the package starts here.
+    in the package starts here. Without a ``checkpoint`` the run gets a
+    ``temp_dir``, removed when the run ends, also when it fails (Spark's own
+    temporary checkpoint is left behind by a failed query).
 
     Stateful operators allocate one state store per shuffle partition, each
     with per-batch checkpoint commit IO — at test scale that fixed cost
@@ -102,9 +104,10 @@ def _run_stream(
     scope ends only after termination); a production deployment sizes it to
     state volume / executor count instead (it is baked into the checkpoint
     at first start, exactly like this)."""
-    writer = writer.trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
+    if checkpoint is None:
+        with temp_dir("ckpt") as ckpt:
+            return _run_stream(spark, writer, ckpt)
+    writer = writer.trigger(availableNow=True).option("checkpointLocation", checkpoint)
     with conf_scope(spark, {"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}):
         q = writer.start()
         q.awaitTermination()
@@ -254,8 +257,7 @@ def run_display_pipeline(
                 {"epoch": epoch_id, "ok": False, "lines": [{"error": f"Error: {e}"}]}
             )
 
-    with temp_dir("ckpt") as ckpt:
-        _run_stream(spark, board.writeStream.foreachBatch(draw), ckpt)
+    _run_stream(spark, board.writeStream.foreachBatch(draw))
     return screen
 
 
@@ -724,8 +726,7 @@ def s14l_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("value") > 100, 1).otherwise(0)).alias("n_high"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
     )
-    with temp_dir("obs") as ckpt:
-        q = _run_stream(spark, observed.writeStream.format("noop"), ckpt)
+    q = _run_stream(spark, observed.writeStream.format("noop"))
     n_rows, n_high, total = 0, 0, Decimal(0)
     for progress in q.recentProgress:
         om = progress.observedMetrics.get("tick_metrics")

@@ -649,7 +649,7 @@ def test_global_row_numbering_no_single_partition_window(spark, sf_dir):
     # the only unpartitioned window runs over the per-pid count aggregate
     # (the visible plan starts at the localCheckpoint), and the offsets
     # come back via broadcast, never a shuffled join of the data:
-    assert "windowspecdefinition(pid#" in plan, plan[:1500]
+    assert "windowspecdefinition(_pid#" in plan, plan[:1500]
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan, plan[:1500]
 

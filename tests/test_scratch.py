@@ -2,7 +2,7 @@
 
 Two table dirs that share a basename (``a/sf`` and ``b/sf``) must not share
 staged data or a stream checkpoint, and a call's throwaway checkpoint must
-not outlive the call.
+not outlive the call, also when the stream fails.
 """
 
 from __future__ import annotations
@@ -12,10 +12,13 @@ import shutil
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from presto_weather_spark.operators.parity_extras import s02_parquet_sink_roundtrip
-from presto_weather_spark.session import scratch_root, stage_dir, temp_dir
+from presto_weather_spark.session import scratch_base, scratch_root, stage_dir, temp_dir
 from presto_weather_spark.streaming.pipeline import (
+    _run_to_memory,
+    events_stream,
     run_display_pipeline,
     s14l_stream_observed_metrics,
     s14t_statestore_read,
@@ -70,6 +73,19 @@ def test_stream_checkpoints_do_not_outlive_the_call(spark, sf_dir):
     run_display_pipeline(spark, sf_dir)
     left = [f for f in os.listdir(scratch_root()) if f.startswith(("pws_obs", "pws_ckpt"))]
     assert not left
+
+
+def test_failed_stream_leaves_no_checkpoint(spark, sf_dir):
+    local = os.path.join(scratch_base(), "pws-spark-local")
+
+    def spark_temp_checkpoints():
+        return {f for f in os.listdir(local) if f.startswith("temporary-")}
+
+    before = spark_temp_checkpoints()
+    failing = events_stream(spark, sf_dir).select(F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        _run_to_memory(failing, "append")
+    assert spark_temp_checkpoints() == before
 
 
 def test_temp_dir_is_removed_when_the_block_raises():

@@ -9,11 +9,15 @@
   which goes through Arrow (a ``LocalTableScan``, no Python worker).
 - Scratch paths are built only in ``session.py``: ``stage_dir`` and
   ``temp_dir`` name, create and remove them.
+- The corpus tokenizer and the scan fan-out live only in
+  ``operators/_util.py``: ``raw_tokens``/``tokens`` with their DuckDB twins
+  ``SQL_RAW_TOKENS``/``SQL_TOKENS``, and ``spread``.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
-``.createDataFrame``, ``scratch_root()``/``scratch_base()`` or
-``import tempfile`` site elsewhere fails here; route it through the owner
-instead.
+``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
+``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``
+or ``string_split_regex(lower(text)`` site elsewhere fails here; route it
+through the owner instead.
 """
 
 from __future__ import annotations
@@ -30,6 +34,20 @@ CONF_OWNER = "session.py"
 STREAM_OWNER = ("streaming/pipeline.py", "_run_stream")
 ROWS_OWNER = ("session.py", "local_rows")
 SCRATCH_OWNER = "session.py"
+CORPUS_OWNER = os.path.join("operators", "_util.py")
+
+
+@functools.cache
+def _trees() -> list[tuple[str, ast.Module]]:
+    """(relpath, parsed module) for every file in the package."""
+    found = []
+    for root, _, files in os.walk(PKG):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as src:
+                    found.append((os.path.relpath(path, PKG), ast.parse(src.read())))
+    return found
 
 
 @functools.cache
@@ -37,29 +55,24 @@ def _nodes() -> list[tuple[str, str, ast.AST]]:
     """(relpath, enclosing function, node) for every call and import in the
     package."""
     found = []
-    for root, _, files in os.walk(PKG):
-        for f in sorted(files):
-            if not f.endswith(".py"):
-                continue
-            path = os.path.join(root, f)
-            rel = os.path.relpath(path, PKG)
-            stack: list[str] = []
+    for rel, tree in _trees():
+        stack: list[str] = []
 
-            class V(ast.NodeVisitor):
-                def visit_FunctionDef(self, node):
-                    stack.append(node.name)
-                    self.generic_visit(node)
-                    stack.pop()
+        class V(ast.NodeVisitor):
+            def visit_FunctionDef(self, node):
+                stack.append(node.name)
+                self.generic_visit(node)
+                stack.pop()
 
-                visit_AsyncFunctionDef = visit_FunctionDef
+            visit_AsyncFunctionDef = visit_FunctionDef
 
-                def visit_Call(self, node):
-                    found.append((rel, stack[-1] if stack else "<module>", node))
-                    self.generic_visit(node)
+            def visit_Call(self, node):
+                found.append((rel, stack[-1] if stack else "<module>", node))
+                self.generic_visit(node)
 
-                visit_Import = visit_ImportFrom = visit_Call
+            visit_Import = visit_ImportFrom = visit_Call
 
-            V().visit(ast.parse(open(path).read()))
+        V().visit(tree)
     return found
 
 
@@ -124,3 +137,48 @@ def test_scratch_paths_are_built_only_in_session_module():
     assert not stray, (
         f"scratch path built outside {SCRATCH_OWNER}; use stage_dir/temp_dir: {stray}"
     )
+
+
+def _sites(match) -> set[str]:
+    """Files holding a node that ``match`` accepts."""
+    return {rel for rel, tree in _trees() for node in ast.walk(tree) if match(node)}
+
+
+def _called(node: ast.AST, name: str) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    fn = node.func
+    return (fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)) == name
+
+
+def _is_tokenizer(node: ast.AST) -> bool:
+    """A Spark ``split(lower(...), r"\\s+")`` call, or the DuckDB tokenizer
+    text in a string constant or f-string part."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return "string_split_regex(lower(text)" in node.value
+    return (
+        _called(node, "split")
+        and len(node.args) >= 2
+        and _called(node.args[0], "lower")
+        and isinstance(node.args[1], ast.Constant)
+        and node.args[1].value == r"\s+"
+    )
+
+
+def test_scan_fan_out_reads_default_parallelism_only_in_util():
+    sites = _sites(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "defaultParallelism"
+    )
+    stray = sorted(sites - {CORPUS_OWNER})
+    assert not stray, f"defaultParallelism read outside {CORPUS_OWNER}; use spread: {stray}"
+    assert CORPUS_OWNER in sites, "lint matched nothing"
+
+
+def test_corpus_tokenizer_is_spelled_only_in_util():
+    sites = _sites(_is_tokenizer)
+    stray = sorted(sites - {CORPUS_OWNER})
+    assert not stray, (
+        f"tokenizer spelled outside {CORPUS_OWNER}; use raw_tokens/tokens or "
+        f"SQL_RAW_TOKENS/SQL_TOKENS: {stray}"
+    )
+    assert CORPUS_OWNER in sites, "lint matched nothing"
