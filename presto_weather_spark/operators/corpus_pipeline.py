@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
     GLOBAL_RANK_LOCAL_LIMIT,
-    SQL_RAW_TOKENS,
+    SQL_TOKENS,
     distributed_global_rank,
     exact_ntile,
     spread,
@@ -162,8 +162,7 @@ V2_TOKEN_BUDGET = 600
     oracle=f"""
 WITH base AS (
   SELECT doc_id, source, lang, n_chars, text,
-         CAST(len(list_filter({SQL_RAW_TOKENS},
-                              t -> t <> '')) AS BIGINT) AS n_tok
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 quality AS (SELECT * FROM base WHERE n_chars >= {V2_MIN_CHARS}),
@@ -354,8 +353,7 @@ CURRICULUM_PHASES = 4
 WITH scored AS (
   SELECT doc_id, source,
          round(CAST(n_chars AS DOUBLE) /
-               greatest(len(list_filter({SQL_RAW_TOKENS},
-                                        t -> t <> '')), 1), 4) AS difficulty
+               greatest(len({SQL_TOKENS}), 1), 4) AS difficulty
   FROM documents
 )
 SELECT doc_id, source, difficulty,
@@ -425,11 +423,9 @@ def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH scored AS (
   SELECT doc_id, source, lang,
-         round(CAST(len(list_distinct(list_filter(
-                 {SQL_RAW_TOKENS}, t -> t <> '')))
+         round(CAST(len(list_distinct({SQL_TOKENS}))
                AS DOUBLE) /
-               greatest(len(list_filter({SQL_RAW_TOKENS},
-                                        t -> t <> '')), 1), 6) AS score
+               greatest(len({SQL_TOKENS}), 1), 6) AS score
   FROM documents
 ),
 ranked AS (

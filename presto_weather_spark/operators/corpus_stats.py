@@ -1183,8 +1183,7 @@ LANG_EPOCH_CAP = 4.0  # upsampling beyond this repeats data too hard
     oracle=f"""
 WITH mass AS (
   SELECT lang,
-         CAST(SUM(len(list_filter({SQL_RAW_TOKENS},
-                                  t -> t <> ''))) AS BIGINT) AS lang_tokens
+         CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS lang_tokens
   FROM documents GROUP BY lang
 ),
 tot AS (SELECT CAST(SUM(lang_tokens) AS BIGINT) AS total FROM mass),

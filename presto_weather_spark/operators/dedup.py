@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
-    SQL_RAW_TOKENS,
     SQL_TOKENS,
     raw_tokens,
     spread,
@@ -1442,8 +1441,7 @@ def x73b_gear_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH sized AS (
   SELECT doc_id, source, md5(text) AS h,
-         CAST(len(list_filter({SQL_RAW_TOKENS},
-                              t -> t <> '')) AS BIGINT) AS n_tok
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 ranked AS (
@@ -1826,8 +1824,7 @@ X102_W = 8  # tokens per window (the exact-substring granularity)
     "x102_dup_span_extraction",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
-                             t -> t <> '') AS ts
+  SELECT doc_id, {SQL_TOKENS} AS ts
   FROM documents
 ),
 win AS (
@@ -2061,8 +2058,7 @@ def x103_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, ts FROM (
-    SELECT doc_id, list_filter({SQL_RAW_TOKENS},
-                               t -> t <> '') AS ts
+    SELECT doc_id, {SQL_TOKENS} AS ts
     FROM documents
   ) WHERE len(ts) > 0
 ),

@@ -4666,8 +4666,7 @@ WITH lab AS (
   SELECT doc_id,
          CASE WHEN 10 * len(list_filter({SQL_RAW_TOKENS},
                        t -> t IN ({', '.join(repr(s) for s in STOPWORDS)})))
-                   >= len(list_filter({SQL_RAW_TOKENS},
-                                t -> t <> ''))
+                   >= len({SQL_TOKENS})
               THEN 'en' ELSE 'other' END AS label_a,
          CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS label_b
   FROM documents
@@ -4836,8 +4835,7 @@ X111_WIN = 16  # non-overlapping window width, tokens
     "x111_low_quality_span_localization",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
-                             t -> t <> '') AS ts
+  SELECT doc_id, {SQL_TOKENS} AS ts
   FROM documents
 ),
 pos AS (
@@ -5314,8 +5312,7 @@ _install_x128_oracle()
     oracle=f"""
 WITH counts AS (
   SELECT doc_id,
-         CAST(len(list_filter({SQL_RAW_TOKENS},
-                              t -> t <> '')) AS BIGINT) AS n_words,
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_words,
          CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
              AS n_sentences,
          CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
@@ -5401,8 +5398,7 @@ MATTR_WIN = 25  # moving-window width in tokens
     "x135_mattr_lexical_diversity",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, list_filter({SQL_RAW_TOKENS},
-                             t -> t <> '') AS ts
+  SELECT doc_id, {SQL_TOKENS} AS ts
   FROM documents
 ),
 pos AS (

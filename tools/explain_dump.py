@@ -19,8 +19,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from presto_weather_spark.registry import all_queries
-from presto_weather_spark.session import build_session
+from plan_digest import explain_text  # noqa: E402
+from presto_weather_spark.registry import all_queries  # noqa: E402
+from presto_weather_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
@@ -31,17 +32,7 @@ def main() -> None:
     spark = build_session("pws-explain")
     queries = all_queries()
     for key in keys:
-        df = queries[key].fn(spark, sf_dir)
-        # Public API only (round-11 advisor fix): capture .explain output
-        # via stdout redirection instead of the private
-        # _jvm.PythonSQLUtils.explainString, which breaks across versions.
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = explain_text(queries[key].fn(spark, sf_dir), "formatted")
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
