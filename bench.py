@@ -47,12 +47,11 @@ def main() -> None:
     # execution(s) — compute-heavy codegen runs interpreted until C2 kicks
     # in, swinging first-run times up to ~7x over steady state. Runs must be
     # back-to-back per query (NOT interleaved whole-list passes): with ~100
-    # queries the codegen cache (100 entries) and the C2 queue thrash
-    # between passes, so every pass re-generates and re-compiles every
-    # stage and mid-pass queries run interpreted (observed 1.2s queries
-    # reading 27s). Min — not median — because host noise is one-sided:
-    # transient VM noise bursts only ever ADD time, and the steady-state
-    # minimum is the number that predicts cluster cost.
+    # queries the C2 queue thrashes between passes and mid-pass queries run
+    # interpreted (observed 1.2s queries reading 27s). Min — not median —
+    # because host noise is one-sided: transient VM noise bursts only ever
+    # ADD time, and the steady-state minimum is the number that predicts
+    # cluster cost.
     timings: dict[str, float] = {}
     for name, q in sorted(queries.items()):
         # Per-query warm-up, then min of up-to-3 timed runs with an early

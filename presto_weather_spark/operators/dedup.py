@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
     SQL_TOKENS,
-    raw_tokens,
     spread,
     tokens,
 )
@@ -2282,7 +2281,7 @@ def x110_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no gram-string allocation, longs instead of strings through the
     # window sort; same key class short of a 64-bit collision.
     th = d.select(
-        "doc_id", F.posexplode(raw_tokens()).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens()).alias("pos", "tok")
     ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("h", i).over(w) for i in range(1, CONTAIN_NGRAM)]
@@ -2437,7 +2436,7 @@ def x115_dedup_threshold_sensitivity(
     # tried here too, proved oracle-identical — and regressed in the
     # full-bench pairing (1.73 s -> 2.85 s) while isolated A/Bs were
     # noise-split; reverted per keep-only-wins (see OPTIMIZATION_r10.md).
-    th_doc = d.select("doc_id", F.posexplode(raw_tokens()).alias("pos", "tok"))
+    th_doc = d.select("doc_id", F.posexplode(tokens()).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("tok")] + [
         F.lead("tok", i).over(w) for i in range(1, CONTAIN_NGRAM)

@@ -26,6 +26,8 @@ oracle contract never touch the network.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -244,8 +246,15 @@ class OpenMeteoDataSource(DataSource):
         return OpenMeteoStreamReader(dict(self.options))
 
 
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+
+
 def register_open_meteo(spark) -> None:
-    spark.dataSource.register(OpenMeteoDataSource)
+    """Register format("open_meteo") once per SparkSession. Registering
+    again would replace the source and log a WARN on every request."""
+    if spark not in _REGISTERED:
+        spark.dataSource.register(OpenMeteoDataSource)
+        _REGISTERED.add(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -36,16 +36,23 @@ from conftest import driver_norm
 
 # keys whose oracles consume documents.text and are sensitive to the
 # degenerate values planted here
-GRAM_KEYS = ("x02g_banding_recall_gate", "x96_editdist_verified_pairs")
+GRAM_KEYS = (
+    "x02g_banding_recall_gate",
+    "x96_editdist_verified_pairs",
+    "x110_dup_graph_triangles",
+    "x115_dedup_threshold_sensitivity",
+)
 ARGMAX_KEYS = ("x77_preference_pairs",)
 
 
 @pytest.fixture(scope="module")
 def degenerate_dir(spark, sf_dir, tmp_path_factory) -> str:
     """sf0.001 with planted degenerate text: two empty docs, two
-    whitespace-only docs (all zero-token after the non-empty filter), and
-    two NULL-text docs — all under doc_id 2000 so x02g's audit subset
-    sees them."""
+    whitespace-only docs (all zero-token after the non-empty filter), two
+    NULL-text docs, and two identical docs of seven words after leading
+    whitespace — all under doc_id 2000 so x02g's audit subset sees them.
+    The last pair is one token short of an 8-token containment gram, so it
+    may share a gram only if the leading empty token is kept."""
     from pyspark.sql import functions as F
 
     out = str(tmp_path_factory.mktemp("pws_degen_text"))
@@ -72,6 +79,10 @@ def degenerate_dir(spark, sf_dir, tmp_path_factory) -> str:
         F.when(F.col("doc_id").isin(11, 13), F.lit(""))
         .when(F.col("doc_id").isin(17, 19), F.lit(" \t  "))
         .when(F.col("doc_id").isin(23, 29), F.lit(None).cast("string"))
+        .when(
+            F.col("doc_id").isin(31, 37),
+            F.lit("  alpha beta gamma delta epsilon zeta eta"),
+        )
         .otherwise(F.col("text"))
     )
     d.withColumn("text", text).coalesce(1).write.mode("overwrite").parquet(
