@@ -25,7 +25,7 @@ from presto_weather_spark.operators._util import (
     spread,
     tokens,
 )
-from presto_weather_spark.registry import defer_install, register
+from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table
 
 
@@ -1414,7 +1414,26 @@ CALIB_BINS_PER_UNIT = 2  # half-logprob-unit equal-width bins
 
 @register(
     "x141_score_calibration",
-    oracle=None,  # composed from x20's + x86's oracles at import (see below)
+    oracle=lambda o: f"""
+WITH score AS ({o['x20_unigram_logprob']}),
+keep AS ({o['x86_quality_rules']}),
+joined AS (
+  SELECT CAST(round(score.avg_logprob * {CALIB_BINS_PER_UNIT * 1000000})
+                AS BIGINT) // 1000000
+           AS bin,
+         score.avg_logprob,
+         CAST(keep.keep AS INT) AS keep_i
+  FROM score JOIN keep USING (doc_id)
+)
+SELECT bin,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(keep_i) AS BIGINT) AS n_keep,
+       CAST(CAST(sum(keep_i) AS BIGINT) * 1000000 // count(*) AS BIGINT)
+         AS keep_rate_e6,
+       round(CAST(sum(CAST(avg_logprob AS DECIMAL(18,6))) AS DOUBLE)
+             / count(*), 6) AS mean_score
+FROM joined GROUP BY bin
+""",
     doc="X141: QUALITY-SCORE CALIBRATION — before thresholding a corpus "
     "on a quality score, check the score actually orders quality: bin "
     "x20's unigram-LM document score into equal-width half-unit bins "
@@ -1429,7 +1448,7 @@ CALIB_BINS_PER_UNIT = 2  # half-logprob-unit equal-width bins
     "because equal-mass deciles need a rank pass). keep_rate in "
     "scaled-integer micro-units; mean score via DECIMAL sum. Oracle "
     "composed textually from x20's and x86's registered oracles at "
-    "import (the x128/x133 pattern) so all three stay in lockstep. "
+    "load (the x128/x133 pattern) so all three stay in lockstep. "
     "Scale: two doc-grain aggregates joined on doc_id + one bins-"
     "sized rollup; every shuffle is doc- or bins-bounded.",
 )
@@ -1483,40 +1502,6 @@ def x141_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_x141_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x20 = _REGISTRY["x20_unigram_logprob"].oracle
-    x86 = _REGISTRY["x86_quality_rules"].oracle
-    q = _REGISTRY["x141_score_calibration"]
-    sql = f"""
-WITH score AS ({x20}),
-keep AS ({x86}),
-joined AS (
-  SELECT CAST(round(score.avg_logprob * {CALIB_BINS_PER_UNIT * 1000000})
-                AS BIGINT) // 1000000
-           AS bin,
-         score.avg_logprob,
-         CAST(keep.keep AS INT) AS keep_i
-  FROM score JOIN keep USING (doc_id)
-)
-SELECT bin,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(keep_i) AS BIGINT) AS n_keep,
-       CAST(CAST(sum(keep_i) AS BIGINT) * 1000000 // count(*) AS BIGINT)
-         AS keep_rate_e6,
-       round(CAST(sum(CAST(avg_logprob AS DECIMAL(18,6))) AS DOUBLE)
-             / count(*), 6) AS mean_score
-FROM joined GROUP BY bin
-"""
-    _REGISTRY["x141_score_calibration"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x141_oracle)
-
-
 # ---------------------------------------------------------------------------
 # X142 — cross-split n-gram leakage audit (8-gram overlap over x07's split)
 # ---------------------------------------------------------------------------
@@ -1526,7 +1511,35 @@ LEAK_N = 8  # n-gram order (the x88 decontamination convention)
 
 @register(
     "x142_split_ngram_leakage",
-    oracle=None,  # composed from x07's oracle at import (see below)
+    oracle=lambda o: f"""
+WITH split AS ({o['x07_train_test_split']}),
+grams AS (
+  SELECT d.lang, s.split,
+         array_to_string(ws[CAST(t.i AS INT):CAST(t.i + {LEAK_N - 1} AS INT)], ' ') AS gram
+  FROM (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents) d
+  JOIN split s USING (doc_id),
+  UNNEST(generate_series(1, len(d.ws) - {LEAK_N - 1})) AS t(i)
+  WHERE s.split <> 'valid'
+),
+per_gram AS (
+  SELECT gram,
+         max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS in_train,
+         list_distinct(list(CASE WHEN split = 'test' THEN lang END))
+           AS test_langs
+  FROM grams GROUP BY gram
+),
+test_grams AS (
+  SELECT unnest(list_filter(test_langs, x -> x IS NOT NULL)) AS lang,
+         in_train
+  FROM per_gram
+)
+SELECT lang,
+       CAST(count(*) AS BIGINT) AS n_test_grams,
+       CAST(sum(in_train) AS BIGINT) AS n_leaked,
+       CAST(CAST(sum(in_train) AS BIGINT) * 1000000 // count(*) AS BIGINT)
+         AS leaked_share_e6
+FROM test_grams GROUP BY lang
+""",
     doc="X142: CROSS-SPLIT N-GRAM LEAKAGE — x53 makes the split "
     "group-safe and x71 checks its balance; this measures what "
     "neither does: how much verbatim 8-gram mass the test split "
@@ -1609,48 +1622,6 @@ def x142_split_ngram_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             " DIV count(1) AS BIGINT)"
         ).alias("leaked_share_e6"),
     )
-
-
-def _install_x142_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x07 = _REGISTRY["x07_train_test_split"].oracle
-    q = _REGISTRY["x142_split_ngram_leakage"]
-    sql = f"""
-WITH split AS ({x07}),
-grams AS (
-  SELECT d.lang, s.split,
-         array_to_string(ws[CAST(t.i AS INT):CAST(t.i + {LEAK_N - 1} AS INT)], ' ') AS gram
-  FROM (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents) d
-  JOIN split s USING (doc_id),
-  UNNEST(generate_series(1, len(d.ws) - {LEAK_N - 1})) AS t(i)
-  WHERE s.split <> 'valid'
-),
-per_gram AS (
-  SELECT gram,
-         max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS in_train,
-         list_distinct(list(CASE WHEN split = 'test' THEN lang END))
-           AS test_langs
-  FROM grams GROUP BY gram
-),
-test_grams AS (
-  SELECT unnest(list_filter(test_langs, x -> x IS NOT NULL)) AS lang,
-         in_train
-  FROM per_gram
-)
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_test_grams,
-       CAST(sum(in_train) AS BIGINT) AS n_leaked,
-       CAST(CAST(sum(in_train) AS BIGINT) * 1000000 // count(*) AS BIGINT)
-         AS leaked_share_e6
-FROM test_grams GROUP BY lang
-"""
-    _REGISTRY["x142_split_ngram_leakage"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x142_oracle)
 
 
 # ---------------------------------------------------------------------------
@@ -1781,9 +1752,63 @@ def x143_gopher_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 SCREEN_GATES = ("g86", "g09", "g17", "g140")  # column order fixes pair ids
 
 
+def _screen_pairs_sql() -> str:
+    """x145's oracle confusion rows: one SELECT over ``gates`` per
+    SCREEN_GATES pair, in the Spark kernel's pair order."""
+    return "\nUNION ALL\n".join(
+        f"""
+SELECT '{ga}' AS gate_a, '{gb}' AS gate_b,
+       CAST(SUM(CASE WHEN {ga} = 1 AND {gb} = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep_keep,
+       CAST(SUM(CASE WHEN {ga} = 1 AND {gb} = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep_drop,
+       CAST(SUM(CASE WHEN {ga} = 0 AND {gb} = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_drop_keep,
+       CAST(SUM(CASE WHEN {ga} = 0 AND {gb} = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_drop_drop
+FROM gates"""
+        for i, ga in enumerate(SCREEN_GATES)
+        for gb in SCREEN_GATES[i + 1 :]
+    )
+
+
 @register(
     "x145_screen_agreement",
-    oracle=None,  # composed from the four screens' oracles at import
+    oracle=lambda o: f"""
+WITH s86 AS ({o['x86_quality_rules']}),
+s09 AS ({o['x09_quality_score']}),
+s17 AS ({o['x17_repetition_filter']}),
+s140 AS ({o['x140_blocklist_screen']}),
+gates AS (
+  SELECT s86.doc_id,
+         CAST(s86.keep AS INT) AS g86,
+         CASE WHEN s09.quality_gate = 'keep' THEN 1 ELSE 0 END AS g09,
+         coalesce(CASE WHEN s17.repetition_gate = 'keep' THEN 1 ELSE 0 END, 1)
+           AS g17,
+         CASE WHEN s140.gate = 'ok' THEN 1 ELSE 0 END AS g140
+  FROM s86
+  JOIN s09 USING (doc_id)
+  LEFT JOIN s17 USING (doc_id)
+  JOIN s140 USING (doc_id)
+),
+conf AS ({_screen_pairs_sql()})
+SELECT gate_a, gate_b, n_keep_keep, n_keep_drop, n_drop_keep, n_drop_drop,
+       CASE WHEN (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
+                 * (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
+                 - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
+                    + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
+                 = 0
+            THEN 1.0
+            ELSE round(
+              CAST((n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
+                   * (n_keep_keep + n_drop_drop)
+                   - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
+                      + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
+                   AS DOUBLE)
+              / CAST((n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
+                     * (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
+                     - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
+                        + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
+                     AS DOUBLE), 6)
+       END AS kappa
+FROM conf
+""",
     doc="X145: QUALITY-SCREEN ENSEMBLE AGREEMENT — before combining "
     "filters into a pipeline, measure how much they agree: for every "
     "pair of the four rule gates (x86 Gopher battery, x09 "
@@ -1793,7 +1818,7 @@ SCREEN_GATES = ("g86", "g09", "g17", "g140")  # column order fixes pair ids
     "screens fire on DIFFERENT documents and stacking them multiplies "
     "yield loss — the filter-ensemble ablation signal. Determinism: "
     "the four gate columns compose textually from the registered "
-    "oracles (defer_install), x17's short-doc gap defaults to keep "
+    "oracles (composed in register), x17's short-doc gap defaults to keep "
     "via LEFT JOIN, and kappa is exact-integer algebra (n(a+d) - "
     "marginal products over n^2 - the same) with a single 6dp "
     "division; the degenerate pe=1 case is an INTEGER equality branch "
@@ -1888,71 +1913,3 @@ def x145_screen_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.round(num.cast("double") / den.cast("double"), 6))
         .alias("kappa"),
     )
-
-
-def _install_x145_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x86 = _REGISTRY["x86_quality_rules"].oracle
-    x09 = _REGISTRY["x09_quality_score"].oracle
-    x17 = _REGISTRY["x17_repetition_filter"].oracle
-    x140 = _REGISTRY["x140_blocklist_screen"].oracle
-    pairs_sql = []
-    names = list(SCREEN_GATES)
-    for i in range(len(names)):
-        for j in range(i + 1, len(names)):
-            ga, gb = names[i], names[j]
-            pairs_sql.append(f"""
-SELECT '{ga}' AS gate_a, '{gb}' AS gate_b,
-       CAST(SUM(CASE WHEN {ga} = 1 AND {gb} = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep_keep,
-       CAST(SUM(CASE WHEN {ga} = 1 AND {gb} = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep_drop,
-       CAST(SUM(CASE WHEN {ga} = 0 AND {gb} = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_drop_keep,
-       CAST(SUM(CASE WHEN {ga} = 0 AND {gb} = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_drop_drop
-FROM gates""")
-    union = "\nUNION ALL\n".join(pairs_sql)
-    q = _REGISTRY["x145_screen_agreement"]
-    sql = f"""
-WITH s86 AS ({x86}),
-s09 AS ({x09}),
-s17 AS ({x17}),
-s140 AS ({x140}),
-gates AS (
-  SELECT s86.doc_id,
-         CAST(s86.keep AS INT) AS g86,
-         CASE WHEN s09.quality_gate = 'keep' THEN 1 ELSE 0 END AS g09,
-         coalesce(CASE WHEN s17.repetition_gate = 'keep' THEN 1 ELSE 0 END, 1)
-           AS g17,
-         CASE WHEN s140.gate = 'ok' THEN 1 ELSE 0 END AS g140
-  FROM s86
-  JOIN s09 USING (doc_id)
-  LEFT JOIN s17 USING (doc_id)
-  JOIN s140 USING (doc_id)
-),
-conf AS ({union})
-SELECT gate_a, gate_b, n_keep_keep, n_keep_drop, n_drop_keep, n_drop_drop,
-       CASE WHEN (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
-                 * (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
-                 - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
-                    + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
-                 = 0
-            THEN 1.0
-            ELSE round(
-              CAST((n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
-                   * (n_keep_keep + n_drop_drop)
-                   - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
-                      + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
-                   AS DOUBLE)
-              / CAST((n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
-                     * (n_keep_keep + n_keep_drop + n_drop_keep + n_drop_drop)
-                     - ((n_keep_keep + n_keep_drop) * (n_keep_keep + n_drop_keep)
-                        + (n_drop_keep + n_drop_drop) * (n_keep_drop + n_drop_drop))
-                     AS DOUBLE), 6)
-       END AS kappa
-FROM conf
-"""
-    _REGISTRY["x145_screen_agreement"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x145_oracle)

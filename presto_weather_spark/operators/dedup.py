@@ -2512,14 +2512,25 @@ def x115_dedup_threshold_sensitivity(
 
 @register(
     "x133_cluster_size_histogram",
-    oracle=None,  # composed from x02f's oracle at import time (see below)
+    oracle=lambda o: f"""
+WITH labels AS ({o['x02f_neardup_clusters']}),
+sizes AS (
+  SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
+  FROM labels GROUP BY cluster_id
+)
+SELECT cluster_size,
+       CAST(count(*) AS BIGINT) AS n_clusters,
+       CAST(count(*) * any_value(cluster_size) AS BIGINT) AS n_docs,
+       CAST(count(*) * (any_value(cluster_size) - 1) AS BIGINT) AS n_removable
+FROM sizes GROUP BY cluster_size
+""",
     doc="X133: CLUSTER-SIZE HISTOGRAM — the report read before signing off "
     "a dedup run: for each near-dup cluster size s, how many clusters, "
     "how many documents they hold, and how many a keep-one policy "
     "removes ((s-1) per cluster) — a long tail of giant clusters means "
     "the threshold chains unrelated docs (the x110 transitivity signal, "
     "as a size distribution). Built ON x02f's connected components and "
-    "its oracle (composed textually at import, the x128 pattern), so "
+    "its oracle (composed textually at load, the x128 pattern), so "
     "the histogram is hash-verified against the same recursive-CTE "
     "ground truth. Scale: the histogram aggregates the LABEL table "
     "(one row per doc) twice — cluster sizes, then size counts; both "
@@ -2539,31 +2550,6 @@ def x133_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_removable"),
     )
-
-
-def _install_x133_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    base = _REGISTRY["x02f_neardup_clusters"].oracle
-    q = _REGISTRY["x133_cluster_size_histogram"]
-    sql = f"""
-WITH labels AS ({base}),
-sizes AS (
-  SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-  FROM labels GROUP BY cluster_id
-)
-SELECT cluster_size,
-       CAST(count(*) AS BIGINT) AS n_clusters,
-       CAST(count(*) * any_value(cluster_size) AS BIGINT) AS n_docs,
-       CAST(count(*) * (any_value(cluster_size) - 1) AS BIGINT) AS n_removable
-FROM sizes GROUP BY cluster_size
-"""
-    _REGISTRY["x133_cluster_size_histogram"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-_install_x133_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -2651,7 +2637,27 @@ def x138_dedup_mixture_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x154_cluster_rep_keeplist",
-    oracle=None,  # composed from x02f's oracle at import time (see below)
+    oracle=lambda o: f"""
+WITH labels AS ({o['x02f_neardup_clusters']}),
+sc AS (
+  SELECT doc_id,
+         CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000
+              // greatest(length(text), 1) AS BIGINT) AS alpha_e6
+  FROM documents WHERE doc_id < 60
+),
+j AS (SELECT l.doc_id, l.cluster_id, sc.alpha_e6
+      FROM labels l JOIN sc USING (doc_id)),
+r AS (
+  SELECT *, row_number() OVER (PARTITION BY cluster_id
+                               ORDER BY alpha_e6 DESC, doc_id) AS rn,
+         CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+           AS cluster_size
+  FROM j
+)
+SELECT doc_id, cluster_id, alpha_e6, cluster_size,
+       CASE WHEN rn = 1 THEN 'keep' ELSE 'drop' END AS rep_flag
+FROM r
+""",
     doc="X154: CLUSTER REPRESENTATIVE selection — the decision x02f's "
     "clusters exist to feed: which document SURVIVES each near-dup "
     "cluster. Where x34 picks quality survivors within exact-digest "
@@ -2700,37 +2706,3 @@ def x154_cluster_rep_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rep_flag"),
         )
     )
-
-
-def _install_x154_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    base = _REGISTRY["x02f_neardup_clusters"].oracle
-    q = _REGISTRY["x154_cluster_rep_keeplist"]
-    sql = f"""
-WITH labels AS ({base}),
-sc AS (
-  SELECT doc_id,
-         CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000
-              // greatest(length(text), 1) AS BIGINT) AS alpha_e6
-  FROM documents WHERE doc_id < 60
-),
-j AS (SELECT l.doc_id, l.cluster_id, sc.alpha_e6
-      FROM labels l JOIN sc USING (doc_id)),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY cluster_id
-                               ORDER BY alpha_e6 DESC, doc_id) AS rn,
-         CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-           AS cluster_size
-  FROM j
-)
-SELECT doc_id, cluster_id, alpha_e6, cluster_size,
-       CASE WHEN rn = 1 THEN 'keep' ELSE 'drop' END AS rep_flag
-FROM r
-"""
-    _REGISTRY["x154_cluster_rep_keeplist"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-_install_x154_oracle()

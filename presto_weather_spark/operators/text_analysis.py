@@ -23,7 +23,7 @@ from presto_weather_spark.operators._util import (
     spread,
     tokens,
 )
-from presto_weather_spark.registry import defer_install, register
+from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows
 
 
@@ -5198,7 +5198,28 @@ FROM documents
 
 @register(
     "x128_rrf_hybrid_retrieval",
-    oracle=None,  # composed below from x89's oracle at registration time
+    oracle=lambda o: f"""
+WITH bm AS ({o['x89_bm25_topk']}),
+quality AS ({_quality_rank_sql()}),
+fused AS (
+  SELECT bm.query_id, bm.doc_id,
+         bm.doc_rank AS bm25_rank, quality.q_rank,
+         CAST(CAST(2*{RRF_K} + bm.doc_rank + quality.q_rank AS HUGEINT)
+                * 1000000000000
+              // (CAST({RRF_K} + bm.doc_rank AS HUGEINT)
+                * CAST({RRF_K} + quality.q_rank AS HUGEINT))
+              AS BIGINT)
+             AS rrf_score_e12
+  FROM bm JOIN quality USING (doc_id)
+)
+SELECT query_id, doc_id, bm25_rank, q_rank, rrf_score_e12,
+       CAST(rn AS BIGINT) AS fused_rank
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY rrf_score_e12 DESC, doc_id) AS rn
+  FROM fused
+) WHERE rn <= {RRF_TOP_K}
+""",
     doc="X128: RECIPROCAL RANK FUSION — the standard hybrid-retrieval "
     "combiner (Cormack et al. 2009): fuse the x89 BM25 ranking with a "
     "corpus quality-prior ranking (x09's alphabetic-ratio score) via "
@@ -5263,43 +5284,6 @@ def x128_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         fused.withColumn("fused_rank", F.row_number().over(w_f))
         .filter(F.col("fused_rank") <= RRF_TOP_K)
     )
-
-
-# Compose x128's oracle from x89's registered oracle (same CTE pipeline,
-# wrapped) so the two stay in lockstep if BM25 constants change.
-def _install_x128_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    bm_oracle = _REGISTRY["x89_bm25_topk"].oracle
-    q = _REGISTRY["x128_rrf_hybrid_retrieval"]
-    fused_sql = f"""
-WITH bm AS ({bm_oracle}),
-quality AS ({_quality_rank_sql()}),
-fused AS (
-  SELECT bm.query_id, bm.doc_id,
-         bm.doc_rank AS bm25_rank, quality.q_rank,
-         CAST(CAST(2*{RRF_K} + bm.doc_rank + quality.q_rank AS HUGEINT)
-                * 1000000000000
-              // (CAST({RRF_K} + bm.doc_rank AS HUGEINT)
-                * CAST({RRF_K} + quality.q_rank AS HUGEINT))
-              AS BIGINT)
-             AS rrf_score_e12
-  FROM bm JOIN quality USING (doc_id)
-)
-SELECT query_id, doc_id, bm25_rank, q_rank, rrf_score_e12,
-       CAST(rn AS BIGINT) AS fused_rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY rrf_score_e12 DESC, doc_id) AS rn
-  FROM fused
-) WHERE rn <= {RRF_TOP_K}
-"""
-    _REGISTRY["x128_rrf_hybrid_retrieval"] = Query(
-        name=q.name, fn=q.fn, oracle=fused_sql, doc=q.doc
-    )
-
-
-_install_x128_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -5740,7 +5724,34 @@ def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x149_score_length_confound",
-    oracle=None,  # composed from x20's oracle at import (see below)
+    oracle=lambda o: f"""
+WITH score AS ({o['x20_unigram_logprob']}),
+j AS (
+  SELECT d.lang, CAST(length(d.text) AS BIGINT) AS x,
+         CAST(score.avg_logprob AS DECIMAL(18,6)) AS y
+  FROM documents d JOIN score ON d.doc_id = score.doc_id
+),
+agg AS (
+  SELECT lang,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS DECIMAL(38,6)) AS sx,
+         CAST(SUM(y) AS DECIMAL(38,6)) AS sy,
+         CAST(SUM(x * y) AS DECIMAL(38,6)) AS sxy,
+         CAST(SUM(x * x) AS DECIMAL(38,6)) AS sxx,
+         SUM(CAST(y * y AS DECIMAL(38,12))) AS syy
+  FROM j GROUP BY lang
+)
+SELECT lang, n,
+       round(CAST(sx AS DOUBLE) / n, 6) AS mean_len,
+       round(CAST(sy AS DOUBLE) / n, 6) AS mean_score,
+       CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0
+            THEN 0.0
+            ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
+                       / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+                              * CAST(n * syy - sy * sy AS DOUBLE)), 6)
+       END AS pearson_r
+FROM agg
+""",
     doc="X149: SCORE-LENGTH CONFOUND AUDIT — 'is my quality score just "
     "measuring length?': per language, the Pearson correlation between "
     "document length (chars) and x20's unigram-LM score, plus the "
@@ -5754,7 +5765,7 @@ def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inputs, 6dp-rounded; the zero-variance degenerate (all-equal x "
     "or y) defines r=0 via an exact-decimal equality, not a float "
     "compare. Oracle composed from x20's registered oracle "
-    "(defer_install). Scale: one doc-grain join on doc_id, then a "
+    "(composed in register). Scale: one doc-grain join on doc_id, then a "
     "languages-sized moment aggregate — the audit is one pass.",
 )
 def x149_score_length_confound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5796,50 +5807,47 @@ def x149_score_length_confound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_x149_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x20 = _REGISTRY["x20_unigram_logprob"].oracle
-    q = _REGISTRY["x149_score_length_confound"]
-    sql = f"""
-WITH score AS ({x20}),
-j AS (
-  SELECT d.lang, CAST(length(d.text) AS BIGINT) AS x,
-         CAST(score.avg_logprob AS DECIMAL(18,6)) AS y
-  FROM documents d JOIN score ON d.doc_id = score.doc_id
-),
-agg AS (
-  SELECT lang,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(SUM(x) AS DECIMAL(38,6)) AS sx,
-         CAST(SUM(y) AS DECIMAL(38,6)) AS sy,
-         CAST(SUM(x * y) AS DECIMAL(38,6)) AS sxy,
-         CAST(SUM(x * x) AS DECIMAL(38,6)) AS sxx,
-         SUM(CAST(y * y AS DECIMAL(38,12))) AS syy
-  FROM j GROUP BY lang
-)
-SELECT lang, n,
-       round(CAST(sx AS DOUBLE) / n, 6) AS mean_len,
-       round(CAST(sy AS DOUBLE) / n, 6) AS mean_score,
-       CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0
-            THEN 0.0
-            ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
-                       / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                              * CAST(n * syy - sy * sy AS DOUBLE)), 6)
-       END AS pearson_r
-FROM agg
-"""
-    _REGISTRY["x149_score_length_confound"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x149_oracle)
-
-
 @register(
     "x150_dsir_hash_fidelity",
-    oracle=None,  # composed from x147's + x148's oracles at import
+    oracle=lambda o: f"""
+WITH exact_w AS ({o['x147_dsir_importance']}),
+hashed_w AS ({o['x148_dsir_hashed_features']}),
+conf AS (
+  SELECT
+    CAST(SUM(CASE WHEN e.dsir_gate = 'select' AND h.dsir_gate = 'select'
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_sel_sel,
+    CAST(SUM(CASE WHEN e.dsir_gate = 'select' AND h.dsir_gate = 'skip'
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_sel_skip,
+    CAST(SUM(CASE WHEN e.dsir_gate = 'skip' AND h.dsir_gate = 'select'
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_skip_sel,
+    CAST(SUM(CASE WHEN e.dsir_gate = 'skip' AND h.dsir_gate = 'skip'
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_skip_skip
+  FROM exact_w e JOIN hashed_w h USING (doc_id)
+)
+SELECT n_sel_sel, n_sel_skip, n_skip_sel, n_skip_skip,
+       CAST((n_sel_sel + n_skip_skip) * 1000000
+            // (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+            AS BIGINT) AS agree_rate_e6,
+       CASE WHEN (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+                 * (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+                 - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
+                    + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
+                 = 0
+            THEN 1.0
+            ELSE round(
+              CAST((n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+                   * (n_sel_sel + n_skip_skip)
+                   - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
+                      + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
+                   AS DOUBLE)
+              / CAST((n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+                     * (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
+                     - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
+                        + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
+                     AS DOUBLE), 6)
+       END AS kappa
+FROM conf
+""",
     doc="X150: DSIR HASH-FIDELITY AUDIT — how faithful is x148's "
     "fixed-bucket approximation to x147's exact-vocabulary weights? "
     "The 2x2 select/skip confusion between the two gates plus Cohen's "
@@ -5850,7 +5858,7 @@ defer_install(_install_x149_oracle)
     "the fix is raising DSIR_BUCKETS, not trusting the sketch. Kappa "
     "is x145's exact-integer algebra (one 6dp division, pe=1 by "
     "integer equality); both gate columns compose textually from the "
-    "registered oracles via defer_install so all three operators stay "
+    "registered oracles so all three operators stay "
     "in lockstep. Scale: two doc-grain gate tables join on doc_id "
     "into ONE all-to-one aggregate — a single corpus pass.",
 )
@@ -5896,62 +5904,33 @@ def x150_dsir_hash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_x150_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x147 = _REGISTRY["x147_dsir_importance"].oracle
-    x148 = _REGISTRY["x148_dsir_hashed_features"].oracle
-    q = _REGISTRY["x150_dsir_hash_fidelity"]
-    sql = f"""
-WITH exact_w AS ({x147}),
-hashed_w AS ({x148}),
-conf AS (
-  SELECT
-    CAST(SUM(CASE WHEN e.dsir_gate = 'select' AND h.dsir_gate = 'select'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_sel_sel,
-    CAST(SUM(CASE WHEN e.dsir_gate = 'select' AND h.dsir_gate = 'skip'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_sel_skip,
-    CAST(SUM(CASE WHEN e.dsir_gate = 'skip' AND h.dsir_gate = 'select'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_skip_sel,
-    CAST(SUM(CASE WHEN e.dsir_gate = 'skip' AND h.dsir_gate = 'skip'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_skip_skip
-  FROM exact_w e JOIN hashed_w h USING (doc_id)
-)
-SELECT n_sel_sel, n_sel_skip, n_skip_sel, n_skip_skip,
-       CAST((n_sel_sel + n_skip_skip) * 1000000
-            // (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-            AS BIGINT) AS agree_rate_e6,
-       CASE WHEN (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-                 * (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-                 - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
-                    + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
-                 = 0
-            THEN 1.0
-            ELSE round(
-              CAST((n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-                   * (n_sel_sel + n_skip_skip)
-                   - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
-                      + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
-                   AS DOUBLE)
-              / CAST((n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-                     * (n_sel_sel + n_sel_skip + n_skip_sel + n_skip_skip)
-                     - ((n_sel_sel + n_sel_skip) * (n_sel_sel + n_skip_sel)
-                        + (n_skip_sel + n_skip_skip) * (n_sel_skip + n_skip_skip))
-                     AS DOUBLE), 6)
-       END AS kappa
-FROM conf
-"""
-    _REGISTRY["x150_dsir_hash_fidelity"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x150_oracle)
-
-
 @register(
     "x151_dsir_mixture_shift",
-    oracle=None,  # composed from x147's oracle at import
+    oracle=lambda o: f"""
+WITH w AS ({o['x147_dsir_importance']}),
+per_lang AS (
+  SELECT d.lang,
+         CAST(count(*) AS BIGINT) AS docs_in,
+         CAST(SUM(CASE WHEN w.dsir_gate = 'select' THEN 1 ELSE 0 END)
+              AS BIGINT) AS docs_selected
+  FROM documents d JOIN w ON d.doc_id = w.doc_id
+  GROUP BY d.lang
+)
+SELECT lang, docs_in, docs_selected,
+       CAST(docs_selected * 1000000 // docs_in AS BIGINT) AS keep_rate_e6,
+       CAST(docs_in * 1000000 // SUM(docs_in) OVER () AS BIGINT)
+         AS share_before_e6,
+       CASE WHEN SUM(docs_selected) OVER () = 0 THEN CAST(0 AS BIGINT)
+            ELSE CAST(docs_selected * 1000000 // SUM(docs_selected) OVER ()
+                      AS BIGINT) END
+         AS share_after_e6,
+       CASE WHEN SUM(docs_selected) OVER () = 0 THEN CAST(0 AS BIGINT)
+            ELSE CAST(docs_selected * 1000000 // SUM(docs_selected) OVER ()
+                      AS BIGINT) END
+         - CAST(docs_in * 1000000 // SUM(docs_in) OVER () AS BIGINT)
+         AS share_delta_e6
+FROM per_lang
+""",
     doc="X151: DSIR SELECTION MIXTURE SHIFT — x138 asks what DEDUP does "
     "to the language mixture; this asks the same of DSIR SELECTION, "
     "which is deliberately non-uniform (x147 steers toward a target "
@@ -5960,7 +5939,7 @@ defer_install(_install_x150_oracle)
     "rate, and the mixture share before vs after selection with its "
     "delta (shares as micro-unit integers via the exact global "
     "counts, never a float quotient). The gate column composes "
-    "textually from x147's registered oracle (defer_install). Scale: "
+    "textually from x147's registered oracle (composed in register). Scale: "
     "x147's doc-grain gate aggregates straight to a languages-sized "
     "table; the global totals ride a window over that tiny table.",
 )
@@ -6012,44 +5991,6 @@ def x151_dsir_mixture_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - CAST(docs_in * 1000000 DIV tot_in AS BIGINT)"
         ).alias("share_delta_e6"),
     )
-
-
-def _install_x151_oracle() -> None:
-    from presto_weather_spark.registry import _REGISTRY, Query
-
-    x147 = _REGISTRY["x147_dsir_importance"].oracle
-    q = _REGISTRY["x151_dsir_mixture_shift"]
-    sql = f"""
-WITH w AS ({x147}),
-per_lang AS (
-  SELECT d.lang,
-         CAST(count(*) AS BIGINT) AS docs_in,
-         CAST(SUM(CASE WHEN w.dsir_gate = 'select' THEN 1 ELSE 0 END)
-              AS BIGINT) AS docs_selected
-  FROM documents d JOIN w ON d.doc_id = w.doc_id
-  GROUP BY d.lang
-)
-SELECT lang, docs_in, docs_selected,
-       CAST(docs_selected * 1000000 // docs_in AS BIGINT) AS keep_rate_e6,
-       CAST(docs_in * 1000000 // SUM(docs_in) OVER () AS BIGINT)
-         AS share_before_e6,
-       CASE WHEN SUM(docs_selected) OVER () = 0 THEN CAST(0 AS BIGINT)
-            ELSE CAST(docs_selected * 1000000 // SUM(docs_selected) OVER ()
-                      AS BIGINT) END
-         AS share_after_e6,
-       CASE WHEN SUM(docs_selected) OVER () = 0 THEN CAST(0 AS BIGINT)
-            ELSE CAST(docs_selected * 1000000 // SUM(docs_selected) OVER ()
-                      AS BIGINT) END
-         - CAST(docs_in * 1000000 // SUM(docs_in) OVER () AS BIGINT)
-         AS share_delta_e6
-FROM per_lang
-"""
-    _REGISTRY["x151_dsir_mixture_shift"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
-    )
-
-
-defer_install(_install_x151_oracle)
 
 
 # ---------------------------------------------------------------------------

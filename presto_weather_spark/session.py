@@ -50,6 +50,7 @@ from __future__ import annotations
 import atexit
 import functools
 import hashlib
+import logging
 import os
 import shutil
 import tempfile
@@ -87,6 +88,14 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 
+# Free space /dev/shm must have for scratch to go there. tmpfs pages are RAM
+# shared with the driver heap, and a full tmpfs fails a shuffle or staging
+# write mid-job. sf0.1 scratch is tens of MB, so 1 GiB is ample headroom and
+# still skips a nearly full or a container's default 64 MB /dev/shm.
+SHM_MIN_FREE_BYTES = 1 << 30
+
+_log = logging.getLogger(__name__)
+
 # Footer-keyed schema cache (see the module docstring): one entry per
 # distinct on-disk schema and conf setting, not per path.
 _SCHEMAS: dict[tuple, StructType] = {}
@@ -107,12 +116,10 @@ def scratch_base() -> str:
     - ``SPARK_GRAFT_SCRATCH_DIR`` if set — on a production cluster point
       this at the fast local-disk mount (NVMe scratch), exactly like
       ``spark.local.dir`` is provisioned on real deployments;
-    - ``/dev/shm`` when it exists and is writable (Linux tmpfs — RAM-backed,
-      no writeback). Its capacity is not checked: tmpfs pages are RAM, and
-      on a 4-vCPU host with 15 GB of RAM ``/dev/shm`` is a 16 GB tmpfs, so
-      scratch competes with the driver heap and a full tmpfs fails the
-      write. sf0.1 scratch is tens of MB;
-    - the OS temp dir otherwise (the pre-round-11 behavior).
+    - ``/dev/shm`` when it exists, is writable and has at least
+      ``SHM_MIN_FREE_BYTES`` free (Linux tmpfs — RAM-backed, no writeback);
+    - the OS temp dir otherwise (the pre-round-11 behavior), with a warning
+      when it is the free-space floor that skipped ``/dev/shm``.
     """
     env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
     if env:
@@ -120,7 +127,13 @@ def scratch_base() -> str:
         return env
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        return shm
+        free = shutil.disk_usage(shm).free
+        if free >= SHM_MIN_FREE_BYTES:
+            return shm
+        _log.warning(
+            "%s has %d MiB free, below the %d MiB floor; scratch goes to %s",
+            shm, free >> 20, SHM_MIN_FREE_BYTES >> 20, tempfile.gettempdir(),
+        )
     return tempfile.gettempdir()
 
 

@@ -75,13 +75,17 @@ def _stage_stream_dir(path: str) -> str:
     return stage
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema from the
-    footer-keyed cache)."""
-    path = os.path.join(sf_dir, "events.parquet")
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over the ``name`` table's parquet (schema from the
+    footer-keyed cache, timestamps normalized as ``load_table`` does)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     stage = _stage_stream_dir(path)
     schema, nanos_cols = _parquet_schema(spark, path)  # raw on-disk (long/NTZ)
     return _normalize_nanos(spark.readStream.schema(schema).parquet(stage), nanos_cols)
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _table_stream(spark, sf_dir, "events")
 
 
 STREAM_STATE_PARTITIONS = "4"  # state stores per stateful operator in tests
@@ -398,6 +402,18 @@ JOIN events p
     "streams on user_id once.",
 )
 def s14g_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    joined = _click_purchase_join(
+        spark, sf_dir, "inner", "click_id", "purchase_id", "user_id"
+    )
+    return _run_to_memory(joined, "append")
+
+
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str, *cols: str
+) -> DataFrame:
+    """The s14g/s14i join: watermarked clicks against the same user's
+    purchases up to 1 h later, joined ``how``, projected to ``cols`` and
+    ``gap_seconds``."""
     stream = events_stream(spark, sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
@@ -417,20 +433,18 @@ def s14g_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "2 hours")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
+        *cols,
         ((F.unix_micros("purchase_ts") - F.unix_micros("click_ts")) / 1000000)
         .cast("bigint")
         .alias("gap_seconds"),
     )
-    return _run_to_memory(joined, "append")
 
 
 # NOTE: a transformWithStateInPandas (Spark 4 typed-state API) twin of
@@ -459,8 +473,6 @@ GROUP BY c.c_mktsegment, e.event_type
     "availableNow; oracle is the batch-equivalent join.",
 )
 def s14h_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.session import load_table
-
     stream = events_stream(spark, sf_dir)
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -498,40 +510,9 @@ def s14i_joined_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The s14i join as an un-started streaming frame — split out so
     tools/s14i_state_probe.py can start it itself and read the state-store
     metrics (stateOperators[].numRowsTotal) from the query's progress."""
-    stream = events_stream(spark, sf_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
+    return _click_purchase_join(
+        spark, sf_dir, "left_outer", "click_id", "user_id", "purchase_id"
     )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "user_id",
-        "purchase_id",
-        ((F.unix_micros("purchase_ts") - F.unix_micros("click_ts")) / 1000000)
-        .cast("bigint")
-        .alias("gap_seconds"),
-    )
-    return joined
 
 
 SESSION_GAP_SECONDS = 4 * 3600  # same 4h gap as the batch twin (s14d)
@@ -945,15 +926,6 @@ def s14o_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(out, "update")
 
 
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (schema from the
-    footer-keyed cache)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    stage = _stage_stream_dir(path)
-    schema, _ = _parquet_schema(spark, path)
-    return spark.readStream.schema(schema).parquet(stage)
-
-
 def _aes_sample_key(doc_id: int, text: str, n_chars: int) -> float:
     import hashlib
     import math
@@ -1046,7 +1018,7 @@ def s14p_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.window import Window as W
 
-    stream = documents_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
 
     out = (
         stream.select("source", "doc_id", "text", "n_chars")
@@ -1249,8 +1221,6 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     import os as _os
     import shutil
 
-    from presto_weather_spark.session import load_table as _load
-
     base = stage_dir("stream_recovery", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     stream_dir = _os.path.join(base, "in")
@@ -1259,7 +1229,7 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     journal = recovery_journal_path(sf_dir)
     _os.makedirs(stream_dir, exist_ok=True)
 
-    e = _load(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     # two arrival waves: A (even ids) lands before the first run, B after
     e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
         "overwrite"

@@ -8,11 +8,11 @@ driver applies at sf0.01. Queries without an oracle get a rows-run check.
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
+from conftest import driver_norm
 
 from presto_weather_spark.registry import all_queries
 from presto_weather_spark.session import TABLE_NAMES
@@ -28,25 +28,6 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def normalize(df) -> list[tuple]:
-    """Sort columns by name, normalize values, sort rows — the
-    order-insensitive comparison form."""
-    df = df[sorted(df.columns)]
-
-    def norm(v):
-        if v is None:
-            return None
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            # collapse -0.0 and represent with enough digits
-            return repr(v + 0.0)
-        return str(v)
-
-    rows = [tuple(norm(v) for v in row) for row in df.itertuples(index=False, name=None)]
-    return sorted(rows)
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_query_matches_oracle(spark, sf_dir, name):
     q = QUERIES[name]
@@ -54,7 +35,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     if q.oracle is None:
         # rows-only: the query must run and be deterministic across reruns
         sdf2 = q.fn(spark, sf_dir).toPandas()
-        assert normalize(sdf) == normalize(sdf2), f"{name}: nondeterministic result"
+        assert driver_norm(sdf) == driver_norm(sdf2), f"{name}: nondeterministic result"
         return
     con = duck_con(sf_dir)
     ddf = con.execute(q.oracle).fetchdf()
@@ -62,6 +43,6 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert sorted(sdf.columns) == sorted(ddf.columns), (
         f"{name}: columns {sorted(sdf.columns)} != oracle {sorted(ddf.columns)}"
     )
-    s_rows, d_rows = normalize(sdf), normalize(ddf)
+    s_rows, d_rows = driver_norm(sdf), driver_norm(ddf)
     mism = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
     assert s_rows == d_rows, f"{name}: value mismatch; first diffs: {mism[:3]}"

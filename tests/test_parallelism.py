@@ -8,10 +8,10 @@ results reproducible when the same pipeline runs on 32 local threads or
 from __future__ import annotations
 
 import pytest
+from conftest import driver_norm
 
 from presto_weather_spark.registry import all_queries
 from presto_weather_spark.session import conf_scope
-from tests.test_oracle import normalize
 
 QS = all_queries()
 
@@ -54,7 +54,7 @@ INVARIANT_QUERIES = [
 @pytest.mark.parametrize("name", INVARIANT_QUERIES)
 def test_result_invariant_to_shuffle_parallelism(spark, sf_dir, name):
     q = QS[name]
-    base = normalize(q.fn(spark, sf_dir).toPandas())
+    base = driver_norm(q.fn(spark, sf_dir).toPandas())
     # shrink Arrow batches so mapInPandas operators also prove
     # batch-boundary invariance, not just shuffle invariance
     low_confs = {
@@ -62,5 +62,5 @@ def test_result_invariant_to_shuffle_parallelism(spark, sf_dir, name):
         "spark.sql.execution.arrow.maxRecordsPerBatch": "37",
     }
     with conf_scope(spark, low_confs):
-        low = normalize(q.fn(spark, sf_dir).toPandas())
+        low = driver_norm(q.fn(spark, sf_dir).toPandas())
     assert base == low, f"{name}: result depends on shuffle parallelism"

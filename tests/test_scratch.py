@@ -2,19 +2,24 @@
 
 Two table dirs that share a basename (``a/sf`` and ``b/sf``) must not share
 staged data or a stream checkpoint, and a call's throwaway checkpoint must
-not outlive the call, also when the stream fails.
+not outlive the call, also when the stream fails. Scratch leaves a
+``/dev/shm`` with too little free space for the OS temp dir, and says so.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
+import tempfile
+from types import SimpleNamespace
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators.parity_extras import s02_parquet_sink_roundtrip
+from presto_weather_spark import session
 from presto_weather_spark.session import scratch_base, scratch_root, stage_dir, temp_dir
 from presto_weather_spark.streaming.pipeline import (
     _run_to_memory,
@@ -94,3 +99,23 @@ def test_temp_dir_is_removed_when_the_block_raises():
             open(os.path.join(path, "partial"), "w").close()
             raise RuntimeError("call failed")
     assert not os.path.exists(path)
+
+
+def test_scratch_skips_a_nearly_full_shm(monkeypatch, caplog, tmp_path):
+    if not os.access("/dev/shm", os.W_OK):
+        pytest.skip("no writable /dev/shm on this host")
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    free = {"bytes": session.SHM_MIN_FREE_BYTES}
+    monkeypatch.setattr(
+        session.shutil, "disk_usage", lambda path: SimpleNamespace(free=free["bytes"])
+    )
+    assert scratch_base() == "/dev/shm"
+
+    free["bytes"] -= 1
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert scratch_base() == tempfile.gettempdir()
+    assert [r.levelno for r in caplog.records] == [logging.WARNING]
+    assert "/dev/shm" in caplog.text
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    assert scratch_base() == str(tmp_path)

@@ -12,12 +12,15 @@
 - The corpus tokenizer and the scan fan-out live only in
   ``operators/_util.py``: ``raw_tokens``/``tokens`` with their DuckDB twins
   ``SQL_RAW_TOKENS``/``SQL_TOKENS``, and ``spread``.
+- A ``Query`` is built only in ``registry.py``: composed oracles are
+  declared in ``register`` and resolved there, never patched in afterwards.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
-``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``
-or ``string_split_regex(lower(text)`` site elsewhere fails here; route it
-through the owner instead.
+``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``,
+``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(`` or
+``defer_install`` site elsewhere fails here; route it through the owner
+instead.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ STREAM_OWNER = ("streaming/pipeline.py", "_run_stream")
 ROWS_OWNER = ("session.py", "local_rows")
 SCRATCH_OWNER = "session.py"
 CORPUS_OWNER = os.path.join("operators", "_util.py")
+REGISTRY_OWNER = "registry.py"
 
 
 @functools.cache
@@ -182,3 +186,25 @@ def test_corpus_tokenizer_is_spelled_only_in_util():
         f"SQL_RAW_TOKENS/SQL_TOKENS: {stray}"
     )
     assert CORPUS_OWNER in sites, "lint matched nothing"
+
+
+def _is_registry_reach_in(node: ast.AST) -> bool:
+    """A use of the registry's private table or of the retired
+    ``defer_install``, an import of either or of ``Query``, or a hand-built
+    ``Query``."""
+    private = ("_REGISTRY", "defer_install")
+    if isinstance(node, ast.Name):
+        return node.id in private
+    if isinstance(node, ast.ImportFrom):
+        return any(a.name in (*private, "Query") for a in node.names)
+    return _called(node, "Query")
+
+
+def test_queries_are_built_only_in_the_registry():
+    sites = _sites(_is_registry_reach_in)
+    stray = sorted(sites - {REGISTRY_OWNER})
+    assert not stray, (
+        f"registry reached into outside {REGISTRY_OWNER}; declare a composed "
+        f"oracle in register instead: {stray}"
+    )
+    assert REGISTRY_OWNER in sites, "lint matched nothing"
