@@ -11,14 +11,14 @@ The module also holds query shapes several layers share: standard-SQL
 empty-input rows (``grand_total_if_empty``), global ranks and tiles
 without a single-reducer window (``global_rank``, ``exact_ntile``), the
 corpus tokenizer with its DuckDB twin (``raw_tokens``/``SQL_RAW_TOKENS``,
-``tokens``/``SQL_TOKENS``, ``STOPWORDS``) and the scan fan-out
-(``spread``). Scratch paths are not built here: ``session.stage_dir`` and
-``session.temp_dir`` own them.
+``tokens``/``SQL_TOKENS``, ``STOPWORDS``), the hashed token n-grams
+(``gram_hashes``) and the scan fan-out (``spread``). Scratch paths are not
+built here: ``session.stage_dir`` and ``session.temp_dir`` own them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.session import local_rows
@@ -61,6 +61,32 @@ def tokens() -> Column:
 
 SQL_RAW_TOKENS = "string_split_regex(lower(text), '\\s+')"
 SQL_TOKENS = f"list_filter({SQL_RAW_TOKENS}, t -> t <> '')"
+
+
+def gram_hashes(d: DataFrame, toks: Column, k: int) -> DataFrame:
+    """(doc_id, gh): the distinct ``k``-token windows of each doc's token
+    array ``toks``, as hashes. Each token is hashed once and a window's
+    hash is a multi-arg xxhash64 over lead() columns, so no gram string is
+    built and only longs ride the window sort. A doc shorter than ``k``
+    tokens has no window. gh names the gram string exactly short of a
+    64-bit collision, which is the trade the string-gram DuckDB oracles
+    are checked against. ``d`` must be partitioned by doc_id, so the
+    window sorts in place."""
+    th = d.select("doc_id", F.posexplode(toks).alias("pos", "tok")).select(
+        "doc_id", "pos", F.xxhash64("tok").alias("h")
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    leads = [F.lead("h", i).over(w) for i in range(1, k)]
+    return (
+        th.select(
+            "doc_id",
+            F.xxhash64(F.col("h"), *leads).alias("gh"),
+            leads[-1].alias("tail"),
+        )
+        .filter(F.col("tail").isNotNull())
+        .select("doc_id", "gh")
+        .distinct()
+    )
 
 
 def spread(df: DataFrame, *cols) -> DataFrame:

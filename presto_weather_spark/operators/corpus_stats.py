@@ -496,21 +496,7 @@ STRAT_BUCKET_HEX = 3  # md5-prefix bucketing: 16^3 = 4096 rank buckets
     # changes the PLAN, not the answer: md5-hex-prefix buckets respect the
     # (md5, doc_id) sort order, so per-bucket rank + per-bucket offset
     # reconstructs the per-stratum rank exactly.
-    oracle=f"""
-WITH s AS (
-  SELECT doc_id, lang, source,
-         row_number() OVER (
-           PARTITION BY lang, source
-           ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)), doc_id
-         ) AS sample_rank,
-         CAST(COUNT(*) OVER (PARTITION BY lang, source) AS BIGINT)
-             AS stratum_size
-  FROM documents
-)
-SELECT doc_id, lang, source, stratum_size, sample_rank
-FROM s
-WHERE sample_rank * {STRATUM_KEEP_DENOM} <= stratum_size + {STRATUM_KEEP_DENOM - 1}
-""",
+    oracle=lambda o: o["x87_stratified_sample"],
     doc="X87b: x87's documented mega-stratum path, made real and kept "
     "EXACT (identical output, same oracle — unlike x106b's sketch this "
     "banding loses nothing, because ranks on a uniform hash key "

@@ -14,11 +14,12 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
     SQL_TOKENS,
+    gram_hashes,
     spread,
     tokens,
 )
@@ -298,6 +299,21 @@ jacc AS (
   WHERE p.inter_size * 5 >= (sa.n_grams + sb.n_grams - p.inter_size)
 )"""
 
+# x02f's graph over the x02b pairs: both edge directions, the doc subset
+# and reach(src, dst), the transitive closure. x53 and x81 extend it.
+_X02F_REACH_SQL = _X02B_PAIRS_SQL + """,
+edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM jacc
+  UNION ALL
+  SELECT doc_b, doc_a FROM jacc
+),
+nodes AS (SELECT doc_id FROM documents WHERE doc_id < 60),
+reach(src, dst) AS (
+  SELECT doc_id, doc_id FROM nodes
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
+)"""
+
 
 @register(
     "x02b_ngram_jaccard",
@@ -399,18 +415,7 @@ def x02c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x02f_neardup_clusters",
-    oracle="WITH RECURSIVE " + _X02B_PAIRS_SQL + """,
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jacc
-  UNION ALL
-  SELECT doc_b, doc_a FROM jacc
-),
-nodes AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-)
+    oracle="WITH RECURSIVE " + _X02F_REACH_SQL + """
 SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
 """,
     doc="X2: near-duplicate CLUSTER assignment — connected components over "
@@ -424,13 +429,19 @@ SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
     "viable only at oracle scale.",
 )
 def x02f_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return min_label_clusters(*_x02f_graph(spark, sf_dir))
+
+
+def _x02f_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(nodes, pairs): the doc subset x02b scores and its near-dup pairs,
+    the graph x02f and x80 cluster."""
     pairs = x02b_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     nodes = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 60)
         .select("doc_id")
     )
-    return min_label_clusters(nodes, pairs)
+    return nodes, pairs
 
 
 def min_label_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -731,11 +742,10 @@ CONTAIN_NGRAM = 8  # token-shingle width for containment sets
 CONTAIN_DF_MIN = 2  # a gram must repeat across docs to block a pair
 CONTAIN_DF_CAP = 16  # drop boilerplate grams (df > cap) from the sets
 
-
-@register(
-    "x40_ngram_containment",
-    oracle=f"""
-WITH toks AS (
+# x40/x110/x115 oracle CTEs: each doc's distinct CONTAIN_NGRAM-token grams,
+# and capped(doc_id, gram), the grams whose doc frequency is inside
+# [CONTAIN_DF_MIN, CONTAIN_DF_CAP].
+_SQL_CAPPED_GRAMS = f"""toks AS (
   SELECT doc_id, {SQL_TOKENS} AS t
   FROM documents
 ),
@@ -750,7 +760,40 @@ df AS (
   SELECT gram FROM grams GROUP BY gram
   HAVING COUNT(*) BETWEEN {CONTAIN_DF_MIN} AND {CONTAIN_DF_CAP}
 ),
-capped AS (SELECT grams.doc_id, grams.gram FROM grams JOIN df USING (gram)),
+capped AS (SELECT grams.doc_id, grams.gram FROM grams JOIN df USING (gram)),"""
+
+
+def _df_capped(grams: DataFrame) -> DataFrame:
+    """The (doc_id, gh) rows of ``grams`` whose gram appears in
+    [CONTAIN_DF_MIN, CONTAIN_DF_CAP] docs. Singletons cannot block a pair,
+    and the cap bounds every gram's fan-out in the self-join."""
+    df_ok = (
+        grams.groupBy("gh")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df").between(CONTAIN_DF_MIN, CONTAIN_DF_CAP))
+        .select("gh")
+    )
+    return grams.join(F.broadcast(df_ok), "gh")
+
+
+def _shared_gram_counts(capped: DataFrame, out: str) -> DataFrame:
+    """(doc_a, doc_b, ``out``): the number of ``capped`` grams each doc pair
+    shares, doc_a < doc_b."""
+    return (
+        capped.alias("a")
+        .join(capped.alias("b"), "gh")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count(F.lit(1)).alias(out))
+    )
+
+
+@register(
+    "x40_ngram_containment",
+    oracle=f"""
+WITH {_SQL_CAPPED_GRAMS}
 sizes AS (SELECT doc_id, COUNT(*) AS n_grams FROM capped GROUP BY doc_id),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
@@ -788,44 +831,11 @@ FROM (
 )
 def x40_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    # Round-10: hash each token ONCE and combine k hashes with multi-arg
-    # xxhash64 — the old concat_ws(tok, lead...) allocated a k-token gram
-    # string per position AND shipped token strings through the window
-    # sort; now only 8-byte longs ride the sort and no string is built.
-    # Same key class (injective short of a 64-bit collision).
-    th = d.select(
-        "doc_id", F.posexplode(tokens()).alias("pos", "tok")
-    ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("h", i).over(w) for i in range(1, CONTAIN_NGRAM)]
-    grams = (
-        th.select(
-            "doc_id",
-            F.xxhash64(F.col("h"), *leads).alias("gh"),
-            leads[-1].alias("tail"),
-        )
-        .filter(F.col("tail").isNotNull())
-        .select("doc_id", "gh")
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds df, capped, and the self-join
-    )
-    df = (
-        grams.groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df").between(CONTAIN_DF_MIN, CONTAIN_DF_CAP))
-        .select("gh")
-    )
-    capped = grams.join(F.broadcast(df), "gh").localCheckpoint(eager=False)
+    # feeds the df filter, capped, and the self-join
+    grams = gram_hashes(d, tokens(), CONTAIN_NGRAM).localCheckpoint(eager=False)
+    capped = _df_capped(grams).localCheckpoint(eager=False)
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    pairs = (
-        capped.alias("a")
-        .join(capped.alias("b"), "gh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+    pairs = _shared_gram_counts(capped, "n_shared")
     scored = (
         pairs.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .withColumnRenamed("n_grams", "na")
@@ -864,18 +874,7 @@ def x40_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x53_leakage_safe_split",
-    oracle="WITH RECURSIVE " + _X02B_PAIRS_SQL + """,
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jacc
-  UNION ALL
-  SELECT doc_b, doc_a FROM jacc
-),
-nodes AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
+    oracle="WITH RECURSIVE " + _X02F_REACH_SQL + """,
 clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src)
 SELECT doc_id, cluster_id,
        CASE WHEN CAST(('0x' || substr(md5('split:' || CAST(cluster_id AS VARCHAR)), 1, 4)) AS INT) % 10 < 8
@@ -1507,20 +1506,7 @@ def _symmetric(pairs: DataFrame) -> DataFrame:
 
 @register(
     "x80_cc_star_contraction",
-    oracle="WITH RECURSIVE " + _X02B_PAIRS_SQL + """,
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jacc
-  UNION ALL
-  SELECT doc_b, doc_a FROM jacc
-),
-nodes AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-)
-SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
-""",
+    oracle=lambda o: o["x02f_neardup_clusters"],
     doc="X80: CONNECTED COMPONENTS by alternating large-star/small-star "
     "contraction (Kiveris et al., 'Connected Components in MapReduce "
     "and Beyond') over the same near-dup graph as x02f — the LOG-ROUND "
@@ -1537,13 +1523,7 @@ SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
     "each other at every scale factor.",
 )
 def x80_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = x02b_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    nodes = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id")
-    )
-    return star_contraction_clusters(nodes, pairs)
+    return star_contraction_clusters(*_x02f_graph(spark, sf_dir))
 
 
 def star_contraction_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -1606,28 +1586,27 @@ def star_contraction_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     # saved probe and loses on wall-clock for every graph that converges
     # in O(log n) rounds. The per-round probe stands; the 2x-gate row is
     # re-recorded from a quiet measurement instead.
-    prev = None
+    # Each round's edges are held once, by the eager checkpoint; only the
+    # persisted input is released, after the loop.
+    prev, nxt = None, edges
     for _ in range(12):  # log2(60) rounds would be 6; slack for safety
-        nxt = small_star(large_star(edges)).localCheckpoint()
+        nxt = small_star(large_star(nxt)).localCheckpoint()
         cur = checksum(nxt)
-        edges.unpersist()
-        edges = nxt.persist()
         if cur == prev:
             break
         prev = cur
+    edges.unpersist()
     # Fixpoint edges form stars (v -> component min); symmetrize the star
     # set so membership is readable from either side, then take each
     # node's min attachment; singletons fall back to themselves.
-    stars = edges.union(edges.select(F.col("dst"), F.col("src"))).toDF("a", "b")
+    stars = nxt.union(nxt.select(F.col("dst"), F.col("src"))).toDF("a", "b")
     comp = stars.groupBy("a").agg(F.min("b").alias("mn"))
-    out = nodes.join(comp, nodes.doc_id == comp.a, "left").select(
+    return nodes.join(comp, nodes.doc_id == comp.a, "left").select(
         "doc_id",
         F.least(F.col("doc_id"), F.coalesce(F.col("mn"), F.col("doc_id"))).alias(
             "cluster_id"
         ),
     )
-    edges.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1637,18 +1616,7 @@ def star_contraction_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
 
 @register(
     "x81_soft_dedup_weights",
-    oracle="WITH RECURSIVE " + _X02B_PAIRS_SQL + """,
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jacc
-  UNION ALL
-  SELECT doc_b, doc_a FROM jacc
-),
-nodes AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
+    oracle="WITH RECURSIVE " + _X02F_REACH_SQL + """,
 clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
 sized AS (
   SELECT doc_id, cluster_id,
@@ -1819,14 +1787,11 @@ def x96_editdist_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 X102_W = 8  # tokens per window (the exact-substring granularity)
 
 
-@register(
-    "x102_dup_span_extraction",
-    oracle=f"""
-WITH tok AS (
-  SELECT doc_id, {SQL_TOKENS} AS ts
-  FROM documents
-),
-win AS (
+# x102/x104 oracle CTEs over tok(doc_id, ts): every X102_W-token window
+# win(doc_id, pos, gram), the windows found in two or more docs, and the
+# duplicated positions with their island starts hits(doc_id, pos,
+# new_island).
+_SQL_DUP_HITS = f"""win AS (
   SELECT doc_id, i AS pos,
          array_to_string(list_slice(ts, i, i + {X102_W - 1}), ' ') AS gram
   FROM tok, unnest(generate_series(1, len(ts) - {X102_W - 1})) AS u(i)
@@ -1842,7 +1807,65 @@ hits AS (
                                             ORDER BY w.pos) <= {X102_W}
               THEN 0 ELSE 1 END AS new_island
   FROM win w JOIN dup USING (gram)
+),"""
+
+
+def _span_windows(src: DataFrame, ts: Column) -> DataFrame:
+    """(doc_id, pos, gram): every X102_W-token window of the token array
+    ``ts`` as a string, pos 1-based. Round-10 note: a lead-window
+    token-hash build (the ``_hashed_gram_stream`` shape) was tried for
+    x102 and x104, proved oracle-identical, and REGRESSED in the
+    full-bench pairing (x102 1.23 s -> 2.02 s, x104 1.70 s -> 3.24 s,
+    isolated A/Bs flat); its window sort behaves worse than this array
+    builder under long-session memory pressure (see OPTIMIZATION_r10.md)."""
+    n = F.size(ts)
+    return (
+        src.filter(n >= X102_W)
+        .select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(1), n - (X102_W - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(ts, i, X102_W)),
+                )
+            ).alias("pos0", "gram"),
+        )
+        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
+    )
+
+
+def _dup_islands(wins: DataFrame) -> DataFrame:
+    """(doc_id, pos, new_island, island_id) for each window of ``wins``
+    whose gram occurs in two or more docs. Overlapping or adjacent
+    duplicated windows share an island: a window starts a new one iff it
+    sits more than X102_W tokens after the previous duplicated one."""
+    dup = (
+        wins.groupBy("gram")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .filter(F.col("nd") >= 2)
+        .select("gram")
+    )
+    hits = wins.join(dup, "gram").select("doc_id", "pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    new_island = F.when(
+        F.col("pos") - F.lag("pos").over(w_doc) <= X102_W, 0
+    ).otherwise(1)
+    return hits.withColumn("new_island", new_island).withColumn(
+        "island_id",
+        F.sum("new_island").over(
+            w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+
+
+@register(
+    "x102_dup_span_extraction",
+    oracle=f"""
+WITH tok AS (
+  SELECT doc_id, {SQL_TOKENS} AS ts
+  FROM documents
 ),
+{_SQL_DUP_HITS}
 islands AS (
   SELECT doc_id, pos,
          SUM(new_island) OVER (PARTITION BY doc_id ORDER BY pos
@@ -1879,46 +1902,9 @@ GROUP BY doc_id, island_id
 )
 def x102_dup_span_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = tokens()
-    n = F.size(toks)
-    # Round-10 note: a lead-window token-hash rewrite of this gram build
-    # (the batch-2 _hashed_gram_stream shape) was tried, proved
-    # oracle-identical at both SFs, measured noise-flat in isolated A/B —
-    # and REGRESSED in the full-bench session pairing (1.23 s -> 2.02 s).
-    # The window sort it introduces behaves worse than the array builder
-    # under long-session memory pressure; reverted per keep-only-wins.
-    wins = (
-        d.filter(n >= X102_W)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), n - (X102_W - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, X102_W)),
-                )
-            ).alias("pos0", "gram"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
-    )
+    wins = _span_windows(d, tokens())
     wins = wins.localCheckpoint(eager=False)  # dup table + the hits join
-    dup = (
-        wins.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gram")
-    )
-    hits = wins.join(dup, "gram").select("doc_id", "pos")
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    new_island = F.when(
-        F.col("pos") - F.lag("pos").over(w_doc) <= X102_W, 0
-    ).otherwise(1)
-    islands = hits.withColumn("new_island", new_island).withColumn(
-        "island_id",
-        F.sum("new_island").over(
-            w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return islands.groupBy("doc_id", "island_id").agg(
+    return _dup_islands(wins).groupBy("doc_id", "island_id").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + (X102_W - 1)).alias("span_end"),
         (F.max("pos") + X102_W - F.min("pos")).alias("span_tokens"),
@@ -2061,23 +2047,7 @@ WITH tok AS (
     FROM documents
   ) WHERE len(ts) > 0
 ),
-win AS (
-  SELECT doc_id, i AS pos,
-         array_to_string(list_slice(ts, i, i + {X102_W - 1}), ' ') AS gram
-  FROM tok, unnest(generate_series(1, len(ts) - {X102_W - 1})) AS u(i)
-  WHERE len(ts) >= {X102_W}
-),
-dup AS (
-  SELECT gram FROM win GROUP BY gram
-  HAVING COUNT(DISTINCT doc_id) >= 2
-),
-hits AS (
-  SELECT w.doc_id, w.pos,
-         CASE WHEN w.pos - lag(w.pos) OVER (PARTITION BY w.doc_id
-                                            ORDER BY w.pos) <= {X102_W}
-              THEN 0 ELSE 1 END AS new_island
-  FROM win w JOIN dup USING (gram)
-),
+{_SQL_DUP_HITS}
 spans AS (
   SELECT doc_id,
          MIN(pos) AS span_start, MAX(pos) + {X102_W - 1} AS span_end
@@ -2130,43 +2100,10 @@ def x104_dup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokens()
     base = d.select("doc_id", toks.alias("ts")).filter(F.size("ts") > 0)
     base = base.localCheckpoint(eager=False)  # windows, positions, final join
-    # Round-10 note: the lead-window token-hash rewrite was tried here and
-    # in x102, proved oracle-identical, and REGRESSED in the full-bench
-    # pairing (1.70 s -> 3.24 s despite a flat isolated A/B); reverted per
-    # keep-only-wins (see OPTIMIZATION_r10.md).
-    wins = (
-        base.filter(F.size("ts") >= X102_W)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ts") - (X102_W - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("ts"), i, X102_W)),
-                )
-            ).alias("pos0", "gram"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
-    )
+    wins = _span_windows(base, F.col("ts"))
     wins = wins.localCheckpoint(eager=False)  # dup table + hits join
-    dup = (
-        wins.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gram")
-    )
-    hits = wins.join(dup, "gram").select("doc_id", "pos")
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     spans = (
-        hits.withColumn(
-            "new_island",
-            F.when(F.col("pos") - F.lag("pos").over(w_doc) <= X102_W, 0).otherwise(1),
-        )
-        .withColumn(
-            "island_id",
-            F.sum("new_island").over(
-                w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
+        _dup_islands(wins)
         .groupBy("doc_id", "island_id")
         .agg(
             F.min("pos").alias("span_start"),
@@ -2217,22 +2154,7 @@ def x104_dup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x110_dup_graph_triangles",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKENS} AS t
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(
-           range(1, greatest(CAST(len(t) AS INT) - {CONTAIN_NGRAM - 1}, 0) + 1),
-           i -> array_to_string(list_slice(t, i, i + {CONTAIN_NGRAM - 1}), ' '))) AS gram
-  FROM toks WHERE len(t) >= {CONTAIN_NGRAM}
-),
-df AS (
-  SELECT gram FROM grams GROUP BY gram
-  HAVING COUNT(*) BETWEEN {CONTAIN_DF_MIN} AND {CONTAIN_DF_CAP}
-),
-capped AS (SELECT grams.doc_id, grams.gram FROM grams JOIN df USING (gram)),
+WITH {_SQL_CAPPED_GRAMS}
 edges AS (
   SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
   FROM capped a JOIN capped b ON a.gram = b.gram AND a.doc_id < b.doc_id
@@ -2277,32 +2199,9 @@ FROM tri
 )
 def x110_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    # Round-10: per-token hash + multi-arg xxhash64 combine (see x40) —
-    # no gram-string allocation, longs instead of strings through the
-    # window sort; same key class short of a 64-bit collision.
-    th = d.select(
-        "doc_id", F.posexplode(tokens()).alias("pos", "tok")
-    ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("h", i).over(w) for i in range(1, CONTAIN_NGRAM)]
-    grams = (
-        th.select(
-            "doc_id",
-            F.xxhash64(F.col("h"), *leads).alias("gh"),
-            leads[-1].alias("tail"),
-        )
-        .filter(F.col("tail").isNotNull())
-        .select("doc_id", "gh")
-        .distinct()
-        .localCheckpoint(eager=False)  # df filter + both join sides read it
-    )
-    df_ok = (
-        grams.groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df").between(CONTAIN_DF_MIN, CONTAIN_DF_CAP))
-        .select("gh")
-    )
-    capped = grams.join(F.broadcast(df_ok), "gh")
+    # the df filter and both join sides read it
+    grams = gram_hashes(d, tokens(), CONTAIN_NGRAM).localCheckpoint(eager=False)
+    capped = _df_capped(grams)
     edges = (
         capped.alias("a")
         .join(capped.alias("b"), "gh")
@@ -2363,22 +2262,7 @@ X115_THRESHOLDS = (0.3, 0.5, 0.7, 0.9)
 @register(
     "x115_dedup_threshold_sensitivity",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKENS} AS t
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(
-           range(1, greatest(CAST(len(t) AS INT) - {CONTAIN_NGRAM - 1}, 0) + 1),
-           i -> array_to_string(list_slice(t, i, i + {CONTAIN_NGRAM - 1}), ' '))) AS gram
-  FROM toks WHERE len(t) >= {CONTAIN_NGRAM}
-),
-df AS (
-  SELECT gram FROM grams GROUP BY gram
-  HAVING COUNT(*) BETWEEN {CONTAIN_DF_MIN} AND {CONTAIN_DF_CAP}
-),
-capped AS (SELECT grams.doc_id, grams.gram FROM grams JOIN df USING (gram)),
+WITH {_SQL_CAPPED_GRAMS}
 sizes AS (SELECT doc_id, COUNT(*) AS n_grams FROM capped GROUP BY doc_id),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter_size
@@ -2452,23 +2336,9 @@ def x115_dedup_threshold_sensitivity(
         .distinct()
         .localCheckpoint(eager=False)  # df filter, sizes, both join sides
     )
-    df_ok = (
-        grams.groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df").between(CONTAIN_DF_MIN, CONTAIN_DF_CAP))
-        .select("gh")
-    )
-    capped = grams.join(F.broadcast(df_ok), "gh").localCheckpoint(eager=False)
+    capped = _df_capped(grams).localCheckpoint(eager=False)
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    pairs = (
-        capped.alias("a")
-        .join(capped.alias("b"), "gh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter_size"))
-    )
+    pairs = _shared_gram_counts(capped, "inter_size")
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
     j = F.col("inter_size").cast("double") / (
         F.col("sa.n_grams") + F.col("sb.n_grams") - F.col("inter_size")

@@ -11,7 +11,7 @@ plumbing — schema, batch iteration, partitioning — is real and tested.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -636,6 +636,33 @@ def decode_wav(payload: bytes, read_frames: bool = True) -> tuple[int, int, floa
     return rate, n, float(np.abs(pcm.astype(np.int64)).mean())
 
 
+def _encoded_docs(
+    spark: SparkSession, sf_dir: str, encode: Callable[[str | None], bytes]
+) -> DataFrame:
+    """(doc_id, payload): every document rendered to bytes by ``encode``
+    (``encode_wav`` or ``encode_png``) in one partition-local Arrow pass."""
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .transform(spread, "doc_id")
+    )
+
+    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [
+                        # pandas may surface string NULLs as NaN floats
+                        encode(t if isinstance(t, str) else None)
+                        for t in pdf["text"]
+                    ],
+                }
+            )
+
+    return d.mapInPandas(enc, "doc_id bigint, payload binary")
+
+
 @register(
     "x05e_wav_decode",
     oracle=f"""
@@ -664,26 +691,7 @@ FROM documents
     "uses at 100 TB, with this one media_type needing no stub.",
 )
 def x05e_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(spread, "doc_id")
-    )
-
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        # pandas may surface string NULLs as NaN floats
-                        encode_wav(t if isinstance(t, str) else None)
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    wav = d.mapInPandas(enc, "doc_id bigint, payload binary")
+    wav = _encoded_docs(spark, sf_dir, encode_wav)
 
     def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -879,25 +887,7 @@ LEFT JOIN agg a USING (doc_id)
     "deployment with this schema.",
 )
 def x05g_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(spread, "doc_id")
-    )
-
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_png(t if isinstance(t, str) else None)
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    png = d.mapInPandas(enc, "doc_id bigint, payload binary")
+    png = _encoded_docs(spark, sf_dir, encode_png)
 
     def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

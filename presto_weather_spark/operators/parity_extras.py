@@ -151,9 +151,19 @@ def s02_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
+# s14d/s14j oracle CTE: each user's session number sess_id, the running
+# sum of o(user_id, ts, new_sess)'s session starts in ts order.
+SQL_SESSION_IDS = """s AS (
+  SELECT user_id, ts,
+         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+                             ROWS UNBOUNDED PRECEDING) AS sess_id
+  FROM o
+)"""
+
+
 @register(
     "s14d_session_window",
-    oracle="""
+    oracle=f"""
 WITH o AS (
   SELECT user_id, ts,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -161,12 +171,7 @@ WITH o AS (
               THEN 1 ELSE 0 END AS new_sess
   FROM events
 ),
-s AS (
-  SELECT user_id, ts,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM o
-)
+{SQL_SESSION_IDS}
 SELECT user_id,
        CAST(date_trunc('second', MIN(ts)) AS VARCHAR) AS session_start,
        CAST(date_trunc('second', MAX(ts)) AS VARCHAR) AS session_end,

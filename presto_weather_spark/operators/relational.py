@@ -767,14 +767,13 @@ def s03b_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s16_sql_api_shipping_priority",
-    oracle="""
-SELECT l.l_orderkey,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-       CAST(CAST(o.o_orderdate AS DATE) AS VARCHAR) AS orderdate,
-       o.o_orderpriority
-FROM customer c
+# s16's SQL for the oracle and spark.sql; only the date rendering in the
+# select list differs between the engines.
+_S16_REVENUE = (
+    "CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount "
+    "AS DECIMAL(18,2)))) AS DOUBLE) AS revenue"
+)
+_S16_FROM = """FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
 WHERE c.c_mktsegment = 'BUILDING'
@@ -783,7 +782,17 @@ WHERE c.c_mktsegment = 'BUILDING'
 GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
 ORDER BY revenue DESC, orderdate, l.l_orderkey
 LIMIT 10
-""",
+"""
+
+
+@register(
+    "s16_sql_api_shipping_priority",
+    oracle=f"""
+SELECT l.l_orderkey,
+       {_S16_REVENUE},
+       CAST(CAST(o.o_orderdate AS DATE) AS VARCHAR) AS orderdate,
+       o.o_orderpriority
+{_S16_FROM}""",
     doc="S1/S4/S5/S7 via the SQL front-end: TPC-H-Q3-shaped shipping "
     "priority, submitted as a SQL string over registered views "
     "(spark.sql) rather than the DataFrame API — both front-ends compile "
@@ -794,22 +803,12 @@ def s16_sql_api_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT l.l_orderkey,
-               CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                        * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
+               {_S16_REVENUE},
                date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
                o.o_orderpriority
-        FROM customer c
-        JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        WHERE c.c_mktsegment = 'BUILDING'
-          AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-          AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-        GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-        ORDER BY revenue DESC, orderdate, l.l_orderkey
-        LIMIT 10
-        """
+        {_S16_FROM}"""
     )
 
 
@@ -1861,16 +1860,21 @@ def _scd2_history(e: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "s27_scd2_user_history",
-    oracle="""
-WITH ordered AS (
+# s27/s35 oracle CTE: each event with grp, which stays constant over a
+# user's run of one event_type (the row-number difference idiom).
+_SQL_TYPE_RUNS = """ordered AS (
   SELECT user_id, event_type, ts, event_id,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
        - row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id)
            AS grp
   FROM events
-),
+)"""
+
+
+@register(
+    "s27_scd2_user_history",
+    oracle=f"""
+WITH {_SQL_TYPE_RUNS},
 runs AS (
   SELECT user_id, event_type, grp,
          MIN(ts) AS valid_from_ts,
@@ -2117,9 +2121,8 @@ def s30_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "s31_lateral_topk",
-    oracle="""
+# One SQL text for the oracle and spark.sql: both engines run it as is.
+_S31_SQL = """
 SELECT c.c_custkey, c.c_name, t.o_orderkey,
        round(t.o_totalprice, 2) AS o_totalprice
 FROM customer c,
@@ -2131,7 +2134,12 @@ LATERAL (
   LIMIT 2
 ) t
 WHERE c.c_mktsegment = 'BUILDING'
-""",
+"""
+
+
+@register(
+    "s31_lateral_topk",
+    oracle=_S31_SQL,
     doc="S31: LATERAL correlated subquery — each BUILDING customer is "
     "joined to its own top-2 orders by price, the per-row-subquery "
     "surface (Postgres/DuckDB LATERAL, Presto UNNEST-join cousin). "
@@ -2145,21 +2153,7 @@ def s31_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_weather_spark.session import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_name, t.o_orderkey,
-               round(t.o_totalprice, 2) AS o_totalprice
-        FROM customer c,
-        LATERAL (
-          SELECT o_orderkey, o_totalprice
-          FROM orders o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey
-          LIMIT 2
-        ) t
-        WHERE c.c_mktsegment = 'BUILDING'
-        """
-    )
+    return spark.sql(_S31_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2326,14 +2320,8 @@ def s34_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s35_point_in_time_join",
-    oracle="""
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-       - row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id)
-           AS grp
-  FROM events
-),
+    oracle=f"""
+WITH {_SQL_TYPE_RUNS},
 runs AS (
   SELECT user_id, event_type, grp, MIN(ts) AS valid_from_ts
   FROM ordered GROUP BY user_id, event_type, grp
@@ -5169,15 +5157,20 @@ def x137_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s76_parameterized_sql",
-    oracle="""
-SELECT l_returnflag,
+# s76's select list for the oracle and spark.sql; the oracle inlines the
+# constants that spark.sql binds through named markers.
+_S76_SELECT = """SELECT l_returnflag,
        round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                      * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE), 4)
            AS revenue_delta,
        CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem
+FROM lineitem"""
+
+
+@register(
+    "s76_parameterized_sql",
+    oracle=f"""
+{_S76_SELECT}
 WHERE l_shipdate >= TIMESTAMP '1994-01-01'
   AND l_shipdate <  TIMESTAMP '1995-01-01'
   AND l_discount BETWEEN 0.04 AND 0.06
@@ -5198,13 +5191,8 @@ def s76_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
-        SELECT l_returnflag,
-               round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                             * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE), 4)
-                   AS revenue_delta,
-               CAST(count(*) AS BIGINT) AS n_lines
-        FROM lineitem
+        f"""
+        {_S76_SELECT}
         WHERE l_shipdate >= :ship_from AND l_shipdate < :ship_to
           AND l_discount BETWEEN :disc_lo AND :disc_hi
           AND l_quantity < :max_qty

@@ -52,6 +52,32 @@ _SQL_NORM = (
 )
 
 
+# Per-partition kNN candidates, ranked by _nn_ranked.
+_NN_SCHEMA = "query_id bigint, neighbor_id bigint, neighbor_label int, cosine_sim double"
+
+
+def _nn_ranked(cands: DataFrame) -> DataFrame:
+    """The TOP_K best ``cands`` per query by (cosine_sim DESC, neighbor_id),
+    numbered nn_rank."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        cands.withColumn("nn_rank", F.row_number().over(w))
+        .filter(F.col("nn_rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "nn_rank")
+    )
+
+
+def _labelled_vectors(emb: DataFrame) -> DataFrame:
+    """(neighbor_id, neighbor_label, cv): the corpus side of a kNN scan."""
+    return emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("embedding").alias("cv"),
+    )
+
+
 @register(
     "x03_cosine_topk",
     oracle=f"""
@@ -137,22 +163,11 @@ def x03_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         if best is not None and len(best):
             yield best
 
-    cands = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("cv"),
-    ).mapInPandas(
+    cands = _labelled_vectors(emb).mapInPandas(
         score,
-        "query_id bigint, neighbor_id bigint, neighbor_label int, cosine_sim double",
+        _NN_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "nn_rank")
-    )
+    return _nn_ranked(cands)
 
 
 # In-engine ANN fidelity gate (the x02g pattern, round-9 verdict task #1):
@@ -982,25 +997,14 @@ def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.concat(frames)
 
     cands = (
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("neighbor_label"),
-            F.col("embedding").alias("cv"),
-        )
+        _labelled_vectors(emb)
         .transform(spread, "neighbor_id")
         .mapInPandas(
             score,
-            "query_id bigint, neighbor_id bigint, neighbor_label int, cosine_sim double",
+            _NN_SCHEMA,
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "nn_rank")
-    )
+    return _nn_ranked(cands)
 
 
 @register(
@@ -1094,11 +1098,7 @@ def x31_hard_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         if best is not None and len(best):
             yield best
 
-    cands = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("cv"),
-    ).mapInPandas(
+    cands = _labelled_vectors(emb).mapInPandas(
         mine,
         "query_id bigint, neighbor_id bigint, neighbor_label int, "
         "kind string, cosine_sim double",
@@ -2569,11 +2569,7 @@ def _probe_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         if best is not None and len(best):
             yield best
 
-    cands = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("cv"),
-    ).mapInPandas(score, schema)
+    cands = _labelled_vectors(emb).mapInPandas(score, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim_e6").desc(), F.col("neighbor_id")
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
@@ -19,6 +19,7 @@ from presto_weather_spark.operators._util import (
     SQL_TOKENS,
     STOPWORDS,
     global_rank,
+    gram_hashes,
     raw_tokens,
     spread,
     tokens,
@@ -542,32 +543,12 @@ GROUP BY train.doc_id
 )
 def x18_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    th = d.select(
-        "doc_id",
-        F.posexplode(tokens()).alias("pos", "tok"),
-    ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("h", i).over(w) for i in range(1, DECON_NGRAM)]
     # Distinct/join/count on the 8-byte gram hash, not the gram string —
     # the oracle matches on string grams, which is the same answer short of
     # a 64-bit collision; checkpoint the distinct gram table because both
     # the eval and train branches read it (it would otherwise recompute
     # tokenize+window+distinct per branch). Together: 4.4s -> ~1s at sf0.1.
-    # Round-10: the gram hash combines per-token hashes (multi-arg
-    # xxhash64 over lead columns) instead of hashing a concat_ws string —
-    # no gram-string allocation, longs not strings through the window
-    # sort; same key class.
-    grams = (
-        th.select(
-            "doc_id",
-            F.xxhash64(F.col("h"), *leads).alias("gh"),
-            leads[-1].alias("tail"),
-        )
-        .filter(F.col("tail").isNotNull())
-        .select("doc_id", "gh")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    grams = gram_hashes(d, tokens(), DECON_NGRAM).localCheckpoint(eager=False)
     eval_grams = (
         grams.filter(F.col("doc_id") % DECON_EVAL_MOD == 0).select("gh").distinct()
     )
@@ -609,26 +590,40 @@ GROUP BY tok.doc_id
     "cross join; one final shuffle on doc_id.",
 )
 def x20_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _unigram_lm_join(_doc_terms(spark, sf_dir))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_tokens"), _mean_logprob())
+    )
+
+
+def _doc_terms(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(doc_id, *cols, term) for every non-empty token of the corpus."""
     d = load_table(spark, sf_dir, "documents")
-    tok = (
+    return (
         spread(d, "doc_id")
-        .select("doc_id", F.explode(raw_tokens()).alias("term"))
+        .select("doc_id", *cols, F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
     )
+
+
+def _unigram_lm_join(tok: DataFrame) -> DataFrame:
+    """``tok`` with its term's corpus count ``tf`` and the corpus token
+    total ``t``. The LM is vocab-sized and the total a scalar, so both
+    broadcast onto the token stream."""
     lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     tot = tok.agg(F.count(F.lit(1)).cast("double").alias("t"))
+    return tok.join(F.broadcast(lm), "term").crossJoin(F.broadcast(tot))
+
+
+def _mean_logprob() -> Column:
+    """avg_logprob: the group's mean ln(tf / t), rounded to 6dp. Per-token
+    ln goes through DECIMAL before summing, so the score does not depend
+    on the aggregation order."""
     logp = F.log(F.col("tf") / F.col("t"))
-    return (
-        tok.join(F.broadcast(lm), "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(logp.cast("decimal(28,18)")).cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_logprob"),
-        )
-    )
+    return F.round(
+        F.sum(logp.cast("decimal(28,18)")).cast("double") / F.count(F.lit(1)), 6
+    ).alias("avg_logprob")
 
 
 @register(
@@ -1370,11 +1365,10 @@ def x38_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BIGRAM_ALPHA = 0.5  # add-alpha smoothing for unseen-context robustness
 
-
-@register(
-    "x39_bigram_logprob",
-    oracle=f"""
-WITH tok AS (
+# x39/x101 oracle CTEs: tok(doc_id, term, pos) without empty tokens, each
+# doc's bigrams big(doc_id, w1, w2) (w2 NULL at the last token) and the
+# bigram counts bg(w1, w2, c12).
+_SQL_BIGRAMS = f"""tok AS (
   SELECT doc_id, term, pos FROM (
     SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
            generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
@@ -1386,7 +1380,35 @@ big AS (
          lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
   FROM tok
 ),
-bg AS (SELECT w1, w2, COUNT(*) AS c12 FROM big WHERE w2 IS NOT NULL GROUP BY w1, w2),
+bg AS (SELECT w1, w2, COUNT(*) AS c12 FROM big WHERE w2 IS NOT NULL GROUP BY w1, w2),"""
+
+
+def _positioned_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, term) for every non-empty token; pos is the DuckDB
+    position of the token in the raw split."""
+    d = load_table(spark, sf_dir, "documents")
+    return (
+        spread(d, "doc_id")
+        .select("doc_id", F.posexplode(raw_tokens()).alias("pos", "term"))
+        .filter(F.col("term") != "")
+    )
+
+
+def _doc_bigrams(toks: DataFrame) -> DataFrame:
+    """(doc_id, w1, w2) for each adjacent pair of ``toks``; the lead() runs
+    on the doc-partitioned token stream, so it adds no exchange."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return toks.select(
+        "doc_id",
+        F.col("term").alias("w1"),
+        F.lead("term").over(w).alias("w2"),
+    ).filter(F.col("w2").isNotNull())
+
+
+@register(
+    "x39_bigram_logprob",
+    oracle=f"""
+WITH {_SQL_BIGRAMS}
 ug AS (SELECT w1, CAST(SUM(c12) AS DOUBLE) AS c1 FROM bg GROUP BY w1),
 v AS (SELECT CAST(COUNT(DISTINCT term) AS DOUBLE) AS vs FROM tok)
 SELECT big.doc_id,
@@ -1412,20 +1434,9 @@ GROUP BY big.doc_id
     "min-count >= t before the join (same contract, smaller broadcast).",
 )
 def x39_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = (
-        spread(d, "doc_id")
-        .select("doc_id", F.posexplode(raw_tokens()).alias("pos", "term"))
-        .filter(F.col("term") != "")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = toks.select(
-        "doc_id",
-        F.col("term").alias("w1"),
-        F.lead("term").over(w).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
-    big = big.localCheckpoint(eager=False)  # one tokenize+window pass feeds
-    # the LM build AND the scoring join
+    toks = _positioned_tokens(spark, sf_dir)
+    # one tokenize+window pass feeds the LM build AND the scoring join
+    big = _doc_bigrams(toks).localCheckpoint(eager=False)
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     ug = bg.groupBy("w1").agg(F.sum("c12").cast("double").alias("c1"))
     vs = float(toks.select("term").distinct().count())
@@ -1835,33 +1846,18 @@ def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NB_ALPHA = 0.5  # add-alpha smoothing for unseen (term, class) pairs
 
-
-@register(
-    "x45_naive_bayes_lang",
-    oracle=f"""
-WITH tok AS (
-  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
-),
-t AS (SELECT * FROM tok WHERE term <> ''),
-classes AS (
+# x45/x45b oracle CTEs over t(doc_id, lang, term): class priors, the corpus
+# doc count, class-term counts and class totals; then the per-doc class
+# scores over grid(term, c, lp), the argmax (ties by class name) and the
+# confusion matrix.
+_NB_SQL_MODEL = """classes AS (
   SELECT lang AS c, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS docs_c
   FROM t GROUP BY lang
 ),
 d AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM t),
 counts AS (SELECT lang AS c, term, COUNT(*) AS c_tc FROM t GROUP BY lang, term),
-tot AS (SELECT c, CAST(SUM(c_tc) AS DOUBLE) AS n_c FROM counts GROUP BY c),
-v AS (SELECT CAST(COUNT(DISTINCT term) AS DOUBLE) AS vs FROM t),
-grid AS (
-  SELECT vt.term, cl.c,
-         CAST(ln((COALESCE(ct.c_tc, 0) + {NB_ALPHA}) / (tot.n_c + {NB_ALPHA} * v.vs))
-              AS DECIMAL(28,18)) AS lp
-  FROM (SELECT DISTINCT term FROM t) vt
-  CROSS JOIN classes cl
-  JOIN tot ON tot.c = cl.c
-  CROSS JOIN v
-  LEFT JOIN counts ct ON ct.term = vt.term AND ct.c = cl.c
-),
-sums AS (
+tot AS (SELECT c, CAST(SUM(c_tc) AS DOUBLE) AS n_c FROM counts GROUP BY c),"""
+_NB_SQL_CONFUSION = """sums AS (
   SELECT t.doc_id, t.lang, g.c, SUM(g.lp) AS sum_lp
   FROM t JOIN grid g ON g.term = t.term
   GROUP BY t.doc_id, t.lang, g.c
@@ -1878,7 +1874,29 @@ pred AS (
 )
 SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM pred WHERE rn = 1
-GROUP BY lang, pred_lang
+GROUP BY lang, pred_lang"""
+
+
+@register(
+    "x45_naive_bayes_lang",
+    oracle=f"""
+WITH tok AS (
+  SELECT doc_id, lang, unnest({SQL_RAW_TOKENS}) AS term FROM documents
+),
+t AS (SELECT * FROM tok WHERE term <> ''),
+{_NB_SQL_MODEL}
+v AS (SELECT CAST(COUNT(DISTINCT term) AS DOUBLE) AS vs FROM t),
+grid AS (
+  SELECT vt.term, cl.c,
+         CAST(ln((COALESCE(ct.c_tc, 0) + {NB_ALPHA}) / (tot.n_c + {NB_ALPHA} * v.vs))
+              AS DECIMAL(28,18)) AS lp
+  FROM (SELECT DISTINCT term FROM t) vt
+  CROSS JOIN classes cl
+  JOIN tot ON tot.c = cl.c
+  CROSS JOIN v
+  LEFT JOIN counts ct ON ct.term = vt.term AND ct.c = cl.c
+),
+{_NB_SQL_CONFUSION}
 """,
     doc="X45: multinomial naive-Bayes language classifier, trained on the "
     "corpus's own labels and applied in the SAME plan (the "
@@ -2048,13 +2066,7 @@ t AS (
            AS term
   FROM tok WHERE raw <> ''
 ),
-classes AS (
-  SELECT lang AS c, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS docs_c
-  FROM t GROUP BY lang
-),
-d AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM t),
-counts AS (SELECT lang AS c, term, COUNT(*) AS c_tc FROM t GROUP BY lang, term),
-tot AS (SELECT c, CAST(SUM(c_tc) AS DOUBLE) AS n_c FROM counts GROUP BY c),
+{_NB_SQL_MODEL}
 grid AS (
   SELECT vt.term, cl.c,
          CAST(ln((COALESCE(ct.c_tc, 0) + {NB_ALPHA})
@@ -2065,24 +2077,7 @@ grid AS (
   JOIN tot ON tot.c = cl.c
   LEFT JOIN counts ct ON ct.term = vt.term AND ct.c = cl.c
 ),
-sums AS (
-  SELECT t.doc_id, t.lang, g.c, SUM(g.lp) AS sum_lp
-  FROM t JOIN grid g ON g.term = t.term
-  GROUP BY t.doc_id, t.lang, g.c
-),
-scored AS (
-  SELECT s.doc_id, s.lang, s.c,
-         s.sum_lp + CAST(ln(cl.docs_c / d.n_docs) AS DECIMAL(28,18)) AS score
-  FROM sums s JOIN classes cl ON cl.c = s.c CROSS JOIN d
-),
-pred AS (
-  SELECT doc_id, lang, c AS pred_lang,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, c) AS rn
-  FROM scored
-)
-SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM pred WHERE rn = 1
-GROUP BY lang, pred_lang
+{_NB_SQL_CONFUSION}
 """,
     doc="X45b: naive Bayes over HASHED features — x45's What's-wrong knob "
     "made executable (the x148-for-DSIR move applied to the language "
@@ -4449,19 +4444,7 @@ KN_DISCOUNT = 0.75  # the standard fixed absolute discount
 @register(
     "x101_kneser_ney_logprob",
     oracle=f"""
-WITH tok AS (
-  SELECT doc_id, term, pos FROM (
-    SELECT doc_id, unnest({SQL_RAW_TOKENS}) AS term,
-           generate_subscripts({SQL_RAW_TOKENS}, 1) AS pos
-    FROM documents
-  ) WHERE term <> ''
-),
-big AS (
-  SELECT doc_id, term AS w1,
-         lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-  FROM tok
-),
-bg AS (SELECT w1, w2, COUNT(*) AS c12 FROM big WHERE w2 IS NOT NULL GROUP BY w1, w2),
+WITH {_SQL_BIGRAMS}
 ug AS (SELECT w1, CAST(SUM(c12) AS DOUBLE) AS c1,
               CAST(COUNT(*) AS DOUBLE) AS n_follow
        FROM bg GROUP BY w1),
@@ -4498,24 +4481,9 @@ GROUP BY big.doc_id
     "min-count >= t before the broadcast, same as x39.",
 )
 def x101_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    tok = (
-        spread(d, "doc_id")
-        .select(
-            "doc_id",
-            F.posexplode(raw_tokens()).alias("pos", "term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = (
-        tok.select(
-            "doc_id",
-            F.col("term").alias("w1"),
-            F.lead("term").over(w).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-        .localCheckpoint(eager=False)  # LM tables AND the scoring join
+    # LM tables AND the scoring join
+    big = _doc_bigrams(_positioned_tokens(spark, sf_dir)).localCheckpoint(
+        eager=False
     )
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     bg = bg.localCheckpoint(eager=False)  # ug, cont, types all derive from it
@@ -4552,6 +4520,36 @@ def x101_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # X106 — CCNet-style perplexity terciles (head / middle / tail per language)
 # ---------------------------------------------------------------------------
+
+
+def _ccnet_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, n_tokens, avg_logprob): x20's document score with
+    the doc's language, shared by x106 and x106b."""
+    return (
+        _unigram_lm_join(_doc_terms(spark, sf_dir, "lang"))
+        .groupBy("doc_id")
+        .agg(
+            F.any_value("lang").alias("lang"),
+            F.count(F.lit(1)).alias("n_tokens"),
+            _mean_logprob(),
+        )
+    )
+
+
+def _ppl_bucket_summary(b: DataFrame) -> DataFrame:
+    """Per (lang, ppl_bucket) doc/token mass and score range of the scored
+    and bucketed docs ``b``; x106 and x106b's shared output."""
+    return b.groupBy("lang", "ppl_bucket").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("bucket_tokens"),
+        F.round(F.min("avg_logprob"), 6).alias("min_logprob"),
+        F.round(F.max("avg_logprob"), 6).alias("max_logprob"),
+        F.round(
+            F.sum(F.col("avg_logprob").cast("decimal(28,6)")).cast("double")
+            / F.count(F.lit(1)),
+            6,
+        ).alias("bucket_avg_logprob"),
+    )
 
 
 @register(
@@ -4609,29 +4607,7 @@ GROUP BY lang, ppl_bucket
     "skew at the cuts.",
 )
 def x106_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    tok = (
-        spread(d, "doc_id")
-        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
-        .filter(F.col("term") != "")
-    )
-    lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
-    tot = tok.agg(F.count(F.lit(1)).cast("double").alias("t"))
-    logp = F.log(F.col("tf") / F.col("t"))
-    doc = (
-        tok.join(F.broadcast(lm), "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.any_value("lang").alias("lang"),
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(logp.cast("decimal(28,18)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_logprob"),
-        )
-    )
+    doc = _ccnet_doc_scores(spark, sf_dir)
     w = Window.partitionBy("lang").orderBy(
         F.col("avg_logprob").desc(), F.col("doc_id")
     )
@@ -4641,17 +4617,7 @@ def x106_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
         .when(F.col("tile") == 2, "middle")
         .otherwise("tail"),
     )
-    return b.groupBy("lang", "ppl_bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("bucket_tokens"),
-        F.round(F.min("avg_logprob"), 6).alias("min_logprob"),
-        F.round(F.max("avg_logprob"), 6).alias("max_logprob"),
-        F.round(
-            F.sum(F.col("avg_logprob").cast("decimal(28,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("bucket_avg_logprob"),
-    )
+    return _ppl_bucket_summary(b)
 
 
 # ---------------------------------------------------------------------------
@@ -5017,30 +4983,8 @@ def x112_text_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests).",
 )
 def x106b_ccnet_buckets_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    tok = (
-        spread(d, "doc_id")
-        .select("doc_id", "lang", F.explode(raw_tokens()).alias("term"))
-        .filter(F.col("term") != "")
-    )
-    lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
-    tot = tok.agg(F.count(F.lit(1)).cast("double").alias("t"))
-    logp = F.log(F.col("tf") / F.col("t"))
-    doc = (
-        tok.join(F.broadcast(lm), "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.any_value("lang").alias("lang"),
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(logp.cast("decimal(28,18)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_logprob"),
-        )
-        .localCheckpoint(eager=False)  # cuts AND the banding read it
-    )
+    # cuts AND the banding read it
+    doc = _ccnet_doc_scores(spark, sf_dir).localCheckpoint(eager=False)
     cuts = doc.groupBy("lang").agg(
         F.percentile_approx(
             "avg_logprob", F.array(F.lit(2.0 / 3.0), F.lit(1.0 / 3.0)), 10000
@@ -5054,17 +4998,7 @@ def x106b_ccnet_buckets_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("avg_logprob") >= F.col("mid_cut"), "middle")
         .otherwise("tail"),
     )
-    return b.groupBy("lang", "ppl_bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("bucket_tokens"),
-        F.round(F.min("avg_logprob"), 6).alias("min_logprob"),
-        F.round(F.max("avg_logprob"), 6).alias("max_logprob"),
-        F.round(
-            F.sum(F.col("avg_logprob").cast("decimal(28,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("bucket_avg_logprob"),
-    )
+    return _ppl_bucket_summary(b)
 
 
 # ---------------------------------------------------------------------------
@@ -5098,23 +5032,7 @@ def x113_rouge_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = tokens()
     base = spread(d, "doc_id").select("doc_id", toks.alias("ts"))
-    # Round-10: per-token hash + multi-arg xxhash64 combine (see x18) —
-    # no gram-string allocation, longs through the window sort.
-    th = base.select("doc_id", F.posexplode("ts").alias("pos", "tok")).select(
-        "doc_id", "pos", F.xxhash64("tok").alias("h")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("h", i).over(w) for i in range(1, DECON_NGRAM)]
-    grams = (
-        th.select(
-            "doc_id",
-            F.xxhash64(F.col("h"), *leads).alias("gh"),
-            leads[-1].alias("tail"),
-        )
-        .filter(F.col("tail").isNotNull())
-        .select("doc_id", "gh")
-        .distinct()
-    )
+    grams = gram_hashes(base, F.col("ts"), DECON_NGRAM)
     ev = grams.filter(F.col("doc_id") % DECON_EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_id"), "gh"
     )

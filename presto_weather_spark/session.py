@@ -24,13 +24,17 @@ driver-side Python rows through ``local_rows``.
   ``createDataFrame(<list>, schema)`` pickles the rows into
   ``defaultParallelism`` partitions that a Python worker maps on every
   action, so the package never uses it.
-- Parquet schemas come from a cache keyed by the file's footer, so a read
+- Parquet schemas come from a cache keyed by the table's footer, so a read
   plans without a schema-inference job. The key is the footer's schema
   text (without its first line, which holds the object's address), the
   footer's key-value metadata, and the confs that change how Spark converts
   a parquet schema (``_SCHEMA_CONFS``, read after the ``nanosAsLong``
-  flip). An identical copy under a new path hits; a rewritten file gets a
-  new key. A path that is not a single readable file is inferred each time.
+  flip). A table directory of part files (what Spark writes) stands for
+  its first part's footer, and its key adds every part's name, size and
+  ``mtime_ns``. An identical copy of a file under a new path hits; a
+  rewritten file or part gets a new key. A path with no readable footer
+  (remote, partitioned into subdirectories, or without part files) is
+  inferred each time.
 
 Scratch policy: this is the only package module that decides where scratch
 lives. ``scratch_base()`` holds Spark's own local dir (shuffle files and
@@ -318,11 +322,8 @@ def _parquet_schema(
     footer unreadable, ``_normalize_nanos`` falls back to the `ts`-name
     heuristic). Flips nanosAsLong when (and only when) needed. Shared by
     the batch and streaming read paths."""
-    try:
-        footer = pq.read_metadata(path)
-    except (OSError, pa.ArrowException):  # a directory, remote or unreadable
-        footer = None
-    nanos_cols = _nanos_columns(path, footer)
+    footer, listing = _footer(path)
+    nanos_cols = _nanos_columns(footer)
     if nanos_cols is None:
         # Footer sniff works on local paths only (pyarrow, no Hadoop FS) —
         # on remote storage fall back to the conservative path: set the
@@ -342,6 +343,7 @@ def _parquet_schema(
     if footer is None:
         return spark.read.parquet(path).schema, nanos_cols
     key = (
+        listing,
         str(footer.schema).split("\n", 1)[1],
         tuple(sorted((footer.metadata or {}).items())),
         tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
@@ -352,16 +354,40 @@ def _parquet_schema(
     return schema, nanos_cols
 
 
-def _nanos_columns(path: str, footer: pq.FileMetaData | None) -> set[str] | None:
-    """Column names stored as TIMESTAMP(NANOS) — from the footer only (a
-    directory's from its dataset schema). Returns None when the footer could
-    not be inspected (caller falls back to a name-based heuristic)."""
+def _footer(path: str) -> tuple[pq.FileMetaData | None, tuple]:
+    """The footer that stands for the parquet table at ``path`` and the
+    part listing that joins the cache key. A file is its own footer, with
+    an empty listing. A directory uses its first part file's footer, and
+    the listing holds each part's (name, size, mtime_ns), so a rewritten
+    or added part misses. Names starting with ``_`` or ``.`` are skipped,
+    as Spark's reader skips them. The footer is None for a remote or
+    unreadable path, a directory without part files, and a partitioned
+    directory (one holding subdirectories)."""
     try:
-        schema = (
-            footer.schema.to_arrow_schema()
-            if footer is not None
-            else pq.ParquetDataset(path).schema
+        if not os.path.isdir(path):
+            return pq.read_metadata(path), ()
+        parts = sorted(
+            (e for e in os.scandir(path) if not e.name.startswith(("_", "."))),
+            key=lambda e: e.name,
         )
+        if not parts or not all(e.is_file() for e in parts):
+            return None, ()
+        listing = tuple(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in parts
+        )
+        return pq.read_metadata(parts[0].path), listing
+    except (OSError, pa.ArrowException):
+        return None, ()
+
+
+def _nanos_columns(footer: pq.FileMetaData | None) -> set[str] | None:
+    """Column names stored as TIMESTAMP(NANOS), from the footer. Returns
+    None when there is no footer to inspect (caller falls back to a
+    name-based heuristic)."""
+    if footer is None:
+        return None
+    try:
+        schema = footer.schema.to_arrow_schema()
     except (OSError, pa.ArrowException):
         return None
     return {

@@ -311,42 +311,14 @@ SELECT * FROM (VALUES
 )
 def r02_open_meteo_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_open_meteo(spark)
-    df = (
-        spark.read.format("open_meteo")
-        .option("endpoint", "forecast")
-        .option("latitude", "51.51")
-        .option("longitude", "-0.13")
-        .load()
-    )
-    return df.select(
-        F.col("temperature_2m").cast("double").alias("temperature_2m"),
-        "weather_code",
-        F.col("time").alias("obs_time"),
-        "rain_prob",
-    )
+    return _forecast_board(spark.read)
 
 
-@register(
-    "r21_open_meteo_stream_replay",
-    oracle="""
-SELECT * FROM (VALUES
-  (14.3, 61, '2026-08-13T10:30', 72),
-  (15.1, 3,  '2026-08-13T10:40', 55),
-  (16.0, 0,  '2026-08-13T10:50', 20)
-) AS t(temperature_2m, weather_code, obs_time, rain_prob)
-""",
-    doc="R14 via the custom source's DataSourceStreamReader: forecast ticks "
-    "replayed one micro-batch each (the reference's 600 s refresh loop, "
-    "weather.py:324-333), driven availableNow into a memory sink — the "
-    "union of micro-batches equals the batch read (r02), which the shared "
-    "oracle proves.",
-)
-def r21_open_meteo_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from presto_weather_spark.streaming.pipeline import _run_to_memory
-
-    register_open_meteo(spark)
-    stream = (
-        spark.readStream.format("open_meteo")
+def _forecast_board(reader) -> DataFrame:
+    """The London forecast read through ``reader`` (``spark.read`` or
+    ``spark.readStream``), projected to the board's fields."""
+    return (
+        reader.format("open_meteo")
         .option("endpoint", "forecast")
         .option("latitude", "51.51")
         .option("longitude", "-0.13")
@@ -358,4 +330,19 @@ def r21_open_meteo_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rain_prob",
         )
     )
-    return _run_to_memory(stream, "append")
+
+
+@register(
+    "r21_open_meteo_stream_replay",
+    oracle=lambda o: o["r02_open_meteo_forecast"],
+    doc="R14 via the custom source's DataSourceStreamReader: forecast ticks "
+    "replayed one micro-batch each (the reference's 600 s refresh loop, "
+    "weather.py:324-333), driven availableNow into a memory sink — the "
+    "union of micro-batches equals the batch read (r02), which the shared "
+    "oracle proves.",
+)
+def r21_open_meteo_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from presto_weather_spark.streaming.pipeline import _run_to_memory
+
+    register_open_meteo(spark)
+    return _run_to_memory(_forecast_board(spark.readStream), "append")

@@ -24,12 +24,14 @@ board would be ``update`` mode into a keyed store.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from presto_weather_spark.operators.parity_extras import SQL_SESSION_IDS
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import (
     _normalize_nanos,
@@ -151,13 +153,18 @@ GROUP BY 1, 2
     "epoch-aligned 6h buckets, matching Spark's window() origin.",
 )
 def s14_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_stream(spark, sf_dir)
+    return _windowed_counts(
+        events_stream(spark, sf_dir), F.window("ts", f"{WINDOW_SECONDS} seconds")
+    )
+
+
+def _windowed_counts(stream: DataFrame, window: Column) -> DataFrame:
+    """Per (event-time ``window``, event_type) event count and DECIMAL-exact
+    value sum over the watermarked events ``stream``, run to completion;
+    s14 passes a tumbling window, s14f a sliding one."""
     agg = (
         stream.withWatermark("ts", "1 hour")
-        .groupBy(
-            F.window("ts", f"{WINDOW_SECONDS} seconds").alias("win"),
-            "event_type",
-        )
+        .groupBy(window.alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
@@ -356,27 +363,10 @@ GROUP BY 1, 2
     "factor; the shuffle key is (window, event_type).",
 )
 def s14f_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(
-            F.window(
-                "ts", f"{WINDOW_SECONDS} seconds", f"{SLIDE_SECONDS} seconds"
-            ).alias("win"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+    return _windowed_counts(
+        events_stream(spark, sf_dir),
+        F.window("ts", f"{WINDOW_SECONDS} seconds", f"{SLIDE_SECONDS} seconds"),
     )
-    return _run_to_memory(agg, "complete")
 
 
 @register(
@@ -529,12 +519,7 @@ WITH o AS (
               THEN 1 ELSE 0 END AS new_sess
   FROM events
 ),
-s AS (
-  SELECT user_id, ts,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM o
-)
+{SQL_SESSION_IDS}
 SELECT user_id,
        CAST(date_trunc('second', MIN(ts)) AS VARCHAR) AS session_start,
        CAST(date_trunc('second', MAX(ts) + INTERVAL {SESSION_GAP_SECONDS} SECOND) AS VARCHAR) AS session_end,
@@ -755,6 +740,30 @@ def s14m_dedup_within_watermark_ttl(spark: SparkSession, sf_dir: str) -> DataFra
 MV_DELTA_DAYS = 3  # matches the batch MV (s37) refresh horizon
 
 
+def _merge_partials(delta: DataFrame, mv_path: str, epoch_id: int, *keys: str) -> None:
+    """Merge one micro-batch's partials ``delta`` (n_events, sum_value_dec
+    per ``keys``) into the MV parquet at ``mv_path`` by re-aggregating MV
+    UNION delta; the merge is associative, so any batching gives the same
+    MV. Write-new-then-swap: readers never see a half-written MV."""
+    if os.path.isdir(mv_path):
+        merged = (
+            delta.sparkSession.read.parquet(mv_path)
+            .unionByName(delta)
+            .groupBy(*keys)
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value_dec").alias("sum_value_dec"),
+            )
+        )
+    else:
+        merged = delta
+    tmp = f"{mv_path}_epoch{epoch_id}"
+    merged.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(mv_path):
+        shutil.rmtree(mv_path)
+    os.replace(tmp, mv_path)
+
+
 @register(
     "s14n_stream_mv_maintenance",
     oracle=f"""
@@ -797,25 +806,7 @@ def s14n_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def merge_into_mv(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = day_agg(batch_df)
-        if _os.path.isdir(mv_path):
-            merged = (
-                spark.read.parquet(mv_path)
-                .unionByName(delta)
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value_dec").alias("sum_value_dec"),
-                )
-            )
-        else:
-            merged = delta
-        # Write-new-then-swap: readers never see a half-written MV.
-        tmp = f"{mv_path}_epoch{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if _os.path.isdir(mv_path):
-            shutil.rmtree(mv_path)
-        _os.replace(tmp, mv_path)
+        _merge_partials(day_agg(batch_df), mv_path, epoch_id, "day", "event_type")
 
     ckpt = _os.path.join(base, "ckpt")
     _run_stream(spark, stream.writeStream.foreachBatch(merge_into_mv), ckpt)
@@ -981,24 +972,7 @@ def aes_stream_fold(key, pdfs, state):
     # The SAME oracle as x109: A-ES top-k keys are a mergeable maximum, so
     # the streaming fold is EXACTLY batching-independent — a streaming
     # stateful operator with a full SQL oracle, not a rows-only check.
-    oracle=f"""
-WITH keyed AS (
-  SELECT source, doc_id, n_chars,
-         round(
-           ln((CAST(('0x' || substr(md5('aes:' || CAST(doc_id AS VARCHAR) || ':' || text), 1, 12)) AS BIGINT) + 1)
-              / 281474976710656.0)
-           / greatest(n_chars, 1), 12) AS aes_key
-  FROM documents
-),
-ranked AS (
-  SELECT source, doc_id, n_chars, aes_key,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY aes_key DESC, doc_id) AS sample_rank
-  FROM keyed
-)
-SELECT source, doc_id, n_chars, aes_key, sample_rank
-FROM ranked WHERE sample_rank <= 10
-""",
+    oracle=lambda o: o["x109_weighted_sample_aes"],
     doc="S14/X109: STREAMING weighted sampling — x109's Efraimidis-"
     "Spirakis top-k carried as GroupState across micro-batches via "
     "applyInPandasWithState: per source, each batch computes its A-ES "
@@ -1242,23 +1216,7 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value_dec"),
         )
-        if _os.path.isdir(mv_path):
-            merged = (
-                batch_df.sparkSession.read.parquet(mv_path)
-                .unionByName(delta)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value_dec").alias("sum_value_dec"),
-                )
-            )
-        else:
-            merged = delta
-        tmp = f"{mv_path}_epoch{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if _os.path.isdir(mv_path):
-            shutil.rmtree(mv_path)
-        _os.replace(tmp, mv_path)
+        _merge_partials(delta, mv_path, epoch_id, "event_type")
         with open(journal, "a") as fh:
             fh.write(_json.dumps({"epoch": int(epoch_id), "rows": batch_df.count()}) + "\n")
 

@@ -119,7 +119,7 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("operators/similarity.py", "x144_margin_bitext_mining", "collect"): (
         "collects the target-language slice under the module's gate"
     ),
-    ("operators/text_analysis.py", "x20_unigram_logprob", "crossJoin"): B_SCALAR,
+    ("operators/text_analysis.py", "_unigram_lm_join", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x23_pmi_cooccurrence", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x28_mixture_reweighting", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x30_psi_drift_monitor", "crossJoin"): B_SCALAR,
@@ -156,9 +156,7 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ),
     ("operators/text_analysis.py", "x95_temperature_sampling", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x101_kneser_ney_logprob", "crossJoin"): B_SCALAR,
-    ("operators/text_analysis.py", "x106_ccnet_perplexity_buckets", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x111_low_quality_span_localization", "crossJoin"): B_SCALAR,
-    ("operators/text_analysis.py", "x106b_ccnet_buckets_banded", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x152_nb_hash_fidelity", "crossJoin"): B_SCALAR,
 }
 

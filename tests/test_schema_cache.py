@@ -1,7 +1,8 @@
 """Parquet schemas come from ``session``'s footer-keyed cache: a read of a
 footer seen before plans without a schema-inference job, and anything that
 changes the Spark schema a footer converts to (the file's own schema, its
-timestamp unit, a conversion conf) gets its own entry."""
+timestamp unit, a conversion conf) gets its own entry. A table directory of
+part files is keyed by its part listing and first part's footer."""
 
 from __future__ import annotations
 
@@ -36,6 +37,26 @@ def test_rewritten_file_gets_its_new_schema(spark, tmp_path):
     pq.write_table(pa.table({"k": [1, 2], "v": pa.array([1, 2], pa.int64())}), path)
     assert _type(load_table(spark, str(tmp_path), "t"), "v") == "bigint"
     pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert _type(df, "v") == "string"
+    assert sorted(r["v"] for r in df.collect()) == ["a", "b"]
+
+
+def test_repeat_directory_read_runs_no_job(spark, sf_dir, tmp_path):
+    load_table(spark, sf_dir, "orders").write.parquet(str(tmp_path / "orders.parquet"))
+    load_table(spark, str(tmp_path), "orders")
+    frames = []
+    jobs = jobs_run(spark, lambda: frames.append(load_table(spark, str(tmp_path), "orders")))
+    assert jobs == 0
+    assert frames[0].count() == load_table(spark, sf_dir, "orders").count()
+
+
+def test_rewritten_part_file_gets_its_new_schema(spark, tmp_path):
+    part = tmp_path / "t.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"k": [1, 2], "v": pa.array([1, 2], pa.int64())}), part)
+    assert _type(load_table(spark, str(tmp_path), "t"), "v") == "bigint"
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), part)
     df = load_table(spark, str(tmp_path), "t")
     assert _type(df, "v") == "string"
     assert sorted(r["v"] for r in df.collect()) == ["a", "b"]

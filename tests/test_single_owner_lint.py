@@ -14,6 +14,9 @@
   ``SQL_RAW_TOKENS``/``SQL_TOKENS``, and ``spread``.
 - A ``Query`` is built only in ``registry.py``: composed oracles are
   declared in ``register`` and resolved there, never patched in afterwards.
+- A Spark subtree or oracle CTE that two keys need is written once, as a
+  helper or a SQL fragment: no run of ``COPY_RUN`` normalized lines appears
+  twice in the package unless its two owners are in ``COPY_ALLOWLIST``.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
@@ -26,7 +29,9 @@ instead.
 from __future__ import annotations
 
 import ast
+import collections
 import functools
+import itertools
 import os
 
 PKG = os.path.join(
@@ -208,3 +213,88 @@ def test_queries_are_built_only_in_the_registry():
         f"oracle in register instead: {stray}"
     )
     assert REGISTRY_OWNER in sites, "lint matched nothing"
+
+
+COPY_RUN = 8  # normalized lines; shorter shared runs are idiom, not a copy
+_BARE = {"(", ")", "),", "))", ")))", "]", "],", "}", '"""', '""",'}
+# Pairs of owning functions ("file::function") allowed to share a run, each
+# with the reason sharing it would need a flag or a branch on the caller.
+_KNN_KERNELS = (
+    "Arrow UDF kernels stay self-contained: a module-level helper would make "
+    "every Python worker import this module to unpickle them, and the kernels "
+    "differ in rounding and output columns"
+)
+COPY_ALLOWLIST: dict[frozenset[str], str] = {
+    frozenset({"operators/similarity.py::score"}): _KNN_KERNELS,
+    frozenset({"operators/similarity.py::mine", "operators/similarity.py::score"}): (
+        _KNN_KERNELS
+    ),
+    frozenset(
+        {"operators/similarity.py::x03_cosine_topk", "operators/similarity.py::_probe_knn"}
+    ): _KNN_KERNELS,
+}
+
+
+def _owners(tree: ast.Module, n_lines: int) -> list[str]:
+    """The innermost function or class holding each line (decorators
+    included, so an oracle belongs to its key), ``<module>`` elsewhere."""
+    owner = ["<module>"] * (n_lines + 2)
+
+    def visit(node: ast.AST) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                start = min([child.lineno] + [d.lineno for d in child.decorator_list])
+                owner[start : child.end_lineno + 1] = [child.name] * (
+                    child.end_lineno + 1 - start
+                )
+            visit(child)
+
+    visit(tree)
+    return owner
+
+
+@functools.cache
+def _copied_runs() -> tuple[list[tuple[str, str]], set[frozenset[str]]]:
+    """Each pair of places ("file:line" of the first line) sharing a run of
+    COPY_RUN normalized lines, with their owners, where the owners are not
+    allowlisted; and the allowlisted owner pairs that do share a run.
+    Normalizing strips each line and collapses whitespace, and drops blank
+    lines, comments and lines that are only brackets or quotes."""
+    runs = collections.defaultdict(list)
+    for rel, tree in _trees():
+        with open(os.path.join(PKG, rel)) as src:
+            lines = src.read().splitlines()
+        owner = _owners(tree, len(lines))
+        kept = [
+            (text, n)
+            for n, text in ((n, " ".join(line.split())) for n, line in enumerate(lines, 1))
+            if text and not text.startswith("#") and text not in _BARE
+        ]
+        for i in range(len(kept) - COPY_RUN + 1):
+            run = tuple(text for text, _ in kept[i : i + COPY_RUN])
+            n = kept[i][1]
+            runs[run].append((f"{rel}:{n}", f"{rel}::{owner[n]}"))
+    stray, allowed = set(), set()
+    for places in runs.values():
+        for (at_a, own_a), (at_b, own_b) in itertools.combinations(places, 2):
+            owners = frozenset((own_a, own_b))
+            if owners in COPY_ALLOWLIST:
+                allowed.add(owners)
+            else:
+                stray.add((f"{at_a} ({own_a})", f"{at_b} ({own_b})"))
+    return sorted(stray), allowed
+
+
+def test_no_copied_subqueries():
+    assert _trees(), "lint matched nothing"
+    stray, _ = _copied_runs()
+    assert not stray, (
+        f"{len(stray)} runs of {COPY_RUN} lines are written twice; move each into "
+        f"one helper or SQL fragment, or allowlist the pair with a reason: {stray[:20]}"
+    )
+
+
+def test_copy_allowlist_carries_no_dead_entries():
+    _, allowed = _copied_runs()
+    dead = [sorted(k) for k in COPY_ALLOWLIST if k not in allowed]
+    assert not dead, f"allowlisted owner pairs no longer share a run; prune: {dead}"

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Print ``key sha(oracle) sha(optimized plan)`` for every registry key.
+"""Print ``key sha(oracle) sha(optimized plan) sha(inlined plan)`` for every
+registry key.
 
 Usage: python tools/plan_digest.py > digests.txt
 
@@ -8,16 +9,25 @@ over ``$SPARK_GRAFT_SF_DIR`` (default: the bundled ``perfbench/data/sf0.001``)
 and never collected; keys whose fn runs a stream or an eager probe still
 execute that part. The plan digest covers the "Optimized Logical Plan"
 section of the public ``df.explain("extended")``, with the per-process parts
-normalized away: expression ids (``#12``, ``#12L``), lambda variable
-suffixes (``x_3``) and runs of 12+ hex digits (scratch-dir tokens,
-checkpoint ids). The oracle digest covers the SQL text with its layout
-normalized away: whitespace runs become one space, and whitespace next to a
-parenthesis or comma is dropped, so re-wrapping a query changes no digest.
+normalized away: the scratch base (``session.scratch_base()``, which stream
+state-store paths name) becomes ``<scratch>``, and expression ids (``#12``,
+``#12L``), lambda variable suffixes (``x_3``) and runs of 12+ hex digits
+(scratch-dir tokens, checkpoint ids) are dropped. The oracle digest covers
+the SQL text with its layout normalized away: whitespace runs become one
+space, and whitespace next to a parenthesis or comma is dropped, so
+re-wrapping a query changes no digest.
+
+A subtree above a ``localCheckpoint`` shows in the plan column as a
+``LogicalRDD`` stub, which says where the checkpoints sit but hides what
+they hold. The inlined-plan column digests the same key's frame built a
+second time while ``localCheckpoint`` returns its frame unchanged, so every
+checkpointed subtree is spelled out in full. The patch goes on the classic
+``DataFrame`` class: it overrides the method, so patching
+``pyspark.sql.DataFrame`` would miss every call.
 
 A refactor that claims "no plan changed" diffs two runs of this tool, one
-per checkout, both over the same ``$SPARK_GRAFT_SF_DIR``. A subtree above an
-eager ``localCheckpoint`` shows as a ``LogicalRDD``, so the oracle sweep
-covers what sits below it.
+per checkout, both over the same ``$SPARK_GRAFT_SF_DIR`` and the same
+scratch base.
 """
 
 from __future__ import annotations
@@ -32,8 +42,10 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame  # noqa: E402
+
 from presto_weather_spark.registry import all_queries  # noqa: E402
-from presto_weather_spark.session import build_session  # noqa: E402
+from presto_weather_spark.session import build_session, scratch_base  # noqa: E402
 
 _SQL_LAYOUT = (
     (re.compile(r"\s+"), " "),
@@ -66,11 +78,35 @@ def explain_text(df, mode: str) -> str:
     return buf.getvalue()
 
 
+def normalize_plan(text: str, scratch: str) -> str:
+    """``text`` with the scratch base ``scratch`` and the per-process ids
+    replaced by fixed tokens."""
+    return _sub_all(text.replace(scratch, "<scratch>"), _NORMALIZE)
+
+
 def optimized_plan(df) -> str:
     text = explain_text(df, "extended")
     start = text.index("== Optimized Logical Plan ==")
     end = text.index("== Physical Plan ==", start)
-    return _sub_all(text[start:end], _NORMALIZE)
+    return normalize_plan(text[start:end], scratch_base())
+
+
+@contextlib.contextmanager
+def checkpoints_inlined():
+    """``localCheckpoint`` returns its frame unchanged inside the block."""
+    saved = ClassicDataFrame.localCheckpoint
+    ClassicDataFrame.localCheckpoint = lambda self, *args, **kwargs: self
+    try:
+        yield
+    finally:
+        ClassicDataFrame.localCheckpoint = saved
+
+
+def _plan_sha(fn, spark, sf_dir: str) -> str:
+    try:
+        return _sha(optimized_plan(fn(spark, sf_dir)))
+    except Exception as e:  # a broken key must not hide the others
+        return f"ERROR:{type(e).__name__}"
 
 
 def main() -> None:
@@ -80,12 +116,11 @@ def main() -> None:
     spark = build_session("pws-plan-digest")
     spark.sparkContext.setLogLevel("ERROR")
     for key, q in sorted(all_queries().items()):
-        try:
-            plan = _sha(optimized_plan(q.fn(spark, sf_dir)))
-        except Exception as e:  # a broken key must not hide the others
-            plan = f"ERROR:{type(e).__name__}"
+        plan = _plan_sha(q.fn, spark, sf_dir)
+        with checkpoints_inlined():
+            inlined = _plan_sha(q.fn, spark, sf_dir)
         oracle = None if q.oracle is None else _sub_all(q.oracle, _SQL_LAYOUT)
-        print(f"{key} {_sha(oracle)} {plan}", flush=True)
+        print(f"{key} {_sha(oracle)} {plan} {inlined}", flush=True)
 
 
 if __name__ == "__main__":
