@@ -12,8 +12,9 @@ empty-input rows (``grand_total_if_empty``), global ranks and tiles
 without a single-reducer window (``global_rank``, ``exact_ntile``), the
 corpus tokenizer with its DuckDB twin (``raw_tokens``/``SQL_RAW_TOKENS``,
 ``tokens``/``SQL_TOKENS``, ``STOPWORDS``), the hashed token n-grams
-(``gram_hashes``) and the scan fan-out (``spread``). Scratch paths are not
-built here: ``session.stage_dir`` and ``session.temp_dir`` own them.
+(``gram_hashes``), the scan fan-out (``spread``) and the one
+``localCheckpoint`` (``materialize``). Scratch paths are not built here:
+``session.stage_dir`` and ``session.temp_dir`` own them.
 """
 
 from __future__ import annotations
@@ -100,6 +101,28 @@ def spread(df: DataFrame, *cols) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
 
 
+# Why a frame is materialized -> whether that needs a job now (eager) or can
+# wait for the frame's first action (lazy).
+_EAGER = {
+    # Several consumers (plan branches or driver actions) read one copy.
+    "reused": False,
+    # The optimizer must not fold through the frame.
+    "barrier": False,
+    # An iterative loop cuts the lineage each round.
+    "round": True,
+    # Something the frame reads goes away or is rewritten once the call
+    # returns: a conf scope closes, a persisted input is unpersisted, a
+    # temp dir is removed, a staged directory is rewritten.
+    "release": True,
+}
+
+
+def materialize(df: DataFrame, why: str) -> DataFrame:
+    """``df`` as a local checkpoint, eager only where ``why`` needs the rows
+    now. ``why`` is a key of ``_EAGER``; any other word raises KeyError."""
+    return df.localCheckpoint(eager=_EAGER[why])
+
+
 def grand_total_if_empty(inp, out, row: tuple):
     """Standard-SQL empty-input semantics for grouping sets (round-10
     degenerate-parity find): Spark's Expand-based rollup/cube emits ZERO
@@ -169,9 +192,8 @@ def distributed_global_rank(df, order_exprs, out_col: str = "global_rn"):
             seen += len(pdf)
             yield pdf
 
-    local = ranged.mapInPandas(number_partition, out_schema).localCheckpoint(
-        eager=False
-    )  # the counts aggregate AND the final join both read it
+    # the counts aggregate AND the final join both read it
+    local = materialize(ranged.mapInPandas(number_partition, out_schema), "reused")
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt"))
     w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(

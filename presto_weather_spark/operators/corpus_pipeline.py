@@ -24,6 +24,7 @@ from presto_weather_spark.operators._util import (
     SQL_TOKENS,
     distributed_global_rank,
     exact_ntile,
+    materialize,
     spread,
     tokens,
 )
@@ -107,9 +108,8 @@ def x21_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m")
         )
         .select("m.doc_id", "m.lang", "m.text")
-        # exact feeds both the chunk profile and the final keep-join;
-        # checkpoint so the dedup aggregate runs once
-        .localCheckpoint(eager=False)
+        # the chunk profile and the final keep-join read it
+        .transform(materialize, "reused")
     )
 
     starts = F.sequence(F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(CHUNK_LEN))
@@ -393,7 +393,7 @@ def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path-independent. Identical output either way; equivalence pinned in
     # tests/test_properties.py.
     # ONE count drives both the path gate and the exact-ntile denominator
-    scored = scored.localCheckpoint(eager=False)  # count + rank both read it
+    scored = materialize(scored, "reused")  # count + rank both read it
     n_rows = scored.count()
     order = [F.col("difficulty"), F.col("doc_id")]
     if n_rows <= GLOBAL_RANK_LOCAL_LIMIT:

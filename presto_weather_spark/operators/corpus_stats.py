@@ -22,6 +22,7 @@ from presto_weather_spark.operators._util import (
     SQL_RAW_TOKENS,
     SQL_TOKENS,
     STOPWORDS,
+    materialize,
     spread,
     tokens,
 )
@@ -639,70 +640,6 @@ def x88_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 X97_BUCKET = 64  # doc_ids per prefix-sum bucket (the distribution knob)
 
-def _x97_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distributed prefix-sum stage of x97, pre-checkpoint — exposed so
-    tests/test_plans.py can assert the bucketed-window shape (the query's
-    own plan is truncated at the localCheckpoint below)."""
-    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = tokens()
-    tok = d.select("doc_id", F.explode(toks).alias("term"))
-    # Round-10 optimization (guide §2.3, aggregate before you shuffle): the
-    # old shape computed first_doc with min(doc_id) OVER (PARTITION BY term)
-    # — a term-keyed exchange plus SORT of every token OCCURRENCE. The same
-    # integers come from two hash aggregates with map-side partial combine:
-    # per-term min(doc_id) shuffles at most one row per distinct term per
-    # map partition (no sort), and "new_terms per doc" is a count over that
-    # (terms are unique per group, so the old count_distinct is a plain
-    # count). Docs whose every term first appeared earlier get 0 via the
-    # left join, exactly the rows the old aggregate produced.
-    tok = tok.localCheckpoint(eager=False)  # n_tokens agg + first-doc agg
-    n_tok = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
-    firsts = (
-        tok.groupBy("term")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("new_terms"))
-    )
-    per_doc = n_tok.join(firsts, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce(F.col("new_terms"), F.lit(0)).alias("new_terms"),
-    )
-    # Two-level prefix sum: intra-bucket running totals + broadcast offsets
-    # of completed buckets — no global single-partition window over the
-    # doc-count spine.
-    bucket = (F.col("doc_id") / F.lit(X97_BUCKET)).cast("bigint")
-    intra_w = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    per_doc = per_doc.withColumn("bucket", bucket).localCheckpoint(eager=False)
-    intra = per_doc.select(
-        "doc_id",
-        "bucket",
-        F.sum("n_tokens").over(intra_w).alias("i_tok"),
-        F.sum("new_terms").over(intra_w).alias("i_voc"),
-    )
-    off_w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # bucket-total table: spine/64 rows — tiny, single partition by design
-    offsets = (
-        per_doc.groupBy("bucket")
-        .agg(F.sum("n_tokens").alias("b_tok"), F.sum("new_terms").alias("b_voc"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("b_tok").over(off_w), F.lit(0)).alias("o_tok"),
-            F.coalesce(F.sum("b_voc").over(off_w), F.lit(0)).alias("o_voc"),
-        )
-    )
-    return intra.join(F.broadcast(offsets), "bucket").select(
-        "doc_id",
-        (F.col("i_tok") + F.col("o_tok")).alias("cum_tokens"),
-        (F.col("i_voc") + F.col("o_voc")).alias("cum_vocab"),
-    )
-
-
 
 @register(
     "x97_heaps_law_fit",
@@ -769,14 +706,71 @@ FROM pts p CROSS JOIN fit f
     "x20 convention) so the fit is aggregation-order-exact.",
 )
 def x97_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cum = _x97_cumulative(spark, sf_dir)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    toks = tokens()
+    tok = d.select("doc_id", F.explode(toks).alias("term"))
+    # Round-10 optimization (guide §2.3, aggregate before you shuffle): the
+    # old shape computed first_doc with min(doc_id) OVER (PARTITION BY term)
+    # — a term-keyed exchange plus SORT of every token OCCURRENCE. The same
+    # integers come from two hash aggregates with map-side partial combine:
+    # per-term min(doc_id) shuffles at most one row per distinct term per
+    # map partition (no sort), and "new_terms per doc" is a count over that
+    # (terms are unique per group, so the old count_distinct is a plain
+    # count). Docs whose every term first appeared earlier get 0 via the
+    # left join, exactly the rows the old aggregate produced.
+    tok = materialize(tok, "reused")  # n_tokens agg + first-doc agg
+    n_tok = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
+    firsts = (
+        tok.groupBy("term")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("new_terms"))
+    )
+    per_doc = n_tok.join(firsts, "doc_id", "left").select(
+        "doc_id",
+        "n_tokens",
+        F.coalesce(F.col("new_terms"), F.lit(0)).alias("new_terms"),
+    )
+    # Two-level prefix sum: intra-bucket running totals + broadcast offsets
+    # of completed buckets — no global single-partition window over the
+    # doc-count spine.
+    bucket = (F.col("doc_id") / F.lit(X97_BUCKET)).cast("bigint")
+    intra_w = (
+        Window.partitionBy("bucket")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    per_doc = materialize(per_doc.withColumn("bucket", bucket), "reused")
+    intra = per_doc.select(
+        "doc_id",
+        "bucket",
+        F.sum("n_tokens").over(intra_w).alias("i_tok"),
+        F.sum("new_terms").over(intra_w).alias("i_voc"),
+    )
+    off_w = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, -1
+    )  # bucket-total table: spine/64 rows — tiny, single partition by design
+    offsets = (
+        per_doc.groupBy("bucket")
+        .agg(F.sum("n_tokens").alias("b_tok"), F.sum("new_terms").alias("b_voc"))
+        .select(
+            "bucket",
+            F.coalesce(F.sum("b_tok").over(off_w), F.lit(0)).alias("o_tok"),
+            F.coalesce(F.sum("b_voc").over(off_w), F.lit(0)).alias("o_voc"),
+        )
+    )
+    cum = intra.join(F.broadcast(offsets), "bucket").select(
+        "doc_id",
+        (F.col("i_tok") + F.col("o_tok")).alias("cum_tokens"),
+        (F.col("i_voc") + F.col("o_voc")).alias("cum_vocab"),
+    )
     pts = cum.select(
         "doc_id",
         "cum_tokens",
         "cum_vocab",
         F.round(F.log("cum_tokens"), 12).alias("x"),
         F.round(F.log("cum_vocab"), 12).alias("y"),
-    ).localCheckpoint(eager=False)  # consumed by the fit AND the final join
+    ).transform(materialize, "reused")  # the fit AND the final join
     dec = lambda c: F.sum(c.cast("decimal(28,18)")).cast("double")  # noqa: E731
     fit = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -853,7 +847,7 @@ def x105_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", F.slice("ts", 1, X105_P)).alias("prefix"),
         )
     )
-    pref = pref.localCheckpoint(eager=False)  # totals AND the main aggregate
+    pref = materialize(pref, "reused")  # totals AND the main aggregate
     per_source = pref.groupBy("source").agg(
         F.count(F.lit(1)).cast("double").alias("n_source_docs")
     )
@@ -1035,9 +1029,8 @@ def x114_metadata_information_gain(spark: SparkSession, sf_dir: str) -> DataFram
         & (stop_count * 50 >= n_words)
         & (sym_count * 10 <= F.length("text").cast("bigint"))
     )
-    base = d.select("lang", "source", keep.alias("keep")).localCheckpoint(
-        eager=False
-    )  # gate entropy AND both field labelings read it
+    # gate entropy AND both field labelings read it
+    base = materialize(d.select("lang", "source", keep.alias("keep")), "reused")
     tot = base.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ent_term = lambda c, n: (  # noqa: E731
         -(c / n) * F.log(c / n)

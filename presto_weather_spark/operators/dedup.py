@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from presto_weather_spark.operators._util import (
     SQL_TOKENS,
     gram_hashes,
+    materialize,
     spread,
     tokens,
 )
@@ -213,10 +214,10 @@ def minhash_near_dup_pairs(d: DataFrame) -> DataFrame:
     # The signature table feeds three plan branches (band explode + two
     # re-attach joins). Exchange reuse only dedups the pre-aggregate
     # repartition — the tokenize+window+min-hash aggregate would still run
-    # once per branch — so materialize signatures exactly once with a lazy
-    # localCheckpoint (2.5x at sf0.1; the per-executor block is
-    # n_docs/n_parts x 16 bigints, trivially memory-safe at any scale).
-    sigs = minhash_signatures(d).localCheckpoint(eager=False)
+    # once per branch — so materialize signatures exactly once (2.5x at
+    # sf0.1; the per-executor block is n_docs/n_parts x 16 bigints,
+    # trivially memory-safe at any scale).
+    sigs = materialize(minhash_signatures(d), "reused")
     # Keep the 16-bigint signature OUT of the band self-join: band rows are
     # (doc_id, band_hash) only — N_BANDS x narrower through the shuffle and
     # the distinct. The per-band id is folded into band_hash by salting the
@@ -487,7 +488,7 @@ def min_label_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
                     F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
             )
-            .localCheckpoint()
+            .transform(materialize, "round")
         )
         cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
         if cur_sum == prev_sum:
@@ -546,10 +547,8 @@ def x19_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.col("text").substr(F.col("s"), F.lit(CHUNK_LEN))).alias("h"),
     )
-    # ch feeds both the frequency aggregate and the join-back; checkpoint the
-    # (doc_id, hash) table once instead of re-running explode+md5 per branch
-    # (the x18 gram-table pattern)
-    ch = ch.localCheckpoint(eager=False)
+    # ch feeds both the frequency aggregate and the join-back
+    ch = materialize(ch, "reused")
     freq = ch.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
     dup = F.when(F.col("n_docs") > 1, 1).otherwise(0)
     return (
@@ -832,8 +831,8 @@ FROM (
 def x40_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # feeds the df filter, capped, and the self-join
-    grams = gram_hashes(d, tokens(), CONTAIN_NGRAM).localCheckpoint(eager=False)
-    capped = _df_capped(grams).localCheckpoint(eager=False)
+    grams = materialize(gram_hashes(d, tokens(), CONTAIN_NGRAM), "reused")
+    capped = materialize(_df_capped(grams), "reused")
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     pairs = _shared_gram_counts(capped, "n_shared")
     scored = (
@@ -934,17 +933,11 @@ def x53_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x61_lsh_banding_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    # Each side feeds two actions (its own count + the hit join) —
-    # localCheckpoint so the MinHash-signature and exact-Jaccard
-    # pipelines run ONCE each instead of twice.
-    cand = (
-        minhash_near_dup_pairs(d).select("doc_a", "doc_b").localCheckpoint()
-    )
-    exact = (
-        x02b_ngram_jaccard(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
+    # Each side feeds two actions (its own count + the hit join), so the
+    # MinHash-signature and exact-Jaccard pipelines run ONCE each.
+    cand = materialize(minhash_near_dup_pairs(d).select("doc_a", "doc_b"), "reused")
+    exact = x02b_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    exact = materialize(exact, "reused")
     n_cand = cand.count()
     n_exact = exact.count()
     n_hits = cand.join(exact, ["doc_a", "doc_b"]).count()
@@ -1037,7 +1030,7 @@ def x02g_banding_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "gh")
         .distinct()
         .transform(spread, "gh")
-        .localCheckpoint(eager=False)
+        .transform(materialize, "reused")
     )
     sizes = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams")  # rows pre-deduped above
@@ -1069,7 +1062,7 @@ def x02g_banding_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV (2 * (na + nb - inter_size)) AS BIGINT)"
             ).alias("jaccard_e6"),
         )
-        .localCheckpoint(eager=False)  # the gate counts it AND it returns
+        .transform(materialize, "reused")  # the gate counts it AND it returns
     )
     # the in-engine fidelity gate: banded candidates must catch >= 9/10 of
     # the exact pairs. (n_exact, n_hits) come from ONE driver action — a
@@ -1590,7 +1583,7 @@ def star_contraction_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     # persisted input is released, after the loop.
     prev, nxt = None, edges
     for _ in range(12):  # log2(60) rounds would be 6; slack for safety
-        nxt = small_star(large_star(nxt)).localCheckpoint()
+        nxt = materialize(small_star(large_star(nxt)), "round")
         cur = checksum(nxt)
         if cur == prev:
             break
@@ -1737,7 +1730,7 @@ def x96_editdist_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         X96_GRAM_K,
         keep_short_head=True,
     ).select("doc_id", "gh").distinct()
-    grams = grams.localCheckpoint(eager=False)  # df counts + both join sides
+    grams = materialize(grams, "reused")  # df counts + both join sides
     df_ok = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -1902,8 +1895,7 @@ GROUP BY doc_id, island_id
 )
 def x102_dup_span_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    wins = _span_windows(d, tokens())
-    wins = wins.localCheckpoint(eager=False)  # dup table + the hits join
+    wins = materialize(_span_windows(d, tokens()), "reused")  # dup table + the hits join
     return _dup_islands(wins).groupBy("doc_id", "island_id").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + (X102_W - 1)).alias("span_end"),
@@ -2099,9 +2091,9 @@ def x104_dup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = tokens()
     base = d.select("doc_id", toks.alias("ts")).filter(F.size("ts") > 0)
-    base = base.localCheckpoint(eager=False)  # windows, positions, final join
-    wins = _span_windows(base, F.col("ts"))
-    wins = wins.localCheckpoint(eager=False)  # dup table + hits join
+    base = materialize(base, "reused")  # windows, positions, final join
+    # dup table + hits join
+    wins = materialize(_span_windows(base, F.col("ts")), "reused")
     spans = (
         _dup_islands(wins)
         .groupBy("doc_id", "island_id")
@@ -2200,7 +2192,7 @@ FROM tri
 def x110_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # the df filter and both join sides read it
-    grams = gram_hashes(d, tokens(), CONTAIN_NGRAM).localCheckpoint(eager=False)
+    grams = materialize(gram_hashes(d, tokens(), CONTAIN_NGRAM), "reused")
     capped = _df_capped(grams)
     edges = (
         capped.alias("a")
@@ -2210,7 +2202,7 @@ def x110_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=False)  # deg + three triangle-join sides
+        .transform(materialize, "reused")  # deg + three triangle-join sides
     )
     deg = (
         edges.select(F.col("src").alias("v"))
@@ -2334,9 +2326,9 @@ def x115_dedup_threshold_sensitivity(
         .filter(F.col("tail").isNotNull())
         .select("doc_id", "gh")
         .distinct()
-        .localCheckpoint(eager=False)  # df filter, sizes, both join sides
+        .transform(materialize, "reused")  # df filter, sizes, both join sides
     )
-    capped = _df_capped(grams).localCheckpoint(eager=False)
+    capped = materialize(_df_capped(grams), "reused")
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     pairs = _shared_gram_counts(capped, "inter_size")
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
@@ -2347,7 +2339,7 @@ def x115_dedup_threshold_sensitivity(
         pairs.join(F.broadcast(sa), F.col("doc_a") == F.col("sa.doc_id"))
         .join(F.broadcast(sb), F.col("doc_b") == F.col("sb.doc_id"))
         .select("doc_a", "doc_b", F.round(j, 6).alias("j"))
-        .localCheckpoint(eager=False)  # 4-way threshold fan-out reads it
+        .transform(materialize, "reused")  # both threshold counts read it
     )
     th = local_rows(spark, [(t,) for t in X115_THRESHOLDS], "threshold double")
     hits = jacc.crossJoin(F.broadcast(th)).filter(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.functions.formatting import iso_minute
-from presto_weather_spark.operators._util import sql_dsum
+from presto_weather_spark.operators._util import materialize, sql_dsum
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows, stage_dir
 
@@ -715,8 +715,8 @@ def s75_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
             ("logout", "retention"),
         ],
         "event_type string, funnel_stage string",
-    ).localCheckpoint(eager=False)
-    # The checkpoint keeps the dim a scan under its filter: over the bare
+    ).transform(materialize, "barrier")
+    # The barrier keeps the dim a scan under its filter: over the bare
     # LocalTableScan the optimizer folds the filter into the rows, which
     # leaves no dimension predicate for DPP to prune on.
     dim = stages.filter(F.col("funnel_stage") == "conversion")

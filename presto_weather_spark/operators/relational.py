@@ -26,6 +26,7 @@ from presto_weather_spark.operators._util import (
     dsum,
     exact_ntile,
     grand_total_if_empty,
+    materialize,
     spread,
     sql_dsum,
 )
@@ -1734,8 +1735,8 @@ GROUP BY o_orderpriority
 )
 def s23_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with conf_scope(spark, BLOOM_CONFS):
-        # eager: the bloom-filter injection must happen while the confs hold
-        return _bloom_join_frame(spark, sf_dir).localCheckpoint()
+        # the bloom-filter injection must happen while the confs hold
+        return materialize(_bloom_join_frame(spark, sf_dir), "release")
 
 
 def _skew_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1802,7 +1803,7 @@ FROM fact f JOIN dim d USING (cohort)
 )
 def s25_skew_join_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with conf_scope(spark, SKEW_CONFS):
-        return _skew_join_frame(spark, sf_dir).localCheckpoint()
+        return materialize(_skew_join_frame(spark, sf_dir), "release")
 
 
 @register(
@@ -4109,9 +4110,8 @@ CROSS JOIN n
 )
 def x119_event_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    baskets = e.select("user_id", "event_type").distinct().localCheckpoint(
-        eager=False
-    )  # item counts, pair join (both sides), and n_users all read it
+    # item counts, pair join (both sides), and n_users all read it
+    baskets = materialize(e.select("user_id", "event_type").distinct(), "reused")
     n = baskets.agg(F.count_distinct("user_id").alias("n_users"))
     item = baskets.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_a"))
     pair = (
@@ -4196,9 +4196,8 @@ FROM ret JOIN sizes USING (cohort_week)
 def x120_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     wk = F.expr("unix_timestamp(ts) DIV 604800").cast("bigint")
-    activity = e.select("user_id", wk.alias("wk")).distinct().localCheckpoint(
-        eager=False
-    )  # first_wk AND the retention join read it
+    # first_wk AND the retention join read it
+    activity = materialize(e.select("user_id", wk.alias("wk")).distinct(), "reused")
     first_wk = activity.groupBy("user_id").agg(F.min("wk").alias("cohort_week"))
     sizes = first_wk.groupBy("cohort_week").agg(
         F.count(F.lit(1)).alias("cohort_size")
@@ -4294,7 +4293,7 @@ def x121_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the gate and the ntile denominator (exact_ntile needs n anyway,
     # so the gate costs zero extra jobs; the checkpoint makes the three
     # rank passes read the aggregate once).
-    per_cust = per_cust.localCheckpoint(eager=False)  # 3 rank passes read it
+    per_cust = materialize(per_cust, "reused")  # 3 rank passes read it
     n_rows = per_cust.count()
     orders_specs = [
         ("_rr", [F.col("recency_days").asc(), F.col("o_custkey")]),
@@ -4500,15 +4499,15 @@ def x123_volume_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=False
+    ).agg(F.count(F.lit(1)).alias("n")).transform(
+        materialize, "reused"
     )  # the median AND the deviation join read it
     med = daily.groupBy("event_type").agg(
         F.round(F.percentile("n", F.lit(0.5)), 6).alias("med_n")
     )
     dev = daily.join(F.broadcast(med), "event_type").withColumn(
         "ad", F.abs(F.col("n") - F.col("med_n"))
-    ).localCheckpoint(eager=False)  # the MAD AND the final join read it
+    ).transform(materialize, "reused")  # the MAD AND the final join read it
     mad = dev.groupBy("event_type").agg(
         F.round(F.percentile("ad", F.lit(0.5)), 6).alias("mad_n")
     )
@@ -4583,8 +4582,8 @@ def x125_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type",
         F.expr("unix_timestamp(ts) DIV 86400").cast("bigint").alias("day_no"),
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=False
+    ).agg(F.count(F.lit(1)).alias("n")).transform(
+        materialize, "reused"
     )  # both self-join sides read it
     a, f_ = daily.alias("a"), daily.alias("f")
     joined = a.join(

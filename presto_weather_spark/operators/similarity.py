@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_weather_spark.operators._util import spread
+from presto_weather_spark.operators._util import materialize, spread
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows
 
@@ -364,7 +364,7 @@ def x03b_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sims.withColumn("nn_rank", F.row_number().over(w))
         .filter(F.col("nn_rank") <= TOP_K)
         .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "nn_rank")
-        .localCheckpoint(eager=False)  # the gate consumes it AND it returns
+        .transform(materialize, "reused")  # the gate consumes it AND it returns
     )
     _ann_recall_gate(spark, sf_dir, out, "x03b")
     return out
@@ -579,7 +579,7 @@ def x03d_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sims.withColumn("nn_rank", F.row_number().over(w))
         .filter(F.col("nn_rank") <= TOP_K)
         .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "nn_rank")
-        .localCheckpoint(eager=False)  # the gate consumes it AND it returns
+        .transform(materialize, "reused")  # the gate consumes it AND it returns
     )
     _ann_recall_gate(spark, sf_dir, out, "x03d")
     return out
@@ -612,7 +612,7 @@ def x15_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         emb.select("vec_id", _dbl("embedding").alias("v"))
         .transform(spread)
-        .localCheckpoint()
+        .transform(materialize, "reused")  # every round re-scans it
     )
 
     init = (
@@ -878,8 +878,8 @@ def _pq_codebooks(sample: np.ndarray) -> np.ndarray:
     "(~16 bytes/vector); raw vectors stream past once for the re-rank.",
 )
 def x03f_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _x03f_build(spark, sf_dir).localCheckpoint(eager=False)
-    # the gate consumes it AND it returns (checkpoint computed once)
+    out = materialize(_x03f_build(spark, sf_dir), "reused")
+    # the gate consumes it AND it returns
     _ann_recall_gate(spark, sf_dir, out, "x03f")
     return out
 
@@ -1146,31 +1146,34 @@ def x37_pca_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
             raw = m.T @ m
             yield pd.DataFrame(
                 {
-                    "n": [float(len(m))] * (len(iu[0]) + 64),
-                    "idx": np.concatenate([np.arange(64), 64 + iu[0] * 64 + iu[1]]),
-                    "partial": np.concatenate([m.sum(axis=0), raw[iu]]),
+                    # idx -1 carries the row count
+                    "idx": np.concatenate([[-1], np.arange(64), 64 + iu[0] * 64 + iu[1]]),
+                    "partial": np.concatenate([[len(m)], m.sum(axis=0), raw[iu]]),
                 }
             )
 
     # O(partitions * d^2 / 2) tiny rows; the reduce itself is distributed
-    # (groupBy idx) and only the d*(d+3)/2 aggregated cells are collected.
-    moments = (
-        e.select("embedding")
-        .mapInPandas(moment_partials, "n double, idx bigint, partial double")
+    # (groupBy idx) and only the 1 + d*(d+3)/2 aggregated cells are collected.
+    moments = {
+        r["idx"]: r["s"]
+        for r in e.select("embedding")
+        .mapInPandas(moment_partials, "idx bigint, partial double")
         .groupBy("idx")
-        .agg(F.sum("partial").alias("s"), F.max("n").alias("_"))
+        .agg(F.sum("partial").alias("s"))
         .collect()
-    )
-    n = e.count()
+    }
+    n = moments.pop(-1, 0.0)
     mean = np.zeros(64)
     raw = np.zeros((64, 64))
-    for r in moments:
-        if r["idx"] < 64:
-            mean[r["idx"]] = r["s"] / n
+    for idx, s in moments.items():
+        if idx < 64:
+            mean[idx] = s / n
         else:
-            i, j = divmod(r["idx"] - 64, 64)
-            raw[i, j] = raw[j, i] = r["s"]
-    cov = (raw - n * np.outer(mean, mean)) / (n - 1)
+            i, j = divmod(idx - 64, 64)
+            raw[i, j] = raw[j, i] = s
+    # a one-row corpus has zero spread, not an undefined one: every
+    # maha_sq is 0 and the dim * (n - 1) identity still holds
+    cov = (raw - n * np.outer(mean, mean)) / max(n - 1, 1)
     evals, evecs = np.linalg.eigh(cov)
     w = evecs @ np.diag(1.0 / np.sqrt(np.maximum(evals, WHITEN_EPS))) @ evecs.T
 
@@ -1390,7 +1393,7 @@ def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
         current = current.withColumn(
             "min_dist",
             F.least(F.col("min_dist"), dist_to_new("embedding")),
-        ).localCheckpoint()  # k rounds: truncate lineage each round
+        ).transform(materialize, "round")
         far = (
             current.orderBy(F.col("min_dist").desc(), F.col("vec_id"))
             .select("vec_id", "embedding", "min_dist")
@@ -1715,8 +1718,7 @@ def x94_twonn_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "      AS DOUBLE) / 1000000"
             ),
         ).alias("mu"),
-    ).localCheckpoint(eager=False)  # the estimator AND the final join consume
-    # it — without this the 2-NN kernel would run the corpus twice
+    ).transform(materialize, "reused")  # the estimator AND the final join
     est = mus.filter(F.col("mu").isNotNull()).agg(
         F.round(
             (F.count("mu") - F.lit(1)).cast("double")
@@ -1851,7 +1853,7 @@ def _mmr_local(emb: DataFrame) -> DataFrame:
 
 
 def _mmr_distributed(emb: DataFrame) -> DataFrame:
-    # Normalize once (unit vectors make cosine a dot product), checkpoint.
+    # Normalize once (unit vectors make cosine a dot product).
     def normalize(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -1865,7 +1867,7 @@ def _mmr_distributed(emb: DataFrame) -> DataFrame:
 
     unit = emb.select("vec_id", "embedding").mapInPandas(
         normalize, "vec_id bigint, unit array<double>"
-    ).localCheckpoint()  # consumed K+1 times across the greedy rounds
+    ).transform(materialize, "reused")  # K+1 greedy rounds read it
     first_unit = unit.select("unit").first()
     if first_unit is None:  # forced-distributed on an empty frame
         return local_rows(
@@ -2099,7 +2101,7 @@ def x99_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("query_id", "trunc_dim", "neighbor_id")
-        .localCheckpoint(eager=False)  # full set + truncated sets both read it
+        .transform(materialize, "reused")  # full set + truncated sets
     )
     full_set = topk.filter(F.col("trunc_dim") == full_dim).select(
         F.col("query_id").alias("f_query_id"),
@@ -2185,9 +2187,8 @@ def x117_embedding_norm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    norms = e.select("vec_id", "label", norm.alias("l2_norm")).localCheckpoint(
-        eager=False
-    )  # mean, std, and the final projection all read it
+    # mean, std, and the final projection all read it
+    norms = materialize(e.select("vec_id", "label", norm.alias("l2_norm")), "reused")
     m = norms.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.round(
@@ -2380,7 +2381,7 @@ def x144_margin_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         sides.filter(F.col("lang") == BITEXT_SRC_LANG)
         .select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("v"))
         .mapInPandas(pairs_kernel, "src_id bigint, tgt_id bigint, cos6 double")
-        .localCheckpoint()  # consumed by three downstream readers
+        .transform(materialize, "reused")  # three downstream readers
     )
     w_s = Window.partitionBy("src_id").orderBy(F.col("cos6").desc(), "tgt_id")
     nn_src = (

@@ -20,6 +20,7 @@ from presto_weather_spark.operators._util import (
     STOPWORDS,
     global_rank,
     gram_hashes,
+    materialize,
     raw_tokens,
     spread,
     tokens,
@@ -545,10 +546,10 @@ def x18_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # Distinct/join/count on the 8-byte gram hash, not the gram string —
     # the oracle matches on string grams, which is the same answer short of
-    # a 64-bit collision; checkpoint the distinct gram table because both
-    # the eval and train branches read it (it would otherwise recompute
+    # a 64-bit collision; the distinct gram table is materialized because
+    # both the eval and train branches read it (it would otherwise recompute
     # tokenize+window+distinct per branch). Together: 4.4s -> ~1s at sf0.1.
-    grams = gram_hashes(d, tokens(), DECON_NGRAM).localCheckpoint(eager=False)
+    grams = materialize(gram_hashes(d, tokens(), DECON_NGRAM), "reused")
     eval_grams = (
         grams.filter(F.col("doc_id") % DECON_EVAL_MOD == 0).select("gh").distinct()
     )
@@ -669,7 +670,7 @@ def x23_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
         .distinct()
-        .localCheckpoint()  # feeds df counts, the self-join, and the scalar D
+        .transform(materialize, "reused")  # df counts, the self-join, scalar D
     )
     n_docs = dt.agg(F.countDistinct("doc_id").alias("n_docs"))
     df = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1436,7 +1437,7 @@ GROUP BY big.doc_id
 def x39_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _positioned_tokens(spark, sf_dir)
     # one tokenize+window pass feeds the LM build AND the scoring join
-    big = _doc_bigrams(toks).localCheckpoint(eager=False)
+    big = materialize(_doc_bigrams(toks), "reused")
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     ug = bg.groupBy("w1").agg(F.sum("c12").cast("double").alias("c1"))
     vs = float(toks.select("term").distinct().count())
@@ -1663,11 +1664,8 @@ def x44_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full document scans + tokenizes (11 exchanges, measured 1.5x the
     # baseline row in round 5). The checkpoint is langs x vocab rows —
     # bounded at any corpus scale.
-    tc = (
-        toks.groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
-    )
+    tc = toks.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("c"))
+    tc = materialize(tc, "reused")
     tot = tc.groupBy("lang").agg(F.sum("c").cast("double").alias("t"))
     p = tc.join(F.broadcast(tot), "lang").select(
         "lang", "term", (F.col("c") / F.col("t")).alias("p")
@@ -1791,8 +1789,9 @@ def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wc"))
-        .localCheckpoint(eager=False)  # corpus touched once; the merge loop
-        # below re-scans only this vocab-sized table
+        # corpus touched once; the merge loop below re-scans only this
+        # vocab-sized table
+        .transform(materialize, "reused")
     )
     if words.count() <= BPE_LOCAL_VOCAB_LIMIT:
         return _bpe_merges_local(words)
@@ -1927,7 +1926,7 @@ def _nb_doc_features(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFram
     """Per-(doc, lang, term, tf) frequency table, tokenized EXACTLY ONCE.
 
     One aggregate collapses the token stream to the frequency table,
-    which is localCheckpoint-ed and then feeds the five downstream
+    which is materialized once and then feeds the five downstream
     consumers (class priors, doc total, class-term counts, vocab size,
     scoring). The round-4 shape re-tokenized the corpus for each
     consumer — six corpus passes; at 100 TB this materialization
@@ -1953,11 +1952,8 @@ def _nb_doc_features(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFram
                 % NBH_BUCKETS
             ).alias("term"),
         )
-    return (
-        base.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf = base.groupBy("doc_id", "lang", "term").agg(F.count(F.lit(1)).alias("tf"))
+    return materialize(tf, "reused")
 
 
 def _nb_predictions(
@@ -2109,41 +2105,6 @@ def x45b_naive_bayes_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_BUDGET = 600  # per-source token budget for the capped mixture
 
 
-def _x46_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(all docs, budget-bounded non-empty cumsum frame) — split out so the
-    plan test can assert the WindowGroupLimit shape on the PRE-checkpoint
-    lineage (localCheckpoint truncates the visible plan at definition).
-
-    ``d`` (the tokenized 4-column corpus projection) is checkpointed:
-    both the group-limit window AND the zero-token branch consume it, and
-    without the checkpoint each consumer re-runs the tokenize pass — the
-    expensive part of the scan. The materialization is 4 narrow columns
-    (~tens of bytes/doc), the standard one-tokenize trade (round-9 x46
-    constant shave, was 2 corpus passes)."""
-    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
-        "doc_id",
-        "source",
-        F.size(tokens()).cast("bigint").alias("n_tok"),
-        F.md5(F.concat_ws(":", F.lit("budget"), F.col("doc_id"))).alias("pri"),
-    ).localCheckpoint(eager=False)
-    order_w = Window.partitionBy("source").orderBy("pri", "doc_id")
-    cum_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # Non-empty docs: cum >= row_number (each doc >= 1 token), so any doc
-    # beyond rank TOKEN_BUDGET+1 is over budget in the oracle too. The rank
-    # filter plans WindowGroupLimit — per-partition pruning BEFORE the
-    # per-source exchange — so a dominant source's window partition holds at
-    # most TOKEN_BUDGET+1 rows no matter how big the corpus is.
-    ne = (
-        d.filter(F.col("n_tok") >= 1)
-        .withColumn("rn", F.row_number().over(order_w))
-        .filter(F.col("rn") <= TOKEN_BUDGET + 1)
-        .withColumn("cum_tokens", F.sum("n_tok").over(cum_w).cast("bigint"))
-    )
-    return d, ne
-
-
-
-
 @register(
     "x46_token_budget_cap",
     oracle=f"""
@@ -2187,7 +2148,30 @@ FROM c WHERE cum_tokens <= {TOKEN_BUDGET}
     "resampling) with an absolute-budget form.",
 )
 def x46_token_budget_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d, ne = _x46_frames(spark, sf_dir)
+    # The tokenized 4-column corpus projection: both the group-limit window
+    # AND the zero-token branch read it, and without the checkpoint each
+    # re-runs the tokenize pass — the expensive part of the scan. It is 4
+    # narrow columns (~tens of bytes/doc), the standard one-tokenize trade
+    # (round-9 x46 constant shave, was 2 corpus passes).
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id",
+        "source",
+        F.size(tokens()).cast("bigint").alias("n_tok"),
+        F.md5(F.concat_ws(":", F.lit("budget"), F.col("doc_id"))).alias("pri"),
+    ).transform(materialize, "reused")
+    order_w = Window.partitionBy("source").orderBy("pri", "doc_id")
+    cum_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # Non-empty docs: cum >= row_number (each doc >= 1 token), so any doc
+    # beyond rank TOKEN_BUDGET+1 is over budget in the oracle too. The rank
+    # filter plans WindowGroupLimit — per-partition pruning BEFORE the
+    # per-source exchange — so a dominant source's window partition holds at
+    # most TOKEN_BUDGET+1 rows no matter how big the corpus is.
+    ne = (
+        d.filter(F.col("n_tok") >= 1)
+        .withColumn("rn", F.row_number().over(order_w))
+        .filter(F.col("rn") <= TOKEN_BUDGET + 1)
+        .withColumn("cum_tokens", F.sum("n_tok").over(cum_w).cast("bigint"))
+    )
     # Zero-token probe (round-9 constant shave): the whole zero-token
     # resolution — checkpoint, cutoff aggregate, as-of join, union — only
     # exists for docs that tokenize to []. limit(1).count() on the
@@ -2203,10 +2187,10 @@ def x46_token_budget_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "source", "n_tok", "cum_tokens"
         )
     # three consumers (admitted union branch, cutoff table, zero-doc as-of
-    # join) — checkpoint so the group-limit window runs ONCE; the
-    # checkpointed table is budget x sources bounded, so at 100 TB this
-    # trades two extra window passes for one tiny materialization
-    ne = ne.localCheckpoint(eager=False)
+    # join) — the group-limit window runs ONCE; the materialized table is
+    # budget x sources bounded, so at 100 TB this trades two extra window
+    # passes for one tiny materialization
+    ne = materialize(ne, "reused")
     ne_adm = ne.filter(F.col("cum_tokens") <= TOKEN_BUDGET).select(
         "doc_id", "source", "n_tok", "pri", "cum_tokens"
     )
@@ -3669,7 +3653,7 @@ def x79_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the (tiny) result while `counts` is still cached, then
     # release the cache — otherwise the block outlives the query across a
     # 222-query bench session (the x02f persist/unpersist pattern).
-    out = out.localCheckpoint()
+    out = materialize(out, "release")
     counts.unpersist()
     return out
 
@@ -3768,11 +3752,8 @@ def x89_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Tokenize ONCE: tf_all has four consumers (dl, corpus scalars, df,
     # postings join) — materialize it so the explode scan runs once.
-    tf_all = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf_all = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf_all = materialize(tf_all, "reused")
     dl = tf_all.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
 
     # Corpus scalars: two driver-side numbers (bounded — a 1-row aggregate).
@@ -4002,7 +3983,7 @@ def x91_weak_label_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(p, 6).alias("score"),
         (p >= 0.5).cast("int").alias("pred"),
     )
-    out = out.localCheckpoint()  # materialize before releasing the cache
+    out = materialize(out, "release")
     feats.unpersist()
     return out
 
@@ -4104,15 +4085,15 @@ def x92_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("term").alias("w1"), F.lead("term").over(w).alias("w2")
         )
         .filter(F.col("w2").isNotNull() & (F.col("w1") != F.col("w2")))
-        .localCheckpoint(eager=False)  # corpus-scale; consumed twice below
+        .transform(materialize, "reused")  # corpus-scale; read twice below
     )
     edges = (
         adj.union(adj.select(F.col("w2").alias("w1"), F.col("w1").alias("w2")))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # vocab-sized; wsum AND the g join
-        # both consume it — without this the corpus-scale union+aggregate
-        # above would run twice
+        # vocab-sized; wsum AND the g join both read it — without this the
+        # corpus-scale union+aggregate above would run twice
+        .transform(materialize, "reused")
     )
     wsum = edges.groupBy("w1").agg(F.sum("c").alias("wsum"))
     g = (
@@ -4122,7 +4103,7 @@ def x92_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w2",
             (F.col("c").cast("double") / F.col("wsum").cast("double")).alias("f"),
         )
-        .localCheckpoint(eager=False)  # vocab-sized; consumed every round
+        .transform(materialize, "reused")  # vocab-sized; read every round
     )
     if g.count() <= TEXTRANK_LOCAL_LIMIT:
         # Driver-local power iteration on the collected vocab graph (the
@@ -4280,10 +4261,10 @@ def x93_doremi_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(d, "doc_id")
         .select("doc_id", F.explode(raw_tokens()).alias("term"))
         .filter(F.col("term") != "")
-        .localCheckpoint(eager=False)  # lm AND the scoring join consume it
+        .transform(materialize, "reused")  # lm AND the scoring join
     )
     lm = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
-    lm = lm.localCheckpoint(eager=False)  # tot derives from it AND it joins
+    lm = materialize(lm, "reused")  # tot derives from it AND it joins
     # corpus token total = sum of the vocab-sized tf table (free — no
     # second corpus pass)
     tot = lm.agg(F.sum("tf").cast("double").alias("t"))
@@ -4313,7 +4294,6 @@ def x93_doremi_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("loss"),
         )
-        .localCheckpoint(eager=False)  # K-row; everything below iterates on it
     )
     # The multiplicative-weights loop runs DRIVER-LOCAL on the collected
     # domain table: its size is |lang x source| — a vocabulary, not a
@@ -4421,7 +4401,7 @@ def x95_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         (F.col("n_docs") / F.col("total")).alias("share"),
     )
-    p = p.localCheckpoint(eager=False)  # consumed by z and the final select
+    p = materialize(p, "reused")  # z and the final select
     q_raw = F.round(F.pow(F.col("share"), F.lit(SAMPLING_ALPHA)), 12)
     z = p.agg(F.sum(q_raw.cast("decimal(28,18)")).cast("double").alias("z"))
     return p.crossJoin(F.broadcast(z)).select(
@@ -4482,11 +4462,9 @@ GROUP BY big.doc_id
 )
 def x101_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LM tables AND the scoring join
-    big = _doc_bigrams(_positioned_tokens(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    big = materialize(_doc_bigrams(_positioned_tokens(spark, sf_dir)), "reused")
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    bg = bg.localCheckpoint(eager=False)  # ug, cont, types all derive from it
+    bg = materialize(bg, "reused")  # ug, cont, types all derive from it
     ug = bg.groupBy("w1").agg(
         F.sum("c12").cast("double").alias("c1"),
         F.count(F.lit(1)).cast("double").alias("n_follow"),
@@ -4984,7 +4962,7 @@ def x112_text_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x106b_ccnet_buckets_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cuts AND the banding read it
-    doc = _ccnet_doc_scores(spark, sf_dir).localCheckpoint(eager=False)
+    doc = materialize(_ccnet_doc_scores(spark, sf_dir), "reused")
     cuts = doc.groupBy("lang").agg(
         F.percentile_approx(
             "avg_logprob", F.array(F.lit(2.0 / 3.0), F.lit(1.0 / 3.0)), 10000
@@ -5441,11 +5419,8 @@ def x147_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the x89/x45 idiom) lets both derive from it: tc is a projection and
     # vocab a re-aggregation (sum of per-doc counts = occurrence counts,
     # exactly the integers the per-token pass produced).
-    tf3 = (
-        tok.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
-    )
+    tf3 = tok.groupBy("doc_id", "lang", "term").agg(F.count(F.lit(1)).alias("c"))
+    tf3 = materialize(tf3, "reused")
     tc = tf3.select("doc_id", "term", "c")
     vocab = (
         tf3.groupBy("term")
@@ -5455,7 +5430,7 @@ def x147_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ct"),
             F.sum("c").alias("cr"),
         )
-        .localCheckpoint()  # consumed by the scalar agg AND the join
+        .transform(materialize, "reused")  # the scalar agg AND the join
     )
     nt, nr, v = vocab.agg(
         F.sum("ct"), F.sum("cr"), F.count(F.lit(1))
@@ -5589,11 +5564,8 @@ def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc, lang, bucket) count pass (checkpointed, the x147/x89 idiom)
     # feeds both — bc is a projection, feat the bucket re-aggregation of
     # the same integer counts.
-    bc3 = (
-        bi.groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
-    )
+    bc3 = bi.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("c"))
+    bc3 = materialize(bc3, "reused")
     bc = bc3.select("doc_id", "b", "c")
     feat = (
         bc3.groupBy("b")
@@ -5603,7 +5575,7 @@ def x148_dsir_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ct"),
             F.sum("c").alias("cr"),
         )
-        .localCheckpoint()
+        .transform(materialize, "reused")  # the scalar agg AND the join
     )
     nt, nr = feat.agg(F.sum("ct"), F.sum("cr")).first()
     if nt is None:  # empty corpus -> empty hashed-feature scoring, typed
@@ -6050,7 +6022,7 @@ def x152_nb_hash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "term")
         .agg(F.sum("tf").alias("tf"))
-        .localCheckpoint()  # _nb_predictions reads its doc_term 5 times
+        .transform(materialize, "reused")  # _nb_predictions reads it 5 times
     )
     e = _nb_predictions(dt_exact).select(
         "doc_id", F.col("c").alias("pred_exact_lang")
@@ -6062,8 +6034,9 @@ def x152_nb_hash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.join(h, "doc_id")
         .groupBy("pred_exact_lang", "pred_hashed_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .localCheckpoint()  # four consumers (marginals x2, totals, output)
-        # — without this each would re-run BOTH NB pipelines
+        # four consumers (marginals x2, totals, output) — without this each
+        # would re-run BOTH NB pipelines
+        .transform(materialize, "reused")
     )
     me = cells.groupBy(F.col("pred_exact_lang").alias("c")).agg(
         F.sum("n_docs").cast("bigint").alias("ne")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_weather_spark.operators._util import dec
+from presto_weather_spark.operators._util import dec, materialize
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table
 
@@ -621,9 +621,8 @@ def s70_q11_important_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "part_value"
             )
         )
-        # Two consumers (the rollup itself + its grand total) — checkpoint so
-        # the lineitem join/agg pipeline runs once, same pattern as x61.
-        .localCheckpoint()
+        # the rollup itself + its grand total
+        .transform(materialize, "reused")
     )
     thresh = val.agg(
         (F.sum("part_value") * F.lit("0.001").cast("decimal(10,4)")).alias("t")

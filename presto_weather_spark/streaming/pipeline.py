@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from presto_weather_spark.operators._util import materialize
 from presto_weather_spark.operators.parity_extras import SQL_SESSION_IDS
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import (
@@ -589,10 +590,10 @@ def s24_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             _run_stream(
                 spark, out.writeStream.format("parquet").option("path", sink_dir), ckpt
             )
-        # localCheckpoint so the returned frame outlives the tmp cleanup;
-        # explicit schema: an empty stream commits no part files and
-        # inference would fail (the s02b read-back convention)
-        return spark.read.schema(out.schema).parquet(sink_dir).localCheckpoint()
+        # the returned frame outlives the temp dir; explicit schema: an empty
+        # stream commits no part files and inference would fail (the s02b
+        # read-back convention)
+        return materialize(spark.read.schema(out.schema).parquet(sink_dir), "release")
 
 
 HOUR_SECONDS = 3600
@@ -825,7 +826,7 @@ def s14n_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             F.col("sum_value_dec").cast("double").alias("sum_value"),
         )
-        .localCheckpoint()
+        .transform(materialize, "release")  # the next call rewrites the MV
     )
 
 
@@ -1241,7 +1242,7 @@ def s14q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             "n_events",
             F.round(F.col("sum_value_dec").cast("double"), 6).alias("total_value"),
         )
-        .localCheckpoint()
+        .transform(materialize, "release")  # the next call rewrites the MV
     )
 
 

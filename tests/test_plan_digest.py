@@ -1,6 +1,7 @@
 """tools/plan_digest.py digests what a refactor must keep: its plan column
-does not depend on the scratch root, and its inlined-plan column sees the
-subtree below a ``localCheckpoint``."""
+does not depend on the scratch root, its inlined-plan column sees the
+subtree below a ``localCheckpoint``, and its jobs column counts the jobs a
+build starts."""
 
 from __future__ import annotations
 
@@ -33,3 +34,12 @@ def test_inlined_plan_sees_below_a_checkpoint(spark):
     assert "LogicalRDD" not in inlined
     assert "Range (0, 7" in inlined
     assert "LogicalRDD" in plan_digest.optimized_plan(build())  # patch undone
+
+
+def test_jobs_column_counts_an_eager_checkpoint_and_not_a_lazy_one(spark):
+    def build(eager):
+        return lambda s, _: s.range(7).selectExpr("id * 3 AS x").localCheckpoint(eager=eager)
+
+    _, eager_jobs = plan_digest.built(build(True), spark, None)
+    _, lazy_jobs = plan_digest.built(build(False), spark, None)
+    assert (eager_jobs, lazy_jobs) == (1, 0)

@@ -9,6 +9,9 @@ instead of reading rows.
 
 from __future__ import annotations
 
+import os
+import sys
+
 from presto_weather_spark.plans.explain import (
     count_codegen_stages,
     formatted_plan,
@@ -17,6 +20,10 @@ from presto_weather_spark.plans.explain import (
 )
 from presto_weather_spark.registry import all_queries
 from presto_weather_spark.session import conf_scope
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+from plan_digest import checkpoints_inlined  # noqa: E402
 
 QS = all_queries()
 
@@ -544,11 +551,10 @@ def test_heaps_cumulative_window_is_bucketed(spark, sf_dir):
     """x97: the doc-spine cumulative runs as the two-level prefix sum —
     the spine-sized Window must be partitioned by bucket (the only
     unpartitioned window is over the tiny bucket-totals table). Asserted
-    on the pre-checkpoint cumulative stage (the registered query's plan
-    is truncated at its localCheckpoint)."""
-    from presto_weather_spark.operators.corpus_stats import _x97_cumulative
-
-    plan = simple_plan(_x97_cumulative(spark, sf_dir))
+    with the checkpoints inlined (the registered query's plan is truncated
+    at its checkpoints)."""
+    with checkpoints_inlined():
+        plan = simple_plan(_df("x97_heaps_law_fit", spark, sf_dir))
     assert "windowspecdefinition(bucket#" in plan, plan[:1500]
 
 
@@ -595,16 +601,13 @@ def test_token_budget_cap_plans_group_limit(spark, sf_dir):
     non-empty doc consumes >= 1 token, so cum_tokens >= row_number and rank
     TOKEN_BUDGET+2 onward is over budget by construction. Partial mode
     prunes per input partition BEFORE the exchange, Final prunes after."""
-    from presto_weather_spark.operators.text_analysis import (
-        TOKEN_BUDGET,
-        _x46_frames,
-    )
+    from presto_weather_spark.operators.text_analysis import TOKEN_BUDGET
 
-    # assert on the pre-checkpoint lineage: the registered query wraps this
-    # frame in localCheckpoint (one materialization for three consumers),
-    # which truncates the visible plan at definition
-    _, ne = _x46_frames(spark, sf_dir)
-    plan = simple_plan(ne)
+    # assert on the lineage below the checkpoints: the registered query
+    # materializes the corpus projection (and, with zero-token docs, the
+    # window frame), which truncates the visible plan at definition
+    with checkpoints_inlined():
+        plan = simple_plan(_df("x46_token_budget_cap", spark, sf_dir))
     limit = f"row_number(), {TOKEN_BUDGET + 1}"
     assert f"{limit}, Partial" in plan, plan[:1500]
     assert f"{limit}, Final" in plan, plan[:1500]

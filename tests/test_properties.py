@@ -11,9 +11,9 @@ per-example Spark job.
 
 from __future__ import annotations
 
-import uuid
-
 import math
+import os
+import uuid
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -218,20 +218,24 @@ def test_mixture_weights_rebalance_to_target(spark, sf_dir):
         assert abs(prod - 1.0 / n_cells) < 1e-4
 
 
-def test_whitening_mahalanobis_identity(spark, sf_dir):
+def test_whitening_mahalanobis_identity(spark, sf_dir, tmp_path):
     # x37: with the sample covariance (1/(n-1)) and a full-rank spectrum,
     # the Mahalanobis squared distances to the sample mean sum EXACTLY to
     # dim * (n-1) — an algebraic identity, so it pins mean/cov/eigh/projection
-    # end-to-end without golden values.
+    # end-to-end without golden values. A one-row corpus has no spread: the
+    # sum is 0, and a covariance divided by n-1 = 0 would make it NaN.
     from presto_weather_spark.registry import all_queries
 
-    rows = all_queries()["x37_pca_whitening"].fn(spark, sf_dir).collect()
-    n = len(rows)
-    assert n > 0
-    total = sum(r["maha_sq"] for r in rows)
-    assert math.isclose(total, 64 * (n - 1), rel_tol=1e-4)
-    # every score is a squared norm
-    assert all(r["maha_sq"] >= 0 for r in rows)
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb.limit(1).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+    for corpus in (sf_dir, str(tmp_path)):
+        rows = all_queries()["x37_pca_whitening"].fn(spark, corpus).collect()
+        n = len(rows)
+        assert n > 0
+        total = sum(r["maha_sq"] for r in rows)
+        assert math.isclose(total, 64 * (n - 1), rel_tol=1e-4), (n, total)
+        # every score is a squared norm
+        assert all(r["maha_sq"] >= 0 for r in rows)
 
 
 def test_bpe_merges_match_reference_trainer(spark, sf_dir):

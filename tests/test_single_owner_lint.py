@@ -17,13 +17,17 @@
 - A Spark subtree or oracle CTE that two keys need is written once, as a
   helper or a SQL fragment: no run of ``COPY_RUN`` normalized lines appears
   twice in the package unless its two owners are in ``COPY_ALLOWLIST``.
+- A frame is checkpointed only in ``operators/_util.py::materialize``, and
+  every caller names a literal reason from its ``_EAGER`` table
+  (``materialize(df, "reused")`` or ``.transform(materialize, "reused")``),
+  so the owner alone decides which reasons run a job at build time.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
 ``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``,
-``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(`` or
-``defer_install`` site elsewhere fails here; route it through the owner
-instead.
+``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(``,
+``defer_install`` or ``localCheckpoint`` site elsewhere fails here; route it
+through the owner instead.
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ ROWS_OWNER = ("session.py", "local_rows")
 SCRATCH_OWNER = "session.py"
 CORPUS_OWNER = os.path.join("operators", "_util.py")
 REGISTRY_OWNER = "registry.py"
+MATERIALIZE_OWNER = (CORPUS_OWNER, "materialize")
 
 
 @functools.cache
@@ -213,6 +218,55 @@ def test_queries_are_built_only_in_the_registry():
         f"oracle in register instead: {stray}"
     )
     assert REGISTRY_OWNER in sites, "lint matched nothing"
+
+
+def test_frames_are_checkpointed_only_in_materialize():
+    sites = [
+        (rel, fn, call.lineno)
+        for rel, fn, call in _calls()
+        if _called(call, "localCheckpoint")
+    ]
+    stray = [s for s in sites if s[:2] != MATERIALIZE_OWNER]
+    assert not stray, (
+        f"{len(stray)} localCheckpoint calls outside {MATERIALIZE_OWNER}; use it: {stray}"
+    )
+    assert sites, "lint matched nothing"
+
+
+def _reasons() -> set[str]:
+    """The keys of the owner's ``_EAGER`` table."""
+    tree = dict(_trees())[CORPUS_OWNER]
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "_EAGER":
+            return {k.value for k in node.value.keys}
+    raise AssertionError(f"no _EAGER table in {CORPUS_OWNER}")
+
+
+def _materialize_reason(use: ast.Name, parent: ast.AST) -> str | None:
+    """The literal reason of a ``materialize(df, why)`` call or a
+    ``.transform(materialize, why)`` call, else None."""
+    if not isinstance(parent, ast.Call) or len(parent.args) != 2:
+        return None
+    direct = parent.func is use
+    piped = _called(parent, "transform") and parent.args[0] is use
+    why = parent.args[1]
+    if (direct or piped) and isinstance(why, ast.Constant) and isinstance(why.value, str):
+        return why.value
+    return None
+
+
+def test_every_materialize_names_a_known_reason():
+    reasons, bad, n = _reasons(), [], 0
+    for rel, tree in _trees():
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and node.id == "materialize":
+                n += 1
+                why = _materialize_reason(node, parents[node])
+                if why not in reasons:
+                    bad.append(f"{rel}:{node.lineno} ({why!r})")
+    assert n, "lint matched nothing"
+    assert not bad, f"materialize needs a literal reason from {sorted(reasons)}: {bad}"
 
 
 COPY_RUN = 8  # normalized lines; shorter shared runs are idiom, not a copy

@@ -1,5 +1,8 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named query keys to plans/<tag>/<key>_<suffix>.txt.
+"""Dump .explain("formatted") for named query keys to plans/<tag>/<key>_<suffix>.txt,
+and the same key's plan with every ``localCheckpoint`` inlined (built under
+``plan_digest.checkpoints_inlined()``) to plans/<tag>/<key>_<suffix>_inlined.txt,
+so a dump shows what sits below each checkpoint and not a ``LogicalRDD`` stub.
 
 Usage: python tools/explain_dump.py <tag> <suffix> <key> [<key> ...]
 
@@ -19,7 +22,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from plan_digest import explain_text  # noqa: E402
+from plan_digest import checkpoints_inlined, explain_text  # noqa: E402
 from presto_weather_spark.registry import all_queries  # noqa: E402
 from presto_weather_spark.session import build_session  # noqa: E402
 
@@ -33,10 +36,13 @@ def main() -> None:
     queries = all_queries()
     for key in keys:
         plan = explain_text(queries[key].fn(spark, sf_dir), "formatted")
-        path = os.path.join(out_dir, f"{key}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path} ({len(plan.splitlines())} lines)")
+        with checkpoints_inlined():
+            inlined = explain_text(queries[key].fn(spark, sf_dir), "formatted")
+        for name, text in ((f"{key}_{suffix}", plan), (f"{key}_{suffix}_inlined", inlined)):
+            path = os.path.join(out_dir, f"{name}.txt")
+            with open(path, "w") as f:
+                f.write(text)
+            print(f"wrote {path} ({len(text.splitlines())} lines)")
 
 
 if __name__ == "__main__":

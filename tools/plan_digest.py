@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Print ``key sha(oracle) sha(optimized plan) sha(inlined plan)`` for every
-registry key.
+"""Print ``key sha(oracle) sha(optimized plan) sha(inlined plan) jobs`` for
+every registry key.
 
 Usage: python tools/plan_digest.py > digests.txt
 
@@ -24,6 +24,13 @@ second time while ``localCheckpoint`` returns its frame unchanged, so every
 checkpointed subtree is spelled out in full. The patch goes on the classic
 ``DataFrame`` class: it overrides the method, so patching
 ``pyspark.sql.DataFrame`` would miss every call.
+
+The jobs column counts the Spark jobs that ``fn`` started while building the
+frame (the scheduler's next job id before and after, each read once the
+listener bus is empty). An eager checkpoint, a driver probe or a stream
+counts here, and so does a lazy checkpoint over a shuffle: Spark runs the
+shuffle's map stage when the checkpoint takes the frame's RDD. A key that
+counts 0 starts no job until an action runs.
 
 A refactor that claims "no plan changed" diffs two runs of this tool, one
 per checkout, both over the same ``$SPARK_GRAFT_SF_DIR`` and the same
@@ -102,11 +109,26 @@ def checkpoints_inlined():
         ClassicDataFrame.localCheckpoint = saved
 
 
-def _plan_sha(fn, spark, sf_dir: str) -> str:
+def _next_job_id(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.dagScheduler().nextJobId()
+
+
+def built(fn, spark, sf_dir: str):
+    """``fn(spark, sf_dir)`` and the number of jobs building it started."""
+    start = _next_job_id(spark)
+    df = fn(spark, sf_dir)
+    return df, _next_job_id(spark) - start
+
+
+def _plan_sha(fn, spark, sf_dir: str) -> tuple[str, str]:
+    """The optimized-plan digest of ``fn``'s frame and its build-time jobs."""
     try:
-        return _sha(optimized_plan(fn(spark, sf_dir)))
+        df, jobs = built(fn, spark, sf_dir)
+        return _sha(optimized_plan(df)), str(jobs)
     except Exception as e:  # a broken key must not hide the others
-        return f"ERROR:{type(e).__name__}"
+        return f"ERROR:{type(e).__name__}", "-"
 
 
 def main() -> None:
@@ -116,11 +138,11 @@ def main() -> None:
     spark = build_session("pws-plan-digest")
     spark.sparkContext.setLogLevel("ERROR")
     for key, q in sorted(all_queries().items()):
-        plan = _plan_sha(q.fn, spark, sf_dir)
+        plan, jobs = _plan_sha(q.fn, spark, sf_dir)
         with checkpoints_inlined():
-            inlined = _plan_sha(q.fn, spark, sf_dir)
+            inlined, _ = _plan_sha(q.fn, spark, sf_dir)
         oracle = None if q.oracle is None else _sub_all(q.oracle, _SQL_LAYOUT)
-        print(f"{key} {_sha(oracle)} {plan} {inlined}", flush=True)
+        print(f"{key} {_sha(oracle)} {plan} {inlined} {jobs}", flush=True)
 
 
 if __name__ == "__main__":
