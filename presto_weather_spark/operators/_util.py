@@ -12,8 +12,9 @@ empty-input rows (``grand_total_if_empty``), global ranks and tiles
 without a single-reducer window (``global_rank``, ``exact_ntile``), the
 corpus tokenizer with its DuckDB twin (``raw_tokens``/``SQL_RAW_TOKENS``,
 ``tokens``/``SQL_TOKENS``, ``STOPWORDS``), the hashed token n-grams
-(``gram_hashes``), the scan fan-out (``spread``) and the one
-``localCheckpoint`` (``materialize``). Scratch paths are not built here:
+(``gram_hashes``), the scan fan-out (``spread``), the one
+``localCheckpoint`` (``materialize``) and the one driver-or-cluster size
+gate (``fits_driver``). Scratch paths are not built here:
 ``session.stage_dir`` and ``session.temp_dir`` own them.
 """
 
@@ -123,6 +124,24 @@ def materialize(df: DataFrame, why: str) -> DataFrame:
     return df.localCheckpoint(eager=_EAGER[why])
 
 
+# Frames up to this many rows are collected and solved on the driver; larger
+# ones run the key's cluster loop. Tests force the cluster half by setting
+# this to 0.
+DRIVER_ROWS = 100_000
+
+
+def fits_driver(df: DataFrame) -> bool:
+    """Whether ``df`` has at most ``DRIVER_ROWS`` rows, so a key may collect
+    it and solve on the driver instead of running its cluster loop.
+
+    The probe is ``limit(DRIVER_ROWS + 1).count()``: ``LocalLimit`` stops
+    each scan task at the threshold, so it reads O(DRIVER_ROWS) rows, never
+    the whole table, and it runs the same two jobs as a full ``count()``.
+    An empty frame fits even when ``DRIVER_ROWS`` is 0, so a cluster half
+    never sees one."""
+    return df.limit(DRIVER_ROWS + 1).count() <= DRIVER_ROWS
+
+
 def grand_total_if_empty(inp, out, row: tuple):
     """Standard-SQL empty-input semantics for grouping sets (round-10
     degenerate-parity find): Spark's Expand-based rollup/cube emits ZERO
@@ -134,7 +153,7 @@ def grand_total_if_empty(inp, out, row: tuple):
     Append the constant degenerate row(s) iff the aggregation INPUT is
     empty, decided by a limit(1) count probe of the input (LocalLimit
     stops each scan task at the first row — O(1) work at any corpus
-    size, the x94/x65/x98 limit-probe pattern). On the normal non-empty
+    size, the ``fits_driver`` probe). On the normal non-empty
     path the function returns ``out`` UNCHANGED — same plan, no union
     branch; the declarative alternative (anti-join against a broadcast
     limit(1) marker) was measured at ~0.35 s of fixed two-stage
@@ -225,9 +244,8 @@ GLOBAL_RANK_LOCAL_LIMIT = 1_000_000  # rows; one sort task handles this fine
 
 
 def global_rank(df, order_exprs, out_col: str = "global_rn"):
-    """Count-gated global numbering (the x94/x65/x98 hybrid contract):
-    below GLOBAL_RANK_LOCAL_LIMIT rows a single-partition row_number
-    window is the right plan (one task sorting <= 1M short rows beats the
+    """Count-gated global numbering: below GLOBAL_RANK_LOCAL_LIMIT rows a
+    single-partition row_number window is the right plan (one task sorting <= 1M short rows beats the
     two-pass machinery's Arrow+checkpoint fixed costs); above it, the s74
     distributed numbering takes over so no task ever sorts the full
     frame. The gate probes limit(N+1).count() — O(N) rows read, never the

@@ -983,17 +983,17 @@ GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
     "shuffle, so cost scales with set count x groups, not input size.",
 )
 def s05i_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pws_orders_gs")
     return spark.sql(
         """
         SELECT o_orderpriority,
                o_orderstatus,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        FROM pws_orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
                                 (o_orderpriority), (o_orderstatus))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1056,18 +1056,18 @@ WHERE EXISTS (SELECT 1 FROM orders o
     "loop); the same de-correlation is what makes these safe at 100 TB.",
 )
 def s03c_exists_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("pws_cust_ex")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pws_ord_ex")
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_name, c.c_mktsegment
-        FROM pws_cust_ex c
-        WHERE EXISTS (SELECT 1 FROM pws_ord_ex o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-          AND NOT EXISTS (SELECT 1 FROM pws_ord_ex o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                           WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
                             AND o.o_totalprice < 50000)
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

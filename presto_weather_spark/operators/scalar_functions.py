@@ -539,13 +539,13 @@ def s15d_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (i + 1, tok)
 
     spark.udtf.register("pws_tokenize", Tokenize)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("pws_docs_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token
-        FROM pws_docs_udtf d, LATERAL pws_tokenize(d.text) t
+        FROM {documents} d, LATERAL pws_tokenize(d.text) t
         WHERE d.doc_id < 300
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -856,13 +856,13 @@ def s15h_polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield (doc_id, "n_chars", str(n_chars))
 
     spark.udtf.register("pws_melt", udtf(Melt))
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("pws_docs_melt")
     return spark.sql(
         """
         SELECT t.doc_id, t.field, t.value
-        FROM pws_docs_melt d, LATERAL pws_melt(d.doc_id, d.lang, d.source, d.n_chars) t
+        FROM {documents} d, LATERAL pws_melt(d.doc_id, d.lang, d.source, d.n_chars) t
         WHERE d.doc_id < 100
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

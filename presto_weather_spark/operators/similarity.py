@@ -21,7 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_weather_spark.operators._util import materialize, spread
+from presto_weather_spark.operators import _util
+from presto_weather_spark.operators._util import fits_driver, materialize, spread
 from presto_weather_spark.registry import register
 from presto_weather_spark.session import load_table, local_rows
 
@@ -878,18 +879,6 @@ def _pq_codebooks(sample: np.ndarray) -> np.ndarray:
     "(~16 bytes/vector); raw vectors stream past once for the re-rank.",
 )
 def x03f_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = materialize(_x03f_build(spark, sf_dir), "reused")
-    # the gate consumes it AND it returns
-    _ann_recall_gate(spark, sf_dir, out, "x03f")
-    return out
-
-
-def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x03f's plan builder, un-gated and un-checkpointed — the plan that
-    EXECUTES when the key's checkpoint materializes.
-    test_plans.py::test_pq_ann_corpus_stays_partition_local pins the
-    partition-local shape HERE: the registered key's returned frame shows
-    only a checkpoint scan once the gate has materialized it."""
     emb = load_table(spark, sf_dir, "embeddings")
     train = (
         emb.filter(F.col("vec_id") < PQ_TRAIN_IDS)
@@ -1004,7 +993,10 @@ def _x03f_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             _NN_SCHEMA,
         )
     )
-    return _nn_ranked(cands)
+    # the gate consumes it AND it returns
+    out = materialize(_nn_ranked(cands), "reused")
+    _ann_recall_gate(spark, sf_dir, out, "x03f")
+    return out
 
 
 @register(
@@ -1301,7 +1293,7 @@ def x59_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KCENTER_K = 8
-KCENTER_LOCAL_LIMIT = 100_000  # collect-and-solve below this corpus size
+_KCENTER_SCHEMA = "selection_rank int, vec_id bigint, radius_at_selection double"
 
 
 @register(
@@ -1327,15 +1319,9 @@ KCENTER_LOCAL_LIMIT = 100_000  # collect-and-solve below this corpus size
 )
 def x65_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # limit(N+1) probe (the x94 pattern): LocalLimit stops each scan task
-    # at the threshold, so the gate check reads O(N) rows, never the table.
-    # Round-10: the repartition moves BELOW the gate (the x98 move) — the
-    # local path collects, so the probe and the orderBy().collect() were
-    # paying an exchange that only the distributed kernel needs.
-    if emb.limit(KCENTER_LOCAL_LIMIT + 1).count() <= KCENTER_LOCAL_LIMIT:
-        # Same greedy, driver-local on the collected matrix (the x43
-        # hybrid contract: tiny-data iterations skip per-round job
-        # latency; path equivalence pinned in tests/test_properties.py).
+    if fits_driver(emb):
+        # Same greedy on the collected matrix, without per-round job
+        # latency; path equivalence pinned in tests/test_properties.py.
         return _kcenter_greedy_local(emb)
     return _kcenter_greedy_distributed(spread(emb, "vec_id"))
 
@@ -1345,10 +1331,7 @@ def _kcenter_greedy_local(emb: DataFrame) -> DataFrame:
 
     rows_in = emb.orderBy("vec_id").collect()
     if not rows_in:  # empty corpus: no seed point -> empty coreset, typed
-        return local_rows(
-            emb.sparkSession,
-            [], "selection_rank int, vec_id bigint, radius_at_selection double"
-        )
+        return local_rows(emb.sparkSession, [], _KCENTER_SCHEMA)
     ids = np.asarray([r["vec_id"] for r in rows_in], dtype=np.int64)
     mat = np.stack(
         [np.asarray(r["embedding"], dtype=np.float64) for r in rows_in]
@@ -1361,10 +1344,7 @@ def _kcenter_greedy_local(emb: DataFrame) -> DataFrame:
         rows.append((rank, int(ids[best]), round(float(min_dist[best]), 6)))
         d_new = np.sqrt(((mat - mat[best][None, :]) ** 2).sum(axis=1))
         min_dist = np.minimum(min_dist, d_new)
-    return local_rows(
-        emb.sparkSession,
-        rows, "selection_rank int, vec_id bigint, radius_at_selection double"
-    )
+    return local_rows(emb.sparkSession, rows, _KCENTER_SCHEMA)
 
 
 def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
@@ -1373,11 +1353,6 @@ def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
     from pyspark.sql import types as T
 
     first = emb.orderBy("vec_id").first()
-    if first is None:  # forced-distributed on an empty frame
-        return local_rows(
-            emb.sparkSession,
-            [], "selection_rank int, vec_id bigint, radius_at_selection double"
-        )
     centers = [(int(first["vec_id"]), [float(x) for x in first["embedding"]])]
     rows = [(1, centers[0][0], 0.0)]
     # min_dist starts as distance to the first center, computed in round 1.
@@ -1401,10 +1376,7 @@ def _kcenter_greedy_distributed(emb: DataFrame) -> DataFrame:
         )
         centers.append((int(far["vec_id"]), [float(x) for x in far["embedding"]]))
         rows.append((rank, int(far["vec_id"]), round(float(far["min_dist"]), 6)))
-    return local_rows(
-        emb.sparkSession,
-        rows, "selection_rank int, vec_id bigint, radius_at_selection double"
-    )
+    return local_rows(emb.sparkSession, rows, _KCENTER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1530,9 +1502,6 @@ def x90_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X94: TwoNN intrinsic-dimension estimate — exact 2-NN + MLE over ratios
 # ---------------------------------------------------------------------------
 
-TWONN_SAMPLE_LIMIT = 100_000  # above this the estimator runs on a sample
-
-
 def _twonn_sample(emb: DataFrame, n: int) -> DataFrame:
     """Deterministic md5-rank sample of n vectors (the x12 primitive).
 
@@ -1605,8 +1574,8 @@ FROM mus CROSS JOIN est
     "join, no shuffle on the corpus side; the only exchange is the "
     "1-row estimator aggregate broadcast back onto the rows. TwoNN is a "
     "statistical estimator by construction, so the closure matrix IS "
-    "the scale knob — and the bound is ENFORCED IN CODE: a count gate "
-    "at TWONN_SAMPLE_LIMIT (100k, the x65/x98 convention) switches to "
+    "the scale knob — and the bound is ENFORCED IN CODE: when the "
+    "table does not fit the driver (fits_driver) the key switches to "
     "a deterministic md5-rank sample (_twonn_sample, the x12 "
     "primitive; TakeOrderedAndProject, no global sort) whose "
     "membership is repartition- and growth-stable, and the estimator's "
@@ -1622,19 +1591,13 @@ FROM mus CROSS JOIN est
 )
 def x94_twonn_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # The count gate the x65/x98 hybrids use, now IN CODE rather than in
-    # prose (round-6 verdict's one `weak` item): above the gate, TwoNN —
-    # a statistical estimator whose variance shrinks as 1/sqrt(sample) —
-    # runs on a bounded deterministic md5-rank sample (the x12 primitive:
-    # engine-reproducible, repartition- and growth-stable), so neither the
-    # driver collect nor the per-task closure matrix ever exceeds
-    # TWONN_SAMPLE_LIMIT rows. At fixture scale the gate stays open and
-    # the whole table flows through — the oracle remains hash-exact.
-    # The gate probes limit(N+1).count(), not a full count(): LocalLimit
-    # stops each scan task at the threshold, so the probe reads O(N) rows
-    # instead of re-scanning the whole table on every invocation.
-    if emb.limit(TWONN_SAMPLE_LIMIT + 1).count() > TWONN_SAMPLE_LIMIT:
-        emb = _twonn_sample(emb, TWONN_SAMPLE_LIMIT)
+    # A table too big for the driver is cut to a deterministic md5-rank
+    # sample of DRIVER_ROWS rows (TwoNN's variance shrinks as
+    # 1/sqrt(sample)), so neither the driver collect nor the per-task
+    # closure matrix exceeds it. At fixture scale the whole table flows
+    # through and the oracle stays hash-exact.
+    if not fits_driver(emb):
+        emb = _twonn_sample(emb, _util.DRIVER_ROWS)
     rows = emb.collect()  # bounded by construction (gate above)
     if not rows:  # empty corpus: no neighbors, no estimator -> empty, typed
         return local_rows(
@@ -1735,6 +1698,9 @@ def x94_twonn_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MMR_K = 12  # rounds of greedy selection
 MMR_LAMBDA = 0.7  # relevance-vs-diversity trade-off
+_MMR_SCHEMA = (
+    "rank int, vec_id bigint, relevance double, redundancy double, mmr_score double"
+)
 
 
 @register(
@@ -1761,10 +1727,10 @@ MMR_LAMBDA = 0.7  # relevance-vs-diversity trade-off
     "TakeOrdered; tie-break score desc, vec_id asc on 6dp-rounded "
     "scores) — K tiny driver actions, no shuffle of the corpus, no "
     "growing lineage. At 100 TB each round is one scan of the cached "
-    "normalized table; K bounds total work at K scans. Below "
-    "MMR_LOCAL_LIMIT rows the same greedy runs driver-local on the "
-    "collected matrix (the x65/x43 hybrid contract — K tiny-data "
-    "rounds otherwise pay K job launches; 6.6 s -> ~1 s at sf0.1), "
+    "normalized table; K bounds total work at K scans. When the table "
+    "fits the driver (fits_driver) the same greedy runs driver-local "
+    "on the collected matrix (K tiny-data rounds otherwise pay K job "
+    "launches; 6.6 s -> ~1 s at sf0.1), "
     "path equivalence pinned in tests/test_properties.py; the local "
     "anchor is math.fsum over the 12dp-rounded components — the "
     "exactly-rounded sum, equal to the distributed DECIMAL-exact sum "
@@ -1772,17 +1738,9 @@ MMR_LAMBDA = 0.7  # relevance-vs-diversity trade-off
 )
 def x98_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # limit(N+1) probe (the x94 pattern): the gate check reads O(N) rows.
-    # Round-10: the repartition moves BELOW the gate — the local path
-    # collects (an exchange before a collect is pure overhead: the probe
-    # and the orderBy().collect() both paid it), only the distributed
-    # kernel needs the vec_id spread.
-    if emb.limit(MMR_LOCAL_LIMIT + 1).count() <= MMR_LOCAL_LIMIT:
+    if fits_driver(emb):
         return _mmr_local(emb)
     return _mmr_distributed(spread(emb, "vec_id"))
-
-
-MMR_LOCAL_LIMIT = 100_000  # collect-and-solve below this corpus size
 
 
 def _mmr_anchor_from_units(mat) -> "np.ndarray":
@@ -1809,12 +1767,7 @@ def _mmr_local(emb: DataFrame) -> DataFrame:
 
     rows_in = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
     if not rows_in:  # empty corpus: nothing to select -> empty, typed
-        return local_rows(
-            emb.sparkSession,
-            [],
-            "rank int, vec_id bigint, relevance double, redundancy double, "
-            "mmr_score double",
-        )
+        return local_rows(emb.sparkSession, [], _MMR_SCHEMA)
     ids = np.asarray([r["vec_id"] for r in rows_in], dtype=np.int64)
     m = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows_in])
     nrm = np.linalg.norm(m, axis=1)
@@ -1845,11 +1798,7 @@ def _mmr_local(emb: DataFrame) -> DataFrame:
                 float(mmr[i]),
             )
         )
-    return local_rows(
-        emb.sparkSession,
-        out_rows, "rank int, vec_id bigint, relevance double,"
-        " redundancy double, mmr_score double"
-    )
+    return local_rows(emb.sparkSession, out_rows, _MMR_SCHEMA)
 
 
 def _mmr_distributed(emb: DataFrame) -> DataFrame:
@@ -1869,13 +1818,6 @@ def _mmr_distributed(emb: DataFrame) -> DataFrame:
         normalize, "vec_id bigint, unit array<double>"
     ).transform(materialize, "reused")  # K+1 greedy rounds read it
     first_unit = unit.select("unit").first()
-    if first_unit is None:  # forced-distributed on an empty frame
-        return local_rows(
-            emb.sparkSession,
-            [],
-            "rank int, vec_id bigint, relevance double, redundancy double, "
-            "mmr_score double",
-        )
 
     # Corpus mean direction = the relevance anchor (1-row aggregate).
     # Components go through 12dp rounding + DECIMAL(28,18) (the x20
@@ -1959,11 +1901,7 @@ def _mmr_distributed(emb: DataFrame) -> DataFrame:
                 float(win["mmr_score"]),
             )
         )
-    return local_rows(
-        emb.sparkSession,
-        out_rows, "rank int, vec_id bigint, relevance double,"
-        " redundancy double, mmr_score double"
-    )
+    return local_rows(emb.sparkSession, out_rows, _MMR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

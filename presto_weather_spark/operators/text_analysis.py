@@ -18,6 +18,7 @@ from presto_weather_spark.operators._util import (
     SQL_RAW_TOKENS,
     SQL_TOKENS,
     STOPWORDS,
+    fits_driver,
     global_rank,
     gram_hashes,
     materialize,
@@ -1711,7 +1712,7 @@ def x44_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BPE_MERGES = 8  # merge-table prefix learned by x43
-BPE_LOCAL_VOCAB_LIMIT = 1_000_000  # run the merge loop driver-local below this
+_BPE_SCHEMA = "merge_rank int, left string, right string, pair_count bigint"
 
 
 def _bpe_merges_local(words) -> "DataFrame":
@@ -1736,10 +1737,7 @@ def _bpe_merges_local(words) -> "DataFrame":
         )
         rows.append((rank, left, right, pc))
         vocab = [(_bpe_apply(syms, [(left, right)]), wc) for syms, wc in vocab]
-    return local_rows(
-        spark,
-        rows, "merge_rank int, left string, right string, pair_count bigint"
-    )
+    return local_rows(spark, rows, _BPE_SCHEMA)
 
 
 def _bpe_apply(syms: list[str], merges: list[tuple[str, str]]) -> list[str]:
@@ -1793,7 +1791,7 @@ def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vocab-sized table
         .transform(materialize, "reused")
     )
-    if words.count() <= BPE_LOCAL_VOCAB_LIMIT:
+    if fits_driver(words):
         return _bpe_merges_local(words)
     merges: list[tuple[str, str]] = []
     rows = []
@@ -1833,10 +1831,7 @@ def x43_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = top[0]
         merges.append((t["left"], t["right"]))
         rows.append((rank, t["left"], t["right"], int(t["pair_count"])))
-    return local_rows(
-        spark,
-        rows, "merge_rank int, left string, right string, pair_count bigint"
-    )
+    return local_rows(spark, rows, _BPE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3861,18 +3856,15 @@ def _weak_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LR_LOCAL_LIMIT = 100_000  # run the GD rounds driver-local below this
-
-
 def train_weak_label_lr(
-    spark: SparkSession, sf_dir: str, force_distributed: bool = False
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[float], list[float]]:
     """Train logistic regression by full-batch GD; returns the CACHED
     standardized-feature DataFrame, the learned weights (bias last), and
     the per-iteration log-loss trace. Caller must unpersist the frame.
 
-    Below LR_LOCAL_LIMIT rows the 20 GD rounds run driver-local on the
-    collected (doc-sized) feature matrix — the x98/x65 hybrid contract:
+    When the feature table fits the driver (``fits_driver``) the 20 GD
+    rounds run driver-local on the collected (doc-sized) feature matrix:
     each distributed round is one tiny aggregate whose job-launch
     latency dominates at test scale (6.7 s -> ~1.5 s at sf0.1). The
     feature table itself stays a cached DataFrame either way (the
@@ -3899,7 +3891,7 @@ def train_weak_label_lr(
         ],
     ).persist()
 
-    if not force_distributed and feats.count() <= LR_LOCAL_LIMIT:
+    if fits_driver(feats):
         import numpy as np
 
         rows = feats.orderBy("doc_id").collect()
@@ -3994,7 +3986,6 @@ def x91_weak_label_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXTRANK_ITERS = 8
 TEXTRANK_DAMP = 0.85
-TEXTRANK_LOCAL_LIMIT = 100_000  # collect the vocab graph below this edge count
 
 _TR_STOPLIST = ", ".join(repr(s) for s in STOPWORDS)
 
@@ -4105,13 +4096,13 @@ def x92_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(materialize, "reused")  # vocab-sized; read every round
     )
-    if g.count() <= TEXTRANK_LOCAL_LIMIT:
-        # Driver-local power iteration on the collected vocab graph (the
-        # x98/x91 hybrid contract: 8 vocab-sized join rounds pay 8 job
-        # launches at test scale — 3.0 s -> ~1.3 s at sf0.1). math.fsum
-        # per node reproduces the unrolled oracle's DECIMAL-exact sums;
-        # the distributed loop below is the at-scale path (a 100-TB
-        # vocabulary graph outgrows one driver).
+    if fits_driver(g):
+        # Driver-local power iteration on the collected vocab graph (8
+        # vocab-sized join rounds pay 8 job launches at test scale —
+        # 3.0 s -> ~1.3 s at sf0.1). math.fsum per node reproduces the
+        # unrolled oracle's DECIMAL-exact sums; the distributed loop below
+        # is the at-scale path (a 100-TB vocabulary graph outgrows one
+        # driver).
         import math
         from collections import defaultdict
 

@@ -58,7 +58,12 @@ def _stage_stream_dir(path: str) -> str:
     (the read-only testdata layout) symlinks as itself; a directory
     symlinks each of its part files. The stage name folds in the part-file
     listing, so a rewritten table (new part names) gets a fresh stage
-    instead of dangling stale links."""
+    instead of dangling stale links.
+
+    The stage lives under this process's scratch root, so it is not stable
+    across processes. That holds only because every stream checkpoint is
+    per-run: a checkpoint reused by another process would name file-source
+    offsets under a staged path that no longer exists."""
     if os.path.isdir(path):
         parts = sorted(
             f for f in os.listdir(path) if f.endswith(".parquet")

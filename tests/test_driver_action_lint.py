@@ -82,7 +82,7 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("operators/similarity.py", "x15_kmeans_embeddings", "collect"): (
         "per-round K centroids (k x d floats), the x15 fixpoint idiom"
     ),
-    ("operators/similarity.py", "_x03f_build", "collect"): (
+    ("operators/similarity.py", "x03f_pq_ann_topk", "collect"): (
         "PQ codebooks: M subspaces x K centroids, constant-size model"
     ),
     ("operators/similarity.py", "_exact_topk_pairs", "collect"): (
@@ -100,19 +100,19 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "collects the d x d Gram matrix (d = 64), corpus-size-free"
     ),
     ("operators/similarity.py", "_kcenter_greedy_local", "collect"): (
-        "local path of the x65 hybrid — only below KCENTER_LOCAL_LIMIT "
-        "(limit-probe gated; distributed path equivalence-pinned)"
+        "local path of x65 — only when the table fits_driver "
+        "(at most DRIVER_ROWS rows; distributed path equivalence-pinned)"
     ),
     ("operators/similarity.py", "x90_prototype_prune", "collect"): (
         "collects N_PROTO prototype vectors (8 rows)"
     ),
     ("operators/similarity.py", "x94_twonn_intrinsic_dim", "collect"): (
-        "bounded by the TWONN_SAMPLE_LIMIT limit-probe gate (in code)"
+        "bounded by the fits_driver gate: a DRIVER_ROWS-row sample above it"
     ),
     ("operators/similarity.py", "x94_twonn_intrinsic_dim", "crossJoin"): B_SCALAR,
     ("operators/similarity.py", "_mmr_local", "collect"): (
-        "local path of the x98 hybrid — only below MMR_LOCAL_LIMIT "
-        "(equivalence-pinned vs the distributed path)"
+        "local path of x98 — only when the table fits_driver "
+        "(at most DRIVER_ROWS rows; distributed path equivalence-pinned)"
     ),
     ("operators/similarity.py", "x99_matryoshka_overlap", "collect"): B_GATED,
     ("operators/similarity.py", "x117_embedding_norm_screen", "crossJoin"): B_SCALAR,
@@ -147,8 +147,8 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "local path (equivalence-pinned, test_weak_label_lr)"
     ),
     ("operators/text_analysis.py", "x92_textrank_keywords", "collect"): (
-        "local path of the hybrid — vocab graph below TEXTRANK_LOCAL_LIMIT "
-        "(count-gated; distributed path equivalence-pinned)"
+        "local path of x92 — only when the vocab graph fits_driver "
+        "(at most DRIVER_ROWS edges; distributed path equivalence-pinned)"
     ),
     ("operators/text_analysis.py", "x93_doremi_reweighting", "crossJoin"): B_SCALAR,
     ("operators/text_analysis.py", "x93_doremi_reweighting", "collect"): (

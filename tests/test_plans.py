@@ -139,13 +139,11 @@ def test_sequence_packing_has_no_global_window(spark, sf_dir):
 
 def test_pq_ann_corpus_stays_partition_local(spark, sf_dir):
     """x03f: no shuffle between the corpus scan and the PQ scoring UDF —
-    only the tiny per-partition top-k output may exchange. Pinned on the
-    un-gated plan builder: the registered key's returned frame is a
-    checkpoint scan (its recall gate materializes it), so the executed
-    plan shape lives in _x03f_build."""
-    from presto_weather_spark.operators.similarity import _x03f_build
-
-    plan = simple_plan(_x03f_build(spark, sf_dir))
+    only the tiny per-partition top-k output may exchange. Asserted with
+    the checkpoints inlined (the registered query's plan is a checkpoint
+    scan; its recall gate then runs on the inlined frame)."""
+    with checkpoints_inlined():
+        plan = simple_plan(_df("x03f_pq_ann_topk", spark, sf_dir))
     scoring = plan.split("MapInPandas")[-1]  # below = scan side
     assert "Exchange hashpartitioning(neighbor_id" in scoring, plan[:900]
 

@@ -1284,19 +1284,18 @@ def test_norm_screen_constant_corpus_defines_z_zero(spark, sf_dir):
     assert rows and all(r["z_score"] == 0.0 and r["norm_flag"] == "ok" for r in rows)
 
 
-def test_mmr_local_and_distributed_paths_agree(spark, sf_dir):
-    # x98's hybrid contract: the driver-local greedy (active below
-    # MMR_LOCAL_LIMIT, i.e. in every test and bench run) must be
-    # row-identical to the distributed per-round path it replaces.
-    from presto_weather_spark.operators.similarity import (
-        _mmr_distributed,
-        _mmr_local,
-    )
-    from presto_weather_spark.session import load_table
+def test_mmr_local_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
+    # x98: the driver-local greedy (taken whenever the table fits the
+    # driver, i.e. in every test and bench run) must be row-identical to
+    # the distributed per-round path. DRIVER_ROWS = 0 sends the PUBLIC
+    # entry point down the distributed branch, so the gate's branch runs.
+    from presto_weather_spark.operators import _util
+    from presto_weather_spark.registry import all_queries
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(8, "vec_id")
-    local = sorted(tuple(r) for r in _mmr_local(emb).collect())
-    dist = sorted(tuple(r) for r in _mmr_distributed(emb).collect())
+    fn = all_queries()["x98_mmr_diverse_topk"].fn
+    local = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    monkeypatch.setattr(_util, "DRIVER_ROWS", 0)
+    dist = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
     assert local == dist and len(local) > 0
 
 
@@ -1364,8 +1363,8 @@ def test_bitext_mining_empty_target_slice(spark):
 
 
 def test_twonn_sample_gate_is_deterministic(spark, monkeypatch):
-    # x94's count gate (round-6 verdict's one `weak` item, now in code):
-    # above TWONN_SAMPLE_LIMIT the estimator runs on a deterministic
+    # x94's size gate: when the table does not fit the driver (more than
+    # DRIVER_ROWS rows) the estimator runs on a deterministic
     # md5-rank sample. Pin (a) membership is a pure function of vec_id
     # (identical under different partitionings and across runs), (b) it
     # matches an independently computed md5-rank top-n, and (c) the gated
@@ -1375,6 +1374,7 @@ def test_twonn_sample_gate_is_deterministic(spark, monkeypatch):
     import os
     import tempfile
 
+    from presto_weather_spark.operators import _util
     from presto_weather_spark.operators import similarity as sim
     from presto_weather_spark.registry import all_queries
 
@@ -1405,7 +1405,7 @@ def test_twonn_sample_gate_is_deterministic(spark, monkeypatch):
     assert got1 == got2 == expect
 
     # (c) gate trips at limit 50: gated run == direct run on the members
-    monkeypatch.setattr(sim, "TWONN_SAMPLE_LIMIT", 50)
+    monkeypatch.setattr(_util, "DRIVER_ROWS", 50)
     gated = sorted(
         tuple(r) for r in all_queries()["x94_twonn_intrinsic_dim"].fn(spark, out).collect()
     )
@@ -1416,7 +1416,7 @@ def test_twonn_sample_gate_is_deterministic(spark, monkeypatch):
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(sub, "embeddings.parquet")
     )
-    monkeypatch.setattr(sim, "TWONN_SAMPLE_LIMIT", 100_000)
+    monkeypatch.setattr(_util, "DRIVER_ROWS", 100_000)
     direct = sorted(
         tuple(r) for r in all_queries()["x94_twonn_intrinsic_dim"].fn(spark, sub).collect()
     )
@@ -1451,17 +1451,18 @@ def test_fixture_values_nonnegative():
 
 
 def test_kcenter_local_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
-    # x65's hybrid contract (round-8 verdict weak item #1): the driver-local
-    # greedy (active below KCENTER_LOCAL_LIMIT, i.e. in every test and bench
-    # run) must be row-identical to the distributed per-round path. The gate
-    # is monkeypatched to 0 so the PUBLIC entry point takes the distributed
-    # branch — the branch itself executes, not just the helper.
+    # x65: the driver-local greedy (taken whenever the table fits the
+    # driver, i.e. in every test and bench run) must be row-identical to the
+    # distributed per-round path. DRIVER_ROWS = 0 sends the PUBLIC entry
+    # point down the distributed branch — the branch itself executes, not
+    # just the helper.
     import presto_weather_spark.operators.similarity as sim
+    from presto_weather_spark.operators import _util
     from presto_weather_spark.registry import all_queries
 
     fn = all_queries()["x65_kcenter_coreset"].fn
     local = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    monkeypatch.setattr(sim, "KCENTER_LOCAL_LIMIT", 0)
+    monkeypatch.setattr(_util, "DRIVER_ROWS", 0)
     dist = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
     assert local == dist
     assert len(local) == sim.KCENTER_K
@@ -1471,18 +1472,23 @@ def test_kcenter_local_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
 
 
 def test_textrank_local_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
-    # x92's hybrid contract (round-8 verdict weak item #1): the 8-round
-    # distributed power iteration (vocab-graph joins) must reproduce the
-    # driver-local fsum iteration byte-for-byte — both quantize each round
-    # to 12dp, so exact agreement is the contract, not a tolerance.
-    import presto_weather_spark.operators.text_analysis as ta
+    # x92: the 8-round distributed power iteration (vocab-graph joins) must
+    # reproduce the driver-local fsum iteration byte-for-byte — both
+    # quantize each round to 12dp, so exact agreement is the contract, not
+    # a tolerance. x43's distributed merge loop (one mapInPandas pair count
+    # per round) must pick the same merges as the driver-local loop.
+    # DRIVER_ROWS = 0 sends each PUBLIC entry point down its distributed
+    # branch.
+    from presto_weather_spark.operators import _util
     from presto_weather_spark.registry import all_queries
 
-    fn = all_queries()["x92_textrank_keywords"].fn
-    local = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    monkeypatch.setattr(ta, "TEXTRANK_LOCAL_LIMIT", 0)
-    dist = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    assert local == dist and len(local) > 0
+    for key in ("x92_textrank_keywords", "x43_bpe_merges"):
+        fn = all_queries()[key].fn
+        local = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+        with monkeypatch.context() as m:
+            m.setattr(_util, "DRIVER_ROWS", 0)
+            dist = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+        assert local == dist and len(local) > 0, key
 
 
 @given(

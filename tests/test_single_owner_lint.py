@@ -21,13 +21,22 @@
   every caller names a literal reason from its ``_EAGER`` table
   (``materialize(df, "reused")`` or ``.transform(materialize, "reused")``),
   so the owner alone decides which reasons run a job at build time.
+- Whether a frame is small enough to solve on the driver is decided only in
+  ``operators/_util.py::fits_driver``, against the one row limit
+  ``DRIVER_ROWS`` (tests force the cluster half by setting it to 0): no
+  other module holds a ``*_LIMIT`` constant or orders a bare ``.count()``
+  against anything but 0.
+- A named temp view is created only in ``session.py`` (``register_views``);
+  a key binds its frames with ``spark.sql(text, name=frame)`` instead, so
+  no call leaves a view in the shared catalog.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
 ``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``,
 ``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(``,
-``defer_install`` or ``localCheckpoint`` site elsewhere fails here; route it
-through the owner instead.
+``defer_install``, ``localCheckpoint``, ``*_LIMIT`` constant, size-gating
+``.count()`` or ``createOrReplaceTempView``/``createTempView`` site elsewhere
+fails here; route it through the owner instead.
 """
 
 from __future__ import annotations
@@ -49,6 +58,7 @@ SCRATCH_OWNER = "session.py"
 CORPUS_OWNER = os.path.join("operators", "_util.py")
 REGISTRY_OWNER = "registry.py"
 MATERIALIZE_OWNER = (CORPUS_OWNER, "materialize")
+VIEW_OWNER = "session.py"
 
 
 @functools.cache
@@ -267,6 +277,65 @@ def test_every_materialize_names_a_known_reason():
                     bad.append(f"{rel}:{node.lineno} ({why!r})")
     assert n, "lint matched nothing"
     assert not bad, f"materialize needs a literal reason from {sorted(reasons)}: {bad}"
+
+
+_ORDER = (ast.Lt, ast.LtE, ast.Gt, ast.GtE)
+
+
+def _is_bare_count(node: ast.AST) -> bool:
+    """``<frame>.count()`` with no arguments (not the column ``F.count(c)``)."""
+    return _called(node, "count") and not node.args and not node.keywords
+
+
+def _size_gates(tree: ast.Module) -> list[str]:
+    """Module-level ``*_LIMIT`` constants, and bare ``.count()`` results
+    ordered against anything but 0 (emptiness checks stay legal)."""
+    found = [
+        f"{t.id}:{node.lineno}"
+        for node in tree.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and t.id.endswith("_LIMIT")
+    ]
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Compare):
+            continue
+        sides = [node.left, *node.comparators]
+        for op, a, b in zip(node.ops, sides, sides[1:]):
+            for count, other in ((a, b), (b, a)):
+                zero = isinstance(other, ast.Constant) and other.value == 0
+                if isinstance(op, _ORDER) and _is_bare_count(count) and not zero:
+                    found.append(f"count():{node.lineno}")
+    return found
+
+
+def test_driver_or_cluster_is_chosen_only_in_fits_driver():
+    stray = {
+        rel: gates
+        for rel, tree in _trees()
+        if rel != CORPUS_OWNER and (gates := _size_gates(tree))
+    }
+    assert not stray, (
+        f"size gate outside {CORPUS_OWNER}; use fits_driver and DRIVER_ROWS: {stray}"
+    )
+    owner = dict(_trees())[CORPUS_OWNER]
+    assert any(
+        isinstance(n, ast.FunctionDef) and n.name == "fits_driver" for n in owner.body
+    ), "lint matched nothing"
+
+
+def test_temp_views_are_created_only_in_session_module():
+    sites = [
+        (rel, fn, call.lineno)
+        for rel, fn, call in _calls()
+        if _called(call, "createOrReplaceTempView") or _called(call, "createTempView")
+    ]
+    assert any(rel == VIEW_OWNER for rel, _, _ in sites), "lint matched nothing"
+    stray = [s for s in sites if s[0] != VIEW_OWNER]
+    assert not stray, (
+        f"temp view created outside {VIEW_OWNER}; bind the frame with "
+        f"spark.sql(text, name=frame) instead: {stray}"
+    )
 
 
 COPY_RUN = 8  # normalized lines; shorter shared runs are idiom, not a copy

@@ -69,17 +69,25 @@ def test_scores_deterministic_across_runs(spark):
     assert (a["pred"] == b["pred"]).all()
 
 
-def test_lr_local_and_distributed_weights_agree(spark, sf_dir):
-    # The driver-local GD (active below LR_LOCAL_LIMIT) must learn the
-    # same model as the distributed per-round aggregates it replaces —
-    # identical math, float-noise tolerance only.
-    from presto_weather_spark.operators.text_analysis import train_weak_label_lr
+def test_lr_local_and_distributed_weights_agree(spark, sf_dir, monkeypatch):
+    # The driver-local GD (taken whenever the feature table fits the
+    # driver) must learn the same model as the distributed per-round
+    # aggregates — identical math, float-noise tolerance only.
+    # DRIVER_ROWS = 0 sends training down the distributed branch; the
+    # public key's scores, rounded to 6dp, must not move.
+    from presto_weather_spark.operators import _util
+
+    def scores():
+        return sorted(map(tuple, x91_weak_label_classifier(spark, sf_dir).collect()))
 
     f1, w_local, l_local = train_weak_label_lr(spark, sf_dir)
     f1.unpersist()
-    f2, w_dist, l_dist = train_weak_label_lr(spark, sf_dir, force_distributed=True)
+    local = scores()
+    monkeypatch.setattr(_util, "DRIVER_ROWS", 0)
+    f2, w_dist, l_dist = train_weak_label_lr(spark, sf_dir)
     f2.unpersist()
     assert len(w_local) == len(w_dist)
     for a, b in zip(w_local, w_dist):
         assert abs(a - b) < 1e-9, (w_local, w_dist)
     assert abs(l_local[-1] - l_dist[-1]) < 1e-9
+    assert scores() == local and local

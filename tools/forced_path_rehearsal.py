@@ -1,10 +1,12 @@
-"""Measure the FORCED distributed paths of the hybrid keys at two SFs.
+"""Measure the FORCED distributed paths of the driver-or-cluster keys.
 
-Round 9 made x65's and x92's distributed branches execute under test
-(byte-equality pins vs the local paths). This tool extends that from
-"executed" to "measured": it forces the distributed branch (gate set to
-0, exactly like the tests) and times it at sf0.1 and the synthesized sf1,
-recording alphas into SCALE_REHEARSAL.json["forced_distributed_paths"].
+x43, x65, x91, x92 and x98 each solve on the driver when their input
+``fits_driver`` and run a per-round cluster loop otherwise; the tests pin
+both halves to equal rows. This tool times the cluster half, forced the
+way the tests force it (``_util.DRIVER_ROWS = 0``), at sf0.1 and the
+synthesized sf1, recording alphas into
+SCALE_REHEARSAL.json["forced_distributed_paths"].
+
 x02g (the new banding-recall audit key) is measured on its normal path —
 its audit subset is fixed by design, so its alpha documents that the
 audit cost is corpus-size-invariant.
@@ -23,6 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from presto_weather_spark.operators import _util  # noqa: E402
 from presto_weather_spark.registry import all_queries  # noqa: E402
 from presto_weather_spark.session import build_session  # noqa: E402
 
@@ -33,6 +36,13 @@ SF1 = os.environ.get("PWS_SF1_DIR", "/tmp/pws_scale/sf1")
 # verdict task #7 extends the round-9-new machinery to three points.
 SF3 = os.environ.get("PWS_SF3_DIR", "/tmp/pws_scale/sf3")
 REPS = 2
+FORCED = (
+    "x43_bpe_merges",
+    "x65_kcenter_coreset",
+    "x91_weak_label_classifier",
+    "x92_textrank_keywords",
+    "x98_mmr_diverse_topk",
+)
 
 
 def _time(fn, spark, sf_dir: str) -> float:
@@ -45,21 +55,12 @@ def _time(fn, spark, sf_dir: str) -> float:
 
 
 def main() -> None:
-    import presto_weather_spark.operators.similarity as sim
-    import presto_weather_spark.operators.text_analysis as ta
-
     spark = build_session("forced_path_rehearsal")
     q = all_queries()
     spark.read.parquet(os.path.join(SF01, "documents.parquet")).count()
     spark.read.parquet(os.path.join(SF1, "documents.parquet")).count()
 
     out = {}
-    # force the distributed branches exactly the way the equivalence tests
-    # do (gate attr -> 0); restore afterwards
-    forced = [
-        ("x65_kcenter_coreset", sim, "KCENTER_LOCAL_LIMIT"),
-        ("x92_textrank_keywords", ta, "TEXTRANK_LOCAL_LIMIT"),
-    ]
     has_sf3 = os.path.isdir(SF3)
     if has_sf3:
         spark.read.parquet(os.path.join(SF3, "documents.parquet")).count()
@@ -80,14 +81,14 @@ def main() -> None:
             )
         return row
 
-    for key, mod, attr in forced:
-        saved = getattr(mod, attr)
-        try:
-            setattr(mod, attr, 0)
+    saved = _util.DRIVER_ROWS
+    try:
+        _util.DRIVER_ROWS = 0
+        for key in FORCED:
             out[key + "__forced_distributed"] = three_point(key)
-        finally:
-            setattr(mod, attr, saved)
-        print(key, out[key + "__forced_distributed"], flush=True)
+            print(key, out[key + "__forced_distributed"], flush=True)
+    finally:
+        _util.DRIVER_ROWS = saved
 
     out["x02g_banding_recall_gate"] = three_point("x02g_banding_recall_gate")
     out["x02g_banding_recall_gate"]["note"] = (
