@@ -243,19 +243,21 @@ def exact_ntile(rank_col: Column, n_col: Column, k: int) -> Column:
 GLOBAL_RANK_LOCAL_LIMIT = 1_000_000  # rows; one sort task handles this fine
 
 
-def global_rank(df, order_exprs, out_col: str = "global_rn"):
+def global_rank(
+    df, order_exprs, out_col: str = "global_rn", n_rows: int | None = None
+):
     """Count-gated global numbering: below GLOBAL_RANK_LOCAL_LIMIT rows a
     single-partition row_number window is the right plan (one task sorting <= 1M short rows beats the
     two-pass machinery's Arrow+checkpoint fixed costs); above it, the s74
     distributed numbering takes over so no task ever sorts the full
-    frame. The gate probes limit(N+1).count() — O(N) rows read, never the
-    table. Path equivalence is pinned in tests/test_properties.py."""
+    frame. A caller that already counted ``df`` passes ``n_rows``;
+    otherwise the gate probes limit(N+1).count() — O(N) rows read, never
+    the table. Path equivalence is pinned in tests/test_properties.py."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    if (
-        df.limit(GLOBAL_RANK_LOCAL_LIMIT + 1).count()
-        <= GLOBAL_RANK_LOCAL_LIMIT
-    ):
+    if n_rows is None:
+        n_rows = df.limit(GLOBAL_RANK_LOCAL_LIMIT + 1).count()
+    if n_rows <= GLOBAL_RANK_LOCAL_LIMIT:
         w = Window.orderBy(*order_exprs)
         return df.withColumn(out_col, F.row_number().over(w).cast("bigint"))
     return distributed_global_rank(df, order_exprs, out_col)

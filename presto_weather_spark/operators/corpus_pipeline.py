@@ -20,10 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
-    GLOBAL_RANK_LOCAL_LIMIT,
     SQL_TOKENS,
-    distributed_global_rank,
     exact_ntile,
+    global_rank,
     materialize,
     spread,
     tokens,
@@ -395,13 +394,9 @@ def x76_curriculum_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE count drives both the path gate and the exact-ntile denominator
     scored = materialize(scored, "reused")  # count + rank both read it
     n_rows = scored.count()
-    order = [F.col("difficulty"), F.col("doc_id")]
-    if n_rows <= GLOBAL_RANK_LOCAL_LIMIT:
-        ranked = scored.withColumn(
-            "train_order", F.row_number().over(Window.orderBy(*order)).cast("bigint")
-        )
-    else:
-        ranked = distributed_global_rank(scored, order, "train_order")
+    ranked = global_rank(
+        scored, [F.col("difficulty"), F.col("doc_id")], "train_order", n_rows
+    )
     return ranked.select(
         "doc_id",
         "source",

@@ -20,11 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_weather_spark.operators._util import (
-    GLOBAL_RANK_LOCAL_LIMIT,
     dec,
     distributed_global_rank,
     dsum,
     exact_ntile,
+    global_rank,
     grand_total_if_empty,
     materialize,
     spread,
@@ -4302,12 +4302,7 @@ def x121_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     ranked = per_cust
     for out_col, order in orders_specs:
-        if n_rows <= GLOBAL_RANK_LOCAL_LIMIT:
-            ranked = ranked.withColumn(
-                out_col, F.row_number().over(Window.orderBy(*order)).cast("bigint")
-            )
-        else:
-            ranked = distributed_global_rank(ranked, order, out_col)
+        ranked = global_rank(ranked, order, out_col, n_rows)
     n = F.lit(n_rows).cast("bigint")
     scored = (
         ranked.withColumn("r_score", exact_ntile(F.col("_rr"), n, 5))

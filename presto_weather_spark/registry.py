@@ -23,6 +23,34 @@ registry; the pytest oracle harness (tests/test_oracle.py) runs the same
 comparison the driver runs, at sf0.001, so the correctness gate is the
 development loop.
 
+Prepared requests. ``register`` wraps each ``fn`` (``functools.wraps``, so
+``Query.fn.__module__`` is still the key's module and ``Query.fn.__wrapped__``
+is the raw build). The wrapper builds the key's frame once and, while its
+validity key holds, hands out ``df.select("*")``: a new Dataset, optimized,
+planned and executed afresh, so every action still reads the tables and
+runs the Python DataSource's ``read()``; only the build and its analysis
+are skipped. A build is kept only when all of these hold:
+
+  - it started no Spark job (the scheduler's next job id is the same before
+    and after ``fn``; a job from another thread also refuses it);
+  - its analyzed plan is deterministic and not streaming;
+  - every leaf, subqueries included, is a ``LogicalRelation`` over local
+    ``file:`` paths, a Python DataSource scan, a ``LocalRelation``, a
+    ``Range`` or a ``OneRowRelation``. Any other leaf refuses the build:
+    a ``LogicalRDD`` (``materialize``), a catalog table, a stream.
+
+The validity key is the session (by identity), ``sf_dir``, the
+``session.table_stamp`` of each leaf's root path and the text of the
+session's SQL conf map. A table rewritten in place, a part file added or
+removed, a conf set or unset, another session or another ``sf_dir`` all
+build afresh. A rewrite that keeps a file's size and lands in the same
+``mtime_ns`` tick is not seen. Each key has one slot, emptied or replaced
+on every fresh build, so the store never holds more frames than the
+registry has keys; it holds a ``select("*")`` of the frame that is never
+run itself. A frame may therefore depend only on its tables, the session
+conf and code; a tool that patches code between two builds of one key
+(such as ``plan_digest.checkpoints_inlined``) calls ``Query.fn.__wrapped__``.
+
 Determinism conventions (see SURVEY.md §7.0):
   - alias every computed column identically on both sides;
   - money-style double sums go through DECIMAL(18,2) inside the SUM and are
@@ -35,10 +63,13 @@ Determinism conventions (see SURVEY.md §7.0):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
+
+from presto_weather_spark.session import table_stamp
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 Oracle = str | Callable[[Mapping[str, str]], str] | None
@@ -61,10 +92,91 @@ def register(name: str, oracle: Oracle, doc: str = "") -> Callable[[QueryFn], Qu
     def wrap(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = Query(
+            name=name, fn=_prepared(fn), oracle=oracle, doc=doc or (fn.__doc__ or "")
+        )
         return fn
 
     return wrap
+
+
+# Leaves a prepared frame may stand on besides local parquet and the Python
+# DataSource: driver-side rows and generated ones.
+_ROW_LEAVES = ("LocalRelation", "Range", "OneRowRelation")
+
+
+def _prepared(fn: QueryFn) -> QueryFn:
+    """``fn`` with one prepared slot (see "Prepared requests" above)."""
+    slot: tuple | None = None  # (validity key, table paths, frame)
+
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        nonlocal slot
+        held = slot
+        if held is not None:
+            key, paths, df = held
+            if _validity(spark, sf_dir, paths) == key:
+                return df.select("*")
+            slot = None
+        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+        start = scheduler.nextJobId()
+        df = fn(spark, sf_dir)
+        if scheduler.nextJobId() == start:
+            paths = _table_paths(df)
+            key = None if paths is None else _validity(spark, sf_dir, paths)
+            if key is not None:
+                # a projection, not the frame handed out: once the caller
+                # runs that frame, its executed plan keeps the run's shuffle
+                # files and broadcasts from being cleaned up
+                slot = (key, paths, df.select("*"))
+        return df
+
+    return call
+
+
+def _table_paths(df: DataFrame) -> tuple[str, ...] | None:
+    """The local table paths under ``df``'s analyzed plan, or None when a
+    leaf or the plan itself rules out preparing it."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.isStreaming() or not plan.deterministic():
+        return None
+    subqueries = plan.subqueriesAll()
+    paths = set()
+    for p in [plan, *(subqueries.apply(i) for i in range(subqueries.size()))]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.nodeName()
+            if kind == "LogicalRelation":
+                relation = leaf.relation()
+                if (
+                    relation.getClass().getSimpleName() != "HadoopFsRelation"
+                    or leaf.catalogTable().isDefined()
+                ):
+                    return None
+                roots = relation.location().rootPaths()
+                for j in range(roots.size()):
+                    uri = roots.apply(j).toUri()
+                    if uri.getScheme() != "file":
+                        return None
+                    paths.add(uri.getPath())
+            elif kind == "DataSourceV2Relation":
+                if leaf.table().getClass().getSimpleName() != "PythonTable":
+                    return None
+            elif kind not in _ROW_LEAVES:
+                return None
+    return tuple(sorted(paths))
+
+
+def _validity(spark: SparkSession, sf_dir: str, paths: tuple[str, ...]) -> tuple | None:
+    """What a prepared frame over ``paths`` is valid for: the session, the
+    ``sf_dir``, each table's stamp and the session's SQL conf map. None when
+    a table cannot be stamped."""
+    stamps = tuple(table_stamp(p) for p in paths)
+    if None in stamps:
+        return None
+    confs = spark._jvm.java.util.TreeMap(spark.conf._jconf.getAllAsJava()).toString()
+    return spark, sf_dir, stamps, confs
 
 
 def all_queries() -> dict[str, Query]:

@@ -17,7 +17,10 @@ restored, because the driver harness hands over a vanilla session and Spark
 re-reads the conf when it plans every action on the returned frame.
 
 Data enters the engine two ways: parquet through ``load_table`` and
-driver-side Python rows through ``local_rows``.
+driver-side Python rows through ``local_rows``. ``table_stamp`` is the one
+definition of a table's on-disk identity (its files' names, sizes and
+``mtime_ns``); the schema cache, the registry's prepared requests and the
+similarity audit memo all key on it.
 
 - ``local_rows`` hands Spark an Arrow table, which plans as a
   ``LocalTableScan``: no Spark job and no Python worker. The list form
@@ -30,9 +33,10 @@ driver-side Python rows through ``local_rows``.
   footer's key-value metadata, and the confs that change how Spark converts
   a parquet schema (``_SCHEMA_CONFS``, read after the ``nanosAsLong``
   flip). A table directory of part files (what Spark writes) stands for
-  its first part's footer, and its key adds every part's name, size and
-  ``mtime_ns``. An identical copy of a file under a new path hits; a
-  rewritten file or part gets a new key. A path with no readable footer
+  its first part's footer, and its key adds the directory's
+  ``table_stamp``: every part's name, size and ``mtime_ns``. An identical
+  copy of a file under a new path hits; a rewritten file or part gets a
+  new key. A path with no readable footer
   (remote, partitioned into subdirectories, or without part files) is
   inferred each time.
 
@@ -354,28 +358,42 @@ def _parquet_schema(
     return schema, nanos_cols
 
 
-def _footer(path: str) -> tuple[pq.FileMetaData | None, tuple]:
-    """The footer that stands for the parquet table at ``path`` and the
-    part listing that joins the cache key. A file is its own footer, with
-    an empty listing. A directory uses its first part file's footer, and
-    the listing holds each part's (name, size, mtime_ns), so a rewritten
-    or added part misses. Names starting with ``_`` or ``.`` are skipped,
-    as Spark's reader skips them. The footer is None for a remote or
-    unreadable path, a directory without part files, and a partitioned
-    directory (one holding subdirectories)."""
+def table_stamp(path: str) -> tuple | None:
+    """The identity of the parquet table at ``path``: the ``(name, size,
+    mtime_ns)`` of the file, or of each part file of a table directory in
+    name order. Names starting with ``_`` or ``.`` are skipped, as Spark's
+    reader skips them. None for a path that cannot be listed and for a
+    partitioned directory (one holding subdirectories), whose listing would
+    not change when a file below it does."""
     try:
         if not os.path.isdir(path):
-            return pq.read_metadata(path), ()
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
         parts = sorted(
             (e for e in os.scandir(path) if not e.name.startswith(("_", "."))),
             key=lambda e: e.name,
         )
-        if not parts or not all(e.is_file() for e in parts):
+        if not all(e.is_file() for e in parts):
+            return None
+        return tuple((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in parts)
+    except OSError:
+        return None
+
+
+def _footer(path: str) -> tuple[pq.FileMetaData | None, tuple]:
+    """The footer that stands for the parquet table at ``path`` and the
+    part listing that joins the cache key. A file is its own footer, with
+    an empty listing. A directory uses its first part file's footer, and
+    the listing is its ``table_stamp``, so a rewritten or added part
+    misses. The footer is None for a remote or unreadable path, a
+    directory without part files, and a partitioned directory."""
+    try:
+        if not os.path.isdir(path):
+            return pq.read_metadata(path), ()
+        listing = table_stamp(path)
+        if not listing:
             return None, ()
-        listing = tuple(
-            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in parts
-        )
-        return pq.read_metadata(parts[0].path), listing
+        return pq.read_metadata(os.path.join(path, listing[0][0])), listing
     except (OSError, pa.ArrowException):
         return None, ()
 

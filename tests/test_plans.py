@@ -32,6 +32,13 @@ def _df(name, spark, sf_dir):
     return QS[name].fn(spark, sf_dir)
 
 
+def _raw_df(name, spark, sf_dir):
+    """The key's frame from its raw build, for reads under
+    ``checkpoints_inlined()``: the registered ``fn`` could hand out a frame
+    prepared before the patch."""
+    return QS[name].fn.__wrapped__(spark, sf_dir)
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     plan = formatted_plan(_df("s03_filter_predicates", spark, sf_dir))
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
@@ -143,7 +150,7 @@ def test_pq_ann_corpus_stays_partition_local(spark, sf_dir):
     the checkpoints inlined (the registered query's plan is a checkpoint
     scan; its recall gate then runs on the inlined frame)."""
     with checkpoints_inlined():
-        plan = simple_plan(_df("x03f_pq_ann_topk", spark, sf_dir))
+        plan = simple_plan(_raw_df("x03f_pq_ann_topk", spark, sf_dir))
     scoring = plan.split("MapInPandas")[-1]  # below = scan side
     assert "Exchange hashpartitioning(neighbor_id" in scoring, plan[:900]
 
@@ -552,7 +559,7 @@ def test_heaps_cumulative_window_is_bucketed(spark, sf_dir):
     with the checkpoints inlined (the registered query's plan is truncated
     at its checkpoints)."""
     with checkpoints_inlined():
-        plan = simple_plan(_df("x97_heaps_law_fit", spark, sf_dir))
+        plan = simple_plan(_raw_df("x97_heaps_law_fit", spark, sf_dir))
     assert "windowspecdefinition(bucket#" in plan, plan[:1500]
 
 
@@ -605,7 +612,7 @@ def test_token_budget_cap_plans_group_limit(spark, sf_dir):
     # materializes the corpus projection (and, with zero-token docs, the
     # window frame), which truncates the visible plan at definition
     with checkpoints_inlined():
-        plan = simple_plan(_df("x46_token_budget_cap", spark, sf_dir))
+        plan = simple_plan(_raw_df("x46_token_budget_cap", spark, sf_dir))
     limit = f"row_number(), {TOKEN_BUDGET + 1}"
     assert f"{limit}, Partial" in plan, plan[:1500]
     assert f"{limit}, Final" in plan, plan[:1500]

@@ -24,19 +24,25 @@
 - Whether a frame is small enough to solve on the driver is decided only in
   ``operators/_util.py::fits_driver``, against the one row limit
   ``DRIVER_ROWS`` (tests force the cluster half by setting it to 0): no
-  other module holds a ``*_LIMIT`` constant or orders a bare ``.count()``
-  against anything but 0.
+  other module defines, imports or reads a ``*_LIMIT`` name or orders a
+  bare ``.count()`` against anything but 0. ``global_rank`` owns the one
+  other size fork; a caller that already counted the frame passes it in.
 - A named temp view is created only in ``session.py`` (``register_views``);
   a key binds its frames with ``spark.sql(text, name=frame)`` instead, so
   no call leaves a view in the shared catalog.
+- A table's on-disk identity is read only in ``session.py``
+  (``table_stamp``): no other module reads a file's modification time, so
+  the schema cache, prepared requests and audit memos cannot disagree on
+  when a table changed.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
 ``import tempfile``, ``defaultParallelism``, ``split(lower(...), r"\\s+")``,
 ``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(``,
 ``defer_install``, ``localCheckpoint``, ``*_LIMIT`` constant, size-gating
-``.count()`` or ``createOrReplaceTempView``/``createTempView`` site elsewhere
-fails here; route it through the owner instead.
+``.count()``, ``createOrReplaceTempView``/``createTempView`` or
+``st_mtime``/``getmtime`` site elsewhere fails here; route it through the
+owner instead.
 """
 
 from __future__ import annotations
@@ -59,6 +65,7 @@ CORPUS_OWNER = os.path.join("operators", "_util.py")
 REGISTRY_OWNER = "registry.py"
 MATERIALIZE_OWNER = (CORPUS_OWNER, "materialize")
 VIEW_OWNER = "session.py"
+STAMP_OWNER = "session.py"
 
 
 @functools.cache
@@ -288,15 +295,14 @@ def _is_bare_count(node: ast.AST) -> bool:
 
 
 def _size_gates(tree: ast.Module) -> list[str]:
-    """Module-level ``*_LIMIT`` constants, and bare ``.count()`` results
-    ordered against anything but 0 (emptiness checks stay legal)."""
-    found = [
-        f"{t.id}:{node.lineno}"
-        for node in tree.body
-        if isinstance(node, (ast.Assign, ast.AnnAssign))
-        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
-        if isinstance(t, ast.Name) and t.id.endswith("_LIMIT")
-    ]
+    """``*_LIMIT`` names, defined, imported or read, and bare ``.count()``
+    results ordered against anything but 0 (emptiness checks stay legal)."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and node.id.endswith("_LIMIT"):
+            found.append(f"{node.id}:{node.lineno}")
+        elif isinstance(node, ast.ImportFrom):
+            found += [f"{a.name}:{node.lineno}" for a in node.names if a.name.endswith("_LIMIT")]
     for node in ast.walk(tree):
         if not isinstance(node, ast.Compare):
             continue
@@ -421,3 +427,16 @@ def test_copy_allowlist_carries_no_dead_entries():
     _, allowed = _copied_runs()
     dead = [sorted(k) for k in COPY_ALLOWLIST if k not in allowed]
     assert not dead, f"allowlisted owner pairs no longer share a run; prune: {dead}"
+
+
+def _reads_mtime(node: ast.AST) -> bool:
+    return isinstance(node, ast.Attribute) and node.attr in (
+        "st_mtime", "st_mtime_ns", "getmtime"
+    )
+
+
+def test_table_identity_is_read_only_in_table_stamp():
+    sites = _sites(_reads_mtime)
+    assert STAMP_OWNER in sites, "lint matched nothing"
+    stray = sorted(sites - {STAMP_OWNER})
+    assert not stray, f"mtime read outside {STAMP_OWNER}; use session.table_stamp: {stray}"

@@ -36,8 +36,9 @@ def main() -> None:
     queries = all_queries()
     for key in keys:
         plan = explain_text(queries[key].fn(spark, sf_dir), "formatted")
+        # the raw build: the registered fn could hand out the frame above
         with checkpoints_inlined():
-            inlined = explain_text(queries[key].fn(spark, sf_dir), "formatted")
+            inlined = explain_text(queries[key].fn.__wrapped__(spark, sf_dir), "formatted")
         for name, text in ((f"{key}_{suffix}", plan), (f"{key}_{suffix}_inlined", inlined)):
             path = os.path.join(out_dir, f"{name}.txt")
             with open(path, "w") as f:

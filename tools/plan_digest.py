@@ -21,8 +21,11 @@ A subtree above a ``localCheckpoint`` shows in the plan column as a
 ``LogicalRDD`` stub, which says where the checkpoints sit but hides what
 they hold. The inlined-plan column digests the same key's frame built a
 second time while ``localCheckpoint`` returns its frame unchanged, so every
-checkpointed subtree is spelled out in full. The patch goes on the classic
-``DataFrame`` class: it overrides the method, so patching
+checkpointed subtree is spelled out in full. That build calls the raw
+``fn.__wrapped__``: the registered ``fn`` may hand out a prepared frame (see
+``registry.py``), which would be the first build's, and an inlined build it
+kept would later be handed out in place of the real one. The patch goes on
+the classic ``DataFrame`` class: it overrides the method, so patching
 ``pyspark.sql.DataFrame`` would miss every call.
 
 The jobs column counts the Spark jobs that ``fn`` started while building the
@@ -140,7 +143,7 @@ def main() -> None:
     for key, q in sorted(all_queries().items()):
         plan, jobs = _plan_sha(q.fn, spark, sf_dir)
         with checkpoints_inlined():
-            inlined, _ = _plan_sha(q.fn, spark, sf_dir)
+            inlined, _ = _plan_sha(q.fn.__wrapped__, spark, sf_dir)
         oracle = None if q.oracle is None else _sub_all(q.oracle, _SQL_LAYOUT)
         print(f"{key} {_sha(oracle)} {plan} {inlined} {jobs}", flush=True)
 
