@@ -7,13 +7,13 @@ a full relational operator surface plus LLM-data-pipeline operators
 100 TB scale but tested locally against a DuckDB oracle.
 
 Layout:
-  session.py    SparkSession factory + table loaders
-  registry.py   query registry: name -> (spark callable, oracle SQL)
-  operators/    relational + LLM-pipeline operators (S-, X-series)
-  functions/    scalar function layers (weather classification, formatting)
-  sources/      custom Python data sources (offline Open-Meteo replay)
-  streaming/    Structured Streaming pipelines (R14 refresh loop, windows)
-  plans/        plan-inspection helpers (pushdown/broadcast assertions)
+  session.py          SparkSession factory + table loaders
+  registry.py         query registry: name -> (spark callable, oracle SQL)
+  _worker_daemon.py   Python worker daemon (one zip read per task)
+  operators/          relational + LLM-pipeline operators (S-, X-series)
+  functions/          scalar function layers (weather classification, formatting)
+  sources/            custom Python data sources (offline Open-Meteo replay)
+  streaming/          Structured Streaming pipelines (R14 refresh loop, windows)
 """
 
 __version__ = "0.1.0"

@@ -2606,17 +2606,6 @@ def s39_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bcast_j
 
 
-def s39_hinted_variants(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plan-test helper: the three hinted joins before aggregation."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return {
-        "merge": c.join(n.hint("merge"), c.c_nationkey == n.n_nationkey),
-        "shuffle_hash": c.join(n.hint("shuffle_hash"), c.c_nationkey == n.n_nationkey),
-        "broadcast": c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey),
-    }
-
-
 # ---------------------------------------------------------------------------
 # S40 — declarative data-quality checks (the expectations gate)
 # ---------------------------------------------------------------------------

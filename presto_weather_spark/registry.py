@@ -31,8 +31,14 @@ planned and executed afresh, so every action still reads the tables and
 runs the Python DataSource's ``read()``; only the build and its analysis
 are skipped. A build is kept only when all of these hold:
 
-  - it started no Spark job (the scheduler's next job id is the same before
-    and after ``fn``; a job from another thread also refuses it);
+  - it started no Spark job. ``fn`` runs under a job tag unique to the call
+    (``SparkContext.addJobTag``, which holds for the calling thread only,
+    removed when ``fn`` returns). When the scheduler's next job id has not
+    moved, no job started anywhere; when it has, the build is refused only
+    if the status tracker lists a job with that tag, read once the listener
+    bus is empty. A job another thread ran meanwhile does not refuse it, so
+    concurrent clients keep their builds. A thread that ``fn`` starts itself
+    does not carry the tag, so a build runs its jobs on the calling thread;
   - its analyzed plan is deterministic and not streaming;
   - every leaf, subqueries included, is a ``LogicalRelation`` over local
     ``file:`` paths, a Python DataSource scan, a ``LocalRelation``, a
@@ -64,9 +70,11 @@ Determinism conventions (see SURVEY.md §7.0):
 from __future__ import annotations
 
 import functools
+import uuid
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, replace
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from presto_weather_spark.session import table_stamp
@@ -118,10 +126,15 @@ def _prepared(fn: QueryFn) -> QueryFn:
             if _validity(spark, sf_dir, paths) == key:
                 return df.select("*")
             slot = None
-        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-        start = scheduler.nextJobId()
-        df = fn(spark, sf_dir)
-        if scheduler.nextJobId() == start:
+        sc = spark.sparkContext
+        start = sc._jsc.sc().dagScheduler().nextJobId()
+        tag = f"pws-build-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            sc.removeJobTag(tag)
+        if not _started_jobs(sc, start, tag):
             paths = _table_paths(df)
             key = None if paths is None else _validity(spark, sf_dir, paths)
             if key is not None:
@@ -132,6 +145,16 @@ def _prepared(fn: QueryFn) -> QueryFn:
         return df
 
     return call
+
+
+def _started_jobs(sc: SparkContext, start: int, tag: str) -> bool:
+    """Whether the build that ran under the job tag ``tag`` started a Spark
+    job, given the scheduler's next job id ``start`` from before it."""
+    jsc = sc._jsc.sc()
+    if jsc.dagScheduler().nextJobId() == start:
+        return False
+    jsc.listenerBus().waitUntilEmpty()
+    return len(jsc.statusTracker().getJobIdsForTag(tag)) > 0
 
 
 def _table_paths(df: DataFrame) -> tuple[str, ...] | None:

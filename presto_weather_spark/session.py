@@ -244,6 +244,10 @@ def build_session(app_name: str = "presto_weather_spark", cpus: int | None = Non
         # Python workers (UDFs, the DataSource) import the package whatever
         # the working directory; Spark merges this with their PYTHONPATH.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Workers fork from the package's daemon, which reads each zip
+        # archive once per task instead of once per importer. A vanilla
+        # session keeps pyspark.daemon and pays that cost, still correct.
+        .config("spark.python.daemon.module", "presto_weather_spark._worker_daemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
         # reader rejects; read as long and convert in load_table (exact

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 import uuid
 
@@ -11,7 +12,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from presto_weather_spark.session import build_session  # noqa: E402
+from presto_weather_spark.session import build_session, conf_scope  # noqa: E402
 
 SF_DIR = os.environ.get("PWS_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -55,6 +56,34 @@ def jobs_run(spark, fn) -> int:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def simple_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def has_broadcast_join(df) -> bool:
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def count_codegen_stages(spark, build) -> int:
+    """Number of WholeStageCodegen subtrees in the plan ``build()`` produces.
+
+    Under AQE the codegen wrappers are only inserted when each query stage
+    materializes, so no explain mode shows them pre-execution. We re-plan
+    with AQE off purely for inspection: the stages AQE materializes at run
+    time go through the exact same CollapseCodegenStages rule.
+    """
+    with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
+        df = build()
+        cg = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    m = re.match(r"Found (\d+) WholeStageCodegen", cg)
+    return int(m.group(1)) if m else 0
 
 
 @pytest.fixture(scope="session")

@@ -12,14 +12,11 @@ from __future__ import annotations
 import os
 import sys
 
-from presto_weather_spark.plans.explain import (
-    count_codegen_stages,
-    formatted_plan,
-    has_broadcast_join,
-    simple_plan,
-)
+from conftest import count_codegen_stages, formatted_plan, has_broadcast_join, simple_plan
+from pyspark.sql import functions as F
+
 from presto_weather_spark.registry import all_queries
-from presto_weather_spark.session import conf_scope
+from presto_weather_spark.session import conf_scope, load_table
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
@@ -327,11 +324,15 @@ def test_mv_refresh_scans_delta_only(spark, sf_dir):
 
 
 def test_join_hints_force_each_strategy(spark, sf_dir):
-    # s39: each hint must surface its physical join in the plan.
-    from presto_weather_spark.operators.relational import s39_hinted_variants
-
+    # s39: each hint must surface its physical join in the plan (the three
+    # joins s39_join_strategy_hints compares, before it aggregates them).
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    on = c.c_nationkey == n.n_nationkey
     plans = {
-        k: simple_plan(df) for k, df in s39_hinted_variants(spark, sf_dir).items()
+        "merge": simple_plan(c.join(n.hint("merge"), on)),
+        "shuffle_hash": simple_plan(c.join(n.hint("shuffle_hash"), on)),
+        "broadcast": simple_plan(c.join(F.broadcast(n), on)),
     }
     assert "SortMergeJoin" in plans["merge"], plans["merge"][:400]
     assert "ShuffledHashJoin" in plans["shuffle_hash"], plans["shuffle_hash"][:400]

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -139,6 +140,50 @@ def test_checkpointed_frame_is_never_prepared(spark, tmp_path):
     # a lazy checkpoint over a scan starts no job, so the leaf rule refuses it
     assert jobs_run(spark, lambda: checkpointed(spark, str(tmp_path))) == 0
     _never_kept(spark, str(tmp_path), checkpointed)
+
+
+def _beside_a_client(build):
+    """``build``, made to run while another thread runs one Spark job from
+    start to end, as a second client would."""
+
+    def build_beside(s, sf_dir):
+        started, done = threading.Event(), threading.Event()
+
+        def client():
+            started.wait(60)
+            s.range(10).count()
+            done.set()
+
+        other = threading.Thread(target=client)
+        other.start()
+        started.set()
+        df = build(s, sf_dir)
+        assert done.wait(60), "the other client's job did not finish"
+        other.join(60)
+        assert not other.is_alive()
+        return df
+
+    return build_beside
+
+
+def test_jobs_of_another_thread_leave_a_build_prepared(spark, tmp_path):
+    _write_part(tmp_path / "t.parquet", "part-00000.parquet", [1, 2])
+    load_table(spark, str(tmp_path), "t")  # schema cached: no build-time job
+    fn, builds = _counted(_beside_a_client(lambda s, sf_dir: load_table(s, sf_dir, "t")))
+    fn(spark, str(tmp_path))
+    n = len(builds)
+    assert _rows(fn(spark, str(tmp_path))) == [(1,), (2,)]
+    assert len(builds) == n, "another thread's job refused the build"
+
+
+def test_own_job_refuses_a_build_beside_another_client(spark, tmp_path):
+    _write_part(tmp_path / "t.parquet", "part-00000.parquet", [1, 2])
+
+    def probed(s, sf_dir):
+        df = load_table(s, sf_dir, "t")
+        return df if fits_driver(df) else df.limit(0)
+
+    _never_kept(spark, str(tmp_path), _beside_a_client(probed))
 
 
 def test_catalog_table_is_never_prepared(spark, tmp_path):

@@ -34,6 +34,10 @@
   (``table_stamp``): no other module reads a file's modification time, so
   the schema cache, prepared requests and audit memos cannot disagree on
   when a table changed.
+- The interpreter's import caches are touched only in ``_worker_daemon.py``
+  (the Python worker daemon): no other module references ``zipimport`` or
+  ``invalidate_caches``. A ``spark.python.*`` conf is set only in
+  ``session.py::build_session``: it is static, read when workers start.
 
 A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``.createDataFrame``, ``scratch_root()``/``scratch_base()``,
@@ -41,7 +45,8 @@ A new ``.conf.set``/``.conf.unset``, ``.start()``/``.awaitTermination()``,
 ``string_split_regex(lower(text)``, ``_REGISTRY``, ``Query(``,
 ``defer_install``, ``localCheckpoint``, ``*_LIMIT`` constant, size-gating
 ``.count()``, ``createOrReplaceTempView``/``createTempView`` or
-``st_mtime``/``getmtime`` site elsewhere fails here; route it through the
+``st_mtime``/``getmtime``, ``zipimport``/``invalidate_caches`` or
+``spark.python.*`` site elsewhere fails here; route it through the
 owner instead.
 """
 
@@ -66,6 +71,8 @@ REGISTRY_OWNER = "registry.py"
 MATERIALIZE_OWNER = (CORPUS_OWNER, "materialize")
 VIEW_OWNER = "session.py"
 STAMP_OWNER = "session.py"
+DAEMON_OWNER = "_worker_daemon.py"
+PYTHON_CONF_OWNER = ("session.py", "build_session")
 
 
 @functools.cache
@@ -440,3 +447,44 @@ def test_table_identity_is_read_only_in_table_stamp():
     assert STAMP_OWNER in sites, "lint matched nothing"
     stray = sorted(sites - {STAMP_OWNER})
     assert not stray, f"mtime read outside {STAMP_OWNER}; use session.table_stamp: {stray}"
+
+
+def _touches_import_caches(node: ast.AST) -> bool:
+    """A reference to ``zipimport`` or to an ``invalidate_caches``, or an
+    import of either."""
+    names = ("zipimport", "invalidate_caches")
+    if isinstance(node, ast.Name):
+        return node.id in names
+    if isinstance(node, ast.Attribute):
+        return node.attr in names
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return getattr(node, "module", None) in names or any(
+            a.name in names for a in node.names
+        )
+    return False
+
+
+def test_import_caches_are_touched_only_in_the_worker_daemon():
+    sites = _sites(_touches_import_caches)
+    assert DAEMON_OWNER in sites, "lint matched nothing"
+    stray = sorted(sites - {DAEMON_OWNER})
+    assert not stray, f"import caches touched outside {DAEMON_OWNER}: {stray}"
+
+
+def test_python_worker_confs_are_set_only_in_build_session():
+    sites = set()
+    for rel, tree in _trees():
+        with open(os.path.join(PKG, rel)) as src:
+            owner = _owners(tree, len(src.read().splitlines()))
+        sites |= {
+            (rel, owner[node.lineno])
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.startswith("spark.python.")
+        }
+    assert PYTHON_CONF_OWNER in sites, "lint matched nothing"
+    stray = sorted(sites - {PYTHON_CONF_OWNER})
+    assert not stray, (
+        f"spark.python.* conf outside {PYTHON_CONF_OWNER}; it is static: {stray}"
+    )

@@ -28,8 +28,8 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import simple_plan
 
-from presto_weather_spark.plans.explain import simple_plan
 from presto_weather_spark.registry import all_queries
 
 # Keys whose per-key cardinality grows with the data: a window partitioned
